@@ -25,6 +25,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_hive_2_1_1_src_spark.sqltext import split_top_level
+
 #: SELECT <aggs> FROM <bare table> [WHERE <partition-equality conjuncts>]
 #: — no GROUP/JOIN/subquery/LIMIT.
 _SHAPE = re.compile(
@@ -37,22 +39,6 @@ _AGG = re.compile(
     r"(?:\s+AS\s+(?P<alias>\w+))?$",
     re.IGNORECASE,
 )
-
-
-def _split_top_level_commas(s: str) -> list[str]:
-    out, buf, depth = [], [], 0
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-    out.append("".join(buf).strip())
-    return out
 
 
 def _table_row_count(spark: SparkSession, table: str) -> int | None:
@@ -153,7 +139,8 @@ def try_stats_only_answer(spark: SparkSession, text: str) -> DataFrame | None:
     where = m.group("where")
     if re.search(
         r"\b(WHERE|GROUP|JOIN|HAVING|LIMIT|UNION|DISTINCT|OVER)\b", body, re.IGNORECASE
-    ):
+    ) or re.search(r"(^|,)\s*(,|$)", body):
+        # (an empty select item is a syntax error for Spark to report)
         return None
     if where is not None:
         # partition-equality filters: only the COUNT(*) family can be
@@ -162,7 +149,7 @@ def try_stats_only_answer(spark: SparkSession, text: str) -> DataFrame | None:
             r"\b(GROUP|JOIN|HAVING|LIMIT|UNION|OR)\b", where, re.IGNORECASE
         ):
             return None
-        parts_b = _split_top_level_commas(body)
+        parts_b = split_top_level(body)
         exprs_f: list[str] = []
         n_part: int | None = None
         for i, part in enumerate(parts_b):
@@ -183,7 +170,7 @@ def try_stats_only_answer(spark: SparkSession, text: str) -> DataFrame | None:
     except Exception:
         return None
     n_rows: int | None = None
-    parts = _split_top_level_commas(body)
+    parts = split_top_level(body)
     exprs: list[str] = []
     for i, part in enumerate(parts):
         am = _AGG.match(part)

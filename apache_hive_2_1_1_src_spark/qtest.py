@@ -38,6 +38,8 @@ import os
 import re
 from dataclasses import dataclass, field
 
+from apache_hive_2_1_1_src_spark.sqltext import split_top_level
+
 REF = "/root/reference"
 DATA_DIR = f"{REF}/data/files"
 Q_DIR = f"{REF}/ql/src/test/queries/clientpositive"
@@ -631,14 +633,7 @@ def _print_header_line(eng, df, bare: str) -> str | None:
         r"(?is)^\s*SELECT\s+(?!\*)(.+?)\s+FROM\s", bare
     )
     if pm:
-        from apache_hive_2_1_1_src_spark.session import HiveEngine
-
-        items = HiveEngine._split_top_level_static(pm.group(1)) if hasattr(
-            HiveEngine, "_split_top_level_static"
-        ) else None
-        if items is None:
-            # reuse the engine's splitter through a bound instance
-            items = eng._split_top_level(pm.group(1))
+        items = split_top_level(pm.group(1))
         if len(items) == len(cols):
             named = []
             for i, it in enumerate(items):

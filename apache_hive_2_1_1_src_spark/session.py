@@ -30,8 +30,20 @@ import os
 import re
 import tempfile
 
+import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from apache_hive_2_1_1_src_spark.sqltext import (
+    close_paren,
+    rewrite_calls,
+    search_top_level,
+    split_literals,
+    split_statements,
+    split_top_level,
+    sub_outside_quotes,
+    unescape,
+)
 
 #: Hive-2.1.1-semantics config preset, applied to every session we build and
 #: safe to apply onto an externally provided session (runtime-settable keys).
@@ -204,7 +216,6 @@ class HiveEngine:
         sorted order (deterministic) where Hive's order is file order
         (documented divergence).  Arrow-batched per group; the summary
         is bounded (nbins pairs), so this scales like any sketch."""
-        from pyspark.sql import functions as SF
         from pyspark.sql import types as T
         from pyspark.sql.functions import pandas_udf
 
@@ -326,8 +337,6 @@ class HiveEngine:
             # resulting [file1, file4, file3, file2] arrival bit-exactly.
             import re as _re
 
-            import pandas as pd
-
             df = pd.DataFrame({"v": v, "m": m, "f": f, "r": r})
             df["load"] = [
                 (
@@ -377,24 +386,30 @@ class HiveEngine:
                 parts.append(g)
             return pd.concat(parts)["v"].tolist()
 
-        def scalar_fn(v, q, b):
+        def scalar_fn(v: pd.Series, q: pd.Series, b: pd.Series) -> float:
             qv = next((x for x in q if x is not None), 0.5)
             bv = int(next((x for x in b if x is not None), 10000))
             return core(v, [float(qv)], bv)[0]
 
-        def array_fn(v, q, b):
+        def array_fn(v: pd.Series, q: pd.Series, b: pd.Series) -> list:
             qv = next(
                 (x for x in q if x is not None and len(x)), [0.5]
             )
             bv = int(next((x for x in b if x is not None), 10000))
             return core(v, [float(x) for x in qv], bv)
 
-        def scalar_fn_ord(v, q, b, m, f, r):
+        def scalar_fn_ord(
+            v: pd.Series, q: pd.Series, b: pd.Series,
+            m: pd.Series, f: pd.Series, r: pd.Series,
+        ) -> float:
             qv = next((x for x in q if x is not None), 0.5)
             bv = int(next((x for x in b if x is not None), 10000))
             return core(_file_order(v, m, f, r), [float(qv)], bv)[0]
 
-        def array_fn_ord(v, q, b, m, f, r):
+        def array_fn_ord(
+            v: pd.Series, q: pd.Series, b: pd.Series,
+            m: pd.Series, f: pd.Series, r: pd.Series,
+        ) -> list:
             qv = next(
                 (x for x in q if x is not None and len(x)), [0.5]
             )
@@ -402,32 +417,14 @@ class HiveEngine:
             return core(_file_order(v, m, f, r), [float(x) for x in qv], bv)
 
 
-        self.spark.udf.register(
-            "hive_percentile_approx",
-            pandas_udf(scalar_fn, "double", SF.PandasUDFType.GROUPED_AGG),
-        )
-        self.spark.udf.register(
-            "hive_percentile_approx_arr",
-            pandas_udf(
-                array_fn,
-                T.ArrayType(T.DoubleType()),
-                SF.PandasUDFType.GROUPED_AGG,
-            ),
-        )
-        self.spark.udf.register(
-            "hive_percentile_approx_ord",
-            pandas_udf(
-                scalar_fn_ord, "double", SF.PandasUDFType.GROUPED_AGG
-            ),
-        )
-        self.spark.udf.register(
-            "hive_percentile_approx_arr_ord",
-            pandas_udf(
-                array_fn_ord,
-                T.ArrayType(T.DoubleType()),
-                SF.PandasUDFType.GROUPED_AGG,
-            ),
-        )
+        doubles = T.ArrayType(T.DoubleType())
+        for name, fn, rtype in (
+            ("hive_percentile_approx", scalar_fn, "double"),
+            ("hive_percentile_approx_arr", array_fn, doubles),
+            ("hive_percentile_approx_ord", scalar_fn_ord, "double"),
+            ("hive_percentile_approx_arr_ord", array_fn_ord, doubles),
+        ):
+            self.spark.udf.register(name, pandas_udf(fn, rtype))
 
     def _register_hive_hash(self) -> None:
         """SQL-text ``hash(...)`` must be Hive's GenericUDFHash →
@@ -580,11 +577,10 @@ class HiveEngine:
         string (what the CLI prints — compute_stats_long.q's golden).
         Kind dispatch happens from the arriving pandas values, since a
         SQL UDF sees no Catalyst type."""
-        import pandas as pd
-        from pyspark.sql.functions import PandasUDFType, pandas_udf
+        from pyspark.sql.functions import pandas_udf
 
-        @pandas_udf("string", PandasUDFType.GROUPED_AGG)
-        def compute_stats(col, nbv, tag):
+        @pandas_udf("string")
+        def compute_stats(col: pd.Series, nbv: pd.Series, tag: pd.Series) -> str:
             import datetime
             import decimal as _dec
 
@@ -675,41 +671,15 @@ class HiveEngine:
         ``struct<tag:int,field0:T0,...>`` (SURVEY §1.2): one active
         branch per value, selected by tag.  Innermost-out so nested
         unions resolve."""
-        while True:
-            m = re.search(r"(?i)\buniontype\s*<", text)
-            if not m:
-                return text
-            # find matching '>'
-            depth, j = 0, m.end() - 1
-            for j in range(m.end() - 1, len(text)):
-                if text[j] == "<":
-                    depth += 1
-                elif text[j] == ">":
-                    depth -= 1
-                    if depth == 0:
-                        break
-            inner = text[m.end() : j]
-            # split top-level commas (angle-aware)
-            parts, d, cur = [], 0, []
-            for ch in inner:
-                if ch == "<":
-                    d += 1
-                elif ch == ">":
-                    d -= 1
-                if ch == "," and d == 0:
-                    parts.append("".join(cur))
-                    cur = []
-                else:
-                    cur.append(ch)
-            parts.append("".join(cur))
+
+        def to_struct(call) -> str:
             fields = ",".join(
-                f"field{i}:{p.strip()}" for i, p in enumerate(parts)
+                f"field{i}:{HiveEngine._rewrite_uniontype_ddl(p)}"
+                for i, p in enumerate(split_top_level(call.inner, angle=True))
             )
-            text = (
-                text[: m.start()]
-                + f"struct<tag:int,{fields}>"
-                + text[j + 1 :]
-            )
+            return f"struct<tag:int,{fields}>"
+
+        return rewrite_calls(text, r"\buniontype\s*<", to_struct, "<", ">")
 
     def translate_hive_ddl(self, text: str) -> str:
         """Translate HiveQL CREATE TABLE surface into Spark's USING form
@@ -766,18 +736,8 @@ class HiveEngine:
                 self.declared_coll_delims: dict[str, tuple[str, str]] = {}
             tkey = tn.group(1).replace("`", "").lower()
 
-            def _unesc(raw: str) -> str:
-                if "\\" not in raw:
-                    return self._delim_get_byte(raw)
-                try:
-                    return raw.encode().decode("unicode_escape")
-                except UnicodeDecodeError:
-                    # '\N' (the default null token) is not a Python
-                    # escape — Hive keeps unknown escapes literal
-                    return raw
-
             if fd:
-                self.declared_field_delims[tkey] = _unesc(fd.group(1))
+                self.declared_field_delims[tkey] = self._delim_unescape(fd.group(1))
             else:
                 # re-CREATE without ROW FORMAT resets to the ^A default —
                 # a stale remembered delimiter must never outlive its DDL
@@ -798,7 +758,7 @@ class HiveEngine:
                 re.IGNORECASE,
             )
             if nf:
-                self.declared_null_formats[tkey] = _unesc(nf.group(1))
+                self.declared_null_formats[tkey] = self._delim_unescape(nf.group(1))
             else:
                 self.declared_null_formats.pop(tkey, None)
             # RegexSerDe: LOAD parses each line by input.regex — one
@@ -899,8 +859,8 @@ class HiveEngine:
             )
             if cd or kd:
                 self.declared_coll_delims[tkey] = (
-                    _unesc(cd.group(1)) if cd else "\x02",
-                    _unesc(kd.group(1)) if kd else "\x03",
+                    self._delim_unescape(cd.group(1)) if cd else "\x02",
+                    self._delim_unescape(kd.group(1)) if kd else "\x03",
                 )
             else:
                 self.declared_coll_delims.pop(tkey, None)
@@ -958,10 +918,10 @@ class HiveEngine:
         pm = re.search(r"\bPARTITIONED\s+BY\s*\(", out, re.IGNORECASE)
         if pm:
             p_open = out.index("(", pm.end() - 1)
-            p_close = self._balanced_close(out, p_open)
+            p_close = close_paren(out, p_open)
             inner = out[p_open + 1 : p_close]
             if re.search(r"\w\s+\w", inner):  # typed (name TYPE)
-                cols = self._split_top_level(inner)
+                cols = split_top_level(inner)
                 names = [c.split()[0] for c in cols]
                 close = out.rfind(")", 0, pm.start())
                 if close != -1:
@@ -995,27 +955,17 @@ class HiveEngine:
             # the declared case from their file schemas (orc_create.q
             # prints {"a":"one"} for the text staging table and
             # {"A":"one"} for the ORC one)
-            pos_sf = 0
-            while True:
-                msf = re.search(r"(?i)\bstruct\s*<", out[pos_sf:])
-                if not msf:
-                    break
-                op_sf = pos_sf + msf.end() - 1
-                d_sf = 0
-                for j_sf in range(op_sf, len(out)):
-                    if out[j_sf] == "<":
-                        d_sf += 1
-                    elif out[j_sf] == ">":
-                        d_sf -= 1
-                        if d_sf == 0:
-                            break
-                seg_sf = re.sub(
+            out = rewrite_calls(
+                out,
+                r"\bstruct\s*<",
+                lambda c: c.text[c.start : c.open] + sub_outside_quotes(
                     r"(\w+)(\s*:)",
                     lambda mm: mm.group(1).lower() + mm.group(2),
-                    out[op_sf : j_sf + 1],
-                )
-                out = out[:op_sf] + seg_sf + out[j_sf + 1 :]
-                pos_sf = op_sf + len(seg_sf)
+                    c.text[c.open : c.close + 1],
+                ),
+                "<",
+                ">",
+            )
         if fmt is not None:
             # Spark's grammar wants USING immediately after the column
             # list (before PARTITIONED BY/LOCATION/...); for CTAS with no
@@ -1583,7 +1533,7 @@ class HiveEngine:
         pcols = {c.lower() for c in self._table_partition_cols(tbl)}
         data_fields = [f for f in full.schema.fields if f.name.lower() not in pcols]
         new_cols = []
-        for spec in self._split_top_level(col_list, angle=True):
+        for spec in split_top_level(col_list, angle=True):
             parts = spec.strip().split(None, 1)
             if len(parts) < 2:
                 raise ValueError(f"REPLACE COLUMNS: bad column spec {spec!r}")
@@ -1666,7 +1616,7 @@ class HiveEngine:
         if not m:
             return text
         items, changed = [], False
-        for it in self._split_top_level(m.group(2)):
+        for it in split_top_level(m.group(2)):
             im = re.match(
                 r"^\s*(?:(\w+)\.)?(\w+)(?:\s+(?:AS\s+)?(\w+))?\s*$",
                 it,
@@ -1727,7 +1677,7 @@ class HiveEngine:
                 fields = self.spark.table(m.group(1)).schema.fields
             except Exception:
                 continue
-            for i, it in enumerate(self._split_top_level(m.group(2))):
+            for i, it in enumerate(split_top_level(m.group(2))):
                 lm = re.match(
                     r"^\s*'(\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}"
                     r"\.\d{7,9})'\s*$",
@@ -1830,7 +1780,7 @@ class HiveEngine:
         partition; numeric literal suffixes (110Y/22000S/330L) are
         stripped like HiveParser's constant handling."""
         cond, norm = None, {}
-        for kv in self._split_top_level(spec):
+        for kv in split_top_level(spec):
             kv = kv.strip()
             if not kv:
                 continue
@@ -2291,7 +2241,7 @@ class HiveEngine:
             f for f in full.schema.fields if f.name.lower() not in pcols
         ]
         new_cols = []
-        for cspec in self._split_top_level(col_list, angle=True):
+        for cspec in split_top_level(col_list, angle=True):
             parts = cspec.strip().split(None, 1)
             if len(parts) < 2:
                 raise ValueError(
@@ -2428,15 +2378,10 @@ class HiveEngine:
         )
         if tm is None:
             return None
-        depth = 0
-        for i in range(tm.start(1), len(out)):
-            if out[i] == "(":
-                depth += 1
-            elif out[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    return i + 1
-        return None
+        try:
+            return close_paren(out, tm.start(1)) + 1
+        except ValueError:
+            return None
 
     @staticmethod
     def translate_hints(text: str) -> str:
@@ -2859,16 +2804,6 @@ class HiveEngine:
         if not clause:
             return out
 
-        def _unesc(raw: str) -> str:
-            # staticmethod context: resolve the helper via the class
-            return (
-                raw.encode().decode("unicode_escape")
-                if "\\" in raw
-                else HiveEngine._delim_get_byte(raw)
-            )
-
-        # (the numeric-byte rule below never applies to null_str)
-
         for pat, key in (
             (r"FIELDS\s+TERMINATED\s+BY", "sep"),
             (r"COLLECTION\s+ITEMS\s+TERMINATED\s+BY", "coll_sep"),
@@ -2883,10 +2818,10 @@ class HiveEngine:
                 # (serialization.null.format) — only the delimiters go
                 # through LazyUtils.getByte's numeric rule
                 out[key] = (
-                    m.group(1).encode().decode("unicode_escape")
-                    if "\\" in m.group(1)
-                    else m.group(1)
-                ) if key == "null_str" else _unesc(m.group(1))
+                    unescape(m.group(1))
+                    if key == "null_str"
+                    else HiveEngine._delim_unescape(m.group(1))
+                )
         return out
 
     def _multi_insert_directories(self, text: str):
@@ -3016,80 +2951,30 @@ class HiveEngine:
         macros = getattr(self, "_macros", {})
         if not macros:
             return text
-        quoted_lit = re.compile(r"'[^']*'|\"[^\"]*\"")
         for _ in range(8):  # macros may call earlier macros
-            changed = False
+            before = text
             for name, (params, body) in macros.items():
-                pat = re.compile(rf"\b{re.escape(name)}\s*\(", re.IGNORECASE)
-                # call-site search must not fire inside string literals
-                spans = [
-                    (q.start(), q.end()) for q in quoted_lit.finditer(text)
-                ]
-                out, pos = [], 0
-                while True:
-                    m = pat.search(text, pos)
-                    if not m:
-                        out.append(text[pos:])
-                        break
-                    if any(s <= m.start() < e for s, e in spans):
-                        out.append(text[pos : m.end()])
-                        pos = m.end()
-                        continue
-                    out.append(text[pos : m.start()])
-                    # balanced-paren arg scan from m.end()
-                    depth, i, args, buf, quote = 1, m.end(), [], [], None
-                    while i < len(text) and depth:
-                        ch = text[i]
-                        if quote:
-                            if ch == quote:
-                                quote = None
-                            buf.append(ch)
-                        elif ch in ("'", '"'):
-                            quote = ch
-                            buf.append(ch)
-                        elif ch == "(":
-                            depth += 1
-                            buf.append(ch)
-                        elif ch == ")":
-                            depth -= 1
-                            if depth:
-                                buf.append(ch)
-                        elif ch == "," and depth == 1:
-                            args.append("".join(buf))
-                            buf = []
-                        else:
-                            buf.append(ch)
-                        i += 1
-                    args.append("".join(buf))
+
+                def expand(call, params=params, body=body) -> str:
                     # ALL parameters substitute in ONE pass (an argument
                     # that textually contains a later parameter name must
                     # not be rewritten again — classic macro capture), and
                     # only outside the body's string literals; Hive's
                     # GenericUDFMacro expression tree has neither hazard.
                     arg_map = {
-                        p.lower(): f"({a.strip()})" for p, a in zip(params, args)
+                        p.lower(): f"({a})" for p, a in zip(params, call.args)
                     }
-                    if arg_map:
-                        alt = re.compile(
-                            r"\b(" + "|".join(re.escape(p) for p in params) + r")\b",
-                            re.IGNORECASE,
-                        )
-                        parts = quoted_lit.split(body)
-                        lits = quoted_lit.findall(body)
-                        subbed = [
-                            alt.sub(lambda mm: arg_map[mm.group(1).lower()], p)
-                            for p in parts
-                        ]
-                        expansion = subbed[0]
-                        for lit, seg in zip(lits, subbed[1:]):
-                            expansion += lit + seg
-                    else:
-                        expansion = body
-                    out.append(f"({expansion})")
-                    pos = i
-                    changed = True
-                text = "".join(out)
-            if not changed:
+                    if not arg_map:
+                        return f"({body})"
+                    alt = (
+                        r"\b(" + "|".join(re.escape(p) for p in params) + r")\b"
+                    )
+                    return "(" + sub_outside_quotes(
+                        alt, lambda mm: arg_map[mm.group(1).lower()], body
+                    ) + ")"
+
+                text = rewrite_calls(text, rf"\b{re.escape(name)}\s*\(", expand)
+            if text == before:
                 return text
         return text
 
@@ -3131,47 +3016,18 @@ class HiveEngine:
         if not self._DW_HEAD.search(text):
             return text
 
-        def balanced_end(s: str, open_idx: int) -> int:
-            depth, quote = 0, None
-            for k in range(open_idx, len(s)):
-                ch = s[k]
-                if quote:
-                    if ch == quote:
-                        quote = None
-                elif ch in ("'", '"'):
-                    quote = ch
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        return k
-            raise ValueError("unbalanced parentheses in query text")
-
-        out, pos = [], 0
-        while True:
-            m = self._DW_HEAD.search(text, pos)
-            if not m:
-                out.append(text[pos:])
-                break
-            fn = m.group(1).upper()
-            p_open = text.rfind("(", m.start(), m.end())
-            p_close = balanced_end(text, p_open)
+        def rewrite(call):
+            fn = call.match.group(1).upper()
             # argument expression: after DISTINCT keyword up to the close
             dk = re.compile(r"DISTINCT\b", re.IGNORECASE).search(
-                text, p_open, p_close
+                text, call.open, call.close
             )
-            expr = text[dk.end() : p_close].strip()
-            over = re.compile(r"\s*OVER\s*\(", re.IGNORECASE).match(
-                text, p_close + 1
-            )
+            expr = text[dk.end() : call.close].strip()
+            over = call.over()
             if not over:
                 # plain DISTINCT aggregate — Spark handles it natively
-                out.append(text[pos : p_close + 1])
-                pos = p_close + 1
-                continue
-            o_open = text.index("(", over.start())
-            o_close = balanced_end(text, o_open)
+                return None
+            o_open, o_close = over
             spec = text[o_open + 1 : o_close].strip()
             if re.search(r"\b(ORDER|SORT)\s+BY\b", spec, re.IGNORECASE):
                 # Hive: "Distinct windowing is supported only for the
@@ -3260,22 +3116,17 @@ class HiveEngine:
                         f"IF(size({set_expr}) = 0, CAST(NULL AS {rt}), "
                         f"CAST({_fold(acc)} / size({set_expr}) AS {rt}))"
                     )
-            out.append(text[pos : m.start()])
-            out.append(repl)
-            pos = o_close + 1
-        return "".join(out)
+            return repl, o_close + 1
+
+        return rewrite_calls(text, self._DW_HEAD, rewrite)
 
     @staticmethod
-    def _sub_outside_quotes(pattern: str, repl, text: str) -> str:
-        """re.sub applied only OUTSIDE single-quoted string literals —
-        regex call-site rewrites (MAP/REDUCE, substr/field/index) must
-        never corrupt a literal that happens to contain matching text
-        (e.g. SELECT 'map x using cat')."""
-        parts = re.split(r"('(?:[^'\\]|\\.)*')", text)
-        return "".join(
-            p if i % 2 else re.sub(pattern, repl, p)
-            for i, p in enumerate(parts)
-        )
+    def _delim_unescape(raw: str) -> str:
+        """A DDL delimiter literal's value: escapes decoded, else the
+        LazyUtils.getByte numeric rule."""
+        if "\\" in raw:
+            return unescape(raw)
+        return HiveEngine._delim_get_byte(raw)
 
     @staticmethod
     def _delim_get_byte(raw: str) -> str:
@@ -3290,34 +3141,7 @@ class HiveEngine:
             return raw
         return chr(v & 0xFF) if -128 <= v <= 127 else raw
 
-    @staticmethod
-    def _quoted_spans(text: str):
-        """[(start, end)) spans of single-quoted literals in text."""
-        return [
-            m.span()
-            for m in re.finditer(r"'(?:[^'\\]|\\.)*'", text)
-        ]
-
     # ---------------------------------------------- Hive window compat
-    @staticmethod
-    def _balanced_close(s: str, open_idx: int) -> int:
-        """Index of the ')' matching s[open_idx]=='(' (quote-aware)."""
-        depth, quote = 0, None
-        for k in range(open_idx, len(s)):
-            ch = s[k]
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"'):
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    return k
-        raise ValueError("unbalanced parentheses in query text")
-
     _PTF_NOOP = re.compile(
         r"\b(noop(?:withmap)?(?:streaming)?)\s*\(\s*on\b", re.IGNORECASE
     )
@@ -3337,28 +3161,12 @@ class HiveEngine:
         nested noops): Catalyst plans the real partitioning from the
         window specs, so the identity stage would be pure overhead."""
         self._ptf_order: str | None = None
-        while True:
-            m = self._PTF_NOOP.search(text)
-            if not m:
-                return text
-            open_idx = text.index("(", m.end(1))
-            close = self._balanced_close(text, open_idx)
-            body = text[open_idx + 1 : close]
-            body = re.sub(r"^\s*on\b", "", body, flags=re.IGNORECASE)
+
+        def source(call) -> str:
+            body = re.sub(r"^\s*on\b", "", call.inner, flags=re.IGNORECASE)
             # cut at the first top-level partition/sort clause
-            depth, cut = 0, len(body)
-            for k in range(len(body)):
-                ch = body[k]
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif depth == 0:
-                    mm = self._PTF_CLAUSE.match(body, k)
-                    if mm:
-                        cut = k
-                        break
-            source = body[:cut].strip()
+            mm = search_top_level(self._PTF_CLAUSE, body)
+            cut = mm.start() if mm else len(body)
             # remember the PTF's declared sort: a window function whose
             # OVER omits ORDER BY inherits the PTF input order in Hive
             om = re.search(
@@ -3368,7 +3176,12 @@ class HiveEngine:
             )
             if om:
                 self._ptf_order = om.group(1).strip()
-            text = text[: m.start()] + source + text[close + 1 :]
+            return strip(body[:cut].strip())
+
+        def strip(text: str) -> str:
+            return rewrite_calls(text, self._PTF_NOOP, source)
+
+        return strip(text)
 
     # -------------------------------------------------- matchpath PTF SQL
     def _rewrite_matchpath(self, text: str):
@@ -3406,14 +3219,14 @@ class HiveEngine:
         if not m:
             return text
         open_idx = text.index("(", m.end(1))
-        close = self._balanced_close(text, open_idx)
+        close = close_paren(text, open_idx)
         body = re.sub(
             r"^\s*on\b", "", text[open_idx + 1 : close], flags=re.IGNORECASE
         )
         # args: argN(...) in order
         args, spans = [], []
         for am in re.finditer(r"\barg\d+\s*\(", body, re.IGNORECASE):
-            ac = self._balanced_close(body, body.index("(", am.start()))
+            ac = close_paren(body, body.index("(", am.start()))
             args.append(body[body.index("(", am.start()) + 1 : ac].strip())
             spans.append((am.start(), ac + 1))
         if len(args) < 4:
@@ -3478,7 +3291,7 @@ class HiveEngine:
         view = f"matchpath_{os.getpid()}_{HiveEngine._AUTOGEN_SEQ}"
         out.createOrReplaceTempView(view)
         sel_items = []
-        for item in self._split_top_level(result_raw):
+        for item in split_top_level(result_raw):
             am2 = re.match(r"([\s\S]+?)\s+as\s+(\w+)\s*$", item, re.IGNORECASE)
             expr, alias = (
                 (am2.group(1), am2.group(2)) if am2 else (item, None)
@@ -3503,10 +3316,10 @@ class HiveEngine:
         starts like a window spec (ptf/windowing named-window files)."""
         for m in re.finditer(r"\bOVER\s*\(", text, re.IGNORECASE):
             o = text.index("(", m.start() + 4)
-            yield o + 1, self._balanced_close(text, o)
+            yield o + 1, close_paren(text, o)
         for m in re.finditer(r"\b\w+\s+AS\s*\(", text, re.IGNORECASE):
             o = text.index("(", m.end() - 1)
-            c = self._balanced_close(text, o)
+            c = close_paren(text, o)
             if re.match(
                 r"\s*(partition|distribute|sort|order|cluster|rows|range)\b",
                 text[o + 1 : c],
@@ -3536,7 +3349,7 @@ class HiveEngine:
             name = dm.group(1).lower()
             p = pos + dm.end()
             if p < len(text) and text[p] == "(":
-                c = self._balanced_close(text, p)
+                c = close_paren(text, p)
                 defs[name] = text[p + 1 : c].strip()
                 p = c + 1
             else:
@@ -3679,21 +3492,15 @@ class HiveEngine:
             re.IGNORECASE,
         )
         ptf_order = getattr(self, "_ptf_order", None)
-        pos = 0
-        while True:
-            m = pat.search(out, pos)
-            if not m:
-                break
-            argc = self._balanced_close(out, m.end() - 1)
-            ov = re.match(r"\s*OVER\s*\(", out[argc + 1 :], re.IGNORECASE)
-            pos = argc + 1
-            if not ov:
-                continue
-            o = out.index("(", argc + 1 + ov.end() - 1)
-            c = self._balanced_close(out, o)
-            spec = out[o + 1 : c]
+
+        def inject_order(call):
+            over = call.over()
+            if not over:
+                return None
+            o, c = over
+            spec = call.text[o + 1 : c]
             if re.search(r"\bORDER\s+BY\b", spec, re.IGNORECASE):
-                continue
+                return None
             pm = re.match(
                 r"\s*PARTITION\s+BY\s+([\s\S]+?)\s*"
                 r"(?=$|\bROWS\b|\bRANGE\b)",
@@ -3703,75 +3510,49 @@ class HiveEngine:
             order_expr = ptf_order or (pm.group(1).strip() if pm else None)
             if order_expr is None:
                 if spec.strip():
-                    continue
+                    return None
                 # bare OVER () — Hive permits unordered navigation fns
                 # (windowing_navfn.q's row_number() over()); any order
                 # is a valid answer, use a constant
                 order_expr = "1"
-            if pm:
-                ins = o + 1 + pm.end()
-                out = (
-                    out[:ins] + f" ORDER BY {order_expr} " + out[ins:]
-                )
-            else:
-                out = (
-                    out[: o + 1]
-                    + f"ORDER BY {order_expr} "
-                    + out[o + 1 :]
-                )
+            ins = o + 1 + (pm.end() if pm else 0)
+            order = f" ORDER BY {order_expr} " if pm else f"ORDER BY {order_expr} "
+            return call.text[call.start : ins] + order + call.text[ins : c + 1], c + 1
+
+        out = rewrite_calls(out, pat, inject_order)
+
         # pass 3b: ranking/navigation functions with an EXPLICIT frame —
         # Hive parses and ignores it (WindowingSpec.effectiveWindowFrame
         # forces the function's own frame), Spark errors; strip it
         # (windowing_range_multiorder.q's first_value over RANGE
         # UNBOUNDED..UNBOUNDED with rank-class fns)
-        pat3 = re.compile(
-            r"\b(lag|lead|rank|dense_rank|row_number|ntile|percent_rank|"
-            r"cume_dist)\s*\(",
-            re.IGNORECASE,
-        )
-        pos = 0
-        while True:
-            m = pat3.search(out, pos)
-            if not m:
-                break
-            argc = self._balanced_close(out, m.end() - 1)
-            ov = re.match(r"\s*OVER\s*\(", out[argc + 1 :], re.IGNORECASE)
-            pos = argc + 1
-            if not ov:
-                continue
-            o = out.index("(", argc + 1 + ov.end() - 1)
-            c = self._balanced_close(out, o)
-            spec = out[o + 1 : c]
-            fm2 = re.search(r"\b(ROWS|RANGE)\s+", spec, re.IGNORECASE)
-            if fm2:
-                out = out[: o + 1] + spec[: fm2.start()].rstrip() + out[c:]
+        def strip_frame(call):
+            over = call.over()
+            if not over:
+                return None
+            o, c = over
+            fm2 = re.search(r"\b(ROWS|RANGE)\s+", call.text[o + 1 : c], re.IGNORECASE)
+            if not fm2:
+                return None
+            return call.text[call.start : o + 1 + fm2.start()].rstrip() + ")", c + 1
+
+        out = rewrite_calls(out, pat, strip_frame)
         # pass 4: windowed collect_set keeps FRAME INSERTION order in
         # Hive (GenericUDAFMkCollectionEvaluator uses a LinkedHashSet);
         # Spark's set order is arbitrary — rewrite to
         # array_distinct(collect_list(...) OVER (...)), which preserves
         # first-occurrence order exactly like the LinkedHashSet
-        pat2 = re.compile(r"\bcollect_set\s*\(", re.IGNORECASE)
-        pos = 0
-        while True:
-            m = pat2.search(out, pos)
-            if not m:
-                break
-            ap = out.index("(", m.end() - 1)
-            argc = self._balanced_close(out, ap)
-            ov = re.match(r"\s*OVER\s*\(", out[argc + 1 :], re.IGNORECASE)
-            if not ov:
-                pos = argc + 1
-                continue
-            o = out.index("(", argc + 1 + ov.end() - 1)
-            c = self._balanced_close(out, o)
-            repl = (
+        def ordered_set(call):
+            over = call.over()
+            if not over:
+                return None
+            return (
                 "array_distinct(collect_list"
-                + out[ap : argc + 1]
-                + out[argc + 1 : c + 1]
+                + call.text[call.open : over[1] + 1]
                 + ")"
-            )
-            out = out[: m.start()] + repl + out[c + 1 :]
-            pos = m.start() + len(repl)
+            ), over[1] + 1
+
+        out = rewrite_calls(out, r"\bcollect_set\s*\(", ordered_set)
         # hive.cbo.returnpath.hiveop=true: Hive 2.1's CBO return path
         # renders window cume_dist() through an integral conversion
         # (cbo_rp_windowing_2.q golden prints 0/1, vs the standard
@@ -4023,20 +3804,10 @@ class HiveEngine:
             return f.dataType.simpleString().split("(")[0]
 
         by_col = {f.name.lower(): (f.name, tag_of(f)) for f in fields}
-        out, i = [], 0
-        pat = re.compile(r"\bhash\s*\(", re.IGNORECASE)
-        while True:
-            m = pat.search(text, i)
-            if not m:
-                out.append(text[i:])
-                break
-            out.append(text[i : m.start()])
-            j = self._balanced_close(text, m.end() - 1)
-            inner = text[m.end() : j].strip()
-            if inner == "*":
-                args = [f.name for f in fields]
-            else:
-                args = [a.strip() for a in self._split_top_level(inner)]
+
+        def typed(call):
+            star = call.inner.strip() == "*"
+            args = [f.name for f in fields] if star else call.args
             resolved = []
             for a in args:
                 cm = re.match(
@@ -4072,11 +3843,10 @@ class HiveEngine:
                     f"CAST({a} AS DOUBLE)" if t == "timestamp" else a
                     for a, t in resolved
                 )
-                out.append(f"hive_hash_typed('{tags}', {cols})")
-            else:
-                out.append(text[m.start() : j + 1])
-            i = j + 1
-        return "".join(out)
+                return f"hive_hash_typed('{tags}', {cols})"
+            return None
+
+        return rewrite_calls(text, r"\bhash\s*\(", typed)
 
     def _rewrite_block_offset(self, text: str) -> str:
         """BLOCK__OFFSET__INSIDE__FILE (metadata/VirtualColumn.java) —
@@ -4254,39 +4024,20 @@ class HiveEngine:
             r"|HAVING|CLUSTER|DISTRIBUTE|LEFT|RIGHT|FULL|INNER)\b|;|$",
             re.IGNORECASE,
         )
-        def cond_end(s: str, i: int) -> int:
-            # end of the ON condition: the next clause keyword, ';', or a
-            # close-paren that leaves the join's own nesting level
-            depth = 0
-            while i < len(s):
-                ch = s[i]
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    if depth == 0:
-                        return i
-                    depth -= 1
-                elif ch == ";":
-                    return i
-                elif depth == 0:
-                    tm = tail.match(s, i)
-                    if tm and tm.group(1):
-                        return i
-                i += 1
-            return len(s)
-
         search_from = 0
         while True:
             m = pat.search(text, search_from)
             if not m:
                 return text
             search_from = m.end()
-            end_pos = cond_end(text, m.end())
+            # end of the ON condition: the next clause keyword, ';', or a
+            # close-paren that leaves the join's own nesting level
+            end_pos = search_top_level(tail, text, m.end()).start()
             cond = text[m.end() : end_pos].strip()
             # a fully parenthesized ON ((...)): strip and restore
             paren_wrapped = False
             if cond.startswith("("):
-                close = self._balanced_close(cond, 0)
+                close = close_paren(cond, 0)
                 if close == len(cond) - 1:
                     cond, paren_wrapped = cond[1:-1].strip(), True
             # paren-aware conjunct split (an OR inside parens must not
@@ -4461,8 +4212,8 @@ class HiveEngine:
         if not m:
             return text
         open_idx = text.index("(", m.end() - 1)
-        close = self._balanced_close(text, open_idx)
-        sets = self._split_top_level(text[open_idx + 1 : close])
+        close = close_paren(text, open_idx)
+        sets = split_top_level(text[open_idx + 1 : close])
         seen, uniq = set(), []
         for s_ in sets:
             key = re.sub(r"\s+", "", s_).lower()
@@ -4484,45 +4235,25 @@ class HiveEngine:
         subquery output.  Qualified refs (t1.GROUPING__ID) are always
         column references, never rewritten."""
         # recurse into top-level parenthesized subqueries first
-        out, i, n = [], 0, len(s)
-        while i < n:
-            if s[i] == "(":
-                j = self._balanced_close(s, i)
-                out.append("(" + self._rewrite_grouping_id_scope(s[i + 1 : j]) + ")")
-                i = j + 1
-            else:
-                out.append(s[i])
-                i += 1
-        flat = "".join(out)
-        # mask paren spans so THIS level's GROUP BY / occurrences are
-        # found without touching already-processed subqueries
-        masked, depth = [], 0
-        for ch in flat:
-            if ch == "(":
-                depth += 1
-                masked.append("(")
-            elif ch == ")":
-                depth -= 1
-                masked.append(")")
-            else:
-                masked.append(" " if depth > 0 else ch)
-        masked = "".join(masked)
-        m = re.search(
-            r"GROUP\s+BY\s+(.+?)\s+WITH\s+(?:CUBE|ROLLUP)", masked,
-            re.IGNORECASE | re.DOTALL
-        ) or re.search(
-            r"GROUP\s+BY\s+(?:CUBE|ROLLUP)\s*(\()", masked, re.IGNORECASE
-        ) or re.search(
-            r"GROUP\s+BY\s+(.+?)\s+GROUPING\s+SETS", masked,
-            re.IGNORECASE | re.DOTALL
+        flat = rewrite_calls(
+            s, r"\(", lambda c: "(" + self._rewrite_grouping_id_scope(c.inner) + ")"
+        )
+        # search THIS level only, so its GROUP BY / occurrences are found
+        # without touching already-processed subqueries
+        m = search_top_level(
+            r"(?s)GROUP\s+BY\s+(.+?)\s+WITH\s+(?:CUBE|ROLLUP)", flat
+        ) or search_top_level(
+            r"GROUP\s+BY\s+(?:CUBE|ROLLUP)\s*(\()", flat
+        ) or search_top_level(
+            r"(?s)GROUP\s+BY\s+(.+?)\s+GROUPING\s+SETS", flat
         )
         if not m:
             return flat
         cols_text = flat[m.start(1) : m.end(1)]
         if cols_text == "(":  # ROLLUP()/CUBE() call form: real span
-            close = self._balanced_close(flat, m.start(1))
+            close = close_paren(flat, m.start(1))
             cols_text = flat[m.start(1) + 1 : close]
-        ng = len(self._split_top_level(cols_text))
+        ng = len(split_top_level(cols_text))
         terms = [
             f"(1 - pmod(CAST(floor(grouping_id() / {1 << (ng - 1 - i)}) AS INT), 2))"
             f" * {1 << i}"
@@ -4530,11 +4261,11 @@ class HiveEngine:
         ]
         expr = "CAST(" + " + ".join(terms) + " AS BIGINT)"
         # replace THIS level's unqualified occurrences, right to left
-        occs = [
-            mm
-            for mm in re.finditer(r"\bGROUPING__ID\b", masked, re.IGNORECASE)
-            if not re.search(r"[\w.]\.$", masked[: mm.start()][-2:])
-        ]
+        occs, pos = [], 0
+        while mm := search_top_level(r"\bGROUPING__ID\b", flat, pos):
+            if not re.search(r"[\w.]\.$", mm.string[: mm.start()][-2:]):
+                occs.append(mm)
+            pos = mm.end()
         for mm in reversed(occs):
             if flat[: mm.start()].rstrip().endswith("."):
                 continue  # qualified: a column ref into a subquery
@@ -4573,7 +4304,7 @@ class HiveEngine:
         if not m:
             return text
         entries = []
-        for part in self._split_top_level(m.group("list")):
+        for part in split_top_level(m.group("list")):
             em = self._UJ_ENTRY.fullmatch(part)
             if not em:
                 return text  # unparseable — let Spark raise on the original
@@ -4622,49 +4353,6 @@ class HiveEngine:
                 "WHERE " + " AND ".join(f"({present(e[2])})" for e in entries)
             )
         return "\n".join(sql)
-
-    @staticmethod
-    def _split_top_level(s: str, angle: bool = False) -> list[str]:
-        """Split on top-level commas — parens AND string literals are
-        opaque (``UPDATE t SET c = 'a,b'`` must not split inside the
-        literal; backslash escapes respected).  ``angle=True``
-        additionally treats ``<...>`` as nesting, for column-spec lists
-        holding complex types (``s STRUCT<c1:STRING, c2:STRING>`` must
-        not split inside the struct — schema_evol_*_complex.q); it is
-        opt-in because ``<`` is a comparison operator in expression
-        lists."""
-        out, buf, depth = [], [], 0
-        quote: str | None = None
-        i, n = 0, len(s)
-        while i < n:
-            ch = s[i]
-            if quote:
-                buf.append(ch)
-                if ch == "\\" and i + 1 < n:
-                    buf.append(s[i + 1])
-                    i += 2
-                    continue
-                if ch == quote:
-                    quote = None
-                i += 1
-                continue
-            if ch in ("'", '"'):
-                quote = ch
-                buf.append(ch)
-                i += 1
-                continue
-            if ch == "(" or (angle and ch == "<"):
-                depth += 1
-            elif ch == ")" or (angle and ch == ">"):
-                depth -= 1
-            if ch == "," and depth == 0:
-                out.append("".join(buf).strip())
-                buf = []
-            else:
-                buf.append(ch)
-            i += 1
-        out.append("".join(buf).strip())
-        return [p for p in out if p]
 
     @staticmethod
     def _concat_adjacent_string_literals(text: str) -> str:
@@ -4724,29 +4412,14 @@ class HiveEngine:
         element the variance is always 0'); Spark/SQL-standard return
         NULL.  Wrap non-windowed uses in a COUNT guard
         (decimal_udf.q's one-row groups)."""
-        if not re.search(
-            r"\b(var_samp|stddev_samp|covar_samp)\s*\(", text, re.IGNORECASE
-        ):
-            return text
-        out, pos = text, 0
-        while True:
-            m = re.search(
-                r"\b(var_samp|stddev_samp|covar_samp)\s*\(",
-                out[pos:],
-                re.IGNORECASE,
-            )
-            if not m:
-                break
-            start = pos + m.start()
-            op = pos + m.end() - 1
-            close = self._balanced_close(out, op)
-            inner = out[op + 1 : close]
-            if re.match(r"\s*OVER\b", out[close + 1 :], re.IGNORECASE) or \
+
+        def guard(call):
+            inner = call.inner
+            if re.match(r"\s*OVER\b", call.text[call.close + 1 :], re.IGNORECASE) or \
                     re.match(r"\s*DISTINCT\b", inner, re.IGNORECASE):
-                pos = close + 1
-                continue
-            fn = m.group(1).lower()
-            args = self._split_top_level(inner)
+                return None
+            fn = call.match.group(1).lower()
+            args = call.args
             if fn == "covar_samp" and len(args) == 2:
                 cnt = (
                     f"count(CASE WHEN ({args[0]}) IS NOT NULL AND "
@@ -4754,13 +4427,14 @@ class HiveEngine:
                 )
             else:
                 cnt = f"count({inner})"
-            repl = (
+            return (
                 f"(CASE WHEN {cnt} > 1 THEN {fn}({inner}) "
                 f"WHEN {cnt} = 1 THEN 0.0D END)"
             )
-            out = out[:start] + repl + out[close + 1 :]
-            pos = start + len(repl)
-        return out
+
+        return rewrite_calls(
+            text, r"\b(var_samp|stddev_samp|covar_samp)\s*\(", guard
+        )
 
     def _rewrite_sum_of_strings(self, text: str) -> str:
         """``sum(<string expr>)``: GenericUDAFSumDouble marks its buffer
@@ -4772,19 +4446,11 @@ class HiveEngine:
         NULL and the sum stays NULL.  Rewrite string-typed sum args to
         the parse-or-zero form, keeping the all-NULL→NULL case via a
         count() guard."""
-        if not re.search(r"(?i)\bsum\s*\(", text):
-            return text
-        out, pos = text, 0
-        while True:
-            m = re.search(r"(?i)\bsum\s*\(", out[pos:])
-            if not m:
-                break
-            op = pos + m.end() - 1
-            close = self._balanced_close(out, op)
-            arg = out[op + 1 : close].strip()
+
+        def parse_or_zero(call):
+            arg = call.inner.strip()
             if re.match(r"(?i)^DISTINCT\b", arg):
-                pos = close + 1
-                continue
+                return None
             is_str = bool(
                 re.match(r"^'[^']*'$", arg)
                 or re.match(r"(?i)^concat\s*\(", arg)
@@ -4793,35 +4459,27 @@ class HiveEngine:
                 t = None
                 if re.match(r"^[\w.]+$", arg):
                     try:
-                        t = self._infer_column_type(out, arg)
+                        t = self._infer_column_type(text, arg)
                     except Exception:
                         t = None
                 is_str = t is not None and t.typeName() == "string"
             if not is_str:
-                pos = close + 1
-                continue
-            om = re.compile(r"\s*OVER\s*\(", re.IGNORECASE).match(
-                out, close + 1
-            )
-            if om:
-                o_close = self._balanced_close(out, om.end() - 1)
-                spec = out[om.end() : o_close]
-                repl = (
+                return None
+            over = call.over()
+            if over:
+                spec = text[over[0] + 1 : over[1]]
+                return (
                     f"IF(count({arg}) OVER ({spec}) = 0, "
                     f"CAST(NULL AS DOUBLE), "
                     f"sum(coalesce(CAST({arg} AS DOUBLE), 0.0D)) "
                     f"OVER ({spec}))"
-                )
-                end = o_close
-            else:
-                repl = (
-                    f"IF(count({arg}) = 0, CAST(NULL AS DOUBLE), "
-                    f"sum(coalesce(CAST({arg} AS DOUBLE), 0.0D)))"
-                )
-                end = close
-            out = out[: pos + m.start()] + repl + out[end + 1 :]
-            pos = pos + m.start() + len(repl)
-        return out
+                ), over[1] + 1
+            return (
+                f"IF(count({arg}) = 0, CAST(NULL AS DOUBLE), "
+                f"sum(coalesce(CAST({arg} AS DOUBLE), 0.0D)))"
+            )
+
+        return rewrite_calls(text, r"\bsum\s*\(", parse_or_zero)
 
     def _rewrite_temporal_range_frames(self, text: str) -> str:
         """Hive's RANGE frames over DATE order keys measure the numeric
@@ -5034,27 +4692,16 @@ class HiveEngine:
         tbl = fm.group(1)
         extra_cols: list[str] = []
         telescoped = False
-        out = text
-        n = 0
-        pos = 0
-        while True:
-            m = agg_pat.search(out, pos)
-            if not m:
-                break
-            op_out = out.index("(", m.end(1))
-            close_out = self._balanced_close(out, op_out)
-            arg = out[op_out + 1 : close_out]
+
+        def hoist_leadlag(call):
+            nonlocal telescoped
+            arg = call.inner
             if not ll_pat.search(arg):
-                pos = close_out + 1
-                continue
-            om = re.compile(r"\s*OVER\s*\(", re.IGNORECASE).match(
-                out, close_out + 1
-            )
-            if not om:
-                pos = close_out + 1
-                continue
-            close_ov = self._balanced_close(out, om.end() - 1)
-            spec = out[om.end() : close_ov]
+                return None
+            over = call.over()
+            if not over:
+                return None
+            spec = text[over[0] + 1 : over[1]]
             has_frame = bool(
                 re.search(r"(?i)\b(?:rows|range)\b", spec)
             )
@@ -5063,39 +4710,36 @@ class HiveEngine:
                 arg,
                 re.IGNORECASE,
             )
-            if has_frame and m.group(1).lower() == "sum" and tm:
+            if has_frame and call.match.group(1).lower() == "sum" and tm:
                 # Hive evaluates lag FRAME-LOCALLY (the frame's first
                 # row lags to NULL — leadlag.q testLagInSumOverWindow),
                 # so sum(x - lag(x,1)) over an explicit frame
                 # TELESCOPES to last_value - first_value within it
                 ref = tm.group(1)
-                repl = (
+                telescoped = True
+                return (
                     f"(CASE WHEN count(*) OVER ({spec}) > 1 THEN "
                     f"last_value({ref}) OVER ({spec}) - "
                     f"first_value({ref}) OVER ({spec}) END)"
-                )
-                out = out[: m.start()] + repl + out[close_ov + 1 :]
-                pos = m.start() + len(repl)
-                telescoped = True
-                continue
+                ), over[1] + 1
             # lead/lag ride the partition/order only — strip any frame
             spec_po = re.split(
                 r"(?i)\b(?:rows|range)\b", spec, maxsplit=1
             )[0].strip()
+
             # hoist every lead/lag call inside the agg argument
-            while True:
-                lm = ll_pat.search(arg)
-                if not lm:
-                    break
-                op_in = arg.index("(", lm.end(1))
-                close_in = self._balanced_close(arg, op_in)
-                inner = arg[lm.start() : close_in + 1]
-                n += 1
-                col = f"__ll{n}"
-                extra_cols.append(f"{inner} OVER ({spec_po}) AS {col}")
-                arg = arg[: lm.start()] + col + arg[close_in + 1 :]
-            out = out[: op_out + 1] + arg + out[close_out:]
-            pos = op_out + 1 + len(arg)
+            def hoist(inner_call) -> str:
+                col = f"__ll{len(extra_cols) + 1}"
+                extra_cols.append(
+                    f"{arg[inner_call.start : inner_call.close + 1]} "
+                    f"OVER ({spec_po}) AS {col}"
+                )
+                return col
+
+            arg = rewrite_calls(arg, ll_pat, hoist)
+            return text[call.start : call.open + 1] + arg + ")"
+
+        out = rewrite_calls(text, agg_pat, hoist_leadlag)
         if not extra_cols:
             return out if telescoped else text
         wrap = (
@@ -5263,7 +4907,7 @@ class HiveEngine:
             ]
             changes3 = []
             for i, cspec in enumerate(
-                self._split_top_level(col_list, angle=True)
+                split_top_level(col_list, angle=True)
             ):
                 parts = cspec.strip().split(None, 1)
                 if len(parts) == 2 and i < len(data_fields):
@@ -5341,7 +4985,7 @@ class HiveEngine:
         types = dict(full.dtypes)
         cond = None
         if spec:
-            for kv in self._split_top_level(spec):
+            for kv in split_top_level(spec):
                 if "=" not in kv:
                     continue  # bare key: no constraint on that column
                 k, v = kv.split("=", 1)
@@ -5544,23 +5188,16 @@ class HiveEngine:
         # hive_ calls: a TimestampType value reaching a row-Python UDF
         # converts through the session↔worker timezone pair and can
         # shift across midnight — the literal string parses exactly
-        pos_h = 0
-        while True:
-            mh = re.search(r"(?i)\bhive_\w+\s*\(", text[pos_h:])
-            if not mh:
-                break
-            oph = pos_h + mh.end() - 1
-            closeh = self._balanced_close(text, oph)
-            seg = text[oph : closeh + 1]
-            seg2 = re.sub(
+        return rewrite_calls(
+            text,
+            r"\bhive_\w+\s*\(",
+            lambda c: text[c.start : c.open] + re.sub(
                 r"(?i)\bcast\s*\(\s*('[^']*'|null)\s+as\s+"
                 r"(?:timestamp|date)\s*\)",
                 r"\1",
-                seg,
-            )
-            text = text[:oph] + seg2 + text[closeh + 1 :]
-            pos_h = oph + len(seg2)
-        return text
+                text[c.open : c.close + 1],
+            ),
+        )
 
     def _register_test_jar_fn(
         self, fname: str, clazz: str, resource: str | None = None
@@ -5700,25 +5337,14 @@ class HiveEngine:
                 r"(?i)\bFROM\s+[a-zA-Z_][\w.]*\s*,", text
             )
         )
-        out, pos = text, 0
-        while True:
-            m = re.search(
-                r"\bpercentile_approx\s*\(", out[pos:], re.IGNORECASE
-            )
-            if not m:
-                break
-            start = pos + m.start()
-            op = pos + m.end() - 1
-            close = self._balanced_close(out, op)
-            inner = out[op + 1 : close]
-            if re.match(r"\s*OVER\b", out[close + 1 :], re.IGNORECASE) or \
-                    re.search(r"(?i)^\s*DISTINCT\b", inner):
-                pos = close + 1
-                continue
-            args = self._split_top_level(inner)
+
+        def exact(call):
+            if re.match(r"\s*OVER\b", call.text[call.close + 1 :], re.IGNORECASE) or \
+                    re.search(r"(?i)^\s*DISTINCT\b", call.inner):
+                return None
+            args = call.args
             if len(args) < 2:
-                pos = close + 1
-                continue
+                return None
             col, q = args[0], args[1]
             b = args[2] if len(args) > 2 else "10000"
             fn = (
@@ -5727,20 +5353,18 @@ class HiveEngine:
                 else "hive_percentile_approx"
             )
             if use_ord:
-                repl = (
+                return (
                     f"{fn}_ord(CAST(({col}) AS DOUBLE), {q}, "
                     f"CAST(({b}) AS DOUBLE), "
                     f"_metadata.file_modification_time, "
                     f"_metadata.file_path, _metadata.row_index)"
                 )
-            else:
-                repl = (
-                    f"{fn}(CAST(({col}) AS DOUBLE), {q}, "
-                    f"CAST(({b}) AS DOUBLE))"
-                )
-            out = out[:start] + repl + out[close + 1 :]
-            pos = start + len(repl)
-        return out
+            return (
+                f"{fn}(CAST(({col}) AS DOUBLE), {q}, "
+                f"CAST(({b}) AS DOUBLE))"
+            )
+
+        return rewrite_calls(text, r"\bpercentile_approx\s*\(", exact)
 
     def _rewrite_ngrams_stmt(self, text: str) -> str:
         """SQL surface of the n-gram frequency UDAFs
@@ -5757,8 +5381,8 @@ class HiveEngine:
         if not m:
             return text
         op = text.index("(", m.end() - 1)
-        close = self._balanced_close(text, op)
-        args = [a.strip() for a in self._split_top_level(text[op + 1 : close])]
+        close = close_paren(text, op)
+        args = [a.strip() for a in split_top_level(text[op + 1 : close])]
         rest = text[close + 1 :].rstrip().rstrip(";")
         sm = re.match(r"(\.\w+)?\s+FROM\s+([\s\S]+)$", rest, re.IGNORECASE)
         if not sm or len(args) != 4:
@@ -5778,7 +5402,7 @@ class HiveEngine:
             match = "true"
         else:
             ctx = second
-            n_lit = len(self._split_top_level(ctx[ctx.index("(") + 1 : -1]))
+            n_lit = len(split_top_level(ctx[ctx.index("(") + 1 : -1]))
             grams = (
                 f"CASE WHEN size(sent) >= {n_lit} THEN "
                 f"transform(sequence(1, size(sent) - {n_lit} + 1), "
@@ -5849,32 +5473,9 @@ class HiveEngine:
 
         def _each(name: str, fn) -> None:
             nonlocal text
-            pos = 0
-            while True:
-                m = re.search(
-                    rf"(?i)(?<![\w.`]){name}\s*\(", text[pos:]
-                )
-                if not m:
-                    break
-                # never rewrite a call-shaped substring INSIDE a string
-                # literal ('select substr(x)' stays text)
-                if any(
-                    s <= pos + m.start() < e
-                    for s, e in self._quoted_spans(text)
-                ):
-                    pos = pos + m.end()
-                    continue
-                op = pos + m.end() - 1
-                close = self._balanced_close(text, op)
-                if close is None or close < 0:
-                    break
-                args = self._split_top_level(text[op + 1 : close])
-                repl = fn([a.strip() for a in args])
-                if repl is None:
-                    pos = close + 1
-                    continue
-                text = text[: pos + m.start()] + repl + text[close + 1 :]
-                pos = pos + m.start() + len(repl)
+            text = rewrite_calls(
+                text, rf"(?<![\w.`]){name}\s*\(", lambda c: fn(c.args)
+            )
 
         def _pad(args, n):
             return (args + ["NULL"] * n)[:n]
@@ -6429,7 +6030,7 @@ class HiveEngine:
                 for mo2 in re.finditer(r"(?i)\bOVER\s*\(", text):
                     mo_over = mo2
                 if mo_over:
-                    close_ov = self._balanced_close(
+                    close_ov = close_paren(
                         text, mo_over.end() - 1
                     )
                     spec_txt = text[mo_over.end(): close_ov]
@@ -6539,23 +6140,16 @@ class HiveEngine:
         interval_1.q) → ANSI interval literals.  Only literal arguments
         (possibly under a string cast) are rewritable — the corpus uses
         exactly those."""
-        out = text
         for fn, suffix in (
             ("interval_year_month", "YEAR TO MONTH"),
             ("interval_day_time", "DAY TO SECOND"),
         ):
-            while True:
-                m = re.search(rf"\b{fn}\s*\(", out, re.IGNORECASE)
-                if not m:
-                    break
-                close = self._balanced_close(out, m.end() - 1)
-                inner = out[m.end() : close]
-                out = (
-                    out[: m.start()]
-                    + f"CAST(({inner}) AS INTERVAL {suffix})"
-                    + out[close + 1 :]
-                )
-        return out
+            text = rewrite_calls(
+                text,
+                rf"\b{fn}\s*\(",
+                lambda c, suffix=suffix: f"CAST(({c.inner}) AS INTERVAL {suffix})",
+            )
+        return text
 
     # --------------------------------------- DROP PARTITION (extended)
     def _drop_partition_specs_partial(self, tbl: str, specs_text: str) -> bool:
@@ -6569,7 +6163,7 @@ class HiveEngine:
         for spec in re.findall(
             r"PARTITION\s*\(([^)]*)\)", specs_text, re.IGNORECASE
         ):
-            if len(self._split_top_level(spec)) < len(pcols):
+            if len(split_top_level(spec)) < len(pcols):
                 return True
         return False
 
@@ -6613,7 +6207,7 @@ class HiveEngine:
         import fnmatch
 
         def matches(spec: str, tup) -> bool:
-            for item in self._split_top_level(spec):
+            for item in split_top_level(spec):
                 im = re.match(
                     r"\s*`?(\w+)`?\s*(=|!=|<>|<=|>=|<|>|like)\s*(.+?)\s*$",
                     item,
@@ -6693,29 +6287,11 @@ class HiveEngine:
                 break
             if rows_text[i] != "(":
                 return None
-            depth, j, quote = 0, i, None
-            while j < n:
-                ch = rows_text[j]
-                if quote:
-                    if ch == "\\" and j + 1 < n:
-                        j += 2
-                        continue
-                    if ch == quote:
-                        quote = None
-                elif ch in ("'", '"'):
-                    quote = ch
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            if j >= n:
+            try:
+                j = close_paren(rows_text, i)
+            except ValueError:
                 return None
-            tuples.append(
-                HiveEngine._split_top_level(rows_text[i + 1 : j])
-            )
+            tuples.append(split_top_level(rows_text[i + 1 : j]))
             i = j + 1
         return tuples or None
 
@@ -6856,7 +6432,7 @@ class HiveEngine:
         pcols = [c.lower() for c in self._table_partition_cols(tbl)]
         spec = m.group("spec") or ""
         static_parts, dynamic_parts = [], []
-        for item in self._split_top_level(spec):
+        for item in split_top_level(spec):
             kv = item.split("=", 1)
             if len(kv) == 2 and kv[1].strip():
                 static_parts.append(item.strip())
@@ -7386,49 +6962,29 @@ class HiveEngine:
         blank-padded to n, which is exactly HiveChar's padded display
         value; a downstream char(m) column re-pads on write as Hive
         does."""
-        pat = re.compile(r"\bCAST\s*\(", re.IGNORECASE)
-        out, i = [], 0
-        while True:
-            m = pat.search(text, i)
-            if not m:
-                out.append(text[i:])
-                break
-            out.append(text[i : m.start()])
-            depth, j = 0, m.end() - 1
-            for j in range(m.end() - 1, len(text)):
-                if text[j] == "(":
-                    depth += 1
-                elif text[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-            inner = text[m.end() : j]
+
+        def truncate(call):
             mm = re.match(
                 r"([\s\S]+?)\s+AS\s+(CHAR|VARCHAR)\s*\(\s*(\d+)\s*\)\s*$",
-                inner,
+                call.inner,
                 re.IGNORECASE,
             )
-            if mm:
-                n = int(mm.group(3))
-                expr = self._rewrite_char_casts(mm.group(1))
-                if mm.group(2).upper() == "CHAR":
-                    out.append(
-                        f"CAST(rpad(substr({expr}, 1, {n}), {n}, ' ') "
-                        f"AS STRING)"
-                    )
-                else:
-                    # HiveVarchar: truncate to n, NO padding
-                    # (GenericUDFToVarchar; varchar_1.q 'val_0'→
-                    # varchar(3)='val').  A CHAR source converts via its
-                    # STRIPPED value (HiveCharWritable.getStrippedValue;
-                    # char_cast.q char(10)→varchar(10) = 'abc123')
-                    if re.match(r"(?i)^CAST\s*\(\s*rpad\s*\(", expr):
-                        expr = f"rtrim({expr})"
-                    out.append(f"CAST(substr({expr}, 1, {n}) AS STRING)")
-            else:
-                out.append(text[m.start() : j + 1])
-            i = j + 1
-        return "".join(out)
+            if not mm:
+                return None
+            n = int(mm.group(3))
+            expr = self._rewrite_char_casts(mm.group(1))
+            if mm.group(2).upper() == "CHAR":
+                return f"CAST(rpad(substr({expr}, 1, {n}), {n}, ' ') AS STRING)"
+            # HiveVarchar: truncate to n, NO padding
+            # (GenericUDFToVarchar; varchar_1.q 'val_0'→
+            # varchar(3)='val').  A CHAR source converts via its
+            # STRIPPED value (HiveCharWritable.getStrippedValue;
+            # char_cast.q char(10)→varchar(10) = 'abc123')
+            if re.match(r"(?i)^CAST\s*\(\s*rpad\s*\(", expr):
+                expr = f"rtrim({expr})"
+            return f"CAST(substr({expr}, 1, {n}) AS STRING)"
+
+        return rewrite_calls(text, r"\bCAST\s*\(", truncate)
 
     _SQL_KEYWORDS = frozenset(
         "join where on group order left right full inner outer cross union "
@@ -7474,34 +7030,24 @@ class HiveEngine:
             r"rpad\s*\(\s*(?:upper|lower|concat)\s*\(\s*rtrim\s*\()",
             re.IGNORECASE,
         )
-        out, i = [], 0
-        while True:
-            m = pat.search(text, i)
-            if not m:
-                out.append(text[i:])
-                break
-            op = text.index("(", m.start())
-            close = self._balanced_close(text, op)
-            k = m.start() - 1
+
+        def strip_padding(call):
+            k = call.start - 1
             while k >= 0 and text[k] in " \t\r\n":
                 k -= 1
             before_op = k >= 0 and text[k] in "=<>"
-            j = close + 1
+            j = call.close + 1
             while j < len(text) and text[j] in " \t\r\n":
                 j += 1
             after_op = j < len(text) and text[j] in "=<>!"
-            prior = [s for s in sel_pos if s < m.start()]
+            prior = [s for s in sel_pos if s < call.start]
             base = depth[prior[-1]] if prior else 0
-            fn_arg = depth[m.start()] > base
-            seg = text[m.start() : close + 1]
-            out.append(text[i : m.start()])
-            out.append(
-                f"rtrim({seg})"
-                if (before_op or after_op or fn_arg)
-                else seg
-            )
-            i = close + 1
-        return "".join(out)
+            fn_arg = depth[call.start] > base
+            if before_op or after_op or fn_arg:
+                return f"rtrim({text[call.start : call.close + 1]})"
+            return None
+
+        return rewrite_calls(text, pat, strip_padding)
 
     def _rewrite_char_comparisons(self, text: str) -> str:
         """Hive compares char(n) against string/varchar by converting the
@@ -7815,7 +7361,7 @@ class HiveEngine:
         full = self.spark.table(tbl)
         pcols = set(self._table_partition_cols(tbl))
         assigns: dict[str, str] = {}
-        for part in self._split_top_level(set_clause):
+        for part in split_top_level(set_clause):
             k, v = part.split("=", 1)
             k = k.strip().strip("`").lower()
             if k in pcols:
@@ -7874,14 +7420,6 @@ class HiveEngine:
         except (OSError, IndexError):
             return False
 
-    def _table_location(self, tbl: str) -> str:
-        loc = next(
-            r.data_type
-            for r in self.spark.sql(f"DESCRIBE FORMATTED {tbl}").collect()
-            if r.col_name == "Location"
-        )
-        return re.sub(r"^file:/*", "/", loc)
-
     def _load_data_raw_copy(
         self,
         path: str,
@@ -7894,13 +7432,15 @@ class HiveEngine:
         import shutil
 
         loc = self._table_location(tbl)
+        if loc is None:
+            raise ValueError(f"cannot resolve the location of table {tbl}")
         if partition_spec:
             pairs = [
                 (
                     kv.split("=", 1)[0].strip().strip("`"),
                     kv.split("=", 1)[1].strip().strip("'\""),
                 )
-                for kv in self._split_top_level(partition_spec)
+                for kv in split_top_level(partition_spec)
                 if "=" in kv
             ]
             loc = os.path.join(
@@ -8049,7 +7589,7 @@ class HiveEngine:
             obj = re.sub(r"\s*\([^)]*\)", "", obj)
             # split OUTSIDE parens: ``grant select(key, value)`` is ONE
             # column-scoped privilege, not two (authorization_9.q)
-            for p in self._split_top_level(privs):
+            for p in split_top_level(privs):
                 p = re.sub(r"\s*\([^)]*\)", "", p).strip().upper()
                 if verb.upper() == "GRANT":
                     self.authz.grant(p, obj, principal)
@@ -8275,7 +7815,7 @@ class HiveEngine:
                 r"(?is)^\s*SELECT\s+(.*?)\s+FROM\s", select
             )
             items = (
-                self._split_top_level(sm_sel.group(1)) if sm_sel else []
+                split_top_level(sm_sel.group(1)) if sm_sel else []
             )
             seen_dup = {
                 n.lower()
@@ -8332,7 +7872,7 @@ class HiveEngine:
                 break
             name = dm.group(1)
             o = pos + dm.end() - 1
-            c = self._balanced_close(text, o)
+            c = close_paren(text, o)
             defs[name.lower()] = text[pos : c + 1].strip()
             order.append(name.lower())
             pos = c + 1
@@ -8406,23 +7946,6 @@ class HiveEngine:
         if not head or re.match(r"^\s*WITH\s+RECURSIVE\b", text, re.IGNORECASE):
             return text
 
-        def _scan_parens(s: str, i: int) -> int:
-            """Index just past the ')' matching the '(' at s[i-1]."""
-            depth, quote = 1, None
-            while i < len(s) and depth:
-                ch = s[i]
-                if quote:
-                    if ch == quote:
-                        quote = None
-                elif ch in ("'", '"'):
-                    quote = ch
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                i += 1
-            return i if not depth else -1
-
         pos = head.end()
         ctes: list[list[str]] = []  # [name, column-list ('' if none), body]
         while True:
@@ -8433,8 +7956,9 @@ class HiveEngine:
             )
             if not nm:
                 return text
-            end = _scan_parens(text, pos + nm.end())
-            if end < 0:
+            try:
+                end = close_paren(text, pos + nm.end() - 1) + 1
+            except ValueError:
                 return text
             ctes.append(
                 [
@@ -8453,22 +7977,11 @@ class HiveEngine:
         def _count_refs(name: str, s: str) -> int:
             # (?<!\.) — a db-QUALIFIED reference (mydb.q1) names the real
             # table, never the CTE (cte_mat_5.q)
-            n, pat = 0, re.compile(
-                rf"(?<!\.)\b{re.escape(name)}\b", re.IGNORECASE
-            )
-            for seg in re.split(r"'[^']*'|\"[^\"]*\"", s):
-                n += len(pat.findall(seg))
-            return n
+            pat = re.compile(rf"(?<!\.)\b{re.escape(name)}\b", re.IGNORECASE)
+            return sum(len(pat.findall(seg)) for seg in split_literals(s)[::2])
 
         def _replace(name: str, new: str, s: str) -> str:
-            pat = re.compile(
-                rf"(?<!\.)\b{re.escape(name)}\b", re.IGNORECASE
-            )
-            parts = re.split(r"('[^']*'|\"[^\"]*\")", s)
-            return "".join(
-                p if i % 2 else pat.sub(new, p)
-                for i, p in enumerate(parts)
-            )
+            return sub_outside_quotes(rf"(?<!\.)\b{re.escape(name)}\b", new, s)
 
         kept: list[list[str]] = []
         for idx, (name, collist, body) in enumerate(ctes):
@@ -9120,7 +8633,7 @@ class HiveEngine:
 
                 pnames = [
                     kv.split("=", 1)[0].strip().strip("`")
-                    for kv in self._split_top_level(spec)
+                    for kv in split_top_level(spec)
                 ]
                 full = self.spark.table(tbl)
                 dfields = [
@@ -9139,7 +8652,7 @@ class HiveEngine:
                         tkey, "\x01"
                     ),
                 )
-                for kv in self._split_top_level(spec):
+                for kv in split_top_level(spec):
                     k, v = kv.split("=", 1)
                     df = df.withColumn(
                         k.strip().strip("`"),
@@ -9190,7 +8703,7 @@ class HiveEngine:
                     full = self.spark.table(tbl)
                     pnames = {
                         kv.split("=", 1)[0].strip().strip("`").lower()
-                        for kv in self._split_top_level(spec)
+                        for kv in split_top_level(spec)
                     }
                     dfields = [
                         f
@@ -9200,7 +8713,7 @@ class HiveEngine:
                     df = self.spark.read.schema(
                         T.StructType(dfields)
                     ).parquet(*nested)
-                    for kv in self._split_top_level(spec):
+                    for kv in split_top_level(spec):
                         k, v = kv.split("=", 1)
                         kn = k.strip().strip("`")
                         df = df.withColumn(
@@ -9229,7 +8742,7 @@ class HiveEngine:
             cond = " AND ".join(
                 f"{kv.split('=', 1)[0].strip()} = "
                 f"{kv.split('=', 1)[1].strip()}"
-                for kv in self._split_top_level(spec)
+                for kv in split_top_level(spec)
             )
             moved = self.spark.table(src).filter(cond)
             prev = self.spark.conf.get(
@@ -9270,7 +8783,7 @@ class HiveEngine:
             norm = "/".join(
                 f"{kv.split('=', 1)[0].strip()}="
                 + kv.split("=", 1)[1].strip().strip("'\"")
-                for kv in self._split_top_level(spec)
+                for kv in split_top_level(spec)
             )
             if action.upper() == "ADD":
                 parts.add(norm)
@@ -9304,7 +8817,7 @@ class HiveEngine:
                     want = {
                         f"{kv.split('=', 1)[0].strip()}="
                         + kv.split("=", 1)[1].strip().strip("'\"")
-                        for kv in self._split_top_level(sm.group(2))
+                        for kv in split_top_level(sm.group(2))
                     }
                     vals = [
                         v for v in vals if want <= set(v.split("/"))
@@ -9358,7 +8871,7 @@ class HiveEngine:
                 # TABLE schema only — partitions keep their SDs and
                 # read it as NULL unless a partition-level ADD follows
                 new_cols_ac = []
-                for cspec in self._split_top_level(cols_ac, angle=True):
+                for cspec in split_top_level(cols_ac, angle=True):
                     cp = cspec.strip().split(None, 1)
                     if len(cp) == 2:
                         new_cols_ac.append(
@@ -9428,7 +8941,7 @@ class HiveEngine:
                     cond_sql = " OR ".join(conds)
                     if not hasattr(self, "_display_casts"):
                         self._display_casts = {}
-                    for cspec in self._split_top_level(
+                    for cspec in split_top_level(
                         cols_ac, angle=True
                     ):
                         cp = cspec.strip().split(None, 1)
@@ -9454,7 +8967,7 @@ class HiveEngine:
         )
         if m and self._sor_entry(m.group(1)):
             new_cols_sc = []
-            for cspec in self._split_top_level(m.group(2), angle=True):
+            for cspec in split_top_level(m.group(2), angle=True):
                 cp = cspec.strip().split(None, 1)
                 if len(cp) == 2:
                     new_cols_sc.append(
@@ -9541,7 +9054,7 @@ class HiveEngine:
             tbl_pa, spec_pa, cl_pa = m.groups()
             _, norm_pa = self._partition_spec_cond(tbl_pa, spec_pa)
             cols_pa = []
-            for cspec in self._split_top_level(cl_pa, angle=True):
+            for cspec in split_top_level(cl_pa, angle=True):
                 parts = cspec.strip().split(None, 1)
                 if len(parts) == 2:
                     cols_pa.append(
@@ -9634,7 +9147,7 @@ class HiveEngine:
                 m.group(1)
             ):
                 new_cols_r = []
-                for cspec in self._split_top_level(
+                for cspec in split_top_level(
                     m.group(2), angle=True
                 ):
                     parts_r = cspec.strip().split(None, 1)
@@ -10093,21 +9606,11 @@ class HiveEngine:
             except Exception:
                 return self.spark.range(0).select()
         for nm_, tpl_ in getattr(self, "_fn_templates", {}).items():
-            pos_t = 0
-            while True:
-                mt = re.search(
-                    rf"\b{nm_}\s*\(", text[pos_t:], re.IGNORECASE
-                )
-                if not mt:
-                    break
-                opt = pos_t + mt.end() - 1
-                closet = self._balanced_close(text, opt)
-                args_t = text[opt + 1 : closet].strip()
-                repl_t = tpl_.replace("{args}", args_t)
-                text = (
-                    text[: pos_t + mt.start()] + repl_t + text[closet + 1 :]
-                )
-                pos_t = pos_t + mt.start() + len(repl_t)
+            text = rewrite_calls(
+                text,
+                rf"\b{nm_}\s*\(",
+                lambda c, tpl_=tpl_: tpl_.replace("{args}", c.inner.strip()),
+            )
         for nm2_ in getattr(self, "_udtf_count2_fns", set()):
             m2 = re.match(
                 rf"^\s*SELECT\s+{nm2_}\s*\(\s*\)\s+FROM\s+([\w.`]+)"
@@ -10273,7 +9776,7 @@ class HiveEngine:
                 )
                 tm0 = re.search(r"(?i)\bTRANSFORM\s*\(", text)
                 if tm0:
-                    cl0 = self._balanced_close(
+                    cl0 = close_paren(
                         text, text.index("(", tm0.end() - 1)
                     )
                     text = (
@@ -10296,7 +9799,7 @@ class HiveEngine:
         # paren-less MAP/REDUCE script forms are TRANSFORM aliases
         # (HiveParser trfmClause — input37.q's ``MAP x.y USING``):
         # normalize so the ROW FORMAT injection below applies
-        text = self._sub_outside_quotes(
+        text = sub_outside_quotes(
             # Hive drops the SELECT keyword for these forms; Spark's
             # grammar wants SELECT TRANSFORM
             r"(?i)(?<![\w.])(?:MAP|REDUCE)\s+((?:[\w.]+\s*,\s*)*[\w.]+)"
@@ -10344,35 +9847,28 @@ class HiveEngine:
                     empty_input = self.spark.table(ts[0]).isEmpty()
                 except Exception:
                     empty_input = False
-            out, i, lits = [], 0, []
-            pat = re.compile(r"\bcompute_stats\s*\(", re.IGNORECASE)
-            while True:
-                mm = pat.search(text, i)
-                if not mm:
-                    out.append(text[i:])
-                    break
-                out.append(text[i : mm.start()])
-                j = self._balanced_close(text, mm.end() - 1)
-                args = self._split_top_level(text[mm.end() : j])
+            lits = []
+
+            def tagged(call):
+                args = call.args
                 col = args[0]
                 nbv = args[1] if len(args) > 1 else "16"
                 tag = tags.get(col.split(".")[-1].strip("`").lower(), "")
-                if empty_input and tag:
-                    from apache_hive_2_1_1_src_spark.functions.compute_stats import (
-                        compute_stats_string,
-                    )
+                if not (empty_input and tag):
+                    return f"compute_stats({col}, {nbv}, '{tag}')"
+                from apache_hive_2_1_1_src_spark.functions.compute_stats import (
+                    compute_stats_string,
+                )
 
-                    try:
-                        n = int(re.sub(r"\D", "", nbv) or 16)
-                    except ValueError:
-                        n = 16
-                    lit = compute_stats_string([], n, tag).replace("'", "''")
-                    lits.append(f"'{lit}'")
-                    out.append(f"'{lit}'")
-                else:
-                    out.append(f"compute_stats({col}, {nbv}, '{tag}')")
-                i = j + 1
-            text = "".join(out)
+                try:
+                    n = int(re.sub(r"\D", "", nbv) or 16)
+                except ValueError:
+                    n = 16
+                lit = compute_stats_string([], n, tag).replace("'", "''")
+                lits.append(f"'{lit}'")
+                return f"'{lit}'"
+
+            text = rewrite_calls(text, r"\bcompute_stats\s*\(", tagged)
             if empty_input and lits:
                 # drop the empty scan when nothing else references it —
                 # a literal projection is the whole answer
@@ -10707,28 +10203,18 @@ class HiveEngine:
         # printf: a bare decimal literal lands as DECIMAL and Spark's
         # FormatString cannot bind it to %e/%f (udf_printf.q); Hive
         # formats it as double — suffix D
-        pos_pf = 0
-        while True:
-            mpf = re.search(r"(?i)\bprintf\s*\(", text[pos_pf:])
-            if not mpf:
-                break
-            oppf = pos_pf + mpf.end() - 1
-            closepf = self._balanced_close(text, oppf)
-            seg_pf = text[oppf : closepf + 1]
-            # only suffix decimals OUTSIDE string literals — a bare
-            # '1.5' argument or a format string with an embedded
-            # decimal must come through untouched
-            parts_pf = re.split(r"('(?:[^'\\]|\\.)*')", seg_pf)
-            seg2_pf = "".join(
-                p
-                if i % 2
-                else re.sub(
-                    r"(?<![\w.])(\d+\.\d+)(?![\w.])", r"\1D", p
-                )
-                for i, p in enumerate(parts_pf)
-            )
-            text = text[:oppf] + seg2_pf + text[closepf + 1 :]
-            pos_pf = oppf + len(seg2_pf)
+        # (only decimals OUTSIDE string literals — a bare '1.5' argument
+        # or a format string with an embedded decimal must come through
+        # untouched)
+        text = rewrite_calls(
+            text,
+            r"\bprintf\s*\(",
+            lambda c: text[c.start : c.open] + sub_outside_quotes(
+                r"(?<![\w.])(\d+\.\d+)(?![\w.])",
+                r"\1D",
+                text[c.open : c.close + 1],
+            ),
+        )
         # SessionState-backed builtins: Spark's current_user() answers
         # the OS user; Hive's answers the SESSION user (QTestUtil runs
         # as hive_test_user — udf_current_user.q), and version() must
@@ -10757,28 +10243,13 @@ class HiveEngine:
         )
         # UDFLog: a 2-arg log with base <= 1.0 is NULL in Hive
         # (constantfolding.q's LOG(0.5, 2)); Spark computes it
-        pos_lg = 0
-        while True:
-            mlg = re.search(r"(?i)\bLOG\s*\(", text[pos_lg:])
-            if not mlg:
-                break
-            oplg = pos_lg + mlg.end() - 1
-            closelg = self._balanced_close(text, oplg)
-            args_lg = self._split_top_level(text[oplg + 1 : closelg])
-            if len(args_lg) == 2:
-                b_ = args_lg[0].strip()
-                repl_lg = (
-                    f"IF(({b_}) <= 1.0, NULL, "
-                    f"LOG({b_}, {args_lg[1].strip()}))"
-                )
-                text = (
-                    text[: pos_lg + mlg.start()]
-                    + repl_lg
-                    + text[closelg + 1 :]
-                )
-                pos_lg = pos_lg + mlg.start() + len(repl_lg)
-            else:
-                pos_lg = closelg + 1
+        def null_below_base_one(call):
+            args = call.args
+            if len(args) != 2:
+                return None
+            return f"IF(({args[0]}) <= 1.0, NULL, LOG({args[0]}, {args[1]}))"
+
+        text = rewrite_calls(text, r"\bLOG\s*\(", null_below_base_one)
         # a BD decimal literal whose precision exceeds 38 evaluates to
         # NULL in Hive (HiveDecimal.create returns null —
         # literal_decimal.q's 1E99BD); Spark refuses the literal
@@ -10801,47 +10272,29 @@ class HiveEngine:
         # GenericUDFGreatest/Least PROPAGATE NULL (any null argument →
         # NULL result, udf_greatest.q) — Spark's greatest/least skip
         # nulls
-        if re.search(r"(?i)\b(greatest|least)\s*\(", text):
-            pos_g = 0
-            while True:
-                mg = re.search(
-                    r"(?i)\b(greatest|least)\s*\(", text[pos_g:]
-                )
-                if not mg:
-                    break
-                opg = pos_g + mg.end() - 1
-                closeg = self._balanced_close(text, opg)
-                args_g = self._split_top_level(text[opg + 1 : closeg])
-                fn_g = mg.group(1).lower()
-                if any(
-                    re.search(r"(?i)\bas\s+float\s*\)", a)
+        def null_propagating(call):
+            args_g = call.args
+            if any(
+                re.search(r"(?i)\bas\s+float\s*\)", a) for a in args_g
+            ) and any(
+                re.search(r"(?i)\bas\s+double\s*\)", a) for a in args_g
+            ):
+                # mixed float/double args coerce to DOUBLE through
+                # Float.toString (udf_greatest.q: 1.1f stays 1.1,
+                # not the bit-widened 1.100000023841858)
+                args_g = [
+                    f"CAST(CAST(({a}) AS STRING) AS DOUBLE)"
+                    if re.search(r"(?i)\bas\s+float\s*\)", a)
+                    else a
                     for a in args_g
-                ) and any(
-                    re.search(r"(?i)\bas\s+double\s*\)", a)
-                    for a in args_g
-                ):
-                    # mixed float/double args coerce to DOUBLE through
-                    # Float.toString (udf_greatest.q: 1.1f stays 1.1,
-                    # not the bit-widened 1.100000023841858)
-                    args_g = [
-                        f"CAST(CAST(({a.strip()}) AS STRING) AS DOUBLE)"
-                        if re.search(r"(?i)\bas\s+float\s*\)", a)
-                        else a
-                        for a in args_g
-                    ]
-                nulls = " OR ".join(
-                    f"({a.strip()}) IS NULL" for a in args_g
-                )
-                repl_g = (
-                    f"IF({nulls}, NULL, "
-                    f"{fn_g}({', '.join(a.strip() for a in args_g)}))"
-                )
-                text = (
-                    text[: pos_g + mg.start()]
-                    + repl_g
-                    + text[closeg + 1 :]
-                )
-                pos_g = pos_g + mg.start() + len(repl_g)
+                ]
+            nulls = " OR ".join(f"({a}) IS NULL" for a in args_g)
+            return (
+                f"IF({nulls}, NULL, "
+                f"{call.match.group(1).lower()}({', '.join(args_g)}))"
+            )
+
+        text = rewrite_calls(text, r"\b(greatest|least)\s*\(", null_propagating)
         # Hive tolerates the SAME key listed twice in UNSET
         # TBLPROPERTIES ('c','c') — dedupe for Spark's DUPLICATE_KEY
         # check (unset_table_view_property.q)
@@ -10852,7 +10305,7 @@ class HiveEngine:
         )
         if m_up:
             seen_k = []
-            for k in self._split_top_level(m_up.group(2)):
+            for k in split_top_level(m_up.group(2)):
                 if k.strip() and k.strip() not in seen_k:
                     seen_k.append(k.strip())
             text = (
@@ -10872,119 +10325,58 @@ class HiveEngine:
         # GenericUDFUnion (create_union(tag, v0, v1, ...)) → the union
         # struct encoding; every branch evaluates, tag picks the active
         # one at display (udf_union.q)
-        pos_cu = 0
-        while True:
-            mcu = re.search(
-                r"(?i)\bcreate_union\s*\(", text[pos_cu:]
-            )
-            if not mcu:
-                break
-            opcu = pos_cu + mcu.end() - 1
-            closecu = self._balanced_close(text, opcu)
-            args_cu = self._split_top_level(text[opcu + 1 : closecu])
+        def union_struct(call):
+            args_cu = call.args
             if len(args_cu) < 2:
-                pos_cu = closecu + 1
-                continue
+                return None
             fields_cu = ", ".join(
-                f"'field{i}', ({a.strip()})"
-                for i, a in enumerate(args_cu[1:])
+                f"'field{i}', ({a})" for i, a in enumerate(args_cu[1:])
             )
-            repl_cu = (
+            return (
                 f"named_struct('tag', CAST(({args_cu[0]}) AS INT), "
                 f"{fields_cu})"
             )
-            text = (
-                text[: pos_cu + mcu.start()]
-                + repl_cu
-                + text[closecu + 1 :]
-            )
-            pos_cu = pos_cu + mcu.start() + len(repl_cu)
+
+        text = rewrite_calls(text, r"\bcreate_union\s*\(", union_struct)
         text = self._rewrite_percentile_approx(text)
         text = self._rewrite_samp_variance(text)
         # GenericUDFStruct names its fields col1..colN ALWAYS — even for
         # plain column refs (udf_max.q's {"col1":..}); Spark keeps the
         # source column name.  Rewrite to named_struct.
-        pos_st = 0
-        while True:
-            ms = re.search(r"(?<![\w$])struct\s*\(", text[pos_st:],
-                           re.IGNORECASE)
-            if not ms:
-                break
-            start_st = pos_st + ms.start()
-            ops = pos_st + ms.end() - 1
-            if re.search(r"(?i)named_struct\s*\($", text[:ops + 1]):
-                pos_st = ops + 1
-                continue
-            closes = self._balanced_close(text, ops)
-            args_st = self._split_top_level(text[ops + 1 : closes])
-            if not args_st or any("*" in a for a in args_st):
-                pos_st = closes + 1
-                continue
-            repl = "named_struct(" + ", ".join(
-                f"'col{i + 1}', {a}" for i, a in enumerate(args_st)
+        def positional_struct(call):
+            args = call.args
+            if not args or any("*" in a for a in args):
+                return None
+            return "named_struct(" + ", ".join(
+                f"'col{i + 1}', {a}" for i, a in enumerate(args)
             ) + ")"
-            text = text[:start_st] + repl + text[closes + 1 :]
-            pos_st = start_st + len(repl)
+
+        text = rewrite_calls(text, r"(?<![\w$])struct\s*\(", positional_struct)
         # GenericUDFSize returns -1 for a NULL collection
         # (orc_null_check.q golden prints -1); Spark returns NULL
         # (ANSI off returns -1 only with legacy conf — pin Hive's)
-        pos_sz = 0
-        while True:
-            msz = re.search(r"(?<![\w$])size\s*\(", text[pos_sz:],
-                            re.IGNORECASE)
-            if not msz:
-                break
-            opz = pos_sz + msz.end() - 1
-            closez = self._balanced_close(text, opz)
-            innerz = text[opz + 1 : closez]
-            replz = f"coalesce(size({innerz}), -1)"
-            text = (
-                text[: pos_sz + msz.start()] + replz + text[closez + 1 :]
-            )
-            pos_sz = pos_sz + msz.start() + len(replz)
+        text = rewrite_calls(
+            text,
+            r"(?<![\w$])size\s*\(",
+            lambda c: f"coalesce(size({c.inner}), -1)",
+        )
         # GenericUDFMapKeys/MapValues return an EMPTY list for a NULL
         # map (the evaluate loop just never runs — nullMap.q pins
         # map_keys(NULL) = []); Spark returns NULL
-        for fn_mk in ("map_keys", "map_values"):
-            pos_mk = 0
-            while True:
-                mm = re.search(
-                    rf"\b{fn_mk}\s*\(", text[pos_mk:], re.IGNORECASE
-                )
-                if not mm:
-                    break
-                opk = pos_mk + mm.end() - 1
-                closek = self._balanced_close(text, opk)
-                inner_mk = text[opk + 1 : closek]
-                repl = f"coalesce({fn_mk}({inner_mk}), array())"
-                text = (
-                    text[: pos_mk + mm.start()]
-                    + repl
-                    + text[closek + 1 :]
-                )
-                pos_mk = pos_mk + mm.start() + len(repl)
+        text = rewrite_calls(
+            text,
+            r"\b(map_keys|map_values)\s*\(",
+            lambda c: f"coalesce({c.match.group(1).lower()}({c.inner}), array())",
+        )
         # GenericUDAFHistogramNumeric always buckets DOUBLES — a decimal
         # input must not surface decimal x coordinates (decimal_udf.q)
-        out_h, pos_h = text, 0
-        while True:
-            mh = re.search(
-                r"\bhistogram_numeric\s*\(", out_h[pos_h:], re.IGNORECASE
-            )
-            if not mh:
-                break
-            oph = pos_h + mh.end() - 1
-            closeh = self._balanced_close(out_h, oph)
-            argsh = self._split_top_level(out_h[oph + 1 : closeh])
-            if len(argsh) == 2:
-                repl = (
-                    f"histogram_numeric(CAST(({argsh[0]}) AS DOUBLE), "
-                    f"{argsh[1]})"
-                )
-                out_h = out_h[: pos_h + mh.start()] + repl + out_h[closeh + 1 :]
-                pos_h = pos_h + mh.start() + len(repl)
-            else:
-                pos_h = closeh + 1
-        text = out_h
+        def double_histogram(call):
+            args = call.args
+            if len(args) != 2:
+                return None
+            return f"histogram_numeric(CAST(({args[0]}) AS DOUBLE), {args[1]})"
+
+        text = rewrite_calls(text, r"\bhistogram_numeric\s*\(", double_histogram)
         text = self._rewrite_groupby_limit_order(text)
         text = self._rewrite_uniquejoin(text)
         text = self._rewrite_grouping_id(text)
@@ -11077,34 +10469,13 @@ class HiveEngine:
                 # common comparison class — STRING when no numeric
                 # ancestor exists (udf_greatest.q: GREATEST(10L, 'a',
                 # date(...)) = 'a')
-                retry_g = text
-                pos_r = 0
-                while True:
-                    mr_ = re.search(
-                        r"(?i)\b(greatest|least)\s*\(", retry_g[pos_r:]
-                    )
-                    if not mr_:
-                        break
-                    opr = pos_r + mr_.end() - 1
-                    closer = self._balanced_close(retry_g, opr)
-                    args_r = self._split_top_level(
-                        retry_g[opr + 1 : closer]
-                    )
-                    repl_r = (
-                        mr_.group(1).lower()
-                        + "("
-                        + ", ".join(
-                            f"CAST(({a.strip()}) AS STRING)"
-                            for a in args_r
-                        )
-                        + ")"
-                    )
-                    retry_g = (
-                        retry_g[: pos_r + mr_.start()]
-                        + repl_r
-                        + retry_g[closer + 1 :]
-                    )
-                    pos_r = pos_r + mr_.start() + len(repl_r)
+                retry_g = rewrite_calls(
+                    text,
+                    r"\b(greatest|least)\s*\(",
+                    lambda c: c.match.group(1).lower() + "(" + ", ".join(
+                        f"CAST(({a}) AS STRING)" for a in c.args
+                    ) + ")",
+                )
                 res = self.spark.sql(retry_g)
             elif (
                 "UNEXPECTED_INPUT_TYPE" in str(e)
@@ -11135,7 +10506,7 @@ class HiveEngine:
                 # only resolves statics.  Evaluate literal-arg calls
                 # driver-side through the JVM gateway and inline.
                 def _refl(mo: re.Match) -> str:
-                    args0 = self._split_top_level(mo.group(2))
+                    args0 = split_top_level(mo.group(2))
                     lits = []
                     for a in args0:
                         a = a.strip()
@@ -11447,7 +10818,7 @@ class HiveEngine:
         overwrite = m.group("mode").upper() == "OVERWRITE"
         pcols = self._table_partition_cols(tbl)
         static, dynamic = [], []
-        for kv in self._split_top_level(m.group("spec")):
+        for kv in split_top_level(m.group("spec")):
             if "=" in kv:
                 k, v = kv.split("=", 1)
                 static.append(
@@ -11486,6 +10857,8 @@ class HiveEngine:
         if not combos:
             raise err
         loc = self._table_location(tbl)
+        if loc is None:
+            raise ValueError(f"cannot resolve the location of table {tbl}")
         prev = self.spark.conf.get(
             "spark.sql.sources.partitionOverwriteMode", "STATIC"
         )
@@ -11553,7 +10926,7 @@ class HiveEngine:
         ):
             return text
         cols, outer = [], []
-        for spec in self._split_top_level(am.group(2)):
+        for spec in split_top_level(am.group(2)):
             cm = re.match(r"\s*(\w+)\s+(.+?)\s*$", spec, re.DOTALL)
             if not cm:
                 return text
@@ -11592,7 +10965,7 @@ class HiveEngine:
         if re.search(r"\bROW\s+FORMAT\b", text, re.IGNORECASE):
             return text  # explicit serde: leave as written
         m = re.search(r"\bTRANSFORM\s*\(", text, re.IGNORECASE)
-        close = self._balanced_close(text, text.index("(", m.end() - 1))
+        close = close_paren(text, text.index("(", m.end() - 1))
         um = re.compile(r"\s*USING\s+'[^']*'", re.IGNORECASE).match(text, close + 1)
         if not um:
             return text
@@ -11604,7 +10977,7 @@ class HiveEngine:
         rest = text[um.end():]
         am = re.match(r"\s*AS\s*\(", rest, re.IGNORECASE)
         if am:
-            ac = self._balanced_close(rest, rest.index("(", am.end() - 1))
+            ac = close_paren(rest, rest.index("(", am.end() - 1))
             return out + rest[: ac + 1] + f" {self._TAB_RF} " + rest[ac + 1 :]
         am = re.match(r"\s*AS\s+(?!\()", rest, re.IGNORECASE)
         if am:
@@ -11612,22 +10985,13 @@ class HiveEngine:
             # (global_limit.q) or ``AS key binary, value int``
             # (load_binary_data.q): scan to the first TOP-LEVEL clause
             # keyword (or end) and inject the output format there
-            end = len(rest)
-            depth = 0
-            for km in re.finditer(
-                r"[()]|\b(FROM|WHERE|GROUP|ORDER|SORT|CLUSTER|"
+            km = search_top_level(
+                r"\b(FROM|WHERE|GROUP|ORDER|SORT|CLUSTER|"
                 r"DISTRIBUTE|LIMIT|UNION|HAVING)\b",
-                rest[am.end():],
-                re.IGNORECASE,
-            ):
-                tok = km.group(0)
-                if tok == "(":
-                    depth += 1
-                elif tok == ")":
-                    depth -= 1
-                elif depth == 0:
-                    end = am.end() + km.start()
-                    break
+                rest,
+                am.end(),
+            )
+            end = km.start() if km else len(rest)
             return out + rest[:end] + f" {self._TAB_RF} " + rest[end:]
         # no AS clause: Hive's default output schema is (key, value)
         # where key is the FIRST tab-field and value the REST OF THE
@@ -12019,52 +11383,7 @@ class HiveEngine:
             # stats slot — StatsTask likewise silently skips them
             pass
 
-    @staticmethod
-    def split_statements(script: str) -> list[str]:
-        """Split a ';'-separated script into runnable statements
-        (CliDriver processLine semantics: ';' inside quotes is not a
-        separator; whitespace/comment-only fragments are dropped)."""
-        stmts, buf, quote = [], [], None
-        i, n = 0, len(script)
-        while i < n:
-            ch = script[i]
-            if quote:
-                if ch == "\\" and i + 1 < n:
-                    # HiveQL backslash escape: \" inside a double-quoted
-                    # literal must not close it (analyze_tbl_part.q's
-                    # partitionName="p\"1")
-                    buf.append(script[i : i + 2])
-                    i += 2
-                    continue
-                if ch == quote:
-                    quote = None
-                buf.append(ch)
-            elif ch == "-" and script[i : i + 2] == "--":
-                # a -- line comment may contain quotes ("it's") or ';'
-                # that must not affect statement structure
-                nl = script.find("\n", i)
-                nl = n if nl == -1 else nl
-                buf.append(script[i:nl])
-                i = nl
-                continue
-            elif ch in ("'", '"'):
-                quote = ch
-                buf.append(ch)
-            elif ch == ";":
-                stmts.append("".join(buf))
-                buf = []
-            else:
-                buf.append(ch)
-            i += 1
-        stmts.append("".join(buf))
-
-        def runnable(s: str) -> bool:
-            # CliDriver tolerates trailing -- line and /* */ block comments
-            bare = re.sub(r"--[^\n]*", "", s)
-            bare = re.sub(r"/\*.*?\*/", "", bare, flags=re.S)
-            return bool(bare.strip())
-
-        return [s for s in stmts if runnable(s)]
+    split_statements = staticmethod(split_statements)
 
     def run_script(self, script: str):
         """Execute a multi-statement script; returns the last

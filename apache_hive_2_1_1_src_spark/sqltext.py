@@ -1,0 +1,239 @@
+"""SQL-text lexing shared by every HiveEngine rewrite.
+
+One literal convention, Hive's (``parse/HiveLexer.g`` StringLiteral):
+``'...'`` and ``"..."`` with backslash escapes; a backtick quotes an
+identifier.  Every scanner here treats literal, identifier and comment
+(``--`` to the end of the line, or ``/* ... */``) text as opaque, so a
+``)``, ``,``, ``;`` or quote inside one never ends or starts anything.
+"""
+
+from __future__ import annotations
+
+import re
+from functools import lru_cache
+
+_LITERAL = r"""'(?:[^'\\]|\\.)*'?|"(?:[^"\\]|\\.)*"?|--[^\n]*|/\*.*?\*/"""
+#: string literals and comments (an unterminated literal runs to the end
+#: of the text)
+_LITERAL_RE = re.compile(_LITERAL, re.S)
+#: the same plus backtick identifiers
+_OPAQUE = _LITERAL + r"|`[^`]*`?"
+_OPAQUE_RE = re.compile(_OPAQUE, re.S)
+
+
+@lru_cache(maxsize=16)
+def _tokens(delims: str) -> re.Pattern:
+    """Opaque tokens, or any one of the single characters in delims."""
+    return re.compile(_OPAQUE + "|[" + re.escape(delims) + "]", re.S)
+
+
+def _pattern(p) -> re.Pattern:
+    return p if isinstance(p, re.Pattern) else re.compile(p, re.IGNORECASE)
+
+
+def close_paren(s: str, i: int, open: str = "(", close: str = ")") -> int:
+    """Index of the ``close`` that balances the ``open`` at s[i]
+    (``open="<", close=">"`` scans complex type brackets)."""
+    depth = 0
+    for m in _tokens(open + close).finditer(s, i):
+        t = m.group()
+        if t == open:
+            depth += 1
+        elif t == close:
+            depth -= 1
+            if depth == 0:
+                return m.start()
+    raise ValueError("unbalanced parentheses in query text")
+
+
+def split_top_level(s: str, angle: bool = False) -> list[str]:
+    """Split on top-level commas; parts are stripped and empty parts
+    dropped.  ``angle=True`` also nests ``<...>``, for column-spec lists
+    holding complex types (``s STRUCT<c1:STRING, c2:STRING>``); it is
+    opt-in because ``<`` is a comparison operator in expression lists."""
+    opens, closes = ("(<", ")>") if angle else ("(", ")")
+    out, depth, last = [], 0, 0
+    for m in _tokens(opens + closes + ",").finditer(s):
+        t = m.group()
+        if t in opens:
+            depth += 1
+        elif t in closes:
+            depth -= 1
+        elif t == "," and depth == 0:
+            out.append(s[last : m.start()].strip())
+            last = m.end()
+    out.append(s[last:].strip())
+    return [p for p in out if p]
+
+
+def _top_level_view(s: str, pos: int) -> str:
+    """s with only the text at paren depth 0 (relative to pos) left
+    visible: nested text, comments and literal contents become spaces,
+    parens stay, and the view ends at a ')' that leaves the level.
+    Offsets are those of s."""
+    out, depth, last = [" " * pos], 0, pos
+    for m in _tokens("()").finditer(s, pos):
+        seg = s[last : m.start()]
+        out.append(seg if depth == 0 else " " * len(seg))
+        t = m.group()
+        if t == "(":
+            depth += 1
+        elif t == ")":
+            if depth == 0:
+                return "".join(out)
+            depth -= 1
+        elif t[0] in "'\"" and depth == 0:
+            t = t[0] + " " * (len(t) - 1)
+        elif t[0] != "`" or depth:
+            t = " " * len(t)
+        out.append(t)
+        last = m.end()
+    seg = s[last:]
+    out.append(seg if depth == 0 else " " * len(seg))
+    return "".join(out)
+
+
+def search_top_level(pattern, s: str, pos: int = 0) -> re.Match | None:
+    """First match of pattern at paren depth 0 (relative to pos) and
+    outside every literal and comment, stopping at a ')' that leaves that level
+    (``$`` matches there).  The match is taken on a masked copy of s:
+    its offsets index s, its matched text is the masked text."""
+    return _pattern(pattern).search(_top_level_view(s, pos), pos)
+
+
+def split_literals(s: str) -> list[str]:
+    """Alternating [code, literal, code, ..., code] pieces of s; the
+    string literals and comments sit at the odd indexes."""
+    out, last = [], 0
+    for m in _LITERAL_RE.finditer(s):
+        out += [s[last : m.start()], m.group()]
+        last = m.end()
+    out.append(s[last:])
+    return out
+
+
+def sub_outside_quotes(pattern, repl, text: str) -> str:
+    """re.sub applied only outside string literals and comments (a
+    call-site rewrite must never corrupt ``SELECT 'map x using cat'``)."""
+    pat = _pattern(pattern)
+    return "".join(
+        p if i % 2 else pat.sub(repl, p)
+        for i, p in enumerate(split_literals(text))
+    )
+
+
+_OVER = re.compile(r"\s*OVER\s*\(", re.IGNORECASE)
+
+
+class Call:
+    """One ``name(...)`` call found by rewrite_calls: ``open``/``close``
+    index its brackets in ``text``."""
+
+    __slots__ = ("text", "match", "open", "close")
+
+    def __init__(self, text: str, match: re.Match, brackets: str = "()"):
+        self.text, self.match = text, match
+        self.open = text.index(brackets[0], match.start())
+        self.close = close_paren(text, self.open, *brackets)
+
+    @property
+    def start(self) -> int:
+        return self.match.start()
+
+    @property
+    def inner(self) -> str:
+        return self.text[self.open + 1 : self.close]
+
+    @property
+    def args(self) -> list[str]:
+        return split_top_level(self.inner)
+
+    def over(self) -> tuple[int, int] | None:
+        """(open, close) paren offsets of an ``OVER (...)`` spec right
+        after the call, or None."""
+        om = _OVER.match(self.text, self.close + 1)
+        if om is None:
+            return None
+        return om.end() - 1, close_paren(self.text, om.end() - 1)
+
+
+def rewrite_calls(
+    text: str, name_re, fn, open: str = "(", close: str = ")"
+) -> str:
+    """Rewrite each call matched by name_re (a pattern that ends at or
+    before the call's ``open`` bracket) outside literals, identifiers and
+    comments, left to right.
+    ``fn(call)`` returns None to keep the call, the text replacing it, or
+    ``(replacement, end)`` to replace text[call.start:end].  Scanning
+    resumes after the kept or replaced span, so calls nested in a kept
+    or replaced span are fn's to handle."""
+    pat = _pattern(name_re)
+    if not pat.search(text):
+        return text
+    quoted = [m.span() for m in _OPAQUE_RE.finditer(text)]
+    out, pos = [], 0
+    while True:
+        m = pat.search(text, pos)
+        if m is None:
+            break
+        lit = next((b for a, b in quoted if a <= m.start() < b), None)
+        if lit is not None:
+            out.append(text[pos:lit])
+            pos = lit
+            continue
+        call = Call(text, m, open + close)
+        r = fn(call)
+        end = call.close + 1
+        if isinstance(r, tuple):
+            r, end = r
+        out += [text[pos : m.start()], text[m.start() : end] if r is None else r]
+        pos = end
+    out.append(text[pos:])
+    return "".join(out)
+
+
+def split_statements(script: str) -> list[str]:
+    """Split a ';'-separated script into runnable statements (CliDriver
+    processLine semantics: ';' inside a literal, identifier or comment is
+    not a separator; whitespace/comment-only fragments are dropped)."""
+    stmts, last = [], 0
+    for m in _tokens(";").finditer(script):
+        if m.group() == ";":
+            stmts.append(script[last : m.start()])
+            last = m.end()
+    stmts.append(script[last:])
+
+    def runnable(s: str) -> bool:
+        # CliDriver tolerates trailing -- line and /* */ block comments
+        bare = re.sub(r"--[^\n]*", "", s)
+        bare = re.sub(r"/\*.*?\*/", "", bare, flags=re.S)
+        return bool(bare.strip())
+
+    return [s for s in stmts if runnable(s)]
+
+
+_ESCAPES = {
+    "\\": "\\", "'": "'", '"': '"', "a": "\a", "b": "\b",
+    "f": "\f", "n": "\n", "r": "\r", "t": "\t", "v": "\v",
+}
+_ESCAPE_RE = re.compile(
+    r"\\(x[0-9a-fA-F]{2}|u[0-9a-fA-F]{4}|U[0-9a-fA-F]{8}|[0-7]{1,3}|.)", re.S
+)
+
+
+def _unescape_one(m: re.Match) -> str:
+    e = m.group(1)
+    if e in _ESCAPES:
+        return _ESCAPES[e]
+    if e[0] in "01234567":
+        return chr(int(e, 8))
+    if len(e) > 1 and int(e[1:], 16) <= 0x10FFFF:
+        return chr(int(e[1:], 16))
+    return m.group()
+
+
+def unescape(raw: str) -> str:
+    """Decode the backslash escapes in a literal's body (``\\t``,
+    ``\\001``, ``\\u0001``, ...).  An unknown escape stays literal: Hive's
+    default null token ``\\N`` is a backslash and an N."""
+    return _ESCAPE_RE.sub(_unescape_one, raw)

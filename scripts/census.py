@@ -1,12 +1,12 @@
 #!/usr/bin/env python
-"""Round-13 full-registry timing census (guide §1: measure first).
+"""Full-registry timing census.
 
 Runs EVERY registry entry once (same count() action the bench uses) at the
-given SF and prints one JSON line per entry — the measurement base for the
-OPTIMIZATION_r13.md operator checklist.  A second run of the slowest
-entries should be done separately (first runs pay codegen compile).
+given SF and writes one JSON line per entry — the measurement base for an
+operator checklist.  A second run of the slowest entries should be done
+separately (first runs pay codegen compile).
 
-Usage: python scripts/census_r13.py [sf_dir] [out_path]
+Usage: python scripts/census.py [sf_dir] [out_path]
 """
 
 from __future__ import annotations
@@ -24,9 +24,9 @@ from apache_hive_2_1_1_src_spark.session import build_session  # noqa: E402
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/census_r13.jsonl"
+    out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/census.jsonl"
     spark = build_session(
-        app_name="census-r13",
+        app_name="census",
         shuffle_partitions=8,
         extra_conf={"spark.sql.adaptive.coalescePartitions.parallelismFirst": "false"},
     )

@@ -151,10 +151,65 @@ def test_legacy_outer_filter_prefilters_preserved_side(eng, spark):
 
 
 # ------------------------------------------------------------------ avro IO
-def test_avro_deflate_container_and_schema_resolution(spark):
-    """The reference's doctors.avro is deflate-compressed; reading it
-    against a reader schema carrying an extra defaulted field applies
-    the default (avro_add_column.q / avro_joins.q goldens)."""
+def _avro_container(schema: dict, rows: list, codec: bytes) -> bytes:
+    """One Avro object container holding ``rows`` in a single block,
+    compressed per ``codec`` (deflate = raw DEFLATE, no zlib header).
+    Decimal logical-type fields take Decimal values, encoded as the
+    big-endian two's-complement unscaled bytes the spec prescribes."""
+    import io
+    import json
+    import zlib
+
+    from apache_hive_2_1_1_src_spark.avro_io import (
+        MAGIC,
+        _encode_value,
+        _write_bytes,
+        _write_long,
+    )
+
+    sync = bytes(range(16))
+    out = io.BytesIO()
+    out.write(MAGIC)
+    meta = {"avro.schema": json.dumps(schema).encode(), "avro.codec": codec}
+    _write_long(out, len(meta))
+    for k, v in meta.items():
+        _write_bytes(out, k.encode())
+        _write_bytes(out, v)
+    _write_long(out, 0)
+    out.write(sync)
+    block = io.BytesIO()
+    for row in rows:
+        for f, value in zip(schema["fields"], row):
+            t = f["type"]
+            if isinstance(t, dict) and t.get("logicalType") == "decimal":
+                n = int(value.scaleb(t["scale"]))
+                _write_bytes(block, n.to_bytes(n.bit_length() // 8 + 1, "big", signed=True))
+            else:
+                _encode_value(block, t, value)
+    payload = block.getvalue()
+    if codec == b"deflate":
+        z = zlib.compressobj(wbits=-15)
+        payload = z.compress(payload) + z.flush()
+    _write_long(out, len(rows))
+    _write_bytes(out, payload)
+    out.write(sync)
+    return out.getvalue()
+
+
+_DOCTORS = [
+    (1, "William", "Hartnell"), (2, "Patrick", "Troughton"),
+    (3, "Jon", "Pertwee"), (4, "Tom", "Baker"), (5, "Peter", "Davison"),
+    (6, "Colin", "Baker"), (7, "Sylvester", "McCoy"), (8, "Paul", "McGann"),
+    (9, "Christopher", "Eccleston"), (10, "David", "Tennant"),
+    (11, "Matt", "Smith"),
+]
+
+
+def test_avro_deflate_container_and_schema_resolution(spark, tmp_path):
+    """A deflate-compressed container (the reference's doctors.avro
+    shape) read against a reader schema carrying an extra defaulted
+    field applies the default (avro_add_column.q / avro_joins.q
+    goldens)."""
     from pyspark.sql import types as T
 
     from apache_hive_2_1_1_src_spark.avro_io import (
@@ -162,10 +217,22 @@ def test_avro_deflate_container_and_schema_resolution(spark):
         read_avro_resolved,
     )
 
-    raw = open("/root/reference/data/files/doctors.avro", "rb").read()
+    writer = {
+        "type": "record",
+        "name": "doctors",
+        "fields": [
+            {"name": "number", "type": "int"},
+            {"name": "first_name", "type": "string"},
+            {"name": "last_name", "type": "string"},
+        ],
+    }
+    raw = _avro_container(writer, _DOCTORS, b"deflate")
+    path = tmp_path / "doctors.avro"
+    path.write_bytes(raw)
     schema, rows = decode_container(raw)
     assert len(rows) == 11
     assert schema["fields"][0]["name"] == "number"
+    assert rows == _DOCTORS
     reader = {
         "type": "record",
         "name": "doctors",
@@ -182,32 +249,50 @@ def test_avro_deflate_container_and_schema_resolution(spark):
             T.StructField("extra", T.StringType()),
         ]
     )
-    df = read_avro_resolved(
-        spark, "/root/reference/data/files/doctors.avro", tbl_schema, reader
-    )
+    df = read_avro_resolved(spark, str(path), tbl_schema, reader)
     got = {r.number: (r.first_name, r.extra) for r in df.collect()}
     assert len(got) == 11
     assert all(v[1] == "fishfingers" for v in got.values())
+    assert got == {n: (first, "fishfingers") for n, first, _ in _DOCTORS}
 
 
-def test_avro_decimal_logical_type_rescales_half_up(spark):
-    """dec.avro carries decimal(5,2); read as decimal(4,1) Hive
-    rescales HALF_UP (avro_decimal.q golden 234.79→234.8)."""
+def test_avro_decimal_logical_type_rescales_half_up(spark, tmp_path):
+    """A bytes-backed decimal(5,2) logical type (the reference's dec.avro
+    shape) read as decimal(4,1) rescales HALF_UP (avro_decimal.q golden
+    234.79→234.8); ties round away from zero, never to even."""
     from pyspark.sql import types as T
 
     from apache_hive_2_1_1_src_spark.avro_io import read_avro_resolved
 
+    dec52 = {"type": "bytes", "logicalType": "decimal", "precision": 5, "scale": 2}
+    writer = {
+        "type": "record",
+        "name": "dec",
+        "fields": [
+            {"name": "name", "type": "string"},
+            {"name": "value", "type": dec52},
+        ],
+    }
+    # (written decimal(5,2), expected decimal(4,1) under HALF_UP)
+    cases = [
+        ("234.79", "234.8"), ("77.34", "77.3"), ("55.71", "55.7"),
+        ("12.25", "12.3"), ("-3.45", "-3.5"), ("0.05", "0.1"),
+        ("99.99", "100.0"), ("1.00", "1.0"), ("33.11", "33.1"),
+        ("-78.56", "-78.6"),
+    ]
+    rows = [(f"n{i}", decimal.Decimal(w)) for i, (w, _) in enumerate(cases)]
+    path = tmp_path / "dec.avro"
+    path.write_bytes(_avro_container(writer, rows, b"null"))
     tbl = T.StructType(
         [
             T.StructField("name", T.StringType()),
             T.StructField("value", T.DecimalType(4, 1)),
         ]
     )
-    df = read_avro_resolved(
-        spark, "/root/reference/data/files/dec.avro", tbl, None
-    )
-    vals = sorted(str(r.value) for r in df.collect())
-    assert "234.8" in vals and len(vals) == 10
+    df = read_avro_resolved(spark, str(path), tbl, None)
+    got = {r.name: str(r.value) for r in df.collect()}
+    assert "234.8" in got.values() and len(got) == 10
+    assert got == {f"n{i}": e for i, (_, e) in enumerate(cases)}
 
 
 # -------------------------------------------------- partition metadata-only
