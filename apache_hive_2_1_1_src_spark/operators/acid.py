@@ -61,6 +61,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 
 class WriteConflictError(RuntimeError):
@@ -78,6 +79,7 @@ class Snapshot:
     base_dir: str
     base_write_id: int
     deltas: tuple[tuple[int, str], ...]  # (write_id, dir) committed <= hwm
+    folded: frozenset[str]  # delta dirs written by compact_minor
 
 
 @dataclass
@@ -99,6 +101,12 @@ def _log_path(root: str) -> str:
 def _read_log(root: str) -> dict:
     with open(_log_path(root)) as f:
         return json.load(f)
+
+
+def _folded(entries: list[dict]) -> frozenset[str]:
+    """Dirs of the log entries a minor compaction wrote (their
+    tombstones carry a per-key ``_twid`` column)."""
+    return frozenset(e["dir"] for e in entries if "folded_range" in e)
 
 
 def _write_log(root: str, log: dict) -> None:
@@ -148,22 +156,26 @@ class AcidTable:
         self.spark = spark
         self.root = root
         self.key_col = key_col
-        # cached table schema (fixed at create(); major compaction
-        # rewrites the same columns) — see _read_rows
-        self._rows_schema = None
+        self._rows_schema = None  # see _schema
+
+    def _schema(self) -> StructType:
+        """The table's row schema.  Schema inference is a Spark job per
+        call (it reads a parquet footer); an ACID scenario would pay it
+        for the base and every delta on each read, for a schema that
+        cannot change (deltas are written from ``read()`` output, major
+        compaction rewrites the same columns).  ``create`` records it;
+        a handle opened on an existing root infers it once from the
+        base."""
+        if self._rows_schema is None:
+            base = _read_log(self.root)["base"]
+            self._rows_schema = self.spark.read.parquet(
+                os.path.join(self.root, base)
+            ).schema
+        return self._rows_schema
 
     def _read_rows(self, path: str) -> DataFrame:
-        """Read a base/delta ``rows`` parquet dir with the cached table
-        schema.  Round 14 (guide §6 — schema inference is per-call
-        DRIVER work): every ``read()`` used to re-list and re-read a
-        parquet footer for the base plus each delta; a multi-statement
-        ACID scenario pays that dozens of times for a schema that cannot
-        change (deltas are written from ``read()`` output, major
-        compaction rewrites the same columns).  Inferred once, then
-        passed explicitly."""
-        if self._rows_schema is None:
-            self._rows_schema = self.spark.read.parquet(path).schema
-        return self.spark.read.schema(self._rows_schema).parquet(path)
+        """Read a base/delta ``rows`` parquet dir with the table schema."""
+        return self.spark.read.schema(self._schema()).parquet(path)
 
     # ---------------------------------------------------------- create
     @classmethod
@@ -174,7 +186,8 @@ class AcidTable:
         if os.path.exists(root):
             shutil.rmtree(root)
         os.makedirs(root)
-        df.write.mode("overwrite").parquet(os.path.join(root, "base_0"))
+        base = os.path.join(root, "base_0")
+        df.write.mode("overwrite").parquet(base)
         _write_log(
             root,
             {
@@ -185,7 +198,11 @@ class AcidTable:
                 "committed": [],  # [{write_id, dir, has_tombstones}]
             },
         )
-        return cls(spark, root, key_col)
+        table = cls(spark, root, key_col)
+        # the written frame's schema as a parquet read reports it (every
+        # column nullable), without reading a footer back
+        table._rows_schema = spark.read.schema(df.schema).parquet(base).schema
+        return table
 
     # --------------------------------------------------------- reading
     def snapshot(self) -> Snapshot:
@@ -199,6 +216,7 @@ class AcidTable:
             base_dir=log["base"],
             base_write_id=log["base_write_id"],
             deltas=deltas,
+            folded=_folded(log["committed"]),
         )
 
     def snapshot_at(self, write_id: int) -> Snapshot:
@@ -227,29 +245,36 @@ class AcidTable:
                     f"fold [{lo}, {hi}] — that history is collapsed "
                     "(pin snapshots as live to clean() to prevent this)"
                 )
-        deltas = tuple(
-            (e["write_id"], e["dir"])
-            for e in log["committed"]
-            if e["write_id"] <= write_id
-        )
+        visible = [e for e in log["committed"] if e["write_id"] <= write_id]
         return Snapshot(
             high_watermark=write_id,
             base_dir=log["base"],
             base_write_id=log["base_write_id"],
-            deltas=deltas,
+            deltas=tuple((e["write_id"], e["dir"]) for e in visible),
+            folded=_folded(visible),
         )
 
-    def _load_tombstones(self, d: str, wid: int) -> DataFrame:
+    def _read_tombstones(self, d: str, folded: bool) -> DataFrame:
+        """Read a delta's tombstones: the key column, plus ``_twid`` in
+        a folded delta."""
+        fields = [self._schema()[self.key_col]]
+        if folded:
+            fields.append(StructField("_twid", IntegerType()))
+        return self.spark.read.schema(StructType(fields)).parquet(
+            os.path.join(self.root, d, "tombstones")
+        )
+
+    def _load_tombstones(self, d: str, wid: int, folded: bool) -> DataFrame:
         """Tombstones of one delta as (key, _twid).  Plain deltas carry
         just the key column (their write_id is the log entry's); FOLDED
         deltas persist a per-key ``_twid`` column so minor compaction
         never re-stamps historical deletes at the fold watermark — which
         would otherwise fabricate write-set conflicts for txns open
         across the compaction."""
-        tt = self.spark.read.parquet(os.path.join(self.root, d, "tombstones"))
-        if "_twid" not in tt.columns:
+        tt = self._read_tombstones(d, folded)
+        if not folded:
             tt = tt.withColumn("_twid", F.lit(wid))
-        return tt.select(self.key_col, "_twid")
+        return tt
 
     def read(self, snap: Snapshot | None = None) -> DataFrame:
         """Reconstruct the table at ``snap`` (default: latest commit).
@@ -272,7 +297,7 @@ class AcidTable:
                     self._read_rows(rdir).withColumn("_wid", F.lit(wid))
                 )
             if os.path.exists(tdir):
-                tt = self._load_tombstones(d, wid)
+                tt = self._load_tombstones(d, wid, d in snap.folded)
                 tombs = tt if tombs is None else tombs.unionByName(tt)
         if tombs is None:
             return rows.drop("_wid")
@@ -339,7 +364,7 @@ class AcidTable:
                 rr = self._read_rows(rdir).withColumn("_wid", F.lit(wid))
                 rows = rr if rows is None else rows.unionByName(rr)
             if os.path.exists(tdir):
-                tt = self._load_tombstones(d, wid)
+                tt = self._load_tombstones(d, wid, d in snap.folded)
                 tombs = tt if tombs is None else tombs.unionByName(tt)
         folded = f"delta_{uuid.uuid4().hex}"
         fdir = os.path.join(self.root, folded)
@@ -357,8 +382,9 @@ class AcidTable:
             surv.write.mode("overwrite").parquet(os.path.join(fdir, "rows"))
             wrote_rows = True
         if tombs is not None:
-            # persist per-key original write ids (see _load_tombstones)
-            tombs.groupBy(k).agg(F.max("_twid").alias("_twid")).write.mode(
+            # persist per-key original write ids (see _load_tombstones),
+            # typed as _read_tombstones declares them
+            tombs.groupBy(k).agg(F.max("_twid").cast("int").alias("_twid")).write.mode(
                 "overwrite"
             ).parquet(os.path.join(fdir, "tombstones"))
             wrote_tombs = True
@@ -402,16 +428,14 @@ class AcidTable:
             return None
         n_tomb_deltas = sum(1 for e in log["committed"] if e["has_tombstones"])
         if n_tomb_deltas:
-            base_rows = self.spark.read.parquet(
-                os.path.join(self.root, log["base"])
-            ).count()
+            base_rows = self._read_rows(os.path.join(self.root, log["base"])).count()
             tomb_rows = 0
             for e in log["committed"]:
                 if not e["has_tombstones"]:
                     continue
                 tdir = os.path.join(self.root, e["dir"], "tombstones")
                 if os.path.isdir(tdir):
-                    tomb_rows += self.spark.read.parquet(tdir).count()
+                    tomb_rows += self._read_tombstones(e["dir"], "folded_range" in e).count()
             if base_rows and tomb_rows / base_rows >= delta_pct_threshold:
                 self.compact_major()
                 return "major"
@@ -511,15 +535,10 @@ class AcidTable:
         maintenance (q204) consumes.
         """
         log = _read_log(self.root)
-        # uniform feed schema comes from the base files: delete events
-        # null-fill every non-key column so a delete-only window still
-        # exposes the full row shape to a replica consumer
-        if self._rows_schema is None:
-            self._rows_schema = self.spark.read.parquet(
-                os.path.join(self.root, log["base"])
-            ).schema
-        base_schema = self._rows_schema
-        data_fields = [f for f in base_schema.fields if f.name != "_wid"]
+        # uniform feed schema is the table's: delete events null-fill
+        # every non-key column so a delete-only window still exposes the
+        # full row shape to a replica consumer
+        data_fields = [f for f in self._schema().fields if f.name != "_wid"]
         for e in log["committed"]:
             # A minor-compaction fold re-attributes every event inside
             # [lo, hi] to hi and collapses update delete+insert pairs —
@@ -567,7 +586,7 @@ class AcidTable:
                     else [F.col(self.key_col)]
                 )
                 frames.append(
-                    self.spark.read.parquet(ts_dir).select(
+                    self._read_tombstones(e["dir"], "folded_range" in e).select(
                         F.lit(int(e["write_id"])).alias("write_id"),
                         F.lit("delete").alias("change"),
                         *cols,
@@ -762,15 +781,15 @@ class Txn:
                     and e["has_tombstones"]
                 ]
                 if later:
-                    mine = self.table.spark.read.parquet(
-                        self._dir("tombstones")
-                    ).select(self.table.key_col)
+                    mine = self.table._read_tombstones(  # noqa: SLF001
+                        self._staged.dir, folded=False
+                    )
                     theirs = None
                     for e in later:
                         # folded deltas carry per-key _twid: only deletes
                         # STRICTLY after our snapshot are conflicts
                         tt = self.table._load_tombstones(  # noqa: SLF001
-                            e["dir"], e["write_id"]
+                            e["dir"], e["write_id"], "folded_range" in e
                         ).filter(F.col("_twid") > self.snap.high_watermark).select(
                             self.table.key_col
                         )

@@ -236,7 +236,7 @@ def export_hive_acid(table: AcidTable, dest: str, num_buckets: int = 1) -> None:
                 otid.cast("long").alias("_otid"), F.col("_rid")
             )
         if os.path.exists(tdir):
-            tt = table._load_tombstones(e["dir"], wid)  # (key, _twid)
+            tt = table._load_tombstones(e["dir"], wid, "folded_range" in e)  # (key, _twid)
             # victim = latest registered row version strictly older than
             # the tombstone's write id (same-wid re-insert survives)
             cand = tt.alias("t").join(

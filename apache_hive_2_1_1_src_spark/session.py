@@ -135,6 +135,16 @@ def build_session(
         pass
     for k, v in HIVE_COMPAT_RUNTIME_CONF.items():
         builder = builder.config(k, v)
+    # Spark compiles each physical plan to Java classes (Janino) and keeps
+    # them in one LRU cache per JVM, 100 entries by default.  One pass of a
+    # perfbench workload uses about 205 (hiveql_dml) to 230
+    # (corpus_pipeline) distinct classes, so at 100 every pass recompiled
+    # 132-183 of them and the JIT compiled the new bytecode again.  At 1000
+    # later passes compile none; post-GC old gen at the end of a run grows
+    # 9-42 MB, and metaspace stays flat.  A static conf: it takes effect
+    # only here, when the session (and with it every executor's conf) is
+    # built.
+    builder = builder.config("spark.sql.codegen.cache.maxEntries", "1000")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -150,10 +160,7 @@ def apply_compat_conf(spark: SparkSession) -> SparkSession:
     functions change meaning.
     """
     for k, v in HIVE_COMPAT_RUNTIME_CONF.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:  # non-runtime-settable key on this build — keep going
-            pass
+        spark.conf.set(k, v)
     return spark
 
 

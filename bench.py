@@ -71,9 +71,10 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     for name in HEADLINE:
-        # steady-state: best of three runs (first run pays codegen compile;
-        # a third sample damps shared-VM scheduling noise, which BASELINE.md
-        # measures at +/-30% run-to-run)
+        # steady-state: best of three runs (the first run of a query pays
+        # its plan's Janino compile, which build_session's codegen cache
+        # keeps for the later runs; a third sample damps shared-VM
+        # scheduling noise, which BASELINE.md measures at +/-30% run-to-run)
         best = float("inf")
         for _ in range(3):
             start = time.perf_counter()

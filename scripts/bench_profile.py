@@ -7,7 +7,10 @@ Two modes:
   time   — per-query isolation timing: best-of-N wall time for the SAME
            action bench.py uses (df.count(), q85 collect) AND the noop
            sink (df.write.format('noop')) which computes every column
-           (guide §1.4).  Prints one JSON line per query.
+           (guide §1.4), plus the Janino compilations and compile ms those
+           runs cost (Spark's CodegenMetrics; in local mode the executors
+           share the driver JVM, so their compiles count too).  Prints one
+           JSON line per query.
 
 Usage:
   python scripts/bench_profile.py plans  <outdir> [tag] [query ...]
@@ -26,6 +29,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from apache_hive_2_1_1_src_spark.queries import all_queries  # noqa: E402
 from apache_hive_2_1_1_src_spark.session import build_session  # noqa: E402
 from bench import HEADLINE  # noqa: E402
+
+
+def codegen_totals(spark) -> tuple[int, float]:
+    """(Janino compilations, compile ms) so far in this JVM."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return n, ns / 1e6
 
 
 def main() -> None:
@@ -64,6 +75,7 @@ def main() -> None:
     queries["q01_pricing_summary"](spark, sf_dir).collect()
     for name in names:
         spark.sparkContext.setJobDescription(f"profile:{name}")
+        n0, ms0 = codegen_totals(spark)
         best_cnt = float("inf")
         for _ in range(reps):
             t0 = time.perf_counter()
@@ -80,9 +92,16 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             best_noop = min(best_noop, time.perf_counter() - t0)
         spark.sparkContext.setJobDescription(None)
+        n1, ms1 = codegen_totals(spark)
         print(
             json.dumps(
-                {"query": name, "count_sec": round(best_cnt, 3), "noop_sec": round(best_noop, 3)}
+                {
+                    "query": name,
+                    "count_sec": round(best_cnt, 3),
+                    "noop_sec": round(best_noop, 3),
+                    "compilations": n1 - n0,
+                    "compile_ms": round(ms1 - ms0, 1),
+                }
             ),
             flush=True,
         )

@@ -5,8 +5,11 @@ compaction), each exercised end-to-end on a small key-addressed table."""
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
+import time
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -523,3 +526,62 @@ def test_abort_transactions_kills_open_writers(spark, tbl):
 
 def test_abort_transactions_noop_when_none_open(spark, tbl):
     assert tbl.abort_open_transactions() == 0
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches.  Jobs reach the status tracker through
+    the listener bus, in order, so once a later fence job is visible
+    every job of ``fn`` is too."""
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    group, fence = f"jobs-{uuid.uuid4().hex}", f"fence-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(fence, fence)
+        sc.parallelize([0], 1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(fence):
+        assert time.monotonic() < deadline, "fence job never reached the status tracker"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_reads_use_declared_schemas_not_footers(spark, tbl):
+    """Row and tombstone schemas are declared, never inferred per read:
+    building ``read()`` over plain and folded deltas launches no job once
+    the handle knows the table schema, and the declared schemas are the
+    ones the parquet footers hold."""
+    tx = tbl.begin()
+    tx.update(F.col("k") % 3 == 0, {"v": F.col("v") + 1})
+    tx.commit()
+    tx = tbl.begin()
+    tx.delete(F.col("k") == 4)
+    tx.commit()
+    tbl.compact_minor()  # one folded entry: tombstones carry _twid
+    tx = tbl.begin()
+    tx.delete(F.col("k") == 5)
+    tx.commit()  # a plain delta after the fold
+    log = json.loads(open(os.path.join(tbl.root, "_txn_log.json")).read())
+    assert ["folded_range" in e for e in log["committed"]] == [True, False]
+
+    # the control: footer inference is a job, which the count sees
+    base = os.path.join(tbl.root, log["base"])
+    assert _jobs_launched(spark, lambda: spark.read.parquet(base)) >= 1
+    # create() recorded the schema, so even the first read infers nothing
+    assert _jobs_launched(spark, tbl.read) == 0
+    reopened = AcidTable(spark, tbl.root, key_col="k")
+    expected = rows(reopened.read())  # infers the row schema once
+    assert _jobs_launched(spark, reopened.read) == 0
+    assert rows(reopened.read()) == expected == rows(tbl.read())
+
+    assert tbl._schema() == reopened._schema() == spark.read.parquet(base).schema  # noqa: SLF001
+    for e in log["committed"]:
+        tdir = os.path.join(tbl.root, e["dir"], "tombstones")
+        declared = tbl._read_tombstones(e["dir"], "folded_range" in e).schema  # noqa: SLF001
+        assert declared == spark.read.parquet(tdir).schema
+        rdir = os.path.join(tbl.root, e["dir"], "rows")
+        if os.path.isdir(rdir):
+            assert tbl._schema() == spark.read.parquet(rdir).schema  # noqa: SLF001
