@@ -70,10 +70,6 @@ def _normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events table with ``ts`` normalized to a session-zone timestamp
     (see _normalize_event_ts — handles both nanos-long and timestamp_ntz

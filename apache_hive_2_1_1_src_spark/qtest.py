@@ -69,8 +69,6 @@ def init_classic_tables(eng) -> None:
     # ${system:hive.root} = the Hive checkout root (QTestUtil sets the
     # hive.root system property; compustat_avro.q dfs-copies a schema
     # file relative to it)
-    if not hasattr(eng, "_vars"):
-        eng._vars = {}
     eng._vars.setdefault("system:hive.root", REF + "/")
     # QTestUtil system properties the dfs lines interpolate (repair.q)
     _wh = re.sub(
@@ -912,15 +910,10 @@ def _emulate_dfs(eng, stmt: str) -> list[str]:
                 if eng.spark.catalog.tableExists(tname) and not getattr(
                     eng, "_table_partition_cols"
                 )(tname):
-                    sep = getattr(eng, "declared_field_delims", {}).get(
-                        tname, "\x01"
-                    )
-                    nullfmt = getattr(
-                        eng, "declared_null_formats", {}
-                    ).get(tname, "\\N")
+                    desc = eng.table_desc(tname)
                     return [
-                        sep.join(
-                            nullfmt if v is None else hive_cell(v)
+                        desc.field_delim.join(
+                            desc.null_format if v is None else hive_cell(v)
                             for v in row
                         )
                         for row in eng.spark.table(tname).collect()
@@ -1143,14 +1136,12 @@ def cleanup_scratch_tables(eng) -> None:
     # a prior .q may have left the session in its own database (USE db);
     # everything below — and the next file — must run against default
     eng.spark.sql("USE default")
-    # per-table read-shim registries must not leak onto a LATER file's
-    # same-named table (the tables themselves are dropped below)
-    for reg in (
-        "_orc_wall_masks", "_default_part_tables",
-        "_temp_tables", "_temp_view_dbs", "_temp_shadows",
-    ):
-        if hasattr(eng, reg):
-            getattr(eng, reg).clear()
+    # table descriptors and temp-object registries must not leak onto a
+    # LATER file's same-named table (the tables themselves are dropped
+    # below, outside HiveEngine.sql)
+    eng._tables.clear()
+    for reg in (eng._temp_tables, eng._temp_view_dbs, eng._temp_shadows):
+        reg.clear()
     for row in eng.spark.sql("SHOW TABLES").collect():
         if row.tableName in FIXTURES:
             continue
@@ -1450,7 +1441,7 @@ def run_qfile(eng, name: str) -> QFileReport:
         bare = re.sub(r"--[^\n]*", "", stmt).strip()
         if re.match(r"^EXPLAIN\b", bare, re.IGNORECASE):
             continue  # golden plans are MR-specific
-        if "PostExecOrcFileDump" in getattr(eng, "_vars", {}).get(
+        if "PostExecOrcFileDump" in eng._vars.get(
             "hive.exec.post.hooks", ""
         ):
             # the post-hook dumps the PHYSICAL ORC file structure
@@ -1471,7 +1462,7 @@ def run_qfile(eng, name: str) -> QFileReport:
             hive_rows(df) if df is not None and df.columns else []
         )
         if str(
-            getattr(eng, "_vars", {}).get("hive.cli.print.header", "")
+            eng._vars.get("hive.cli.print.header", "")
         ).lower() == "true" and re.search(
             r"\bSELECT\b|^\s*INSERT\b[\s\S]*\bVALUES\s*\(", bare, re.IGNORECASE
         ):
@@ -1479,7 +1470,7 @@ def run_qfile(eng, name: str) -> QFileReport:
             if hdr is not None:
                 got = [hdr] + got
         elif str(
-            getattr(eng, "_vars", {}).get("hive.cli.print.header", "")
+            eng._vars.get("hive.cli.print.header", "")
         ).lower() == "true" and re.match(
             r"^\s*(UPDATE|DELETE)\b", bare, re.IGNORECASE
         ):
@@ -1522,7 +1513,7 @@ def run_qfile(eng, name: str) -> QFileReport:
             else:
                 # DELETE selects row__id plus the partition columns
                 got = ["\t".join(["row__id"] + pcols_h)] + got
-        hooks = getattr(eng, "_vars", {}).get("hive.exec.post.hooks", "")
+        hooks = eng._vars.get("hive.exec.post.hooks", "")
         if "VerifyOverriddenConfigsHook" in hooks and re.match(
             r"^(SELECT|FROM|WITH)\b", bare, re.IGNORECASE
         ):
@@ -1530,7 +1521,7 @@ def run_qfile(eng, name: str) -> QFileReport:
             # (every key SET in this session) per query
             got = [
                 f"Key: {k}, Value: {v}"
-                for k, v in getattr(eng, "_vars", {}).items()
+                for k, v in eng._vars.items()
                 if not k.startswith(("system:", "env:"))
             ] + got
         if "CheckColumnAccessHook" in hooks and re.match(

@@ -10,7 +10,3 @@ from apache_hive_2_1_1_src_spark.io import load_table
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan a driver table (TableScanOperator equivalent)."""
     return load_table(spark, sf_dir, name)
-
-
-def dedent_sql(sql: str) -> str:
-    return "\n".join(line.strip() for line in sql.strip().splitlines())

@@ -1064,7 +1064,7 @@ def q217_hive_ddl_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"SELECT o_orderkey, o_totalprice FROM orders "
             f"WHERE o_orderstatus = '{st}' AND o_orderkey <= 8000"
         )
-    fmt = eng.declared_formats[tb]
+    fmt = eng.table_desc(tb).fmt
     res = (
         spark.table(tb)
         .groupBy("status")
@@ -1128,7 +1128,7 @@ def q218_show_create_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "fmt_kept",
-            F.lit(eng.declared_formats.get(tb.lower()) == "orc"),
+            F.lit(eng.table_desc(tb).fmt == "orc"),
         )
         .withColumn("buckets_kept", F.lit(desc.get("Num Buckets") == "4"))
         .orderBy("status")

@@ -31,6 +31,7 @@ import re
 import tempfile
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -44,6 +45,7 @@ from apache_hive_2_1_1_src_spark.sqltext import (
     sub_outside_quotes,
     unescape,
 )
+from apache_hive_2_1_1_src_spark.table_desc import TableDesc, TableStore
 
 #: Hive-2.1.1-semantics config preset, applied to every session we build and
 #: safe to apply onto an externally provided session (runtime-settable keys).
@@ -190,6 +192,7 @@ class HiveEngine:
     def __init__(self, spark: SparkSession | None = None, sf_dir: str | None = None):
         self.spark = spark or build_session()
         apply_compat_conf(self.spark)
+        self._init_state()
         self.sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
         self._register_hive_hash()
         self._register_compute_stats()
@@ -210,6 +213,44 @@ class HiveEngine:
             )
         except Exception:
             pass
+
+    def _init_state(self) -> None:
+        """The session state Hive's SessionState holds: variables, temp
+        objects, session functions and policies, plus the per-table
+        metadata store.  Everything starts empty."""
+        from apache_hive_2_1_1_src_spark.operators.authz import Authorizer
+
+        self._tables = TableStore(
+            lambda: self.spark.catalog.currentDatabase()
+        )
+        self._vars: dict[str, str] = {}
+        self._macros: dict[str, tuple[list[str], str]] = {}
+        self._fn_aliases: dict[str, str] = {}
+        self._fn_templates: dict[str, str] = {}
+        self._py_test_fns: set[str] = set()
+        self._udtf_count2_fns: set[str] = set()
+        self._matchpath_fns: set[str] = {"matchpath"}
+        self._masking: dict = {}
+        self._authz = Authorizer()
+        self._default_user = "anonymous"
+        #: session TEMPORARY objects: views by bare name and their db,
+        #: real tables standing in for temp tables, shadows of catalog
+        #: tables ((db, name) → mangled name)
+        self._temp_tables: set[str] = set()
+        self._temp_view_dbs: dict[str, str] = {}
+        self._session_temp_tables: set[str] = set()
+        self._temp_shadows: dict[tuple[str, str], str] = {}
+        self._hostile_ids: dict[str, str] = {}
+        self._view_partitions: dict[str, set] = {}
+        self._db_owners: dict[str, tuple[str, str]] = {}
+        self._orc_fixup_counts: dict[str, int] = {}
+        self._script_op_id = 0
+        self._ptf_order: str | None = None
+        self._ordinal_default = "true"
+        self._mr_limit_key_order = False
+        self.hive_exact_percentile = False
+        self._hive_date_udfs_ready = False
+        self._misc_udfs_ready = False
 
     def _register_hive_percentile_approx(self) -> None:
         """Hive's percentile_approx — GenericUDAFPercentileApprox over
@@ -697,17 +738,18 @@ class HiveEngine:
           concern; explicit Hive-format IO stays available through the
           io/rcfile_io writers and INSERT OVERWRITE DIRECTORY STORED AS.
         * ``STORED AS <fmt>`` maps to ``USING parquet`` (the engine's
-          storage), with the declared Hive format remembered in
-          ``self.declared_formats[table]`` so tooling can surface it.
+          storage), with the declared Hive format kept in the table's
+          ``TableDesc`` (stored once the CREATE has run).
         * Hive's typed ``PARTITIONED BY (dt STRING)`` — partition columns
           OUTSIDE the column list — appends the partition columns to the
           list and rewrites the clause to Spark's name-only form.
         * ``CREATE EXTERNAL TABLE`` drops the keyword (Spark infers
           external-ness from LOCATION).
         """
-        if not self._HIVE_CREATE.match(text) or re.search(
-            r"\bUSING\s+\w", text, re.IGNORECASE
-        ):
+        if not self._HIVE_CREATE.match(text):
+            return text
+        if re.search(r"\bUSING\s+\w", text, re.IGNORECASE):
+            self._stage_create(text, TableDesc())
             return text
         sb = re.search(r"\bSTORED\s+BY\s+'([^']*)'", text, re.IGNORECASE)
         if sb and sb.group(1).endswith(".DefaultStorageHandler"):
@@ -728,149 +770,104 @@ class HiveEngine:
             )
         out = self._rewrite_uniontype_ddl(text)
         fmt = None
-        # remember the declared field delimiter (LazySimpleSerDe
-        # field.delim) so LOAD DATA parses this table's files correctly
+        desc = TableDesc()
+        # the declared field delimiter (LazySimpleSerDe field.delim) so
+        # LOAD DATA parses this table's files correctly
         fd = re.search(
             r"FIELDS\s+TERMINATED\s+BY\s+'((?:[^'\\]|\\.)*)'", out, re.IGNORECASE
         )
-        tn = re.search(
-            r"TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?((?:`[^`]+`|[\w.])+)", out, re.IGNORECASE
+        if fd:
+            desc.field_delim = self._delim_unescape(fd.group(1))
+        # serialization.null.format / NULL DEFINED AS: the token that
+        # writes and reads as SQL NULL (LazySerDeParameters;
+        # nullformat.q) — for LOAD parsing, text export, and the
+        # ALTER-time re-interpretation of old tokens
+        nf = re.search(
+            r"NULL\s+DEFINED\s+AS\s+'((?:[^'\\]|\\.)*)'",
+            out,
+            re.IGNORECASE,
+        ) or re.search(
+            r"['\"]serialization\.null\.format['\"]\s*=\s*'([^']*)'",
+            out,
+            re.IGNORECASE,
         )
-        if tn:
-            if not hasattr(self, "declared_field_delims"):
-                self.declared_field_delims: dict[str, str] = {}
-            if not hasattr(self, "declared_coll_delims"):
-                self.declared_coll_delims: dict[str, tuple[str, str]] = {}
-            tkey = tn.group(1).replace("`", "").lower()
-
-            if fd:
-                self.declared_field_delims[tkey] = self._delim_unescape(fd.group(1))
-            else:
-                # re-CREATE without ROW FORMAT resets to the ^A default —
-                # a stale remembered delimiter must never outlive its DDL
-                self.declared_field_delims.pop(tkey, None)
-            # serialization.null.format / NULL DEFINED AS: the token
-            # that writes and reads as SQL NULL (LazySerDeParameters;
-            # nullformat.q) — remembered for LOAD parsing, text export,
-            # and the ALTER-time re-interpretation of old tokens
-            if not hasattr(self, "declared_null_formats"):
-                self.declared_null_formats: dict[str, str] = {}
-            nf = re.search(
-                r"NULL\s+DEFINED\s+AS\s+'((?:[^'\\]|\\.)*)'",
+        if nf:
+            desc.null_format = self._delim_unescape(nf.group(1))
+        # RegexSerDe: LOAD parses each line by input.regex — one
+        # capture group per column (serde2/RegexSerDe.java;
+        # char_serde.q / serde_regex.q)
+        if re.search(r"SERDE\s+['\"][^'\"]*RegexSerDe", out, re.IGNORECASE):
+            rx = re.search(
+                r"['\"]input\.regex['\"]\s*=\s*"
+                r"(?:\"((?:[^\"\\]|\\.)*)\"|'((?:[^'\\]|\\.)*)')",
                 out,
                 re.IGNORECASE,
-            ) or re.search(
+            )
+            if rx:
+                pat = rx.group(1) if rx.group(1) is not None else rx.group(2)
+                desc.regex = pat.replace("\\\\", "\\")
+        # TCTLSeparatedProtocol (DynamicSerDe — input19.q): fields
+        # split on field.delim OUTSIDE quote.delim characters, the
+        # quote characters stripped, null.format token → NULL
+        if re.search(r"TCTLSeparatedProtocol", out) and re.search(
+            r"ROW\s+FORMAT\s+SERDE", out, re.IGNORECASE
+        ):
+            fdm = re.search(r"['\"]field\.delim['\"]\s*=\s*'([^']*)'", out)
+            qdm = re.search(r"['\"]quote\.delim['\"]\s*=\s*'([^']*)'", out)
+            ndm = re.search(
                 r"['\"]serialization\.null\.format['\"]\s*=\s*'([^']*)'",
                 out,
-                re.IGNORECASE,
             )
-            if nf:
-                self.declared_null_formats[tkey] = self._delim_unescape(nf.group(1))
-            else:
-                self.declared_null_formats.pop(tkey, None)
-            # RegexSerDe: LOAD parses each line by input.regex — one
-            # capture group per column (serde2/RegexSerDe.java;
-            # char_serde.q / serde_regex.q)
-            if not hasattr(self, "declared_regexes"):
-                self.declared_regexes: dict[str, str] = {}
-            if re.search(r"SERDE\s+['\"][^'\"]*RegexSerDe", out,
-                         re.IGNORECASE):
-                rx = re.search(
-                    r"['\"]input\.regex['\"]\s*=\s*"
-                    r"(?:\"((?:[^\"\\]|\\.)*)\"|'((?:[^'\\]|\\.)*)')",
-                    out,
-                    re.IGNORECASE,
-                )
-                if rx:
-                    pat = rx.group(1) if rx.group(1) is not None else rx.group(2)
-                    self.declared_regexes[tkey] = pat.replace("\\\\", "\\")
-            else:
-                self.declared_regexes.pop(tkey, None)
-            # TCTLSeparatedProtocol (DynamicSerDe — input19.q): fields
-            # split on field.delim OUTSIDE quote.delim characters, the
-            # quote characters stripped, null.format token → NULL
-            if not hasattr(self, "declared_tctl"):
-                self.declared_tctl: dict[str, tuple[str, str, str]] = {}
-            if re.search(r"TCTLSeparatedProtocol", out) and re.search(
-                r"ROW\s+FORMAT\s+SERDE", out, re.IGNORECASE
-            ):
-                fdm = re.search(
-                    r"['\"]field\.delim['\"]\s*=\s*'([^']*)'", out
-                )
-                qdm = re.search(
-                    r"['\"]quote\.delim['\"]\s*=\s*'([^']*)'", out
-                )
-                ndm = re.search(
-                    r"['\"]serialization\.null\.format['\"]\s*=\s*'([^']*)'",
-                    out,
-                )
-                quoteset = "".join(
-                    sorted(set(re.sub(r"[(|)\\]", "", qdm.group(1))))
-                ) if qdm else ""
-                self.declared_tctl[tkey] = (
-                    fdm.group(1) if fdm else "\x01",
-                    quoteset,
-                    ndm.group(1) if ndm else "\\N",
-                )
-            else:
-                self.declared_tctl.pop(tkey, None)
-            # serialization.encoding — LazySimpleSerDe charset
-            # (encoding_nonutf8.q reads an ISO8859_1 file)
-            if not hasattr(self, "declared_encodings"):
-                self.declared_encodings: dict[str, str] = {}
-            enc = re.search(
-                r"['\"]serialization\.encoding['\"]\s*=\s*'([^']*)'",
-                out,
-                re.IGNORECASE,
+            quoteset = "".join(
+                sorted(set(re.sub(r"[(|)\\]", "", qdm.group(1))))
+            ) if qdm else ""
+            desc.tctl = (
+                fdm.group(1) if fdm else "\x01",
+                quoteset,
+                ndm.group(1) if ndm else "\\N",
             )
-            if enc:
-                self.declared_encodings[tkey] = enc.group(1)
-            else:
-                self.declared_encodings.pop(tkey, None)
-            # per-FILE header/footer skips (HIVE-5795) — partitions
-            # added later by LOCATION must ingest with the same skips
-            if not hasattr(self, "declared_skips"):
-                self.declared_skips: dict[str, tuple[int, int]] = {}
-            sh = re.search(
-                r"['\"]skip\.header\.line\.count['\"]\s*=\s*['\"](\d+)['\"]",
-                out,
-                re.IGNORECASE,
+        # serialization.encoding — LazySimpleSerDe charset
+        # (encoding_nonutf8.q reads an ISO8859_1 file)
+        enc = re.search(
+            r"['\"]serialization\.encoding['\"]\s*=\s*'([^']*)'",
+            out,
+            re.IGNORECASE,
+        )
+        if enc:
+            desc.encoding = enc.group(1)
+        # per-FILE header/footer skips (HIVE-5795) — partitions added
+        # later by LOCATION must ingest with the same skips
+        sh = re.search(
+            r"['\"]skip\.header\.line\.count['\"]\s*=\s*['\"](\d+)['\"]",
+            out,
+            re.IGNORECASE,
+        )
+        sf = re.search(
+            r"['\"]skip\.footer\.line\.count['\"]\s*=\s*['\"](\d+)['\"]",
+            out,
+            re.IGNORECASE,
+        )
+        if sh or sf:
+            desc.skips = (
+                int(sh.group(1)) if sh else 0,
+                int(sf.group(1)) if sf else 0,
             )
-            sf = re.search(
-                r"['\"]skip\.footer\.line\.count['\"]\s*=\s*['\"](\d+)['\"]",
-                out,
-                re.IGNORECASE,
+        cd = re.search(
+            r"COLLECTION\s+ITEMS\s+TERMINATED\s+BY\s+"
+            r"'((?:[^'\\]|\\.)*)'",
+            out,
+            re.IGNORECASE,
+        )
+        kd = re.search(
+            r"MAP\s+KEYS\s+TERMINATED\s+BY\s+'((?:[^'\\]|\\.)*)'",
+            out,
+            re.IGNORECASE,
+        )
+        if cd or kd:
+            desc.coll_delims = (
+                self._delim_unescape(cd.group(1)) if cd else "\x02",
+                self._delim_unescape(kd.group(1)) if kd else "\x03",
             )
-            if sh or sf:
-                self.declared_skips[tkey] = (
-                    int(sh.group(1)) if sh else 0,
-                    int(sf.group(1)) if sf else 0,
-                )
-            else:
-                self.declared_skips.pop(tkey, None)
-            # same for read-time column length policies: a fresh CREATE
-            # starts from the declared schema, no inherited truncation
-            getattr(self, "_display_casts", {}).pop(
-                tkey.split(".")[-1], None
-            )
-            cd = re.search(
-                r"COLLECTION\s+ITEMS\s+TERMINATED\s+BY\s+"
-                r"'((?:[^'\\]|\\.)*)'",
-                out,
-                re.IGNORECASE,
-            )
-            kd = re.search(
-                r"MAP\s+KEYS\s+TERMINATED\s+BY\s+'((?:[^'\\]|\\.)*)'",
-                out,
-                re.IGNORECASE,
-            )
-            if cd or kd:
-                self.declared_coll_delims[tkey] = (
-                    self._delim_unescape(cd.group(1)) if cd else "\x02",
-                    self._delim_unescape(kd.group(1)) if kd else "\x03",
-                )
-            else:
-                self.declared_coll_delims.pop(tkey, None)
         out = self._SKEWED_BY.sub(" ", out)
         # Spark's bucketing DDL rejects SORTED BY ... DESC (ASC only);
         # Hive's sort direction is physical-layout metadata this engine
@@ -916,7 +913,7 @@ class HiveEngine:
                     fmt = "textfile"
             out = out[: m.start()] + " " + out[m.end():]
         if fmt == "avro":
-            out = self._synthesize_avro_columns(out)
+            out = self._synthesize_avro_columns(out, desc)
         out = self._ROW_FORMAT.sub(" ", out)
         # typed partition columns → append to column list, name-only
         # clause.  Balanced-paren scan: a parameterized partition type
@@ -947,7 +944,7 @@ class HiveEngine:
             # raw-copies containers) — without USING, Spark would plan
             # an unsupported Hive CreateTable
             fmt = (
-                getattr(self, "_vars", {})
+                self._vars
                 .get("hive.default.fileformat", "textfile")
                 .lower()
             )
@@ -1000,14 +997,7 @@ class HiveEngine:
                 # trailing space matters: ``)CLUSTERED BY`` with no gap
                 # after the column list (insertoverwrite_bucket.q)
                 out = out[:ins] + f" USING {using} " + out[ins:]
-            tm = re.search(
-                r"TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?((?:`[^`]+`|[\w.])+)", out, re.IGNORECASE
-            )
-            if tm is not None:
-                if not hasattr(self, "declared_formats"):
-                    self.declared_formats = {}
-                name = tm.group(1).replace("`", "").lower()
-                self.declared_formats[name] = fmt
+        desc.fmt = fmt
         out = re.sub(
             r"^(\s*CREATE\s+(?:TEMPORARY\s+)?)EXTERNAL\s+",
             r"\1",
@@ -1040,8 +1030,6 @@ class HiveEngine:
                 out,
                 flags=re.IGNORECASE,
             )
-            if not hasattr(self, "_session_temp_tables"):
-                self._session_temp_tables = set()
             self._session_temp_tables.add(
                 tm.group(3).replace("`", "").lower()
             )
@@ -1069,8 +1057,6 @@ class HiveEngine:
                     out,
                     count=1,
                 )
-                if not hasattr(self, "_temp_shadows"):
-                    self._temp_shadows: dict = {}
                 self._temp_shadows[(db_tm, base_tm)] = (
                     f"{db_tm}.{mangled}"
                 )
@@ -1099,9 +1085,26 @@ class HiveEngine:
                         f"CREATE TABLE {lk.group(1)} USING parquet AS "
                         f"SELECT * FROM {lk.group(2)} LIMIT 0"
                     )
+        self._stage_create(out, desc)
         return out
 
-    def _synthesize_avro_columns(self, out: str) -> str:
+    def _stage_create(self, ddl: str, desc: TableDesc) -> None:
+        """Stage the record a CREATE TABLE owns; ``sql`` stores it once
+        the statement succeeded.  ``IF NOT EXISTS`` over an existing
+        table is a no-op in Hive, so the old record stays."""
+        m = re.search(
+            r"TABLE\s+(IF\s+NOT\s+EXISTS\s+)?((?:`[^`]+`|[\w.])+)",
+            ddl,
+            re.IGNORECASE,
+        )
+        if m is None:
+            return
+        name = m.group(2).replace("`", "")
+        if m.group(1) and self.spark.catalog.tableExists(name):
+            return
+        self._tables.pending = (name, desc)
+
+    def _synthesize_avro_columns(self, out: str, desc: TableDesc) -> str:
         """AvroSerDe tables may declare NO column list — the columns come
         from ``avro.schema.literal`` / ``avro.schema.url`` in
         TBLPROPERTIES or SERDEPROPERTIES (serde2/avro/AvroSerDe.java
@@ -1145,11 +1148,7 @@ class HiveEngine:
         )
         if tm is None:
             return out
-        if not hasattr(self, "declared_avro_schemas"):
-            self.declared_avro_schemas: dict[str, dict] = {}
-        self.declared_avro_schemas[
-            tm.group(1).replace("`", "").lower()
-        ] = schema_json
+        desc.avro_schema = schema_json
         if self._column_list_end(out) is not None:
             return out  # columns already declared explicitly
         from apache_hive_2_1_1_src_spark.avro_io import avro_to_hive_type
@@ -1162,10 +1161,14 @@ class HiveEngine:
             return out
         return out[: tm.end()] + f" ({cols})" + out[tm.end():]
 
+    def table_desc(self, name: str) -> TableDesc:
+        """The table's Hive storage descriptor: what its DDL declared
+        (format, delimiters, null token, …) plus the engine's read
+        shims.  A table no Hive-form DDL described reads as defaults."""
+        return self._tables.read(name)
+
     def _is_parquet(self, tbl: str) -> bool:
-        return getattr(self, "declared_formats", {}).get(
-            tbl.replace("`", "").split(".")[-1].lower()
-        ) in ("parquet", "parquetfile")
+        return self._tables.read(tbl).is_parquet
 
     def _hive_cast(
         self,
@@ -1260,20 +1263,22 @@ class HiveEngine:
                 tgt_dt = _T.StructType.fromDDL(f"`__c` {target}")[
                     "__c"
                 ].dataType
-            except Exception:
+            except AnalysisException:
                 tgt_dt = None
             if tgt_dt is not None:
                 try:
                     built = self._structural_cast(col, src_type, tgt_dt)
                     if built is not None:
                         return built
-                except Exception:
+                except AnalysisException:
                     pass
+        # only Spark's verdict on the cast (ParseException is an
+        # AnalysisException) means NULL; any other failure propagates
         try:
             probe = F.lit(None).cast(src_type) if src_type else col
             self.spark.range(0).select(probe.cast(target))
             return col.cast(target)
-        except Exception:
+        except AnalysisException:
             return F.lit(None).cast(target)
 
     def _structural_cast(self, col, s, t):
@@ -1478,10 +1483,7 @@ class HiveEngine:
                 if kind == "char"
                 else f"substr({old}, 1, {n})"
             )
-            if not hasattr(self, "_display_casts"):
-                self._display_casts: dict[str, dict[str, str]] = {}
-            key = tbl.replace("`", "").split(".")[-1].lower()
-            self._display_casts.setdefault(key, {})[old.lower()] = expr
+            self._tables.edit(tbl).display_casts[old.lower()] = expr
             return self.spark.range(0).select()
         cols = []
         for f in full.schema.fields:
@@ -1505,14 +1507,13 @@ class HiveEngine:
             else:
                 cols.append(F.col(f.name))
         out = full.select(cols)
-        key_n = tbl.replace("`", "").split(".")[-1].lower()
-        nano_n = getattr(self, "_ts_nano", {}).get(key_n, {})
-        if old.lower() in nano_n:
+        desc = self._tables.read(tbl)
+        if old.lower() in desc.ts_nano:
             # migrate the nano-text map on a rename BEFORE refreshing —
             # the display CASE must reference the NEW column name
             if new.lower() != old.lower():
-                nano_n[new.lower()] = nano_n.pop(old.lower())
-            self._refresh_nano_display(key_n, new.lower(), new_type)
+                desc.ts_nano[new.lower()] = desc.ts_nano.pop(old.lower())
+            self._refresh_nano_display(desc, new.lower(), new_type)
         if position:
             names = [c for c in out.columns if c.lower() != new.lower()]
             if position.upper() == "FIRST":
@@ -1569,15 +1570,14 @@ class HiveEngine:
             else:
                 sel.append(F.lit(None).cast(ty).alias(nm))
         sel += [F.col(f.name) for f in full.schema.fields if f.name.lower() in pcols]
-        key_n = tbl.replace("`", "").split(".")[-1].lower()
-        nano = getattr(self, "_ts_nano", {}).get(key_n, {})
+        desc = self._tables.read(tbl)
         for i, (nm, ty) in enumerate(new_cols):
             if i < len(data_fields):
                 src_nm = data_fields[i].name.lower()
-                if src_nm in nano:
+                if src_nm in desc.ts_nano:
                     if nm.lower() != src_nm:
-                        nano[nm.lower()] = nano.pop(src_nm)
-                    self._refresh_nano_display(key_n, nm.lower(), ty)
+                        desc.ts_nano[nm.lower()] = desc.ts_nano.pop(src_nm)
+                    self._refresh_nano_display(desc, nm.lower(), ty)
         self._rebuild_table(tbl, full.select(sel), declared=new_cols)
         return self.spark.range(0).select()
 
@@ -1589,8 +1589,7 @@ class HiveEngine:
         display CASE in at the SELECT-LIST level only: function args
         keep the true timestamp column (timestamp_udf.q's
         ``select t, from_utc_timestamp(t, ...)``)."""
-        nano = getattr(self, "_ts_nano", {})
-        if not nano:
+        if not any(d.ts_nano for _, d in self._tables.items()):
             return text
         if re.search(
             r"(?i)\b(GROUP\s+BY|UNION|INSERT|JOIN|OVER\s*\()", text
@@ -1601,9 +1600,9 @@ class HiveEngine:
         )
         if len(froms) != 1:
             return text
-        key = froms[0].replace("`", "").split(".")[-1].lower()
-        casts = getattr(self, "_display_casts", {}).get(key, {})
-        cols = {c for c in nano.get(key, {}) if c in casts}
+        desc = self._tables.read(froms[0])
+        casts = desc.display_casts
+        cols = {c for c in desc.ts_nano if c in casts}
         if not cols:
             return text
         try:
@@ -1658,19 +1657,14 @@ class HiveEngine:
         # an INSERT OVERWRITE replaces the rows — stale nano pairs for
         # the target's timestamp columns must not survive it
         # (timestamp_1.q overwrites the same table six times)
-        if getattr(self, "_ts_nano", None):
-            for mo in re.finditer(
-                r"(?is)\bINSERT\s+OVERWRITE\s+TABLE\s+"
-                r"((?:`[^`]+`|[\w.])+)",
-                text,
-            ):
-                k = mo.group(1).replace("`", "").split(".")[-1].lower()
-                if k in self._ts_nano:
-                    for c in list(self._ts_nano[k]):
-                        self._ts_nano[k].pop(c, None)
-                        getattr(self, "_display_casts", {}).get(
-                            k, {}
-                        ).pop(c, None)
+        for mo in re.finditer(
+            r"(?is)\bINSERT\s+OVERWRITE\s+TABLE\s+((?:`[^`]+`|[\w.])+)",
+            text,
+        ):
+            desc = self._tables.read(mo.group(1))
+            for c in desc.ts_nano:
+                desc.display_casts.pop(c, None)
+            desc.ts_nano.clear()
         if not re.search(r"\.\d{7,9}'", text):
             return
         for m in re.finditer(
@@ -1707,7 +1701,6 @@ class HiveEngine:
         INSERT.  Record micro-text → nano-text pairs per column and
         surface them as a read-side display CASE (TimestampWritable
         keeps the full fraction; schema_evol date groups pin it)."""
-        key = tbl.replace("`", "").split(".")[-1].lower()
         pairs = {}
         for v in texts:
             if not v:
@@ -1731,22 +1724,18 @@ class HiveEngine:
             pairs[mk] = nv
         if not pairs:
             return
-        if not hasattr(self, "_ts_nano"):
-            self._ts_nano: dict[str, dict[str, dict[str, str]]] = {}
-        slot = self._ts_nano.setdefault(key, {}).setdefault(
-            col.lower(), {}
-        )
-        slot.update(pairs)
-        self._refresh_nano_display(key, col.lower(), None)
+        desc = self._tables.edit(tbl)
+        desc.ts_nano.setdefault(col.lower(), {}).update(pairs)
+        self._refresh_nano_display(desc, col.lower(), None)
 
     def _refresh_nano_display(
-        self, key: str, col: str, new_type: str | None
+        self, desc: TableDesc, col: str, new_type: str | None
     ) -> None:
         """(Re)build the display CASE for a nano-mapped column.  The
         stored value is micro-precision; the CASE swaps in the nano
         text, honoring a post-CHANGE char(n) pad / varchar(n) truncate
         shape."""
-        pairs = getattr(self, "_ts_nano", {}).get(key, {}).get(col)
+        pairs = desc.ts_nano.get(col)
         if not pairs:
             return
         cm = re.match(
@@ -1773,12 +1762,9 @@ class HiveEngine:
         else:
             for mk, nv in pairs.items():
                 whens.append(f"WHEN {probe} = '{mk}' THEN '{nv}'")
-        expr = (
+        desc.display_casts[col] = (
             "CASE " + " ".join(whens) + f" ELSE {probe} END"
         )
-        if not hasattr(self, "_display_casts"):
-            self._display_casts: dict[str, dict[str, str]] = {}
-        self._display_casts.setdefault(key, {})[col] = expr
 
     def _partition_spec_cond(self, tbl: str, spec: str):
         """Build (condition, normalized-spec-dict) from an ALTER/DDL
@@ -1808,19 +1794,6 @@ class HiveEngine:
             cond = c if cond is None else (cond & c)
         return cond, norm
 
-    def _note_partition_schema(
-        self, tbl: str, norm: dict, cols: list[tuple[str, str]]
-    ) -> None:
-        key = tbl.replace("`", "").split(".")[-1].lower()
-        if not hasattr(self, "_part_schemas"):
-            self._part_schemas: dict = {}
-        spec_key = tuple(sorted((k, v) for k, v in norm.items()))
-        slot = self._part_schemas.setdefault(key, {}).setdefault(
-            spec_key, {}
-        )
-        for nm, ty in cols:
-            slot[nm.lower()] = ty
-
     # ---------- schema-on-read raw-text layer (partitioned TEXT DDL) --
     #
     # Hive stores a FULL column schema per partition (metastore SDs) and
@@ -1834,54 +1807,6 @@ class HiveEngine:
     # (alter_partition_change_col.q: decimal(10,0)→decimal(14,4)
     # re-reads '77.341' as 77.3410, not 77.0000).
 
-    def _sor_key(self, tbl: str) -> str:
-        return tbl.replace("`", "").split(".")[-1].lower()
-
-    _PER_TABLE_META = (
-        "declared_formats",
-        "declared_field_delims",
-        "declared_coll_delims",
-        "declared_null_formats",
-        "declared_encodings",
-        "declared_regexes",
-        "declared_serdes",
-        "declared_skips",
-        "declared_tctl",
-        "declared_avro_schemas",
-        "_text_load_history",
-        "_ts_nano",
-        "_display_casts",
-        "_orc_wall_masks",
-        "_default_part_tables",
-        "_part_frozen",
-        "_part_schemas",
-        "_sor",
-        "_pq_snap",
-    )
-
-    def _migrate_table_meta(self, src: str, dst: str) -> None:
-        """ALTER TABLE ... RENAME TO: the engine's per-table metadata
-        dicts are keyed by name — move every entry whose (bare) name
-        matches the old table to the new name (DDLTask.renameTable is
-        a metastore pointer move; all SDs follow)."""
-        old_b = src.replace("`", "").split(".")[-1].lower()
-        new_b = dst.replace("`", "").split(".")[-1].lower()
-        if old_b == new_b:
-            return
-        for attr in self._PER_TABLE_META:
-            d = getattr(self, attr, None)
-            if not isinstance(d, dict):
-                continue
-            for k in [
-                k
-                for k in list(d)
-                if isinstance(k, str)
-                and k.split(".")[-1] == old_b
-            ]:
-                parts = k.split(".")
-                parts[-1] = new_b
-                d[".".join(parts)] = d.pop(k)
-
     # Parquet keeps the PHYSICAL columns through metadata-only DDL: a
     # field dropped by REPLACE COLUMNS and re-added later reads its
     # original values back (parquet_type_promotion.q's {77:88}).  Same
@@ -1889,12 +1814,10 @@ class HiveEngine:
     # is the TYPED original DataFrame and conversions are the parquet
     # reader's (by-name struct projection, bit-widened floats).
     def _pq_activate(self, tbl: str) -> bool:
-        key = self._sor_key(tbl)
-        if not hasattr(self, "_pq_snap"):
-            self._pq_snap: dict = {}
-        if key in self._pq_snap:
+        desc = self._tables.read(tbl)
+        if desc.pq_snap is not None:
             return True
-        if not self._is_parquet(tbl):
+        if not desc.is_parquet:
             return False
         if self._table_partition_cols(tbl):
             return False
@@ -1902,14 +1825,14 @@ class HiveEngine:
             full = self.spark.table(tbl)
         except Exception:
             return False
-        self._pq_snap[key] = {
+        desc.pq_snap = {
             "df": full.localCheckpoint(eager=True),
             "fields": list(full.schema.fields),
         }
         return True
 
     def _pq_rebuild(self, tbl: str, target_cols) -> None:
-        e = self._pq_snap[self._sor_key(tbl)]
+        e = self._tables.read(tbl).pq_snap
         by_name = {f.name.lower(): f for f in e["fields"]}
         sel = []
         for i, (nm, ty) in enumerate(target_cols):
@@ -1928,20 +1851,22 @@ class HiveEngine:
                 )
         self._rebuild_table(tbl, e["df"].select(sel), declared=target_cols)
 
-    def _pq_invalidate(self, text: str) -> None:
-        snap = getattr(self, "_pq_snap", None)
-        if not snap:
-            return
+    def _invalidate_snapshots(self, text: str) -> None:
+        """DML makes a table's schema-on-read snapshot stale: INSERT and
+        TRUNCATE drop both layers and fall back to materialized
+        semantics; LOAD DATA drops the parquet one (the raw-text layer
+        INCORPORATES a LOAD instead — a MoveTask is a raw-file move, see
+        _sor_load_data)."""
         for m in re.finditer(
             r"(?i)\b(?:INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?|"
-            r"LOAD\s+DATA[\s\S]*?INTO\s+TABLE\s+|TRUNCATE\s+TABLE\s+)"
+            r"(LOAD\s+DATA[\s\S]*?INTO\s+TABLE\s+)|TRUNCATE\s+TABLE\s+)"
             r"((?:`[^`]+`|[\w.])+)",
             text,
         ):
-            snap.pop(self._sor_key(m.group(1)), None)
-
-    def _sor_entry(self, tbl: str):
-        return getattr(self, "_sor", {}).get(self._sor_key(tbl))
+            desc = self._tables.read(m.group(2))
+            desc.pq_snap = None
+            if not m.group(1):
+                desc.sor = None
 
     def _sor_activate(self, tbl: str) -> bool:
         """Snapshot the raw text of a partitioned TEXT table whose data
@@ -1951,12 +1876,10 @@ class HiveEngine:
         raw fields — exactly a text file's layout, so the read-side
         mapping is file-field-i ↔ partition-SD-column-i and
         partition-column ↔ table-column BY NAME."""
-        key = self._sor_key(tbl)
-        if not hasattr(self, "_sor"):
-            self._sor: dict = {}
-        if key in self._sor:
+        desc = self._tables.read(tbl)
+        if desc.sor is not None:
             return True
-        if self._is_orc(tbl):
+        if desc.is_orc:
             return False
         pcols = [c.lower() for c in self._table_partition_cols(tbl)]
         if not pcols:
@@ -1990,7 +1913,7 @@ class HiveEngine:
             ]
         except Exception:
             return False
-        self._sor[key] = {
+        self._tables.edit(tbl).sor = {
             "snap": snap,
             "pcols": pnames,
             "ptypes": {
@@ -2006,22 +1929,6 @@ class HiveEngine:
         }
         return True
 
-    def _sor_invalidate(self, text: str) -> None:
-        """INSERT/TRUNCATE over an SOR table makes the raw snapshot
-        stale — drop the layer and fall back to materialized
-        semantics.  (LOAD DATA is a raw-file move in Hive and is
-        INCORPORATED instead — see _load_data's SOR hook.)"""
-        sor = getattr(self, "_sor", None)
-        if not sor:
-            return
-        for m in re.finditer(
-            r"(?i)\b(?:INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?|"
-            r"TRUNCATE\s+TABLE\s+)"
-            r"((?:`[^`]+`|[\w.])+)",
-            text,
-        ):
-            sor.pop(self._sor_key(m.group(1)), None)
-
     def _sor_load_data(
         self, tbl: str, path: str, overwrite: bool, pvals: dict
     ) -> bool:
@@ -2030,14 +1937,11 @@ class HiveEngine:
         partition unparsed), give a NEW partition the current TABLE
         schema, keep an existing partition's schema, then rebuild.
         Returns True when handled."""
-        e = self._sor_entry(tbl)
+        desc = self._tables.read(tbl)
+        e = desc.sor
         if e is None or not pvals:
             return False
-        key = self._sor_key(tbl)
-        tkey = tbl.replace("`", "").lower()
-        sep = getattr(self, "declared_field_delims", {}).get(
-            tkey, "\x01"
-        )
+        sep = desc.field_delim
         if os.path.isdir(path):
             return False
         ptuple = tuple(
@@ -2093,7 +1997,7 @@ class HiveEngine:
     def _sor_update_partitions(self, tbl, norm, op, cols) -> None:
         """Apply a partition-level schema op to every matching
         partition: op ∈ change | replace | add."""
-        e = self._sor_entry(tbl)
+        e = self._tables.read(tbl).sor
         for ptuple, schema in e["parts"].items():
             if not self._sor_spec_matches(e["pcols"], ptuple, norm):
                 continue
@@ -2121,11 +2025,10 @@ class HiveEngine:
         same-named column, parse it through the PARTITION type
         (LazySimpleSerDe), then convert to the TABLE type; a column
         absent from a partition's schema reads NULL."""
-        e = self._sor_entry(tbl)
+        desc = self._tables.read(tbl)
+        e = desc.sor
         snap = e["snap"]
-        nullfmt = getattr(self, "declared_null_formats", {}).get(
-            tbl.replace("`", "").lower(), "\\N"
-        ).replace("\\", "\\\\").replace("'", "\\'")
+        nullfmt = desc.null_format.replace("\\", "\\\\").replace("'", "\\'")
         exprs = []
         for nm, ty in target_cols:
             branches = []
@@ -2209,7 +2112,6 @@ class HiveEngine:
         if src is None:
             raise ValueError(f"CHANGE COLUMN: no column '{old}' in {tbl}")
         table_type = src.dataType.simpleString()
-        self._note_partition_schema(tbl, norm, [(new, new_type)])
         if self._sor_activate(tbl):
             self._sor_update_partitions(
                 tbl, norm, "change", (old, new, new_type)
@@ -2257,7 +2159,6 @@ class HiveEngine:
             nm = parts[0].strip("`")
             ty = re.sub(r"(?i)\s+COMMENT\s+'[^']*'", "", parts[1]).strip()
             new_cols.append((nm, ty))
-        self._note_partition_schema(tbl, norm, new_cols)
         if self._sor_activate(tbl):
             self._sor_update_partitions(tbl, norm, "replace", new_cols)
             self._sor_rebuild(tbl, self._sor_table_data_cols(tbl))
@@ -2308,9 +2209,7 @@ class HiveEngine:
             return
         if schema_json.get("type") != "record":
             return
-        if not hasattr(self, "declared_avro_schemas"):
-            self.declared_avro_schemas = {}
-        self.declared_avro_schemas[tkey] = schema_json
+        self._tables.edit(tkey).avro_schema = schema_json
         from apache_hive_2_1_1_src_spark.avro_io import (
             avro_default,
             avro_to_hive_type,
@@ -2412,8 +2311,6 @@ class HiveEngine:
 
     def set_var(self, name: str, value: str) -> None:
         """``SET hivevar:name=value`` equivalent (VariableSubstitution.java)."""
-        if not hasattr(self, "_vars"):
-            self._vars: dict[str, str] = {}
         self._vars[name] = value
         if name.lower() == "hive.support.quoted.identifiers":
             # regex_col.q surface (HiveConf SUPPORT_QUOTED_IDENTIFIERS;
@@ -2441,17 +2338,15 @@ class HiveEngine:
             # text table returns (bool_literal.q SELECTs the same table
             # under both settings).  The engine materialized at LOAD —
             # replay the recorded text loads under the new rule.
-            for tkey, loads in list(
-                getattr(self, "_text_load_history", {}).items()
-            ):
+            for (db, table), desc in self._tables.items():
+                tname = f"{db}.{table}"
                 try:
-                    self.spark.table(tkey)
+                    self.spark.table(tname)
                 except Exception:
                     continue
-                replay = list(loads)
-                for i, (path, spec) in enumerate(replay):
+                for i, (path, spec) in enumerate(list(desc.text_loads)):
                     self._load_data(
-                        path, tkey, overwrite=(i == 0), partition_spec=spec
+                        path, tname, overwrite=(i == 0), partition_spec=spec
                     )
         if name.lower() in (
             "mapred.max.split.size",
@@ -2475,7 +2370,7 @@ class HiveEngine:
         left verbatim, as Hive does)."""
         import re
 
-        vars_ = getattr(self, "_vars", {})
+        vars_ = self._vars
 
         def repl(m: re.Match) -> str:
             ns, name = m.group(1), m.group(2)
@@ -2615,7 +2510,7 @@ class HiveEngine:
             str(r.col_name): str(r.data_type)
             for r in self.spark.sql(f"DESCRIBE EXTENDED {table}").collect()
         }
-        fmt = getattr(self, "declared_formats", {}).get(tbl, "parquet")
+        fmt = self._tables.read(table).fmt or "parquet"
         serde, infmt, outfmt = self._FMT_CLASSES[fmt]
         lines = [f"CREATE TABLE `{tbl}`("]
         lines.append(
@@ -2891,7 +2786,7 @@ class HiveEngine:
         import tempfile
 
         merge_size = int(
-            getattr(self, "_vars", {}).get(
+            self._vars.get(
                 "hive.merge.size.per.task", str(256 * 1024 * 1024)
             )
         )
@@ -2955,7 +2850,7 @@ class HiveEngine:
         Catalyst-parsed SQL is semantically identical because macro
         bodies are pure expressions over the declared parameters.
         Nested/chained macros expand to a fixpoint (depth-capped)."""
-        macros = getattr(self, "_macros", {})
+        macros = self._macros
         if not macros:
             return text
         for _ in range(8):  # macros may call earlier macros
@@ -3201,8 +3096,6 @@ class HiveEngine:
         list's ``tpath`` references to the operator's ``path_len`` /
         starting-row columns.  Returns rewritten text, or an empty-result
         marker for MatchPath CREATE TEMPORARY FUNCTION registrations."""
-        if not hasattr(self, "_matchpath_fns"):
-            self._matchpath_fns = {"matchpath"}
         cm = re.match(
             r"^\s*CREATE\s+TEMPORARY\s+FUNCTION\s+(\w+)\s+AS\s+"
             r"'[^']*MatchPath[^']*'\s*;?\s*$",
@@ -3498,7 +3391,7 @@ class HiveEngine:
             r"cume_dist)\s*\(",
             re.IGNORECASE,
         )
-        ptf_order = getattr(self, "_ptf_order", None)
+        ptf_order = self._ptf_order
 
         def inject_order(call):
             over = call.over()
@@ -3565,7 +3458,7 @@ class HiveEngine:
         # (cbo_rp_windowing_2.q golden prints 0/1, vs the standard
         # fractions in windowing.q) — reproduce that output when the
         # conf is set, since the golden pins it
-        if getattr(self, "_vars", {}).get(
+        if self._vars.get(
             "hive.cbo.returnpath.hiveop", "false"
         ).lower() == "true":
             out = re.sub(
@@ -4017,7 +3910,7 @@ class HiveEngine:
         out of the ON clause into a derived-table pre-filter on its
         side.  Inner joins are untouched (pushing == join filter
         there)."""
-        if getattr(self, "_vars", {}).get(
+        if self._vars.get(
             "hive.outerjoin.supports.filters", "true"
         ).lower() != "false":
             return text
@@ -4573,7 +4466,7 @@ class HiveEngine:
         # peers — Spark's sort is not stable across partitions, so pin
         # the tie-break to file order (qtest sessions only: _metadata
         # resolves over direct table scans, not views)
-        if getattr(self, "_mr_limit_key_order", False):
+        if self._mr_limit_key_order:
 
             def rep_fv(m: re.Match) -> str:
                 spec = m.group(1)
@@ -4762,24 +4655,18 @@ class HiveEngine:
         return out
 
     def _is_orc(self, tbl: str) -> bool:
-        return getattr(self, "declared_formats", {}).get(
-            tbl.replace("`", "").split(".")[-1].lower()
-        ) in ("orc", "orcfile")
+        return self._tables.read(tbl).is_orc
 
     def _conversion_mode(self, tbl: str) -> bool:
         """True when a rebind CONVERTS values instead of re-reading raw
         text bytes: ORC (typed files), partitioned tables (old
         partition schemas), or VECTORIZED execution (VectorDeserialize
         converts) — schema_evol_{orc,text_vec,text_vecrow} goldens."""
-        if getattr(self, "declared_formats", {}).get(
-            tbl.replace("`", "").split(".")[-1].lower()
-        ) in ("orc", "orcfile"):
+        if self._is_orc(tbl):
             return True
         return (
             str(
-                getattr(self, "_vars", {}).get(
-                    "hive.vectorized.execution.enabled", "false"
-                )
+                self._vars.get("hive.vectorized.execution.enabled", "false")
             ).lower()
             == "true"
         )
@@ -4793,9 +4680,7 @@ class HiveEngine:
         PARTITIONED tables convert through the old partition schema —
         only a non-partitioned TEXT rebind re-reads the padded bytes
         (schema_evol_orc_* vs text table vs part goldens)."""
-        if not force and getattr(self, "declared_formats", {}).get(
-            tbl.replace("`", "").split(".")[-1].lower()
-        ) not in ("orc", "orcfile"):
+        if not force and not self._is_orc(tbl):
             return col
         try:
             declared = (field.metadata or {}).get(
@@ -4884,9 +4769,7 @@ class HiveEngine:
         pcols = self._table_partition_cols(tbl)
         if not pcols:
             return
-        if getattr(self, "declared_formats", {}).get(
-            tbl.replace("`", "").split(".")[-1].lower()
-        ) in ("orc", "orcfile"):
+        if self._is_orc(tbl):
             # ORC files carry their own schema: rows written after the
             # alter read back through the FILE schema, not the stale
             # partition metadata (schema_evol_orc_*_part goldens keep
@@ -4950,12 +4833,12 @@ class HiveEngine:
             return
         if not frozen:
             return
-        key = tbl.replace("`", "").split(".")[-1].lower()
-        if not hasattr(self, "_part_frozen"):
-            self._part_frozen: dict = {}
-        slot = self._part_frozen.setdefault(
-            key, {"pcols": [p.lower() for p in pcols], "parts": set(), "old": {}}
-        )
+        desc = self._tables.edit(tbl)
+        if desc.part_frozen is None:
+            desc.part_frozen = {
+                "pcols": [p.lower() for p in pcols], "parts": set(), "old": {}
+            }
+        slot = desc.part_frozen
         slot["parts"].update(frozen)
         for nm, old_ty, _new_ty in changes3:
             if old_ty:
@@ -4969,12 +4852,12 @@ class HiveEngine:
         the real catalog table and the intercept must not fire."""
         bare = target.replace("`", "")
         name = bare.split(".")[-1].lower()
-        if name not in getattr(self, "_temp_tables", set()):
+        if name not in self._temp_tables:
             return False
         if "." not in bare:
             return True
         db = bare.split(".")[0].lower()
-        owner = getattr(self, "_temp_view_dbs", {}).get(name)
+        owner = self._temp_view_dbs.get(name)
         # unknown owner → treat a db-qualified target as the CATALOG
         # table: firing the intercept here would silently redirect a
         # real-table INSERT into the session temp view
@@ -5182,7 +5065,7 @@ class HiveEngine:
             return text
         # lazy registration: ~7 py4j roundtrips only when a statement
         # actually uses the compat path
-        if not getattr(self, "_hive_date_udfs_ready", False):
+        if not self._hive_date_udfs_ready:
             self._register_hive_date_udfs()
             self._hive_date_udfs_ready = True
         for fn in self._HIVE_DATE_FNS:
@@ -5219,8 +5102,6 @@ class HiveEngine:
 
         def _reg(fn, rt):
             self.spark.udf.register(fname, fn, rt)
-            if not hasattr(self, "_py_test_fns"):
-                self._py_test_fns: set[str] = set()
             self._py_test_fns.add(fname)
             return True
 
@@ -5284,8 +5165,6 @@ class HiveEngine:
             return _reg(_translate3, T.StringType())
         if clazz == "GenericUDAFSumList":
             # sum over every element of every input list (HIVE-5279)
-            if not hasattr(self, "_fn_templates"):
-                self._fn_templates: dict[str, str] = {}
             self._fn_templates[fname] = (
                 "sum(aggregate(({args}), CAST(0 AS BIGINT), "
                 "(acc, e) -> acc + CAST(e AS BIGINT)))"
@@ -5295,19 +5174,12 @@ class HiveEngine:
             # MAP_INPUT_RECORDS counter: the running input-record count
             # at each row (udf_context_aware.q golden is 1..N in scan
             # order)
-            if not hasattr(self, "_fn_templates"):
-                self._fn_templates: dict[str, str] = {}
             self._fn_templates[fname] = (
                 "row_number() over (order by monotonically_increasing_id())"
             )
             return True
         if clazz == "GenericUDTFCount2":
             # contrib GenericUDTFCount2: forwards count() TWICE at close
-            if not hasattr(self, "_fn_templates"):
-                self._fn_templates: dict[str, str] = {}
-            self._udtf_count2_fns = getattr(
-                self, "_udtf_count2_fns", set()
-            )
             self._udtf_count2_fns.add(fname)
             return True
         return False
@@ -5323,9 +5195,9 @@ class HiveEngine:
         Default engine SQL keeps Spark's native mergeable GK sketch,
         the plan you want against a hot group at 100 TB."""
         if not (
-            getattr(self, "hive_exact_percentile", False)
+            self.hive_exact_percentile
             or str(
-                getattr(self, "_vars", {}).get("hive.percentile.exact", "")
+                self._vars.get("hive.percentile.exact", "")
             ).lower()
             == "true"
         ):
@@ -5466,7 +5338,7 @@ class HiveEngine:
             text,
         ):
             return text
-        if not getattr(self, "_misc_udfs_ready", False):
+        if not self._misc_udfs_ready:
             from apache_hive_2_1_1_src_spark.functions import (
                 hive_misc_udfs,
             )
@@ -5672,9 +5544,7 @@ class HiveEngine:
                             f.name.lower(): f.dataType.simpleString()
                             for f in self.spark.table(ts2[0]).schema.fields
                         }
-                        out2["__table__"] = (
-                            ts2[0].replace("`", "").split(".")[-1].lower()
-                        )
+                        out2["__table__"] = ts2[0]
                     except Exception:
                         out2 = {}
                 types_cache.append(out2)
@@ -5689,11 +5559,8 @@ class HiveEngine:
             col2 = ar.split(".")[-1].strip("`").lower()
             if _from_types().get(col2) != "timestamp":
                 return {}
-            tkey2 = _from_types().get("__table__", "")
-            return (
-                getattr(self, "_ts_nano", {}).get(tkey2, {}).get(col2)
-                or {}
-            )
+            desc2 = self._tables.read(_from_types()["__table__"])
+            return desc2.ts_nano.get(col2) or {}
 
         for utc in ("from_utc_timestamp", "to_utc_timestamp"):
 
@@ -5767,14 +5634,9 @@ class HiveEngine:
                 # space separated
                 return f"lower(trim(regexp_replace(hex({ar}), '(..)', '$1 ')))"
             if ty == "timestamp" and for_printf:
-                tkey2 = _from_types().get("__table__", "")
+                desc2 = self._tables.read(_from_types()["__table__"])
                 col2 = ar.split(".")[-1].strip("`").lower()
-                disp = (
-                    getattr(self, "_display_casts", {})
-                    .get(tkey2, {})
-                    .get(col2)
-                )
-                return disp or f"CAST({ar} AS STRING)"
+                return desc2.display_casts.get(col2) or f"CAST({ar} AS STRING)"
             if ty and ty.startswith("decimal") and not for_printf:
                 cs = f"CAST({ar} AS STRING)"
                 return (
@@ -5913,7 +5775,7 @@ class HiveEngine:
         hash aggregate has no such order — add ORDER BY on the group
         keys, which Catalyst executes as TakeOrderedAndProject (a TopK,
         not a global sort: cheap at scale)."""
-        if not getattr(self, "_mr_limit_key_order", False):
+        if not self._mr_limit_key_order:
             # opt-in (qtest sessions): matching MR's row CHOICE is a
             # golden-compare concern, not a semantic one
             return text
@@ -6415,9 +6277,7 @@ class HiveEngine:
         # included (skiphf_aggr.q: VALUES (1),(2),(3),(4) reads back
         # (2),(3),(4)).  The engine's parquet holds real rows, so drop
         # them at write
-        sk = getattr(self, "declared_skips", {}).get(
-            tbl.replace("`", "").lower()
-        )
+        sk = self._tables.read(tbl).skips
         if sk:
             h_, f_ = sk
             rows = rows[h_ : len(rows) - f_ if f_ else None]
@@ -6509,9 +6369,7 @@ class HiveEngine:
         # partition that predates a non-CASCADE retype reads its values
         # through the OLD partition type — unparseable ones are NULL
         # (see _freeze_partitions_for_retype)
-        frozen_info = getattr(self, "_part_frozen", {}).get(
-            tbl.replace("`", "").split(".")[-1].lower()
-        )
+        frozen_info = self._tables.read(tbl).part_frozen
         frozen_cond = None
         if frozen_info:
             spec_map = {}
@@ -6584,7 +6442,7 @@ class HiveEngine:
                             stored,
                             old_ty,
                             trim_integrals=str(
-                                getattr(self, "_vars", {}).get(
+                                self._vars.get(
                                     "hive.vectorized.execution.enabled",
                                     "false",
                                 )
@@ -6716,6 +6574,7 @@ class HiveEngine:
             return self.spark.range(0).select()
         data_fields = [f for f in full.schema.fields if f.name not in pcols]
         schema = T.StructType(data_fields)
+        desc = self._tables.read(tbl)
         # LOAD DATA is a file MOVE in Hive — the file arrives in whatever
         # format it already is.  Detect binary columnar formats by magic
         # and use the native reader; otherwise parse as Hive text.
@@ -6739,12 +6598,7 @@ class HiveEngine:
                 for f in schema.fields
                 if f.dataType.simpleString() == "timestamp"
             ]
-            if (
-                getattr(self, "declared_formats", {}).get(
-                    tbl.replace("`", "").lower()
-                )
-                in ("orc", "orcfile")
-            ):
+            if desc.is_orc:
                 # Hive's LOAD DATA is a file MOVE (MoveTask) — an ORC
                 # container loaded into an ORC table lands unparsed, so
                 # stripe layout (and split/file counts downstream)
@@ -6754,11 +6608,7 @@ class HiveEngine:
                     # Hive's reader interprets them in the JVM tz
                     # (orc_merge12.q's sum(hash(*)) folds the PACIFIC
                     # wall epoch) — register a read-side shift
-                    if not hasattr(self, "_orc_wall_masks"):
-                        self._orc_wall_masks: dict = {}
-                    self._orc_wall_masks[
-                        tbl.replace("`", "").lower()
-                    ] = {
+                    self._tables.edit(tbl).orc_wall_masks = {
                         c: f"to_utc_timestamp(`{c}`, '{sess_tz}')"
                         for c in ts_cols
                     }
@@ -6783,9 +6633,7 @@ class HiveEngine:
             # containing 'avro.codec deflate'), the worst failure mode.
             from apache_hive_2_1_1_src_spark.avro_io import read_avro_resolved
 
-            reader = getattr(self, "declared_avro_schemas", {}).get(
-                tbl.replace("`", "").lower()
-            )
+            reader = desc.avro_schema
             df = read_avro_resolved(self.spark, path, schema, reader)
         elif magic[:3] == b"RCF" or (
             magic[:3] == b"SEQ" and self._seq_is_rcfile(probe)
@@ -6801,14 +6649,10 @@ class HiveEngine:
             from apache_hive_2_1_1_src_spark.io import read_hive_sequencefile
 
             df = read_hive_sequencefile(self.spark, path, schema)
-        elif getattr(self, "declared_tctl", {}).get(
-            tbl.replace("`", "").lower()
-        ):
+        elif desc.tctl:
             # TCTLSeparatedProtocol tokenizer (quote-aware field split,
             # quote chars stripped — input19.q's apache log)
-            fd, quoteset, nullfmt = self.declared_tctl[
-                tbl.replace("`", "").lower()
-            ]
+            fd, quoteset, nullfmt = desc.tctl
             lines = self.spark.read.text(path)
             import pandas as pd
             from pyspark.sql import types as T2
@@ -6847,16 +6691,14 @@ class HiveEngine:
                     for i, f in enumerate(data_fields)
                 ]
             )
-        elif getattr(self, "declared_regexes", {}).get(
-            tbl.replace("`", "").lower()
-        ):
+        elif desc.regex:
             # RegexSerDe.java: each line FULL-matched against
             # input.regex; group i+1 feeds column i, a NON-PARTICIPATING
             # optional group reads NULL (serde_regex.q row 1's missing
             # referer/agent), a non-matching line reads all-NULL.
             # Arrow-batched kernel — regexp_extract cannot distinguish a
             # non-participating group from an empty match.
-            pat = self.declared_regexes[tbl.replace("`", "").lower()]
+            pat = desc.regex
             lines = self.spark.read.text(path)
             import pandas as pd
             from pyspark.sql import types as T2
@@ -6894,34 +6736,22 @@ class HiveEngine:
                 ]
             )
         else:
-            tkey = tbl.replace("`", "").lower()
-            sep = getattr(self, "declared_field_delims", {}).get(tkey, "\x01")
-            coll_sep, key_sep = getattr(self, "declared_coll_delims", {}).get(
-                tkey, ("\x02", "\x03")
-            )
+            coll_sep, key_sep = desc.coll_delims
             df = read_hive_text(
-                self.spark, path, schema, sep=sep,
+                self.spark, path, schema, sep=desc.field_delim,
                 coll_sep=coll_sep, key_sep=key_sep,
-                null_str=getattr(self, "declared_null_formats", {}).get(
-                    tkey, "\\N"
-                ),
-                extended_bool=getattr(self, "_vars", {}).get(
+                null_str=desc.null_format,
+                extended_bool=self._vars.get(
                     "hive.lazysimple.extended_boolean_literal", "false"
                 ).lower() == "true",
-                encoding=getattr(self, "declared_encodings", {}).get(
-                    tkey, "UTF-8"
-                ),
+                encoding=desc.encoding,
             )
             # schema-on-read bookkeeping: a later flip of
             # hive.lazysimple.extended_boolean_literal re-INTERPRETS the
             # same bytes (LazySimpleSerDe parses per read; this engine
             # materializes at LOAD, so the SET handler replays the loads)
             if any(f.dataType.simpleString() == "boolean" for f in schema.fields):
-                if not hasattr(self, "_text_load_history"):
-                    self._text_load_history: dict[str, list] = {}
-                hist = self._text_load_history.setdefault(
-                    tbl.replace("`", "").lower(), []
-                )
+                hist = self._tables.edit(tbl).text_loads
                 if overwrite:
                     hist.clear()
                 hist.append((path, partition_spec))
@@ -7275,13 +7105,11 @@ class HiveEngine:
                 r"[^0-9A-Za-z_]", lambda m: f"_x{ord(m.group(0)):02x}_", tok
             )
 
-        if not hasattr(self, "_hostile_ids"):
-            self._hostile_ids: dict[str, str] = {}
         # register NEW hostile ids only from CREATE TABLE statements (a
         # backticked token elsewhere may be a SHOW ... LIKE pattern or a
         # quoted-regex column, which must stay untouched); replacement of
         # already-registered ids applies everywhere
-        if self._HIVE_CREATE.match(text) and getattr(self, "_vars", {}).get(
+        if self._HIVE_CREATE.match(text) and self._vars.get(
             "hive.support.quoted.identifiers", "column"
         ).lower() != "none":
             for mt in re.finditer(r"`((?:[^`]|``)+)`(?!`)", text):
@@ -7489,7 +7317,7 @@ class HiveEngine:
 
     def _stats_autogather_target(self, tbl: str) -> None:
         """StatsTask chain for non-regex DML entry points (LOAD DATA)."""
-        if getattr(self, "_vars", {}).get(
+        if self._vars.get(
             "hive.stats.autogather", "false"
         ).lower() != "true":
             return
@@ -7501,11 +7329,7 @@ class HiveEngine:
     # ------------------------------------------- SQL-text authorization
     @property
     def authz(self):
-        """Lazy session Authorizer (SQLStdHiveAccessController state)."""
-        if not hasattr(self, "_authz"):
-            from apache_hive_2_1_1_src_spark.operators.authz import Authorizer
-
-            self._authz = Authorizer()
+        """The session Authorizer (SQLStdHiveAccessController state)."""
         return self._authz
 
     @property
@@ -7514,11 +7338,11 @@ class HiveEngine:
         getUserName via SessionStateConfigUserAuthenticator — SET
         user.name=... switches it, as the authorization .q corpus does;
         SET hive.session.user=... is the engine's own alias)."""
-        v = getattr(self, "_vars", {})
+        v = self._vars
         return (
             v.get("user.name")
             or v.get("hive.session.user")
-            or getattr(self, "_default_user", "anonymous")
+            or self._default_user
         )
 
     def _authz_statement(self, text: str):
@@ -7750,7 +7574,7 @@ class HiveEngine:
         (SetProcessor.getVariable; reset_conf.q.out's
         ``hive.skewjoin.key=100000`` lines)."""
         k = key.lower()
-        vars_ = getattr(self, "_vars", {})
+        vars_ = self._vars
         if k in vars_:
             return f"{key}={vars_[k]}"
         if k in self._ENGINE_CONFS:
@@ -7796,10 +7620,10 @@ class HiveEngine:
             df = self.spark.sql(select)
         except Exception:
             return text  # let the original statement surface its own error
-        prefix = getattr(self, "_vars", {}).get(
+        prefix = self._vars.get(
             "hive.autogen.columnalias.prefix.label", "_c"
         )
-        include_fn = getattr(self, "_vars", {}).get(
+        include_fn = self._vars.get(
             "hive.autogen.columnalias.prefix.includefuncname", "false"
         ).lower() == "true"
         new_names, changed = [], False
@@ -7941,7 +7765,7 @@ class HiveEngine:
         unparseable WITH clauses fall through untouched."""
         try:
             thr = int(
-                getattr(self, "_vars", {}).get(
+                self._vars.get(
                     "hive.optimize.cte.materialize.threshold", "-1"
                 )
             )
@@ -8039,15 +7863,13 @@ class HiveEngine:
         reference of the table in sql()."""
         from apache_hive_2_1_1_src_spark.operators.masking import MaskingPolicy
 
-        if not hasattr(self, "_masking"):
-            self._masking: dict = {}
         self._masking[table.lower()] = MaskingPolicy(
             row_filter=row_filter,
             column_masks={k.lower(): v for k, v in (column_masks or {}).items()},
         )
 
     def drop_masking_policy(self, table: str) -> None:
-        getattr(self, "_masking", {}).pop(table.lower(), None)
+        self._masking.pop(table.lower(), None)
 
     def _apply_masking(self, text: str) -> str:
         """TableMask.java:42 — rewrite read references of policied
@@ -8060,54 +7882,37 @@ class HiveEngine:
         verbatim."""
         from apache_hive_2_1_1_src_spark.operators import masking as _mk
 
-        policies = dict(getattr(self, "_masking", {}))
-        if "ForTest" in getattr(self, "_vars", {}).get(
+        policies = dict(self._masking)
+        if "ForTest" in self._vars.get(
             "hive.security.authorization.manager", ""
         ):
             for t, p in _mk.reference_test_policies().items():
                 policies.setdefault(t, p)
-        # char/varchar display policies from ALTER ... CHANGE COLUMN:
-        # schema-on-read length enforcement (raw bytes preserved — a
-        # later widening shows the full value again, alter_varchar1.q)
-        for t, masks in getattr(self, "_display_casts", {}).items():
-            if t not in policies and masks:
-                policies[t] = _mk.MaskingPolicy(
-                    row_filter=None, column_masks=dict(masks)
-                )
-        # Hive's default-partition semantics: a NULL/empty dynamic
-        # partition value is STORED as the literal string
-        # __HIVE_DEFAULT_PARTITION__ (hive.exec.default.partition.name;
-        # FileSinkOperator getDynPartDirectory) and every read returns
-        # that string for string-typed pcols.  Spark hardcodes the name
-        # back to NULL on read, so tables KNOWN to hold a default
-        # partition (tracked by _track_default_partition) read through
-        # a coalesce mask.  Only those tables take the rewrite —
-        # everything else keeps native partition pruning.
-        for t, masks in getattr(self, "_orc_wall_masks", {}).items():
+        # the engine's read shims (TableDesc.read_masks) join as policies
+        # keyed, like the masking rewrite, by bare table name; a policy
+        # already on the table keeps its own mask per column.  They
+        # carry schema-on-read semantics the materialized storage lost:
+        # char/varchar lengths from ALTER ... CHANGE COLUMN (raw bytes
+        # preserved — a later widening shows the full value again,
+        # alter_varchar1.q), and Hive's default-partition text (a
+        # NULL/empty dynamic partition value is STORED as the literal
+        # __HIVE_DEFAULT_PARTITION__ — FileSinkOperator
+        # getDynPartDirectory — which Spark reads back as NULL; only
+        # tables known to hold one take the rewrite, everything else
+        # keeps native partition pruning).
+        user = set(policies)
+        for (_, t), desc in self._tables.items():
+            masks = desc.read_masks(user_policy=t in user)
             if not masks:
                 continue
             if t in policies:
-                merged = dict(masks)
-                merged.update(policies[t].column_masks)
+                masks.update(policies[t].column_masks)
                 policies[t] = _mk.MaskingPolicy(
-                    row_filter=policies[t].row_filter, column_masks=merged
+                    row_filter=policies[t].row_filter, column_masks=masks
                 )
             else:
                 policies[t] = _mk.MaskingPolicy(
-                    row_filter=None, column_masks=dict(masks)
-                )
-        for t, masks in getattr(self, "_default_part_tables", {}).items():
-            if not masks:
-                continue
-            if t in policies:
-                merged = dict(masks)
-                merged.update(policies[t].column_masks)
-                policies[t] = _mk.MaskingPolicy(
-                    row_filter=policies[t].row_filter, column_masks=merged
-                )
-            else:
-                policies[t] = _mk.MaskingPolicy(
-                    row_filter=None, column_masks=dict(masks)
+                    row_filter=None, column_masks=masks
                 )
         if not policies:
             return text
@@ -8126,20 +7931,29 @@ class HiveEngine:
     def sql(self, text: str):
         """Run SQL — the CliDriver.processCmd equivalent (CliDriver.java:111),
         after variable substitution, macro handling, and Hive-hint
-        translation."""
+        translation.  A CREATE or DROP TABLE changes the table store only
+        when the statement succeeded (a failed DDLTask leaves the
+        metastore untouched); nested calls stage their own change."""
+        outer, self._tables.pending = self._tables.pending, None
+        try:
+            res = self._run_statement(text)
+            if self._tables.pending is not None:
+                self._tables.settle()
+            return res
+        finally:
+            self._tables.pending = outer
+
+    def _run_statement(self, text: str):
         text = self.substitute(text)
         text = self._sanitize_hostile_identifiers(text)
         text = self._concat_adjacent_string_literals(text)
         # DML staleness check must precede EVERY dispatch path (LOAD
         # DATA returns long before the insert hooks)
-        self._sor_invalidate(text)
-        self._pq_invalidate(text)
+        self._invalidate_snapshots(text)
         # temp tables shadowing a catalog table: rewrite every
         # reference to the mangled shadow until DROPPED
         # (temp_table_precedence.q)
-        for (db_s, base_s), mg_s in list(
-            getattr(self, "_temp_shadows", {}).items()
-        ):
+        for (db_s, base_s), mg_s in list(self._temp_shadows.items()):
             dm_s = re.match(
                 rf"(?i)^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?"
                 rf"(?:{db_s}\.)?{base_s}\s*;?\s*$",
@@ -8152,6 +7966,7 @@ class HiveEngine:
                 pass
             if dm_s and (f"{db_s}." in text or cur_db_s == db_s):
                 self._temp_shadows.pop((db_s, base_s), None)
+                self._tables.pending = (mg_s, None)
                 return self.spark.sql(f"DROP TABLE IF EXISTS {mg_s}")
             rn_s = re.match(
                 rf"(?i)^\s*ALTER\s+TABLE\s+(?:{db_s}\.)?{base_s}\s+"
@@ -8180,7 +7995,7 @@ class HiveEngine:
                 )
         # db-qualified reads of session TEMP objects resolve by bare
         # name (see _temp_view_dbs registration)
-        for _nm, _db in getattr(self, "_temp_view_dbs", {}).items():
+        for _nm, _db in self._temp_view_dbs.items():
             if f"{_db}.{_nm}" in text.lower():
                 text = re.sub(
                     rf"(?i)\b{re.escape(_db)}\.{re.escape(_nm)}\b",
@@ -8326,21 +8141,19 @@ class HiveEngine:
                         writer = writer.partitionBy(*pcols)
                     writer.saveAsTable(dst)
                     self.spark.sql(f"DROP TABLE {src}")
-                self._migrate_table_meta(src, dst)
+                self._tables.rename(src, dst)
                 return self.spark.range(0).select()
-            # same-db rename: run the native ALTER, then (a) migrate the
-            # engine's per-table metadata (serde format/delimiters, nano
-            # display, schema-on-read snapshots) to the NEW name and
-            # (b) repoint partitions whose EXPLICIT locations (hostile
-            # partition-value writes ADD PARTITION ... LOCATION) still
-            # reference the old table directory — Hive's renameTable
+            # same-db rename: run the native ALTER, then (a) move the
+            # table's descriptor to the NEW name and (b) repoint
+            # partitions whose EXPLICIT locations (hostile partition-value
+            # writes ADD PARTITION ... LOCATION) still reference the old
+            # table directory — Hive's renameTable
             # moves every SD with the table (alter3.q's 'test_part:')
             if kind.upper() == "TABLE":
-                old_loc_rn = self._table_location(src)
                 res_rn2 = self.spark.sql(
                     f"ALTER TABLE {src} RENAME TO {dst}"
                 )
-                self._migrate_table_meta(src, dst)
+                self._tables.rename(src, dst)
                 new_loc_rn = self._table_location(dst)
                 try:
                     prows = [
@@ -8402,7 +8215,7 @@ class HiveEngine:
                 except Exception:
                     pass
                 return res_rn2
-            self._migrate_table_meta(src, dst)
+            self._tables.rename(src, dst)
         m = re.match(
             r"^\s*ALTER\s+TABLE\s+((?:`[^`]+`|[\w.])+)\s+DROP\s+"
             r"(IF\s+EXISTS\s+)?((?:PARTITION\s*\([^)]*\)\s*,?\s*)+)"
@@ -8429,7 +8242,7 @@ class HiveEngine:
             # present (show_create_table_temp_table.q); the engine's
             # temp tables are real, so drop them first
             db = m.group(1).lower()
-            temps = getattr(self, "_session_temp_tables", set())
+            temps = self._session_temp_tables
             for tt in [t for t in temps if t.startswith(db + ".")]:
                 self.spark.sql(f"DROP TABLE IF EXISTS {tt}")
                 temps.discard(tt)
@@ -8444,7 +8257,7 @@ class HiveEngine:
             if key not in self._ENGINE_CONFS:
                 raise ValueError(f"invalid configuration name {m.group(1)}")
             default, typ, desc = self._ENGINE_CONFS[key]
-            current = getattr(self, "_vars", {}).get(key, default)
+            current = self._vars.get(key, default)
             return self.spark.createDataFrame(
                 [(default, typ, desc, current)],
                 "default string, type string, description string, current string",
@@ -8458,7 +8271,7 @@ class HiveEngine:
             # drop just those session overrides
             for key in re.split(r"[\s,]+", m.group(1)):
                 if key:
-                    getattr(self, "_vars", {}).pop(key.lower(), None)
+                    self._vars.pop(key.lower(), None)
             return self.spark.range(0).select()
         if re.match(r"^\s*RESET\s*;?\s*$", text, re.IGNORECASE):
             # SetProcessor.java executeReset: drop every session override
@@ -8468,14 +8281,14 @@ class HiveEngine:
             # properties, which Hive's RESET does not touch
             self._vars = {
                 k: v
-                for k, v in getattr(self, "_vars", {}).items()
+                for k, v in self._vars.items()
                 if k.startswith("system:")
             }
             self.spark.conf.set("spark.sql.parser.quotedRegexColumnNames", "false")
             self.spark.conf.set(
                 "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)
             )
-            od = getattr(self, "_ordinal_default", "true")
+            od = self._ordinal_default
             self.spark.conf.set("spark.sql.groupByOrdinal", od)
             self.spark.conf.set("spark.sql.orderByOrdinal", od)
             return self.spark.range(0).select()
@@ -8485,13 +8298,11 @@ class HiveEngine:
             params = [
                 p.strip().split()[0] for p in params_raw.split(",") if p.strip()
             ]
-            if not hasattr(self, "_macros"):
-                self._macros = {}
             self._macros[name] = (params, body.rstrip(";").strip())
             return self.spark.range(0).select()  # DDL: empty result
         m = self._MACRO_DROP.match(text)
         if m:
-            getattr(self, "_macros", {}).pop(m.group(1), None)
+            self._macros.pop(m.group(1), None)
             return self.spark.range(0).select()
         m = self._SHOW_CREATE.match(text)
         if m:
@@ -8506,8 +8317,8 @@ class HiveEngine:
             )
         # ALTER TABLE ... SET SERDE / SET FILEFORMAT: Hive re-binds the
         # serde for FUTURE reads of existing files; this engine's storage
-        # is uniformly parquet/orc behind the declared format, so the
-        # statement is remembered as declared metadata (SHOW CREATE
+        # is uniformly parquet/orc behind the declared format, so SET
+        # FILEFORMAT only changes the declared format (SHOW CREATE
         # surfaces it) without rewriting files — same visible data
         m = re.match(
             r"^\s*ALTER\s+TABLE\s+((?:`[^`]+`|[\w.])+)"
@@ -8518,15 +8329,9 @@ class HiveEngine:
             re.IGNORECASE,
         )
         if m:
-            if not hasattr(self, "declared_serdes"):
-                self.declared_serdes: dict[str, str] = {}
             key = m.group(1).replace("`", "").lower()
-            if m.group(2):
-                self.declared_serdes[key] = m.group(2)
             if m.group(3):
-                if not hasattr(self, "declared_formats"):
-                    self.declared_formats = {}
-                self.declared_formats[key] = m.group(3).lower()
+                self._tables.edit(key).fmt = m.group(3).lower()
             # an avro.schema.literal in the NEW serde properties is live
             # schema evolution (AvroSerDe re-resolves every read):
             # reader-only fields appear with their schema DEFAULT on
@@ -8550,9 +8355,7 @@ class HiveEngine:
                         c.lower()
                         for c in self._table_partition_cols(key)
                     }
-                    if not hasattr(self, "_display_casts"):
-                        self._display_casts: dict = {}
-                    masks_cr = self._display_casts.setdefault(key, {})
+                    masks_cr = self._tables.edit(key).display_casts
                     for f in full_cr.schema.fields:
                         if (
                             f.dataType.simpleString() == "string"
@@ -8577,9 +8380,7 @@ class HiveEngine:
                 re.IGNORECASE,
             )
             if nfm:
-                if not hasattr(self, "declared_null_formats"):
-                    self.declared_null_formats = {}
-                old = self.declared_null_formats.get(key, "\\N")
+                old = self._tables.read(key).null_format
                 new = nfm.group(1)
                 if old != new and old != "\\N":
                     try:
@@ -8600,7 +8401,7 @@ class HiveEngine:
                         self._rebuild_table(key, full.select(sel))
                     except Exception:
                         pass
-                self.declared_null_formats[key] = new
+                self._tables.edit(key).null_format = new
             return self.spark.range(0).select()
         # ALTER TABLE ... ADD PARTITION (spec) LOCATION '<dir>' where the
         # table's declared format is a container format Spark cannot scan
@@ -8614,16 +8415,12 @@ class HiveEngine:
             text,
             re.IGNORECASE,
         )
+        desc_ap = self._tables.read(m.group(1)) if m else None
         if m and (
-            getattr(self, "declared_formats", {}).get(
-                m.group(1).replace("`", "").lower()
-            )
-            in ("rcfile", "sequencefile", "avro", "textfile")
-            or m.group(1).replace("`", "").lower()
-            in getattr(self, "declared_skips", {})
+            desc_ap.fmt in ("rcfile", "sequencefile", "avro", "textfile")
+            or desc_ap.skips is not None
         ):
             tbl, spec, loc = m.groups()
-            tkey = tbl.replace("`", "").lower()
             self.spark.sql(
                 f"ALTER TABLE {tbl} ADD IF NOT EXISTS PARTITION ({spec})"
             )
@@ -8631,7 +8428,7 @@ class HiveEngine:
             has_files = os.path.isdir(loc) and any(
                 not e.startswith((".", "_")) for e in os.listdir(loc)
             )
-            skips = getattr(self, "declared_skips", {}).get(tkey)
+            skips = desc_ap.skips
             if has_files and skips:
                 from apache_hive_2_1_1_src_spark.io import (
                     read_hive_text_skips,
@@ -8655,9 +8452,7 @@ class HiveEngine:
                     T.StructType(dfields),
                     skip_header=skips[0],
                     skip_footer=skips[1],
-                    sep=getattr(self, "declared_field_delims", {}).get(
-                        tkey, "\x01"
-                    ),
+                    sep=desc_ap.field_delim,
                 )
                 for kv in split_top_level(spec):
                     k, v = kv.split("=", 1)
@@ -8782,8 +8577,6 @@ class HiveEngine:
         )
         if vm:
             view, action, spec = vm.groups()
-            if not hasattr(self, "_view_partitions"):
-                self._view_partitions: dict[str, set] = {}
             parts = self._view_partitions.setdefault(
                 view.replace("`", "").lower(), set()
             )
@@ -8807,7 +8600,7 @@ class HiveEngine:
         )
         if sm:
             skey = sm.group(1).replace("`", "").lower()
-            is_view = skey in getattr(self, "_view_partitions", {})
+            is_view = skey in self._view_partitions
             if not is_view:
                 try:
                     from pyspark.sql.catalog import Table as _CatTable  # noqa
@@ -8818,7 +8611,7 @@ class HiveEngine:
                     is_view = False
             if is_view:
                 vals = sorted(
-                    getattr(self, "_view_partitions", {}).get(skey, set())
+                    self._view_partitions.get(skey, set())
                 )
                 if sm.group(2):  # PARTITION(spec) filter form
                     want = {
@@ -8873,7 +8666,7 @@ class HiveEngine:
         )
         if m and (m.group(3) or "").upper() != "CASCADE":
             tbl_ac, cols_ac = m.group(1), m.group(2)
-            if self._sor_entry(tbl_ac):
+            if self._tables.read(tbl_ac).sor:
                 # schema-on-read layer active: the new column joins the
                 # TABLE schema only — partitions keep their SDs and
                 # read it as NULL unless a partition-level ADD follows
@@ -8901,9 +8694,7 @@ class HiveEngine:
             # the ADD carry the new column even in old partitions
             # (schema_evol_orc_*_part); only positional TEXT reads
             # lose it to the old partition field count
-            if getattr(self, "declared_formats", {}).get(
-                tbl_ac.replace("`", "").split(".")[-1].lower()
-            ) in ("orc", "orcfile"):
+            if self._is_orc(tbl_ac):
                 pcols_ac = []
             if pcols_ac:
                 try:
@@ -8929,9 +8720,6 @@ class HiveEngine:
                     )
                 )
                 if frozen:
-                    key_ac = (
-                        tbl_ac.replace("`", "").split(".")[-1].lower()
-                    )
                     conds = []
                     for tup in frozen:
                         parts_c = []
@@ -8946,8 +8734,7 @@ class HiveEngine:
                             )
                         conds.append("(" + " AND ".join(parts_c) + ")")
                     cond_sql = " OR ".join(conds)
-                    if not hasattr(self, "_display_casts"):
-                        self._display_casts = {}
+                    casts_ac = self._tables.edit(tbl_ac).display_casts
                     for cspec in split_top_level(
                         cols_ac, angle=True
                     ):
@@ -8955,9 +8742,7 @@ class HiveEngine:
                         if len(cp) != 2:
                             continue
                         cn = cp[0].strip("`")
-                        self._display_casts.setdefault(key_ac, {})[
-                            cn.lower()
-                        ] = (
+                        casts_ac[cn.lower()] = (
                             f"CASE WHEN {cond_sql} THEN NULL "
                             f"ELSE `{cn}` END"
                         )
@@ -8972,7 +8757,7 @@ class HiveEngine:
             text,
             re.IGNORECASE,
         )
-        if m and self._sor_entry(m.group(1)):
+        if m and self._tables.read(m.group(1)).sor:
             new_cols_sc = []
             for cspec in split_top_level(m.group(2), angle=True):
                 cp = cspec.strip().split(None, 1)
@@ -9072,7 +8857,6 @@ class HiveEngine:
                             ).strip(),
                         )
                     )
-            self._note_partition_schema(tbl_pa, norm_pa, cols_pa)
             if self._sor_activate(tbl_pa):
                 self._sor_update_partitions(tbl_pa, norm_pa, "add", cols_pa)
                 self._sor_rebuild(
@@ -9169,7 +8953,7 @@ class HiveEngine:
                                 ).strip(),
                             )
                         )
-                if self._sor_entry(m.group(1)) is not None:
+                if self._tables.read(m.group(1)).sor is not None:
                     if cascade_r:
                         self._sor_update_partitions(
                             m.group(1), {}, "replace", new_cols_r
@@ -9227,8 +9011,6 @@ class HiveEngine:
             re.IGNORECASE,
         )
         if m:
-            if not hasattr(self, "_db_owners"):
-                self._db_owners: dict[str, tuple[str, str]] = {}
             self._db_owners[m.group(1).lower()] = (
                 m.group(2).upper(),
                 m.group(3),
@@ -9529,11 +9311,11 @@ class HiveEngine:
             except Exception:
                 _cdb2 = "default"
             if (
-                fq in getattr(self, "_fn_aliases", {})
-                or fqq in getattr(self, "_fn_aliases", {})
-                or f"{_cdb2}.{fq}" in getattr(self, "_fn_aliases", {})
-                or fq in getattr(self, "_fn_templates", {})
-                or fq in getattr(self, "_py_test_fns", set())
+                fq in self._fn_aliases
+                or fqq in self._fn_aliases
+                or f"{_cdb2}.{fq}" in self._fn_aliases
+                or fq in self._fn_templates
+                or fq in self._py_test_fns
             ):
                 # SHOW FUNCTIONS prints just the function name line
                 # (DDLTask.showFunctions); the descriptive sentence is
@@ -9554,8 +9336,6 @@ class HiveEngine:
             re.IGNORECASE,
         )
         if fm_ and fm_.group(2).rsplit(".", 1)[-1] in _BUILTIN_FN_CLASSES:
-            if not hasattr(self, "_fn_aliases"):
-                self._fn_aliases: dict[str, str] = {}
             # function names are DB-SCOPED (FunctionRegistry /
             # create_func1.q): an unqualified create binds in the
             # CURRENT db; resolution prefers current-db functions
@@ -9593,13 +9373,13 @@ class HiveEngine:
             except Exception:
                 _cdb = "default"
             for cand in (dkeyq, f"{_cdb}.{dkey}", dkey):
-                if cand in getattr(self, "_fn_aliases", {}):
+                if cand in self._fn_aliases:
                     self._fn_aliases.pop(cand, None)
                     return self.spark.range(0).select()
-            if dkey in getattr(self, "_fn_templates", {}):
+            if dkey in self._fn_templates:
                 self._fn_templates.pop(dkey, None)
                 return self.spark.range(0).select()
-            if dkey in getattr(self, "_py_test_fns", set()):
+            if dkey in self._py_test_fns:
                 # Spark has no unregister; forget bookkeeping only (a
                 # later CREATE re-registers over it, drop_udf.q)
                 self._py_test_fns.discard(dkey)
@@ -9612,13 +9392,13 @@ class HiveEngine:
                 return self.spark.sql(text)
             except Exception:
                 return self.spark.range(0).select()
-        for nm_, tpl_ in getattr(self, "_fn_templates", {}).items():
+        for nm_, tpl_ in self._fn_templates.items():
             text = rewrite_calls(
                 text,
                 rf"\b{nm_}\s*\(",
                 lambda c, tpl_=tpl_: tpl_.replace("{args}", c.inner.strip()),
             )
-        for nm2_ in getattr(self, "_udtf_count2_fns", set()):
+        for nm2_ in self._udtf_count2_fns:
             m2 = re.match(
                 rf"^\s*SELECT\s+{nm2_}\s*\(\s*\)\s+FROM\s+([\w.`]+)"
                 r"\s*;?\s*$",
@@ -9632,7 +9412,7 @@ class HiveEngine:
                     f"{m2.group(1)}) LATERAL VIEW explode(array(0,1)) "
                     "_t AS _i"
                 )
-        if getattr(self, "_fn_aliases", None):
+        if self._fn_aliases:
             try:
                 _cur_db = self.spark.catalog.currentDatabase().lower()
             except Exception:
@@ -9667,7 +9447,7 @@ class HiveEngine:
         # a default-db-qualified call over a python-registered session
         # function: Spark's catalog cannot see registered UDFs through a
         # qualifier — strip it (create_func1.q's default.qtest_...)
-        for pfn in set(getattr(self, "_py_test_fns", set())) | {
+        for pfn in set(self._py_test_fns) | {
             "qtest_get_java_boolean"
         }:
             if pfn in text.lower():
@@ -9736,12 +9516,12 @@ class HiveEngine:
         # script_env_var1.q groups on it and expects two distinct
         # values).  Wrap each USING command with env(1) carrying a
         # fresh id when the statement references the variable.
-        env_var = getattr(self, "_vars", {}).get(
+        env_var = self._vars.get(
             "hive.script.operator.id.env.var", "HIVE_SCRIPT_OPERATOR_ID"
         ).strip()
         if env_var in text:
             def _wrap_using(m2: "re.Match") -> str:
-                self._script_op_id = getattr(self, "_script_op_id", 0) + 1
+                self._script_op_id = self._script_op_id + 1
                 return (
                     f"{m2.group(1)}'env {env_var}="
                     f"{self._script_op_id} {m2.group(2)}'"
@@ -10000,7 +9780,7 @@ class HiveEngine:
         # over a bare table answer from catalog ANALYZE stats — a
         # literal projection, no scan.  Off by default (Hive's default);
         # falls through whenever any needed statistic is missing.
-        if getattr(self, "_vars", {}).get(
+        if self._vars.get(
             "hive.compute.query.using.stats", "false"
         ).lower() == "true":
             from apache_hive_2_1_1_src_spark.operators.stats_optimizer import (
@@ -10013,7 +9793,7 @@ class HiveEngine:
         # MetadataOnlyOptimizer — ON by default (hive.optimize.
         # metadataonly): partition-key-only queries answer from the
         # partition list even over empty partitions (metadataonly1.q)
-        if getattr(self, "_vars", {}).get(
+        if self._vars.get(
             "hive.optimize.metadataonly", "true"
         ).lower() == "true" and re.match(r"^\s*SELECT\b", text, re.IGNORECASE):
             from apache_hive_2_1_1_src_spark.operators.stats_optimizer import (
@@ -10026,7 +9806,7 @@ class HiveEngine:
         # hive.exec.drop.ignorenonexistent defaults TRUE in Hive: a bare
         # DROP TABLE/VIEW on a missing object is a no-op, not an error
         # (char_1.q and most .q files open with unguarded drops)
-        if getattr(self, "_vars", {}).get(
+        if self._vars.get(
             "hive.exec.drop.ignorenonexistent", "true"
         ).lower() == "true":
             text = re.sub(
@@ -10199,6 +9979,13 @@ class HiveEngine:
             text = re.sub(
                 r"(?i)\s+FOR\s+REPLICATION\s*\(\s*'[^']*'\s*\)", "", text
             )
+        m = re.match(
+            r"(?i)^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?"
+            r"((?:`[^`]+`|[\w.])+)(?:\s+PURGE)?\s*;?\s*$",
+            text,
+        )
+        if m:
+            self._tables.pending = (m.group(1), None)
         text = self._rewrite_interval_ctors(text)
         text = self._rewrite_sum_of_strings(text)
         text = self._rewrite_hive_date_udfs(text)
@@ -10407,8 +10194,6 @@ class HiveEngine:
             # ``SELECT * FROM <db>.<name>`` must resolve to this temp
             # object (temp_table.q's default.foo from database two) —
             # remember the creating db so reads can strip it
-            if not hasattr(self, "_temp_view_dbs"):
-                self._temp_view_dbs: dict[str, str] = {}
             try:
                 self._temp_view_dbs[nm_t.lower()] = (
                     m.group(1).split(".")[0].lower()
@@ -10417,8 +10202,6 @@ class HiveEngine:
                 )
             except Exception:
                 pass
-            if not hasattr(self, "_temp_tables"):
-                self._temp_tables: set[str] = set()
             self._temp_tables.add(nm_t.lower())
             return self.spark.range(0).select()
         # plain (column-list) TEMPORARY TABLE: an empty session view
@@ -10451,10 +10234,6 @@ class HiveEngine:
                 self.spark.createDataFrame(
                     [], schema_t
                 ).createOrReplaceTempView(nm_t)
-                if not hasattr(self, "_temp_view_dbs"):
-                    self._temp_view_dbs: dict[str, str] = {}
-                if not hasattr(self, "_temp_tables"):
-                    self._temp_tables: set[str] = set()
                 try:
                     self._temp_view_dbs[nm_t.lower()] = (
                         m.group(1).split(".")[0].lower()
@@ -10698,7 +10477,7 @@ class HiveEngine:
         # StatsTask prints (and continues past) the 30017 skip line
         # (StatsTask.java aggregateStats catch;
         # stats_aggregator_error_1.q / stats_publisher_error_1.q)
-        vars_s = getattr(self, "_vars", {})
+        vars_s = self._vars
         if (
             vars_s.get("hive.stats.dbclass") == "custom"
             and re.match(
@@ -10747,10 +10526,7 @@ class HiveEngine:
             if not m:
                 return
             tbl = m.group(1)
-        key = tbl.split(".")[-1].lower()
-        if not hasattr(self, "_default_part_tables"):
-            self._default_part_tables: dict[str, dict[str, str]] = {}
-        if key in self._default_part_tables:
+        if self._tables.read(tbl).default_part_masks:
             return
         try:
             pcols = self._table_partition_cols(tbl)
@@ -10778,7 +10554,7 @@ class HiveEngine:
             if types.get(p, "string") == "string"
         }
         if masks:
-            self._default_part_tables[key] = masks
+            self._tables.edit(tbl).default_part_masks = masks
 
     #: chars Hive escapes in partition path names
     #: (common/src/java/org/apache/hadoop/hive/common/FileUtils.java
@@ -11034,7 +10810,7 @@ class HiveEngine:
         expects merges to be SKIPPED for evolved schemas, which this
         engine cannot distinguish — skipping appends is the honest
         approximation."""
-        vars_ = getattr(self, "_vars", {})
+        vars_ = self._vars
         if not any(
             vars_.get(k, "false").lower() == "true"
             for k in (
@@ -11077,9 +10853,9 @@ class HiveEngine:
         holds no row matching the WHERE writes no file.  The engine
         repacks the target's files to exactly that count — data
         identical, file count Hive's."""
-        if not getattr(self, "_mr_limit_key_order", False):
+        if not self._mr_limit_key_order:
             return
-        vars_ = getattr(self, "_vars", {})
+        vars_ = self._vars
         if any(
             vars_.get(k, "false").lower() == "true"
             for k in (
@@ -11192,8 +10968,6 @@ class HiveEngine:
                     f"{k.strip().strip('`')}="
                     + self._escape_path_name(v.strip().strip("'\"")),
                 )
-        if not hasattr(self, "_orc_fixup_counts"):
-            self._orc_fixup_counts: dict[str, int] = {}
         if mode.upper() == "OVERWRITE":
             total = n_files
         else:
@@ -11367,7 +11141,7 @@ class HiveEngine:
         scan per DML, which is why the engine defaults the flag OFF
         (deliberate deviation from Hive's true default; stats.q tests
         SET it explicitly either way)."""
-        if getattr(self, "_vars", {}).get(
+        if self._vars.get(
             "hive.stats.autogather", "false"
         ).lower() != "true":
             return

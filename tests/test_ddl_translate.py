@@ -38,7 +38,7 @@ def test_row_format_stored_as(eng):
     eng.sql("INSERT INTO ddlt_rf VALUES (1, 'a'), (2, 'b')")
     assert eng.sql("SELECT count(*) AS c FROM ddlt_rf").collect()[0].c == 2
     # declared Hive format is remembered for tooling
-    assert eng.declared_formats["ddlt_rf"] == "orc"
+    assert eng.table_desc("ddlt_rf").fmt == "orc"
     _cleanup(eng, "ddlt_rf")
 
 
@@ -71,7 +71,7 @@ def test_serde_with_serdeproperties(eng):
     )
     eng.sql("INSERT INTO ddlt_serde VALUES (1, 1.5)")
     assert eng.sql("SELECT v FROM ddlt_serde").collect()[0].v == 1.5
-    assert eng.declared_formats["ddlt_serde"] == "textfile"
+    assert eng.table_desc("ddlt_serde").fmt == "textfile"
     _cleanup(eng, "ddlt_serde")
 
 
@@ -107,7 +107,7 @@ def test_show_create_table_long_form(eng):
     )
     eng.sql("INSERT INTO ddlt_sct VALUES (1, 'x')")
     assert eng.sql("SELECT k FROM ddlt_sct").collect()[0].k == 1
-    assert eng.declared_formats["ddlt_sct"] == "orc"
+    assert eng.table_desc("ddlt_sct").fmt == "orc"
     _cleanup(eng, "ddlt_sct")
 
 
@@ -153,7 +153,7 @@ def test_multiline_real_world_shape(eng):
         "d1",
         3,
     )
-    assert eng.declared_formats["ddlt_web"] == "sequencefile"
+    assert eng.table_desc("ddlt_web").fmt == "sequencefile"
     _cleanup(eng, "ddlt_web")
 
 
@@ -201,7 +201,7 @@ def test_kitchen_sink_ddl(eng):
     )
     r = eng.sql("SELECT id, v, dt, region FROM ddlt_ks").collect()[0]
     assert (r.id, r.v, r.dt, r.region) == (1, "a", "d1", 1)
-    assert eng.declared_formats["ddlt_ks"] == "textfile"
+    assert eng.table_desc("ddlt_ks").fmt == "textfile"
     parts = eng.sql("SHOW PARTITIONS ddlt_ks").collect()
     assert len(parts) == 1
     _cleanup(eng, "ddlt_ks")
@@ -230,7 +230,7 @@ def test_show_create_table_hive_form(eng):
     eng.sql(ddl)
     eng.sql("INSERT INTO ddlt_sce PARTITION (dt='x') VALUES (5, 'z')")
     assert eng.sql("SELECT id FROM ddlt_sce").collect()[0].id == 5
-    assert eng.declared_formats["ddlt_sce"] == "orc"
+    assert eng.table_desc("ddlt_sce").fmt == "orc"
     _cleanup(eng, "ddlt_sce")
 
 

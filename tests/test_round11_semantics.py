@@ -3,21 +3,18 @@
 1. NUL-valued dynamic partition values write through the Hive-escaped
    fallback (FileUtils.escapePathName: Spark escapes \\u0001-\\u001F but
    not \\u0000 — escape1.q) and SHOW PARTITIONS prints %00.
-2. __HIVE_DEFAULT_PARTITION__ reads back as the LITERAL STRING for
-   string pcols (Hive stores the default name as the partition value;
-   alter_table_cascade.q / load_dyn_part14.q).
-3. CAST(x AS VARCHAR(n)) truncates (GenericUDFToVarchar; varchar_1.q);
+2. CAST(x AS VARCHAR(n)) truncates (GenericUDFToVarchar; varchar_1.q);
    char→varchar converts via the STRIPPED value (char_cast.q).
-4. char(n)-vs-char(m) comparisons strip trailing pad
+3. char(n)-vs-char(m) comparisons strip trailing pad
    (GenericUDFBaseCompare; char_comparison.q).
-5. UDFs see STRIPPED char args (TextConverter), but upper/lower/concat
+4. UDFs see STRIPPED char args (TextConverter), but upper/lower/concat
    preserve the char TYPE (padded) and min/max return the input char
    type (char_udf1.q).
-6. Default-path SQL percentile_approx stays on Spark's native mergeable
+5. Default-path SQL percentile_approx stays on Spark's native mergeable
    sketch (no grouped-agg pandas UDAF in the plan — O(group) memory);
    the Hive-exact NumericHistogram path is opt-in
    (hive_exact_percentile / qtest runs).
-7. ADD PARTITION ... LOCATION over a nested list-bucketing directory of
+6. ADD PARTITION ... LOCATION over a nested list-bucketing directory of
    parquet files reads the real values, not text-parse NULLs
    (ListBucketingPruner layout; list_bucket_query_oneskew_1.q).
 """
@@ -63,27 +60,6 @@ def test_escape_path_name_matches_hive_charset(eng):
     assert HiveEngine._escape_path_name("a/b") == "a%2Fb"
     assert HiveEngine._escape_path_name("x y") == "x y"  # space kept
     assert HiveEngine._escape_path_name("[k]") == "%5Bk%5D"
-
-
-# ------------------------------------------- default partition literal
-def test_default_partition_reads_as_literal_string(eng, spark):
-    spark.sql("DROP TABLE IF EXISTS r11_defp_t")
-    eng.sql("create table r11_defp_t (a int) partitioned by (p string)")
-    eng.sql(
-        "insert into table r11_defp_t partition (p) "
-        "select 1, cast(null as string)"
-    )
-    eng.sql("insert into table r11_defp_t partition (p='q') select 2")
-    rows = {
-        (r.a, r.p) for r in eng.sql("select a, p from r11_defp_t").collect()
-    }
-    assert rows == {(1, "__HIVE_DEFAULT_PARTITION__"), (2, "q")}
-    # Hive matches the literal name in WHERE
-    got = eng.sql(
-        "select a from r11_defp_t where p='__HIVE_DEFAULT_PARTITION__'"
-    ).collect()
-    assert [r.a for r in got] == [1]
-    spark.sql("DROP TABLE IF EXISTS r11_defp_t")
 
 
 # --------------------------------------------------- varchar/char casts

@@ -4,9 +4,7 @@
    inside string literals ('map x using cat' stays literal text).
 2. _rewrite_misc_hive_udfs call-site rewrites (substr/field/...) must
    skip call-shaped substrings inside string literals.
-3. CHANGE COLUMN renaming a nano-timestamp column migrates the _ts_nano
-   display map to the NEW name (mirrors _alter_replace_columns).
-4. SHOW FUNCTIONS over a session alias prints just the function-name
+3. SHOW FUNCTIONS over a session alias prints just the function-name
    line; the "is a session function" sentence is DESCRIBE-only framing.
 """
 
@@ -56,23 +54,6 @@ def test_field_call_inside_literal_not_rewritten(eng):
     ).collect()
     assert rows[0][0] == "field(a, b)"
     assert rows[0][1] == 2
-
-
-# --------------------------------- nano display map survives a CHANGE COLUMN rename
-def test_change_column_rename_migrates_nano_map(eng, spark):
-    spark.sql("DROP TABLE IF EXISTS r13_nano_t")
-    eng.sql("create table r13_nano_t (ts timestamp) stored as textfile")
-    eng.sql(
-        "insert into r13_nano_t values ('2024-01-02 03:04:05.123456789')"
-    )
-    # nano text beyond micros is display-mapped under the column name
-    assert "ts" in eng._ts_nano.get("r13_nano_t", {})
-    eng.sql("alter table r13_nano_t change column ts ts2 timestamp")
-    nano = eng._ts_nano.get("r13_nano_t", {})
-    assert "ts2" in nano and "ts" not in nano
-    shown = eng.sql("select ts2 from r13_nano_t").collect()[0][0]
-    assert str(shown).endswith("123456789") or str(shown).endswith("123456")
-    eng.sql("drop table r13_nano_t")
 
 
 # ------------------------------------------- SHOW FUNCTIONS name-only line

@@ -159,6 +159,7 @@ class _FakeSpark:
 def eng():
     e = HiveEngine.__new__(HiveEngine)
     e.spark = _FakeSpark()
+    e._init_state()
     e._infer_column_type = lambda text, expr: None
     e._vars = {
         "hive.outerjoin.supports.filters": "false",
@@ -338,5 +339,9 @@ def test_ddl_remembers_hive_null_token(eng):
         "CREATE TABLE nt (a STRING) ROW FORMAT DELIMITED "
         "FIELDS TERMINATED BY '\\001' NULL DEFINED AS '\\N' STORED AS TEXTFILE"
     )
-    assert eng.declared_field_delims["nt"] == "\x01"
-    assert eng.declared_null_formats["nt"] == "\\N"
+    # translation stages the record; HiveEngine.sql stores it once the
+    # CREATE has run
+    name, desc = eng._tables.pending
+    assert name == "nt"
+    assert desc.field_delim == "\x01"
+    assert desc.null_format == "\\N"
