@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import re
 from functools import lru_cache
+from typing import NamedTuple
 
 _LITERAL = r"""'(?:[^'\\]|\\.)*'?|"(?:[^"\\]|\\.)*"?|--[^\n]*|/\*.*?\*/"""
 #: string literals and comments (an unterminated literal runs to the end
@@ -66,6 +67,21 @@ def split_top_level(s: str, angle: bool = False) -> list[str]:
     return [p for p in out if p]
 
 
+_COMMENT = re.compile(r"\s+COMMENT\s+'[^']*'", re.IGNORECASE)
+
+
+def column_specs(s: str) -> list[tuple[str, str]]:
+    """(name, type) of each ``name type [COMMENT '...']`` entry of a
+    column list, backticks and comment dropped; an entry without a type
+    is skipped."""
+    out = []
+    for spec in split_top_level(s, angle=True):
+        parts = spec.split(None, 1)
+        if len(parts) == 2:
+            out.append((parts[0].strip("`"), _COMMENT.sub("", parts[1]).strip()))
+    return out
+
+
 def _top_level_view(s: str, pos: int) -> str:
     """s with only the text at paren depth 0 (relative to pos) left
     visible: nested text, comments and literal contents become spaces,
@@ -99,6 +115,70 @@ def search_top_level(pattern, s: str, pos: int = 0) -> re.Match | None:
     (``$`` matches there).  The match is taken on a masked copy of s:
     its offsets index s, its matched text is the masked text."""
     return _pattern(pattern).search(_top_level_view(s, pos), pos)
+
+
+_AND = re.compile(r"\s+AND\s+", re.IGNORECASE)
+
+
+def split_conjuncts(s: str) -> list[str]:
+    """Split a condition on its top-level ANDs (an AND inside parens or a
+    literal stays put); parts are stripped and empty parts dropped."""
+    out, last = [], 0
+    for m in _AND.finditer(_top_level_view(s, 0)):
+        out.append(s[last : m.start()].strip())
+        last = m.end()
+    out.append(s[last:].strip())
+    return [p for p in out if p]
+
+
+def paren_depths(s: str) -> list[int | None]:
+    """The paren depth before each offset of s, and at len(s); None at
+    offsets inside a literal, identifier or comment.  A stray ``)`` does
+    not take the depth below 0."""
+    out, d, last = [], 0, 0
+    for m in _tokens("()").finditer(s):
+        out += [d] * (m.start() - last)
+        t = m.group()
+        if t in "()":
+            out.append(d)
+            d = d + 1 if t == "(" else max(0, d - 1)
+        else:
+            out += [None] * len(t)
+        last = m.end()
+    return out + [d] * (len(s) - last + 1)
+
+
+_ADJACENT_QUOTES = re.compile(r"""['"]\s*['"]""")
+_CLOSED_LITERAL = re.compile(r"""'(?:[^'\\]|\\.)*'|"(?:[^"\\]|\\.)*\"""", re.S)
+
+
+def concat_adjacent_literals(text: str) -> str:
+    """HiveQL lexes ``'face''book'`` as TWO adjacent StringLiteral tokens
+    and the parser CONCATENATES them ('facebook' — literal_string.q
+    golden); Spark reads '' as an escaped quote.  Merge each run of
+    adjacent literals (either quote style, any whitespace between) into
+    one single-quoted literal, keeping backslash escapes."""
+    if not _ADJACENT_QUOTES.search(text):
+        return text
+    toks = [
+        m for m in _OPAQUE_RE.finditer(text)
+        if _CLOSED_LITERAL.fullmatch(m.group())
+    ]
+    out, pos, i = [], 0, 0
+    while i < len(toks):
+        j = i
+        while j + 1 < len(toks) and not text[
+            toks[j].end() : toks[j + 1].start()
+        ].strip():
+            j += 1
+        if j > i:
+            body = "".join(t.group()[1:-1] for t in toks[i : j + 1])
+            body = body.replace("\\'", "'").replace("'", "\\'")
+            out += [text[pos : toks[i].start()], f"'{body}'"]
+            pos = toks[j].end()
+        i = j + 1
+    out.append(text[pos:])
+    return "".join(out)
 
 
 def split_literals(s: str) -> list[str]:
@@ -190,6 +270,64 @@ def rewrite_calls(
         pos = end
     out.append(text[pos:])
     return "".join(out)
+
+
+_WRITE_HEAD = re.compile(
+    r"\s*(?:INSERT\s+(?P<mode>INTO|OVERWRITE)(?:\s+TABLE)?"
+    r"|LOAD\s+DATA\s[\s\S]*?\bINTO\s+TABLE"
+    r"|ALTER\s+TABLE"
+    r"|CREATE\s+TABLE(?:\s+IF\s+NOT\s+EXISTS)?)"
+    r"\s+(?P<table>(?:`[^`]*`|[\w.])+)",
+    re.IGNORECASE,
+)
+_PARTITION = re.compile(r"\s*PARTITION\s*\(", re.IGNORECASE)
+_QUERY = re.compile(r"(?:SELECT|WITH|FROM)\b", re.IGNORECASE)
+
+
+class WriteTarget(NamedTuple):
+    """The table an INSERT, LOAD DATA, ALTER TABLE or CREATE TABLE
+    statement writes."""
+
+    verb: str  # INSERT, LOAD, ALTER or CREATE
+    mode: str | None  # INTO or OVERWRITE, for INSERT
+    table: str  # as written: backticks kept
+    partition: str | None  # the ``PARTITION (...)`` clause as written
+    rest: str  # the text after the table and its partition clause
+
+    @property
+    def spec(self) -> str | None:
+        """The partition clause's inner text."""
+        if self.partition is None:
+            return None
+        return self.partition[self.partition.index("(") + 1 : -1]
+
+    @property
+    def query(self) -> str | None:
+        """The SELECT/WITH/FROM query an INSERT writes, if it has one."""
+        return self.rest if _QUERY.match(self.rest) else None
+
+
+def write_target(text: str) -> WriteTarget | None:
+    """The write target of a statement, or None when it names none."""
+    m = _WRITE_HEAD.match(text)
+    if m is None:
+        return None
+    rest, part = text[m.end() :], None
+    pm = _PARTITION.match(rest)
+    if pm:
+        try:
+            close = close_paren(rest, pm.end() - 1)
+        except ValueError:
+            return None
+        part, rest = rest[: close + 1].strip(), rest[close + 1 :]
+    mode = m.group("mode")
+    return WriteTarget(
+        m.group().split()[0].upper(),
+        mode and mode.upper(),
+        m.group("table"),
+        part,
+        rest.strip(),
+    )
 
 
 def split_statements(script: str) -> list[str]:

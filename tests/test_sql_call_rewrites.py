@@ -59,6 +59,21 @@ def test_text_sent_to_spark(eng, sent, sql, expected):
     assert expected in sent
 
 
+#: literals holding text that an expression rewrite changes outside them
+LITERALS = [
+    "stddev(x)",
+    "variance(1) and std(2)",
+    "LIMIT 1, 2",
+    "ROW__OFFSET__INSIDE__BLOCK",
+    "INPUT__FILE__NAME",
+    "current_user()",
+    "version()",
+    "ROW__ID",
+    "1E99BD",
+    "CAST(TRUE AS STRING)",
+]
+
+
 def test_call_shaped_text_inside_literals_stays_literal(eng):
     row = eng.sql(
         "SELECT 'size(x)' AS a, 'log(2, 3)' AS b, 'printf(1.5)' AS c, "
@@ -67,6 +82,13 @@ def test_call_shaped_text_inside_literals_stays_literal(eng):
     assert (row.a, row.b, row.c, row.d) == (
         "size(x)", "log(2, 3)", "printf(1.5)", "a)b",
     )
+    got = {}
+    for lit in LITERALS:
+        try:
+            got[lit] = eng.sql(f"SELECT '{lit}'").collect()[0][0]
+        except Exception as e:  # noqa: BLE001 - the failure is the finding
+            got[lit] = type(e).__name__
+    assert got == {lit: lit for lit in LITERALS}
 
 
 def test_registered_udaf_template_expands_at_each_call(eng, sent):
@@ -79,3 +101,49 @@ def test_registered_udaf_template_expands_at_each_call(eng, sent):
         "SELECT sum(aggregate((array(1, 2, 3)), CAST(0 AS BIGINT), "
         "(acc, e) -> acc + CAST(e AS BIGINT))) AS s"
     ) in sent
+
+
+def test_printf_decimal_inside_string_literal_untouched(eng):
+    assert (
+        eng.sql("select printf('%s', '1.5') as s").collect()[0][0] == "1.5"
+    )
+    assert (
+        eng.sql("select printf('v 1.5 w') as s").collect()[0][0]
+        == "v 1.5 w"
+    )
+    # the numeric-literal rewrite itself still applies
+    assert (
+        eng.sql("select printf('%f', 1.5) as s").collect()[0][0]
+        == "1.500000"
+    )
+
+
+def test_map_using_inside_literal_not_rewritten(eng):
+    rows = eng.sql("select 'map x using cat' as s").collect()
+    assert rows[0][0] == "map x using cat"
+
+
+def test_reduce_using_inside_literal_not_rewritten(eng):
+    rows = eng.sql(
+        "select 'reduce a, b using script' as s, 1 as n"
+    ).collect()
+    assert rows[0][0] == "reduce a, b using script"
+
+
+def test_substr_call_inside_literal_not_rewritten(eng):
+    # the gate sees "substr(" and engages the rewriter; the literal
+    # occurrence must come through verbatim while the real call-site
+    # still gets Hive semantics (substr pos 0 → pos 1)
+    rows = eng.sql(
+        "select 'use substr(x, 1, 2) here' as s, substr('hello', 0, 2) as h"
+    ).collect()
+    assert rows[0][0] == "use substr(x, 1, 2) here"
+    assert rows[0][1] == "he"
+
+
+def test_field_call_inside_literal_not_rewritten(eng):
+    rows = eng.sql(
+        "select 'field(a, b)' as s, field('b', 'a', 'b') as f"
+    ).collect()
+    assert rows[0][0] == "field(a, b)"
+    assert rows[0][1] == 2

@@ -1,31 +1,81 @@
-"""Round-12 semantic pins for the round-11 ADVICE items:
-
-1. TRUNCATE of one partition must retain rows whose partition column is
-   NULL (__HIVE_DEFAULT_PARTITION__) — ~cond is NULL for them, not False.
-2. INSERT INTO otherdb.foo must hit the CATALOG table when the session
-   temp table foo was created in a different db (temp-table shadowing is
-   db-scoped, SemanticAnalyzer.getMetaData).
-3. printf's decimal→double literal rewrite must not touch decimals
-   inside string literals ('1.5' stays '1.5').
-4. percentile_approx over a JOIN must not inject the ambiguous
-   _metadata ordering columns (and the fallback catches ambiguity).
-5. ``a NOT IN (...) = true`` parenthesizes the WHOLE not-in expression
-   (the operand regex must not swallow the NOT keyword).
-"""
+"""HiveEngine.sql's rule table: its shape, the post-write hooks' target
+parse, and statement pins for single rules."""
 
 from __future__ import annotations
 
+import inspect
+import re
+
 import pytest
 
+from apache_hive_2_1_1_src_spark import rules
 from apache_hive_2_1_1_src_spark.session import HiveEngine
 
 
 @pytest.fixture(scope="module")
-def eng(spark):
-    e = HiveEngine(spark, "/root/testdata/sf0.001")
+def eng(spark, sf_dir):
+    e = HiveEngine(spark, sf_dir)
     e.register_tables()
     yield e
     e._vars = {}
+
+
+# ------------------------------------------------------------ the table
+def test_rule_retry_and_hook_names_are_unique():
+    names = [r.name for r in HiveEngine._RULES] + [
+        rules.name(f)
+        for f in HiveEngine._RETRIES + HiveEngine._HOOKS
+    ]
+    assert len(names) == len(set(names))
+
+
+def test_run_statement_dispatches_only_through_the_table():
+    src = inspect.getsource(HiveEngine._run_statement)
+    assert not re.search(r"\bre\.(match|search|sub)\(", src)
+
+
+def test_hits_count_answers_and_changed_text(eng):
+    before = rules.HITS.copy()
+    eng.sql("SET r_hits.k=1")
+    eng.sql("SELECT stddev(r_regionkey) FROM region").collect()
+    eng.sql("SELECT 1").collect()
+    assert rules.HITS["set_var"] == before["set_var"] + 1
+    assert rules.HITS["stddev"] == before["stddev"] + 1
+
+
+# ------------------------------- post-write hooks: backticked targets
+def test_backticked_insert_records_default_partition(eng, spark):
+    spark.sql("DROP TABLE IF EXISTS dp2")
+    eng.sql("CREATE TABLE dp2 (a INT) PARTITIONED BY (p STRING)")
+    eng.sql(
+        "INSERT INTO TABLE `dp2` PARTITION (p) SELECT 1, CAST(NULL AS STRING)"
+    )
+    assert [r.p for r in eng.sql("SELECT p FROM dp2").collect()] == [
+        "__HIVE_DEFAULT_PARTITION__"
+    ]
+    eng.sql("DROP TABLE dp2")
+
+
+def test_backticked_insert_gathers_stats(eng, spark):
+    spark.sql("DROP TABLE IF EXISTS sa2")
+    eng.sql("CREATE TABLE sa2 (a INT)")
+    eng.sql("SET hive.stats.autogather=true")
+    try:
+        eng.sql("INSERT INTO TABLE `sa2` SELECT 1")
+    finally:
+        eng._vars.pop("hive.stats.autogather", None)
+    rows = spark.sql("DESCRIBE TABLE EXTENDED sa2").collect()
+    assert any(r.col_name == "Statistics" for r in rows)
+    eng.sql("DROP TABLE sa2")
+
+
+def test_backticked_self_overwrite(eng, spark):
+    spark.sql("DROP TABLE IF EXISTS so2")
+    eng.sql("CREATE TABLE so2 (a INT)")
+    eng.sql("INSERT INTO TABLE so2 SELECT 1")
+    eng.sql("INSERT OVERWRITE TABLE `so2` SELECT a + 1 FROM `so2`")
+    assert [r.a for r in eng.sql("SELECT a FROM so2").collect()] == [2]
+    eng.sql("DROP TABLE so2")
 
 
 # ------------------------------------------- truncate vs NULL partitions
@@ -78,22 +128,6 @@ def test_insert_qualified_name_hits_catalog_not_temp(eng, spark):
     spark.sql("DROP DATABASE r12db")
 
 
-# ------------------------------------------------ printf string literals
-def test_printf_decimal_inside_string_literal_untouched(eng):
-    assert (
-        eng.sql("select printf('%s', '1.5') as s").collect()[0][0] == "1.5"
-    )
-    assert (
-        eng.sql("select printf('v 1.5 w') as s").collect()[0][0]
-        == "v 1.5 w"
-    )
-    # the numeric-literal rewrite itself still applies
-    assert (
-        eng.sql("select printf('%f', 1.5) as s").collect()[0][0]
-        == "1.500000"
-    )
-
-
 # ------------------------------------- percentile_approx over multi-table
 def test_percentile_approx_over_join_no_ambiguous_metadata(eng):
     if not hasattr(eng, "_vars"):
@@ -117,3 +151,18 @@ def test_not_in_comparison_parenthesization(eng):
         "select (1 not in (1, 2)) = false as x, 2 NOT IN (3) = true as y"
     ).collect()
     assert rows[0][0] is True and rows[0][1] is True
+
+
+# ------------------------------------------- SHOW FUNCTIONS name-only line
+def test_show_functions_returns_bare_name(eng, spark):
+    eng.sql(
+        "create temporary function r13fn as "
+        "'org.apache.hadoop.hive.ql.udf.generic.GenericUDFUpper'"
+    )
+    shown = eng.sql("show functions r13fn").collect()
+    assert len(shown) == 1
+    assert "session function" not in shown[0][0]
+    assert shown[0][0].endswith("r13fn")
+    desc = eng.sql("describe function r13fn").collect()
+    assert any("session function" in r[0] for r in desc)
+    eng.sql("drop temporary function r13fn")

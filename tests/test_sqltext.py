@@ -15,13 +15,17 @@ from pyspark.sql import types as T
 from apache_hive_2_1_1_src_spark.session import HiveEngine
 from apache_hive_2_1_1_src_spark.sqltext import (
     close_paren,
+    concat_adjacent_literals,
+    paren_depths,
     rewrite_calls,
     search_top_level,
+    split_conjuncts,
     split_literals,
     split_statements,
     split_top_level,
     sub_outside_quotes,
     unescape,
+    write_target,
 )
 
 # ------------------------------------------------------------ primitives
@@ -136,6 +140,64 @@ def test_split_statements_quotes_escapes_comments_backticks():
 )
 def test_unescape(raw, expected):
     assert unescape(raw) == expected
+
+
+def test_split_conjuncts():
+    assert split_conjuncts("a.x = 1 AND (b.y = 2 OR b.y = 3) and c = 'p AND q'") == [
+        "a.x = 1", "(b.y = 2 OR b.y = 3)", "c = 'p AND q'",
+    ]
+
+
+def test_paren_depths():
+    assert paren_depths("f(a, ')', g(b))") == [
+        0, 0, 1, 1, 1, None, None, None, 1, 1, 1, 1, 2, 2, 1, 0,
+    ]
+    assert paren_depths(")x") == [0, 0, 0]
+
+
+@pytest.mark.parametrize(
+    "sql, expected",
+    [
+        ("SELECT 'face''book'", "SELECT 'facebook'"),
+        ("SELECT 'a' \"b\"\n 'c', 'd'", "SELECT 'abc', 'd'"),
+        ("SELECT \"it's\" 'x'", "SELECT 'it\\'sx'"),
+        ("SELECT 'a\\'b' 'c'", "SELECT 'a\\'bc'"),
+        ("SELECT 'a' /* c */ 'b'", "SELECT 'a' /* c */ 'b'"),
+        ("SELECT 'a' 'b", "SELECT 'a' 'b"),
+        ("-- don't\nSELECT 'a' 'b'", "-- don't\nSELECT 'ab'"),
+    ],
+)
+def test_concat_adjacent_literals(sql, expected):
+    assert concat_adjacent_literals(sql) == expected
+
+
+@pytest.mark.parametrize(
+    "sql, expected",
+    [
+        ("INSERT INTO TABLE `dp2` PARTITION (p) SELECT 1",
+         ("INSERT", "INTO", "`dp2`", "PARTITION (p)", "p", "SELECT 1")),
+        ("insert overwrite table db.t partition (ds=')') with q as (select 1) "
+         "select * from q",
+         ("INSERT", "OVERWRITE", "db.t", "partition (ds=')')", "ds=')'",
+          "with q as (select 1) select * from q")),
+        ("INSERT INTO t VALUES (1)",
+         ("INSERT", "INTO", "t", None, None, None)),
+        ("LOAD DATA LOCAL INPATH '/x' INTO TABLE `a b`",
+         ("LOAD", None, "`a b`", None, None, None)),
+        ("ALTER TABLE t ADD COLUMNS (c INT)",
+         ("ALTER", None, "t", None, None, None)),
+        ("CREATE TABLE IF NOT EXISTS c AS SELECT 1",
+         ("CREATE", None, "c", None, None, None)),
+    ],
+)
+def test_write_target(sql, expected):
+    t = write_target(sql)
+    assert (t.verb, t.mode, t.table, t.partition, t.spec, t.query) == expected
+
+
+def test_write_target_none():
+    assert write_target("SELECT 1") is None
+    assert write_target("INSERT INTO t PARTITION (p='x' SELECT 1") is None
 
 
 # ------------------------------------------------------ HiveEngine rewrites
