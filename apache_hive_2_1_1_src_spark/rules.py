@@ -2,20 +2,21 @@
 
 Hive's Driver hands a statement's AST to the one analyzer that
 ``SemanticAnalyzerFactory`` picks for its token.  ``HiveEngine`` works on
-SQL text instead: ``_run_statement`` walks one ordered table of named
+SQL text instead: ``_run_statement`` walks one ordered ``Table`` of named
 rules, and each rule either answers the statement (returns a DataFrame),
-rewrites its text for the rules after it, or passes.  Three shapes:
+rewrites its text for the rules after it, or passes (None).  The class
+body adds its rules in the order it defines them, in three shapes:
 
-* ``Stmt``: a compiled pattern matched at the start of the text, plus a
-  handler ``fn(engine, match)``;
-* ``Rewrite``: ``(pattern, replacement)`` applied outside string
-  literals and comments (``sqltext.sub_outside_quotes``);
-* ``Step``: any ``fn(engine, text)`` (a bare function in the table).
+* ``@_RULES.statement(pattern)``: a handler ``fn(self, m)`` for text the
+  compiled pattern matches at its start;
+* ``_RULES.rewrite(name, pattern, repl)``: ``(pattern, replacement)``
+  applied outside string literals and comments
+  (``sqltext.sub_outside_quotes``);
+* ``@_RULES.step``: any ``fn(self, text)``.
 
-A handler returns a DataFrame to answer, a string to replace the text,
-or None to pass.  ``HITS`` counts, per process, every rule that answered
-or changed the text, every error retry that answered and every post-write
-hook that acted; ``scripts/rule_hits.py`` reports it.
+``HITS`` counts, per process, every rule that answered or changed the
+text, every error retry that answered and every post-write hook that
+acted; ``scripts/rule_hits.py`` reports it.
 """
 
 from __future__ import annotations
@@ -29,54 +30,6 @@ from apache_hive_2_1_1_src_spark.sqltext import sub_outside_quotes
 HITS: Counter = Counter()
 
 
-class Stmt:
-    __slots__ = ("name", "pattern", "fn")
-
-    def __init__(self, pattern, fn, flags: int = 0):
-        self.name = name(fn)
-        self.pattern = (
-            pattern if isinstance(pattern, re.Pattern)
-            else re.compile(pattern, flags)
-        )
-        self.fn = fn
-
-    def apply(self, eng, text: str):
-        m = self.pattern.match(text)
-        return self.fn(eng, m) if m else None
-
-
-class Rewrite:
-    __slots__ = ("name", "pattern", "repl")
-
-    def __init__(self, name: str, pattern: str, repl, flags: int = 0):
-        self.name = name
-        self.pattern = re.compile(pattern, flags)
-        self.repl = repl
-
-    def apply(self, eng, text: str):
-        return sub_outside_quotes(self.pattern, self.repl, text)
-
-
-class Step:
-    __slots__ = ("name", "fn")
-
-    def __init__(self, fn):
-        if isinstance(fn, staticmethod):
-            fn = fn.__func__
-            self.fn = lambda eng, text: fn(text)
-        else:
-            self.fn = fn
-        self.name = name(fn)
-
-    def apply(self, eng, text: str):
-        return self.fn(eng, text)
-
-
-def statement(pattern, flags: int = 0):
-    """Decorator: ``fn(self, m)`` becomes a Stmt rule on pattern."""
-    return lambda fn: Stmt(pattern, fn, flags)
-
-
 def name(fn) -> str:
     """A handler's rule, retry or hook name: ``_rule_set_var`` is
     ``set_var``."""
@@ -84,14 +37,39 @@ def name(fn) -> str:
     return fn.__name__.lstrip("_").removeprefix("rule_")
 
 
-def table(*entries) -> tuple:
-    """The rules in order, a bare function becoming a Step; a name used
-    twice raises."""
-    rules = tuple(
-        e if isinstance(e, (Stmt, Rewrite, Step)) else Step(e) for e in entries
-    )
-    names = [r.name for r in rules]
-    dup = {n for n in names if names.count(n) > 1}
-    if dup:
-        raise ValueError(f"duplicate rule names: {sorted(dup)}")
-    return rules
+class Table(list):
+    """``(name, kind, fn(engine, text))`` in the order rules were added;
+    a name added twice raises.  The decorators return the handler
+    unchanged, so it stays an ordinary method."""
+
+    def add(self, rule_name: str, kind: str, fn) -> None:
+        if any(r[0] == rule_name for r in self):
+            raise ValueError(f"duplicate rule name: {rule_name}")
+        self.append((rule_name, kind, fn))
+
+    def statement(self, pattern, flags: int = 0):
+        pat = re.compile(pattern, flags)
+
+        def add(fn):
+            self.add(
+                name(fn), "statement",
+                lambda eng, text: (m := pat.match(text)) and fn(eng, m),
+            )
+            return fn
+
+        return add
+
+    def rewrite(self, rule_name: str, pattern: str, repl, flags: int = 0) -> None:
+        pat = re.compile(pattern, flags)
+        self.add(
+            rule_name, "rewrite",
+            lambda eng, text: sub_outside_quotes(pat, repl, text),
+        )
+
+    def step(self, fn):
+        f = getattr(fn, "__func__", fn)
+        self.add(
+            name(f), "step",
+            (lambda eng, text: f(text)) if isinstance(fn, staticmethod) else f,
+        )
+        return fn

@@ -273,7 +273,8 @@ def rewrite_calls(
 
 
 _WRITE_HEAD = re.compile(
-    r"\s*(?:INSERT\s+(?P<mode>INTO|OVERWRITE)(?:\s+TABLE)?"
+    r"\s*(?:INSERT\s+(?P<mode>INTO|OVERWRITE)"
+    r"(?:\s+TABLE|(?!\s+(?:LOCAL\s+)?DIRECTORY\b))"
     r"|LOAD\s+DATA\s[\s\S]*?\bINTO\s+TABLE"
     r"|ALTER\s+TABLE"
     r"|CREATE\s+TABLE(?:\s+IF\s+NOT\s+EXISTS)?)"
@@ -308,7 +309,8 @@ class WriteTarget(NamedTuple):
 
 
 def write_target(text: str) -> WriteTarget | None:
-    """The write target of a statement, or None when it names none."""
+    """The write target of a statement, or None when it names none (an
+    ``INSERT OVERWRITE [LOCAL] DIRECTORY`` writes no table)."""
     m = _WRITE_HEAD.match(text)
     if m is None:
         return None

@@ -7,7 +7,7 @@ statements of one ``perfbench`` ``hiveql_dml`` plan, and writes how
 often each rule, error retry and post-write hook fired
 (``rules.HITS``) to a JSON report.
 
-Usage: python scripts/rule_hits.py [--seed N] [--out PATH] [--no-tests]
+Usage: python scripts/rule_hits.py [--out PATH]
 """
 
 from __future__ import annotations
@@ -16,6 +16,8 @@ import argparse
 import json
 import os
 import sys
+
+import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
@@ -30,6 +32,8 @@ NOTE = (
     "never fires. Statements that tests run in a subprocess are not seen. "
     "Regenerate with: python scripts/rule_hits.py"
 )
+#: the hiveql_dml plan whose statements follow the suite
+SEED = 1
 
 
 def run_dml_plan(seed: int) -> None:
@@ -50,7 +54,7 @@ def run_dml_plan(seed: int) -> None:
                 df.count()
 
 
-def report(exit_code: int | None, seed: int) -> dict:
+def report(exit_code: int) -> dict:
     from apache_hive_2_1_1_src_spark import rules
     from apache_hive_2_1_1_src_spark.session import HiveEngine
 
@@ -58,15 +62,15 @@ def report(exit_code: int | None, seed: int) -> dict:
         return [{"name": n, "hits": rules.HITS[n]} for n in names]
 
     table = [
-        {"name": r.name, "kind": type(r).__name__, "hits": rules.HITS[r.name]}
-        for r in HiveEngine._RULES
+        {"name": n, "kind": kind, "hits": rules.HITS[n]}
+        for n, kind, _fn in HiveEngine._RULES
     ]
     retries = rows(rules.name(f) for f in HiveEngine._RETRIES)
     hooks = rows(rules.name(f) for f in HiveEngine._HOOKS)
     return {
         "note": NOTE,
         "tier1_exit_code": exit_code,
-        "dml_plan_seed": seed,
+        "dml_plan_seed": SEED,
         "rules": table,
         "retries": retries,
         "hooks": hooks,
@@ -76,22 +80,16 @@ def report(exit_code: int | None, seed: int) -> dict:
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--out", default=os.path.join(ROOT, "docs", "rule_hits.json"))
-    ap.add_argument("--no-tests", action="store_true", help="skip the tier-1 suite")
     args = ap.parse_args()
-    exit_code = None
-    if not args.no_tests:
-        import pytest
-
-        os.chdir(ROOT)
-        exit_code = int(
-            pytest.main(
-                ["tests/", "-q", "--continue-on-collection-errors", "-p", "no:cacheprovider"]
-            )
+    os.chdir(ROOT)
+    exit_code = int(
+        pytest.main(
+            ["tests/", "-q", "--continue-on-collection-errors", "-p", "no:cacheprovider"]
         )
-    run_dml_plan(args.seed)
-    doc = report(exit_code, args.seed)
+    )
+    run_dml_plan(SEED)
+    doc = report(exit_code)
     with open(args.out, "w") as fh:
         json.dump(doc, fh, indent=1)
         fh.write("\n")
@@ -99,7 +97,7 @@ def main() -> int:
         f"{len(doc['rules'])} rules, {len(doc['retries'])} retries, "
         f"{len(doc['hooks'])} hooks; {len(doc['zero_hit'])} zero-hit -> {args.out}"
     )
-    return exit_code or 0
+    return exit_code
 
 
 if __name__ == "__main__":

@@ -50,6 +50,17 @@ CASES = [
      "SELECT compute_stats(r_name, 16, 'string') FROM region"),
     ("SELECT greatest(10L, 'a', date('2001-01-28'))",
      "SELECT IF((10L) IS NULL OR ('a') IS NULL OR (date('2001-01-28')) IS NULL, NULL, greatest(CAST((10L) AS STRING), CAST(('a') AS STRING), CAST((date('2001-01-28')) AS STRING)))"),
+    # expression rewrites, applied outside literals
+    ("SELECT std(r_regionkey), variance(r_regionkey) FROM region",
+     "SELECT stddev_pop(r_regionkey), var_pop(r_regionkey) FROM region"),
+    ("SELECT version()",
+     "SELECT '2.1.1 re0bb2e6a47d0ebda424ffd63d4bb1d815e7e40d0'"),
+    ("SELECT 1E99BD", "SELECT CAST(NULL AS DECIMAL(38,0))"),
+    ("SELECT CAST(TRUE AS STRING)", "SELECT CAST('TRUE' AS STRING)"),
+    ("SELECT r_regionkey, ROW__ID FROM region",
+     "SELECT r_regionkey, CAST(NULL AS struct<writeid:bigint,bucketid:int,rowid:bigint>) FROM region"),
+    ("SELECT ROW__OFFSET__INSIDE__BLOCK FROM region",
+     "SELECT CAST(0 AS BIGINT) FROM region"),
 ]
 
 
@@ -57,6 +68,14 @@ CASES = [
 def test_text_sent_to_spark(eng, sent, sql, expected):
     eng.sql(sql).collect()
     assert expected in sent
+
+
+def test_partialscan_runs_as_plain_analyze(eng, sent, spark):
+    spark.sql("DROP TABLE IF EXISTS ps1")
+    eng.sql("CREATE TABLE ps1 (a INT)")
+    eng.sql("ANALYZE TABLE ps1 COMPUTE STATISTICS PARTIALSCAN")
+    assert "ANALYZE TABLE ps1 COMPUTE STATISTICS" in sent
+    eng.sql("DROP TABLE ps1")
 
 
 #: literals holding text that an expression rewrite changes outside them

@@ -22,7 +22,7 @@ def eng(spark, sf_dir):
 
 # ------------------------------------------------------------ the table
 def test_rule_retry_and_hook_names_are_unique():
-    names = [r.name for r in HiveEngine._RULES] + [
+    names = [n for n, _kind, _fn in HiveEngine._RULES] + [
         rules.name(f)
         for f in HiveEngine._RETRIES + HiveEngine._HOOKS
     ]
@@ -76,6 +76,17 @@ def test_backticked_self_overwrite(eng, spark):
     eng.sql("INSERT OVERWRITE TABLE `so2` SELECT a + 1 FROM `so2`")
     assert [r.a for r in eng.sql("SELECT a FROM so2").collect()] == [2]
     eng.sql("DROP TABLE so2")
+
+
+def test_self_overwrite_without_table_keyword(eng, spark):
+    # Spark's grammar accepts INSERT OVERWRITE t; the fallback parses the
+    # same target as for INSERT OVERWRITE TABLE t
+    spark.sql("DROP TABLE IF EXISTS so3")
+    eng.sql("CREATE TABLE so3 (a INT)")
+    eng.sql("INSERT INTO so3 SELECT 1")
+    eng.sql("INSERT OVERWRITE so3 SELECT a + 1 FROM so3")
+    assert [r.a for r in eng.sql("SELECT a FROM so3").collect()] == [2]
+    eng.sql("DROP TABLE so3")
 
 
 # ------------------------------------------- truncate vs NULL partitions

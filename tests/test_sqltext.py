@@ -198,6 +198,13 @@ def test_write_target(sql, expected):
 def test_write_target_none():
     assert write_target("SELECT 1") is None
     assert write_target("INSERT INTO t PARTITION (p='x' SELECT 1") is None
+    assert write_target("INSERT OVERWRITE DIRECTORY '/x' SELECT 1") is None
+    assert (
+        write_target("insert overwrite local directory '/x' SELECT 1") is None
+    )
+    assert write_target("INSERT INTO TABLE directory SELECT 1").table == (
+        "directory"
+    )
 
 
 # ------------------------------------------------------ HiveEngine rewrites
