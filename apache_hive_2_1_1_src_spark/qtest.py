@@ -1136,12 +1136,11 @@ def cleanup_scratch_tables(eng) -> None:
     # a prior .q may have left the session in its own database (USE db);
     # everything below — and the next file — must run against default
     eng.spark.sql("USE default")
-    # table descriptors and temp-object registries must not leak onto a
+    # table descriptors and the temp-table registry must not leak onto a
     # LATER file's same-named table (the tables themselves are dropped
     # below, outside HiveEngine.sql)
     eng._tables.clear()
-    for reg in (eng._temp_tables, eng._temp_view_dbs, eng._temp_shadows):
-        reg.clear()
+    eng._temp_tables.clear()
     for row in eng.spark.sql("SHOW TABLES").collect():
         if row.tableName in FIXTURES:
             continue

@@ -256,13 +256,10 @@ class HiveEngine:
         self._masking: dict = {}
         self._authz = Authorizer()
         self._default_user = "anonymous"
-        #: session TEMPORARY objects: views by bare name and their db,
-        #: real tables standing in for temp tables, shadows of catalog
-        #: tables ((db, name) → mangled name)
-        self._temp_tables: set[str] = set()
-        self._temp_view_dbs: dict[str, str] = {}
-        self._session_temp_tables: set[str] = set()
-        self._temp_shadows: dict[tuple[str, str], str] = {}
+        #: session TEMPORARY tables: resolved (db, name) → the catalog
+        #: table that holds it, ``db.name`` or, when it shadows a catalog
+        #: table of that name, ``db.tmp_shadow_<db>_<name>``
+        self._temp_tables: dict[tuple[str, str], str] = {}
         self._hostile_ids: dict[str, str] = {}
         self._view_partitions: dict[str, set] = {}
         self._db_owners: dict[str, tuple[str, str]] = {}
@@ -767,6 +764,29 @@ class HiveEngine:
         if m.group(1) and self.spark.catalog.tableExists(name):
             return
         self._tables.pending = (name, desc)
+
+    def _create_temp_table(self, ddl: str) -> str:
+        """CREATE TEMPORARY TABLE in any form (HIVE-7090) creates a
+        catalog table the session records: Spark would parse
+        ``CREATE TEMPORARY TABLE ... USING`` as a legacy temp view, which
+        takes no INSERT, LOAD or ANALYZE (insert_values_tmp_table.q).  A
+        temp table SHADOWING a catalog table of its name
+        (temp_table_precedence.q's ttp.tab1) gets a mangled name that
+        ``_rule_temp_shadows`` points references at until it is
+        dropped."""
+        tm = re.match(
+            r"(?i)^(\s*CREATE\s+)TEMPORARY\s+((?:EXTERNAL\s+)?TABLE\s+"
+            r"(?:IF\s+NOT\s+EXISTS\s+)?)((?:`[^`]+`|[\w.])+)",
+            ddl,
+        )
+        if tm is None:
+            return ddl
+        key = self._tables.key(tm.group(3))
+        name, phys = tm.group(3), ".".join(key)
+        if key not in self._temp_tables and self.spark.catalog.tableExists(phys):
+            name = phys = f"{key[0]}.tmp_shadow_{key[0]}_{key[1]}"
+        self._temp_tables[key] = phys
+        return tm.group(1) + tm.group(2) + name + ddl[tm.end():]
 
     def _synthesize_avro_columns(self, out: str, desc: TableDesc) -> str:
         """AvroSerDe tables may declare NO column list — the columns come
@@ -2803,25 +2823,6 @@ class HiveEngine:
             if old_ty:
                 slot["old"][nm.lower()] = old_ty
 
-    def _is_temp_insert_target(self, target: str) -> bool:
-        """True only when an INSERT target names a SESSION TEMPORARY
-        table (SemanticAnalyzer temp-table shadowing).  A db-qualified
-        target (``otherdb.foo``) is the temp object ONLY when the temp
-        table was created in that same db — otherwise the user means
-        the real catalog table and the intercept must not fire."""
-        bare = target.replace("`", "")
-        name = bare.split(".")[-1].lower()
-        if name not in self._temp_tables:
-            return False
-        if "." not in bare:
-            return True
-        db = bare.split(".")[0].lower()
-        owner = self._temp_view_dbs.get(name)
-        # unknown owner → treat a db-qualified target as the CATALOG
-        # table: firing the intercept here would silently redirect a
-        # real-table INSERT into the session temp view
-        return owner is not None and owner == db
-
     def _truncate_extended(
         self, tbl: str, spec: str | None, cols: str | None
     ):
@@ -4270,61 +4271,53 @@ class HiveEngine:
 
     @_RULES.step
     def _rule_temp_shadows(self, text):
-        # temp tables shadowing a catalog table: rewrite every
-        # reference to the mangled shadow until DROPPED
+        # DROP and RENAME keep the session's temp tables current; a temp
+        # table shadowing a catalog table lives under its mangled name,
+        # and every reference is rewritten to it until it is DROPPED
         # (temp_table_precedence.q)
-        for (db_s, base_s), mg_s in list(self._temp_shadows.items()):
-            dm_s = re.match(
-                rf"(?i)^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?"
-                rf"(?:{db_s}\.)?{base_s}\s*;?\s*$",
-                text,
+        if not self._temp_tables:
+            return text
+        dm = re.match(
+            r"(?i)^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([\w.]+)\s*;?\s*$",
+            text,
+        )
+        if dm and (key := self._tables.key(dm.group(1))) in self._temp_tables:
+            phys = self._temp_tables.pop(key)
+            if phys == ".".join(key):
+                return text
+            self._tables.pending = (phys, None)
+            return self.spark.sql(f"DROP TABLE IF EXISTS {phys}")
+        rn = re.match(
+            r"(?i)^\s*ALTER\s+TABLE\s+([\w.]+)\s+RENAME\s+TO\s+"
+            r"(?:\w+\.)?(\w+)\s*;?\s*$",
+            text,
+        )
+        if rn and (key := self._tables.key(rn.group(1))) in self._temp_tables:
+            phys = self._temp_tables.pop(key)
+            db, new = key[0], rn.group(2).lower()
+            if phys == ".".join(key):
+                self._temp_tables[(db, new)] = f"{db}.{new}"
+                return text
+            # renaming a SHADOW temp keeps it a shadow under the new
+            # name (temp_table_precedence.q renames tab1→tab2 over an
+            # existing real tab2)
+            mg = f"{db}.tmp_shadow_{db}_{new}"
+            self.spark.sql(f"DROP TABLE IF EXISTS {mg}")
+            res = self.spark.sql(f"ALTER TABLE {phys} RENAME TO {mg}")
+            self._tables.rename(phys, mg)
+            self._temp_tables[(db, new)] = mg
+            return res
+        cur = None
+        for (db, base), phys in self._temp_tables.items():
+            if phys == f"{db}.{base}":
+                continue
+            text = sub_outside_quotes(
+                rf"(?i)\b{re.escape(db)}\.{re.escape(base)}\b", phys, text
             )
-            cur_db_s = ""
-            try:
-                cur_db_s = self.spark.catalog.currentDatabase().lower()
-            except Exception:
-                pass
-            if dm_s and (f"{db_s}." in text or cur_db_s == db_s):
-                self._temp_shadows.pop((db_s, base_s), None)
-                self._tables.pending = (mg_s, None)
-                return self.spark.sql(f"DROP TABLE IF EXISTS {mg_s}")
-            rn_s = re.match(
-                rf"(?i)^\s*ALTER\s+TABLE\s+(?:{db_s}\.)?{base_s}\s+"
-                rf"RENAME\s+TO\s+(?:(\w+)\.)?(\w+)\s*;?\s*$",
-                text,
-            )
-            if rn_s and (f"{db_s}." in text or cur_db_s == db_s):
-                # renaming a SHADOW temp keeps it a shadow under the
-                # new name (temp_table_precedence.q renames tab1→tab2
-                # over an existing real tab2)
-                nb_s = rn_s.group(2).lower()
-                mg2_s = f"{db_s}.tmp_shadow_{db_s}_{nb_s}"
-                self.spark.sql(f"DROP TABLE IF EXISTS {mg2_s}")
-                res_rn = self.spark.sql(
-                    f"ALTER TABLE {mg_s} RENAME TO {mg2_s}"
-                )
-                self._temp_shadows.pop((db_s, base_s), None)
-                self._temp_shadows[(db_s, nb_s)] = mg2_s
-                return res_rn
-            text = re.sub(
-                rf"(?i)\b{db_s}\.{base_s}\b", mg_s, text
-            )
-            if cur_db_s == db_s:
-                text = re.sub(
-                    rf"(?i)(?<![\w.`]){base_s}(?![\w.`])", mg_s, text
-                )
-        return text
-
-    @_RULES.step
-    def _rule_temp_view_db_refs(self, text):
-        # db-qualified reads of session TEMP objects resolve by bare
-        # name (see _temp_view_dbs registration)
-        for _nm, _db in self._temp_view_dbs.items():
-            if f"{_db}.{_nm}" in text.lower():
-                text = re.sub(
-                    rf"(?i)\b{re.escape(_db)}\.{re.escape(_nm)}\b",
-                    _nm,
-                    text,
+            cur = cur or self.spark.catalog.currentDatabase().lower()
+            if cur == db:
+                text = sub_outside_quotes(
+                    rf"(?i)(?<![\w.`]){re.escape(base)}(?![\w.`])", phys, text
                 )
         return text
 
@@ -4552,34 +4545,6 @@ class HiveEngine:
         return self._truncate_extended(
             m.group(1), m.group(2), m.group(3)
         )
-
-    # INSERT into a session TEMPORARY table re-materializes its
-    # temp view (Spark's catalog cannot express writable temp
-    # tables — temp_table_precedence.q)
-    @_RULES.statement(
-        r"^\s*INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?"
-        r"((?:`[^`]+`|[\w.])+)\s*"
-        r"(?P<sel>(?:SELECT|WITH|FROM)\b[\s\S]+)$",
-        re.IGNORECASE,
-    )
-    def _rule_temp_table_insert(self, m):
-        if not self._is_temp_insert_target(m.group(2)):
-            return None
-        nm_i = m.group(2).replace("`", "").split(".")[-1]
-        cur_i = self.spark.table(nm_i)
-        new_i = self.sql(m.group("sel").rstrip().rstrip(";"))
-        aligned = new_i.toDF(*cur_i.columns).select(
-            [
-                F.col(c).cast(t).alias(c)
-                for c, t in cur_i.dtypes
-            ]
-        )
-        if m.group(1).upper() == "INTO":
-            aligned = cur_i.unionByName(aligned)
-        aligned.localCheckpoint(eager=True).createOrReplaceTempView(
-            nm_i
-        )
-        return self.spark.range(0).select()
 
     @_RULES.statement(_INSERT_VALUES)
     def _insert_values_hive(self, m: "re.Match"):
@@ -5030,10 +4995,10 @@ class HiveEngine:
         # present (show_create_table_temp_table.q); the engine's
         # temp tables are real, so drop them first
         db = m.group(1).lower()
-        temps = self._session_temp_tables
-        for tt in [t for t in temps if t.startswith(db + ".")]:
-            self.spark.sql(f"DROP TABLE IF EXISTS {tt}")
-            temps.discard(tt)
+        for key, phys in list(self._temp_tables.items()):
+            if key[0] == db:
+                self.spark.sql(f"DROP TABLE IF EXISTS {phys}")
+                del self._temp_tables[key]
 
     @_RULES.statement(
         r"^\s*SHOW\s+CONF\s+['\"]?([\w.]+)['\"]?\s*;?\s*$",
@@ -6111,6 +6076,7 @@ class HiveEngine:
         """
         if not self._HIVE_CREATE.match(text):
             return text
+        text = self._create_temp_table(text)
         if re.search(r"\bUSING\s+\w", text, re.IGNORECASE):
             self._stage_create(text, TableDesc())
             return text
@@ -6375,79 +6341,6 @@ class HiveEngine:
             out,
             flags=re.IGNORECASE,
         )
-        # plain CREATE TEMPORARY TABLE (HIVE-7090; no AS-SELECT): Spark
-        # would parse ``CREATE TEMPORARY TABLE ... USING`` as a legacy
-        # TEMP VIEW, which cannot take INSERTs (insert_values_tmp_table.q)
-        # — create a REAL table instead and track it for session scope.
-        tm = re.match(
-            r"^(\s*CREATE\s+)TEMPORARY\s+(TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-            r"((?:`[^`]+`|[\w.])+))",
-            out,
-            re.IGNORECASE,
-        )
-        if tm and not re.search(r"\bAS\s*\(?\s*(?:SELECT|WITH|FROM)\b", out,
-                                re.IGNORECASE):
-            out = re.sub(
-                r"^(\s*CREATE\s+)TEMPORARY\s+(TABLE\b)",
-                r"\1\2",
-                out,
-                flags=re.IGNORECASE,
-            )
-            self._session_temp_tables.add(
-                tm.group(3).replace("`", "").lower()
-            )
-            # a temp table SHADOWING an existing catalog table
-            # (temp_table_precedence.q's ttp.tab1): create under a
-            # mangled name and rewrite references until dropped
-            full_tm = tm.group(3).replace("`", "")
-            db_tm = (
-                full_tm.split(".")[0].lower()
-                if "." in full_tm
-                else self.spark.catalog.currentDatabase().lower()
-            )
-            base_tm = full_tm.split(".")[-1].lower()
-            try:
-                exists_tm = self.spark.catalog.tableExists(
-                    f"{db_tm}.{base_tm}"
-                )
-            except Exception:
-                exists_tm = False
-            if exists_tm:
-                mangled = f"tmp_shadow_{db_tm}_{base_tm}"
-                out = re.sub(
-                    rf"(?i)\b{re.escape(full_tm)}\b",
-                    f"{db_tm}.{mangled}",
-                    out,
-                    count=1,
-                )
-                self._temp_shadows[(db_tm, base_tm)] = (
-                    f"{db_tm}.{mangled}"
-                )
-            # CREATE TEMPORARY TABLE x LIKE y where y is itself a TEMP
-            # object: Spark's LIKE resolves only catalog tables
-            # (temp_table.q's ``baz LIKE foo`` after a temp CTAS) —
-            # re-express as an empty CTAS, which sees temp views
-            lk = re.match(
-                r"^\s*CREATE\s+TABLE\s+((?:`[^`]+`|[\w.])+)\s+LIKE\s+"
-                r"((?:`[^`]+`|[\w.])+)\s*;?\s*$",
-                out,
-                re.IGNORECASE,
-            )
-            if lk:
-                src_name = lk.group(2).replace("`", "")
-                try:
-                    is_temp_src = any(
-                        t.name.lower() == src_name.lower()
-                        and t.isTemporary
-                        for t in self.spark.catalog.listTables()
-                    )
-                except Exception:
-                    is_temp_src = False
-                if is_temp_src:
-                    out = (
-                        f"CREATE TABLE {lk.group(1)} USING parquet AS "
-                        f"SELECT * FROM {lk.group(2)} LIMIT 0"
-                    )
         self._stage_create(out, desc)
         return out
 
@@ -10190,57 +10083,6 @@ class HiveEngine:
             return text
         return self._rewrite_grouping_id_scope(text)
 
-    # Hive TEMPORARY TABLE AS SELECT (HiveParser temporary; session-
-    # scoped materialized table): Spark has no CTAS form for temp
-    # tables, so materialize eagerly into a checkpoint-backed temp
-    # view — same session-scoped read semantics (q195 pins the
-    # shadowing precedence; INSERT into a temp table stays
-    # unsupported, as Spark's catalog cannot express it)
-    @_RULES.statement(
-        r"^\s*CREATE\s+TEMPORARY\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-        r"([\w.]+)[\s\S]*?\bAS\b\s*(\(?\s*(?:SELECT|WITH|FROM)\b[\s\S]+)$",
-        re.IGNORECASE,
-    )
-    def _rule_create_temp_table_as_select(self, m):
-        nm_t = m.group(1).split(".")[-1]
-        df = self.spark.sql(m.group(2).rstrip().rstrip(";"))
-        df.localCheckpoint(eager=True).createOrReplaceTempView(nm_t)
-        return self._register_temp_table(m.group(1))
-
-    # plain (column-list) TEMPORARY TABLE: an empty session view
-    # with the declared schema; INSERTs are intercepted below and
-    # re-materialize the view (temp_table_precedence.q shadows a
-    # real ttp.tab1 and inserts into the temp one)
-    @_RULES.statement(
-        r"^\s*CREATE\s+TEMPORARY\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-        r"((?:`[^`]+`|[\w.])+)\s*"
-        r"\(([^()]*(?:\([^()]*\)[^()]*)*)\)\s*"
-        r"(?:USING\s+\w+\s*)?"
-        r"(?:ROW\s+FORMAT[\s\S]*?)?(?:STORED\s+AS\s+\w+\s*)?"
-        r"(?:USING\s+\w+\s*)?;?\s*$",
-        re.IGNORECASE,
-    )
-    def _rule_create_temp_table_columns(self, m):
-        if re.search(r"(?i)\bAS\s*\(?\s*SELECT", m.string):
-            return None
-        from pyspark.sql import types as T
-
-
-        nm_t = m.group(1).replace("`", "").split(".")[-1]
-        cols_t = re.sub(
-            r"(?i)\s+COMMENT\s+'[^']*'", "",
-            self._rewrite_uniontype_ddl(m.group(2)),
-        )
-        try:
-            schema_t = T.StructType.fromDDL(cols_t)
-        except Exception:
-            schema_t = None
-        if schema_t is not None:
-            self.spark.createDataFrame(
-                [], schema_t
-            ).createOrReplaceTempView(nm_t)
-            return self._register_temp_table(m.group(1))
-
     @_RULES.step
     def _autogen_ctas_aliases(self, text: str) -> str:
         """Hive's auto-generated column aliases for unaliased CTAS
@@ -10361,22 +10203,6 @@ class HiveEngine:
         "GenericUDAFRank": "rank",
         "GenericUDAFDenseRank": "dense_rank",
     }
-
-    def _register_temp_table(self, name: str):
-        """Hive temp tables are DB-SCOPED session objects: a later
-        ``SELECT * FROM <db>.<name>`` must resolve to this temp object
-        (temp_table.q's default.foo from database two) — remember the
-        creating db so reads can strip it."""
-        db, _, nm = name.replace("`", "").lower().rpartition(".")
-        try:
-            self._temp_view_dbs[nm] = (
-                db.split(".")[0] if db
-                else self.spark.catalog.currentDatabase().lower()
-            )
-        except Exception:
-            pass
-        self._temp_tables.add(nm)
-        return self.spark.range(0).select()
 
     # ---- retries: run when Spark rejects the rewritten text, in
     # _RETRIES order; each returns None when the error is not its own

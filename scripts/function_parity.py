@@ -25,10 +25,12 @@ so the audit is re-runnable as a gate.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 REGISTRY_JAVA = (
     "/root/reference/ql/src/java/org/apache/hadoop/hive/ql/exec/FunctionRegistry.java"
@@ -130,7 +132,7 @@ def main() -> int:
     for _, kind, _ in rows:
         counts[kind] = counts.get(kind, 0) + 1
 
-    with open("/root/repo/docs/FUNCTION_PARITY.md", "w") as f:
+    with open(os.path.join(REPO, "docs", "FUNCTION_PARITY.md"), "w") as f:
         f.write(
             "# Function parity vs Hive 2.1.1 FunctionRegistry\n\n"
             "Generated by scripts/function_parity.py — every name the reference\n"

@@ -129,12 +129,10 @@ def test_insert_qualified_name_hits_catalog_not_temp(eng, spark):
     eng.sql("insert into r12db.tshadow select 42")
     cat = spark.table("r12db.tshadow").collect()
     assert [r[0] for r in cat] == [42]
-    # the temp view kept only its own row
+    # the temp table kept only its own row
     tmp = spark.table("tshadow").collect()
     assert [r[0] for r in tmp] == [1]
-    spark.catalog.dropTempView("tshadow")
-    getattr(eng, "_temp_tables", set()).discard("tshadow")
-    getattr(eng, "_session_temp_tables", set()).discard("tshadow")
+    eng.sql("DROP TABLE tshadow")
     spark.sql("DROP TABLE r12db.tshadow")
     spark.sql("DROP DATABASE r12db")
 
@@ -177,3 +175,121 @@ def test_show_functions_returns_bare_name(eng, spark):
     desc = eng.sql("describe function r13fn").collect()
     assert any("session function" in r[0] for r in desc)
     eng.sql("drop temporary function r13fn")
+
+
+# ------------------------------------------------- TEMPORARY tables
+def _rows(eng, query):
+    return [tuple(r) for r in eng.sql(query).collect()]
+
+
+@pytest.mark.parametrize(
+    "create, first",
+    [
+        ("CREATE TEMPORARY TABLE tt (a int, b string)", []),
+        ("CREATE TEMPORARY TABLE tt AS SELECT 0 AS a, 'w' AS b", [(0, "w")]),
+        ("CREATE TEMPORARY TABLE tt (a int, b string) USING parquet", []),
+    ],
+    ids=["columns", "as_select", "using"],
+)
+def test_temp_table_insert_and_read(eng, spark, create, first):
+    spark.sql("DROP TABLE IF EXISTS tt")
+    eng.sql(create)
+    try:
+        eng.sql("INSERT INTO tt VALUES (1, 'x')")
+        eng.sql("INSERT INTO TABLE tt SELECT 2, 'y'")
+        for name in ("tt", "default.tt"):
+            assert _rows(eng, f"SELECT a, b FROM {name} ORDER BY a") == first + [
+                (1, "x"),
+                (2, "y"),
+            ]
+    finally:
+        eng.sql("DROP TABLE tt")
+
+
+def test_temp_table_shadows_catalog_table(eng, spark):
+    for t in ("tsh", "tsh2"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        eng.sql(f"CREATE TABLE {t} (a int)")
+    eng.sql("INSERT INTO tsh VALUES (7)")
+    eng.sql("INSERT INTO tsh2 VALUES (8)")
+    try:
+        eng.sql("CREATE TEMPORARY TABLE tsh (a int)")
+        eng.sql("INSERT INTO tsh VALUES (1)")
+        eng.sql("INSERT INTO tsh SELECT 2")
+        for name in ("tsh", "default.tsh"):
+            assert _rows(eng, f"SELECT a FROM {name} ORDER BY a") == [(1,), (2,)]
+        # dropping the temp table brings back the permanent rows
+        eng.sql("DROP TABLE tsh")
+        assert _rows(eng, "SELECT a FROM tsh") == [(7,)]
+        # a renamed shadow shadows the catalog table of its new name
+        eng.sql("CREATE TEMPORARY TABLE tsh (a int)")
+        eng.sql("INSERT INTO tsh VALUES (3)")
+        eng.sql("ALTER TABLE tsh RENAME TO tsh2")
+        assert _rows(eng, "SELECT a FROM tsh2") == [(3,)]
+        assert _rows(eng, "SELECT a FROM tsh") == [(7,)]
+        eng.sql("DROP TABLE tsh2")
+        assert _rows(eng, "SELECT a FROM tsh2") == [(8,)]
+    finally:
+        eng.sql("DROP TABLE tsh")
+        eng.sql("DROP TABLE tsh2")
+
+
+def test_shadow_rewrite_leaves_literals(eng, spark):
+    spark.sql("DROP TABLE IF EXISTS tsl")
+    eng.sql("CREATE TABLE tsl (a int)")
+    eng.sql("INSERT INTO tsl VALUES (7)")
+    eng.sql("CREATE TEMPORARY TABLE tsl (a int)")
+    try:
+        assert _rows(eng, "SELECT 'tsl', 'default.tsl', count(*) FROM tsl") == [
+            ("tsl", "default.tsl", 0)
+        ]
+    finally:
+        eng.sql("DROP TABLE tsl")
+        eng.sql("DROP TABLE tsl")
+
+
+def test_temp_table_like_temp_table(eng, spark):
+    for t in ("tlk_src", "tlk"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    eng.sql("CREATE TEMPORARY TABLE tlk_src AS SELECT 1 AS a, 'x' AS b")
+    try:
+        eng.sql("CREATE TEMPORARY TABLE tlk LIKE tlk_src")
+        assert _rows(eng, "SELECT * FROM tlk") == []
+        assert eng.sql("SELECT * FROM tlk").schema.simpleString() == (
+            "struct<a:int,b:string>"
+        )
+        eng.sql("INSERT INTO tlk VALUES (2, 'y')")
+        assert _rows(eng, "SELECT * FROM tlk") == [(2, "y")]
+    finally:
+        eng.sql("DROP TABLE IF EXISTS tlk")
+        eng.sql("DROP TABLE tlk_src")
+
+
+def test_drop_database_with_unqualified_temp_table(eng, spark):
+    spark.sql("DROP DATABASE IF EXISTS tqdb CASCADE")
+    eng.sql("CREATE DATABASE tqdb")
+    try:
+        eng.sql("USE tqdb")
+        eng.sql("CREATE TEMPORARY TABLE tq (a int)")
+        eng.sql("USE default")
+        # temp tables belong to the session, not the database
+        eng.sql("DROP DATABASE tqdb")
+        assert "tqdb" not in [r[0] for r in spark.sql("SHOW DATABASES").collect()]
+    finally:
+        spark.sql("USE default")
+        spark.sql("DROP DATABASE IF EXISTS tqdb CASCADE")
+
+
+def test_analyze_as_select_temp_table(eng, spark):
+    spark.sql("DROP TABLE IF EXISTS tan")
+    eng.sql("CREATE TEMPORARY TABLE tan AS SELECT 1 AS a")
+    try:
+        eng.sql("ANALYZE TABLE tan COMPUTE STATISTICS")
+        stats = [
+            r.data_type
+            for r in spark.sql("DESCRIBE TABLE EXTENDED tan").collect()
+            if r.col_name == "Statistics"
+        ]
+        assert stats and stats[0].endswith("1 rows")
+    finally:
+        eng.sql("DROP TABLE tan")
