@@ -260,6 +260,9 @@ class HiveEngine:
         #: table that holds it, ``db.name`` or, when it shadows a catalog
         #: table of that name, ``db.tmp_shadow_<db>_<name>``
         self._temp_tables: dict[tuple[str, str], str] = {}
+        #: the running statement's changes to ``_temp_tables`` (None
+        #: removes the entry); ``sql`` applies them once it succeeded
+        self._temp_pending: dict[tuple[str, str], str | None] = {}
         self._hostile_ids: dict[str, str] = {}
         self._view_partitions: dict[str, set] = {}
         self._db_owners: dict[str, tuple[str, str]] = {}
@@ -771,9 +774,13 @@ class HiveEngine:
         ``CREATE TEMPORARY TABLE ... USING`` as a legacy temp view, which
         takes no INSERT, LOAD or ANALYZE (insert_values_tmp_table.q).  A
         temp table SHADOWING a catalog table of its name
-        (temp_table_precedence.q's ttp.tab1) gets a mangled name that
+        (temp_table_precedence.q's ttp.tab1), or in the current database
+        a session view of its name, gets a mangled name that
         ``_rule_temp_shadows`` points references at until it is
-        dropped."""
+        dropped.  The record is staged; ``sql`` keeps it once the CREATE
+        ran.  Its data lives in the warehouse like any managed table's
+        and outlives the session unless the table is dropped: nothing
+        drops it when the session ends."""
         tm = re.match(
             r"(?i)^(\s*CREATE\s+)TEMPORARY\s+((?:EXTERNAL\s+)?TABLE\s+"
             r"(?:IF\s+NOT\s+EXISTS\s+)?)((?:`[^`]+`|[\w.])+)",
@@ -783,10 +790,18 @@ class HiveEngine:
             return ddl
         key = self._tables.key(tm.group(3))
         name, phys = tm.group(3), ".".join(key)
-        if key not in self._temp_tables and self.spark.catalog.tableExists(phys):
+        if key not in self._temp_tables and self._shadows(*key):
             name = phys = f"{key[0]}.tmp_shadow_{key[0]}_{key[1]}"
-        self._temp_tables[key] = phys
+        self._temp_pending[key] = phys
         return tm.group(1) + tm.group(2) + name + ddl[tm.end():]
+
+    def _shadows(self, db: str, table: str) -> bool:
+        """A temp table ``db.table`` would hide a catalog table, or, in
+        the current database, a session view a bare ``table`` reads."""
+        cur = self.spark.catalog.currentDatabase().lower()
+        return self.spark.catalog.tableExists(
+            table if db == cur else f"{db}.{table}"
+        )
 
     def _synthesize_avro_columns(self, out: str, desc: TableDesc) -> str:
         """AvroSerDe tables may declare NO column list — the columns come
@@ -4212,17 +4227,24 @@ class HiveEngine:
     def sql(self, text: str):
         """Run SQL — the CliDriver.processCmd equivalent (CliDriver.java:111),
         after variable substitution, macro handling, and Hive-hint
-        translation.  A CREATE or DROP TABLE changes the table store only
-        when the statement succeeded (a failed DDLTask leaves the
-        metastore untouched); nested calls stage their own change."""
-        outer, self._tables.pending = self._tables.pending, None
+        translation.  A CREATE, DROP or RENAME changes the table store and
+        the temp-table registry only when the statement succeeded (a
+        failed DDLTask leaves the metastore untouched); nested calls stage
+        their own change."""
+        outer = self._tables.pending, self._temp_pending
+        self._tables.pending, self._temp_pending = None, {}
         try:
             res = self._run_statement(text)
             if self._tables.pending is not None:
                 self._tables.settle()
+            for key, phys in self._temp_pending.items():
+                if phys is None:
+                    self._temp_tables.pop(key, None)
+                else:
+                    self._temp_tables[key] = phys
             return res
         finally:
-            self._tables.pending = outer
+            self._tables.pending, self._temp_pending = outer
 
     def _run_statement(self, text: str):
         """The prelude, then _RULES in order; text no rule answered goes
@@ -4271,41 +4293,51 @@ class HiveEngine:
 
     @_RULES.step
     def _rule_temp_shadows(self, text):
-        # DROP and RENAME keep the session's temp tables current; a temp
+        # DROP and RENAME keep the session's temp tables current (staged
+        # like CREATE's record, kept once the statement ran); a temp
         # table shadowing a catalog table lives under its mangled name,
         # and every reference is rewritten to it until it is DROPPED
         # (temp_table_precedence.q)
         if not self._temp_tables:
             return text
         dm = re.match(
-            r"(?i)^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([\w.]+)\s*;?\s*$",
+            r"(?i)^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?((?:`[^`]+`|[\w.])+)"
+            r"(?:\s+PURGE)?\s*;?\s*$",
             text,
         )
         if dm and (key := self._tables.key(dm.group(1))) in self._temp_tables:
-            phys = self._temp_tables.pop(key)
+            phys = self._temp_tables[key]
+            self._temp_pending[key] = None
             if phys == ".".join(key):
                 return text
             self._tables.pending = (phys, None)
             return self.spark.sql(f"DROP TABLE IF EXISTS {phys}")
         rn = re.match(
-            r"(?i)^\s*ALTER\s+TABLE\s+([\w.]+)\s+RENAME\s+TO\s+"
-            r"(?:\w+\.)?(\w+)\s*;?\s*$",
+            r"(?i)^\s*ALTER\s+TABLE\s+((?:`[^`]+`|[\w.])+)\s+RENAME\s+TO\s+"
+            r"((?:`[^`]+`|[\w.])+)\s*;?\s*$",
             text,
         )
         if rn and (key := self._tables.key(rn.group(1))) in self._temp_tables:
-            phys = self._temp_tables.pop(key)
-            db, new = key[0], rn.group(2).lower()
-            if phys == ".".join(key):
-                self._temp_tables[(db, new)] = f"{db}.{new}"
+            db, new = key[0], self._tables.key(rn.group(2))[1]
+            if (db, new) in self._temp_tables:
+                # SessionHiveMetaStoreClient.alterTempTable
+                raise ValueError(
+                    f"Cannot rename temporary table to {new} - temporary "
+                    "table already exists with the same name"
+                )
+            phys = self._temp_tables[key]
+            self._temp_pending[key] = None
+            if phys == ".".join(key) and not self._shadows(db, new):
+                self._temp_pending[(db, new)] = f"{db}.{new}"
                 return text
-            # renaming a SHADOW temp keeps it a shadow under the new
-            # name (temp_table_precedence.q renames tab1→tab2 over an
-            # existing real tab2)
+            # a renamed SHADOW stays one, and a temp renamed over an
+            # existing table of its new name shadows it
+            # (temp_table_precedence.q renames tab1→tab2 over a real tab2)
             mg = f"{db}.tmp_shadow_{db}_{new}"
             self.spark.sql(f"DROP TABLE IF EXISTS {mg}")
             res = self.spark.sql(f"ALTER TABLE {phys} RENAME TO {mg}")
             self._tables.rename(phys, mg)
-            self._temp_tables[(db, new)] = mg
+            self._temp_pending[(db, new)] = mg
             return res
         cur = None
         for (db, base), phys in self._temp_tables.items():

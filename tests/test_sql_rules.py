@@ -221,6 +221,9 @@ def test_temp_table_shadows_catalog_table(eng, spark):
         # dropping the temp table brings back the permanent rows
         eng.sql("DROP TABLE tsh")
         assert _rows(eng, "SELECT a FROM tsh") == [(7,)]
+        eng.sql("CREATE TEMPORARY TABLE tsh (a int)")
+        eng.sql("DROP TABLE `tsh` PURGE")
+        assert _rows(eng, "SELECT a FROM tsh") == [(7,)]
         # a renamed shadow shadows the catalog table of its new name
         eng.sql("CREATE TEMPORARY TABLE tsh (a int)")
         eng.sql("INSERT INTO tsh VALUES (3)")
@@ -232,6 +235,62 @@ def test_temp_table_shadows_catalog_table(eng, spark):
     finally:
         eng.sql("DROP TABLE tsh")
         eng.sql("DROP TABLE tsh2")
+
+
+def test_temp_table_renamed_onto_catalog_table_shadows_it(eng, spark):
+    spark.sql("DROP DATABASE IF EXISTS trdb CASCADE")
+    eng.sql("CREATE DATABASE trdb")
+    try:
+        eng.sql("CREATE TABLE trdb.u (a int)")
+        eng.sql("INSERT INTO trdb.u VALUES (5)")
+        eng.sql("CREATE TEMPORARY TABLE trdb.t (a int)")
+        eng.sql("INSERT INTO trdb.t VALUES (1)")
+        eng.sql("ALTER TABLE trdb.t RENAME TO u")
+        assert _rows(eng, "SELECT a FROM trdb.u") == [(1,)]
+        # the temp table goes with the database; the permanent one stays
+        with pytest.raises(Exception, match="SCHEMA_NOT_EMPTY"):
+            eng.sql("DROP DATABASE trdb")
+        assert _rows(eng, "SELECT a FROM trdb.u") == [(5,)]
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS trdb CASCADE")
+
+
+def test_failed_temp_ddl_leaves_no_record(eng, spark):
+    spark.sql("DROP DATABASE IF EXISTS tfdb CASCADE")
+    eng.sql("CREATE DATABASE tfdb")
+    try:
+        # a failed temp CTAS over a permanent table leaves it readable
+        eng.sql("CREATE TABLE tfdb.p (a int)")
+        eng.sql("INSERT INTO tfdb.p VALUES (7)")
+        with pytest.raises(Exception):
+            eng.sql("CREATE TEMPORARY TABLE tfdb.p AS SELECT * FROM tf_missing")
+        assert _rows(eng, "SELECT a FROM tfdb.p") == [(7,)]
+        # a failed temp CTAS, then a permanent table of its name
+        with pytest.raises(Exception):
+            eng.sql("CREATE TEMPORARY TABLE tfdb.c AS SELECT * FROM tf_missing")
+        eng.sql("CREATE TABLE tfdb.c (a int)")
+        # a failed rename, then a permanent table of the target name
+        eng.sql("CREATE TEMPORARY TABLE tfdb.t (a int)")
+        with pytest.raises(Exception):
+            eng.sql("ALTER TABLE tfdb.t RENAME TO tf_nodb.u")
+        eng.sql("CREATE TABLE tfdb.u (a int)")
+        with pytest.raises(Exception, match="SCHEMA_NOT_EMPTY"):
+            eng.sql("DROP DATABASE tfdb")
+        tables = {r.tableName for r in spark.sql("SHOW TABLES IN tfdb").collect()}
+        assert {"p", "c", "u"} <= tables
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS tfdb CASCADE")
+
+
+def test_temp_table_shadows_session_view(eng, spark):
+    n = len(_rows(eng, "SELECT * FROM region"))
+    try:
+        eng.sql("CREATE TEMPORARY TABLE region AS SELECT 99 AS r_regionkey")
+        assert _rows(eng, "SELECT r_regionkey FROM region") == [(99,)]
+        eng.sql("DROP TABLE region")
+        assert len(_rows(eng, "SELECT * FROM region")) == n
+    finally:
+        eng.register_tables()
 
 
 def test_shadow_rewrite_leaves_literals(eng, spark):
