@@ -12,12 +12,13 @@ this module only aggregates the registry.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from apache_hive_2_1_1_src_spark.queries import all_oracles, all_queries  # noqa: E402
 from apache_hive_2_1_1_src_spark.session import apply_compat_conf  # noqa: E402

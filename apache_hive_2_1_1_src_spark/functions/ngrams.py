@@ -22,31 +22,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _ngram_arrays(text: Column, n: int) -> Column:
-    """array of n-gram strings from whitespace-tokenized lowercased text.
-
-    NOTE (round 13): only use this form when the caller cannot bind the
-    words array to a column first — referencing the ``split`` inline
-    from the transform lambda makes Catalyst re-evaluate the split per
-    window index, O(words²) per row (measured 8× on q34).  Prefer
-    _grams_over_words over a projected words column."""
-    words = F.split(F.lower(text), r"\s+")
-    # slide an n-window: indices 1..size-n+1 (1-based via sequence)
-    return F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - F.lit(n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def _grams_over_words(words: Column, n: int) -> Column:
-    """The same n-window gram array, taken over an already-projected
-    words column — identical expression tree to _ngram_arrays below the
-    split, but the split is evaluated ONCE per row instead of once per
-    window index (round 13, guide §1.2: the inline subexpression was
-    re-evaluated inside the lambda — 2.86 s → 0.34 s over 5000 docs)."""
+    """Array of the n-gram strings of an already-projected words
+    column (slide an n-window over indices 1..size-n+1).  The caller
+    binds the ``split`` to a column first: referencing it inline from
+    the transform lambda made Catalyst re-evaluate the split once per
+    window index, O(words²) per row (round 13, guide §1.2: 2.86 s →
+    0.34 s over 5000 docs)."""
     return F.when(
         F.size(words) >= n,
         F.transform(

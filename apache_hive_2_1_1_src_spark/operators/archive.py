@@ -32,6 +32,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_hive_2_1_1_src_spark.sqltext import parse_partition_path
+
 ARCHIVE_NAME = "data.har.zip"
 
 #: files the FileSink leaves behind that carry no row data
@@ -153,7 +155,7 @@ def read_mixed_partitioned(
             )
         )
     for d, full in archived_parts:
-        value = d.split("=", 1)[1]
+        value = parse_partition_path(d)[0][1]
         pieces.append(
             read_archived(spark, full).withColumn(partition_col, F.lit(value))
         )

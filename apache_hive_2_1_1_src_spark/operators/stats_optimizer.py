@@ -25,7 +25,11 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from apache_hive_2_1_1_src_spark.sqltext import split_top_level
+from apache_hive_2_1_1_src_spark.sqltext import (
+    parse_partition_path,
+    spec_sql,
+    split_top_level,
+)
 
 #: SELECT <aggs> FROM <bare table> [WHERE <partition-equality conjuncts>]
 #: — no GROUP/JOIN/subquery/LIMIT.
@@ -70,8 +74,6 @@ def _partition_filtered_count(
     are partition-column equalities and EVERY matching partition carries
     ANALYZE'd numRows — the same all-or-nothing ACCURATE contract as the
     table path."""
-    from urllib.parse import unquote
-
     eqs: dict[str, str] = {}
     for conj in re.split(r"\bAND\b", where, flags=re.IGNORECASE):
         m = re.match(
@@ -99,13 +101,10 @@ def _partition_filtered_count(
         return None
     total = 0
     for p in parts:
-        kv = {
-            k.lower(): unquote(v)
-            for k, v in (seg.split("=", 1) for seg in p.split("/"))
-        }
+        kv = dict(parse_partition_path(p))
         if not all(kv.get(k) == v for k, v in eqs.items()):
             continue
-        spec = ", ".join(f"{k}='{v}'" for k, v in kv.items())
+        spec = spec_sql(kv.items())
         try:
             desc = spark.sql(
                 f"DESCRIBE TABLE EXTENDED {table} PARTITION ({spec})"
@@ -234,17 +233,14 @@ def _partition_rows(spark: SparkSession, table: str):
         rows = spark.sql(f"SHOW PARTITIONS {table}").collect()
     except Exception:
         return None, None
-    from urllib.parse import unquote
-
     tuples, names = [], None
     for r in rows:
-        parts = str(r[0]).split("/")
-        kv = [p.split("=", 1) for p in parts]
+        # the row is the escaped partition path ('01:10:10' prints
+        # 01%3A10%3A10)
+        kv = parse_partition_path(str(r[0]))
         if names is None:
             names = [k for k, _ in kv]
-        # partition spec values are URL-escaped in the catalog path
-        # (FileUtils.escapePathName — '01:10:10' prints 01%3A10%3A10)
-        tuples.append(tuple(unquote(v) for _, v in kv))
+        tuples.append(tuple(v for _, v in kv))
     return names, tuples
 
 

@@ -20,7 +20,7 @@ Two tiers, as the brief requires:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from apache_hive_2_1_1_src_spark.pipeline.dedup import _dot, _norm
@@ -28,11 +28,11 @@ from apache_hive_2_1_1_src_spark.pipeline.dedup import _dot, _norm
 # --- XXH64 (Collet's public xxHash, 64-bit variant) in pure Python ---
 # Spark's xxhash64() is XXH64 with seed 42 over the value's bytes
 # (UTF-8 for strings).  Re-deriving the hyperplane weight PARITIES here
-# lets lsh_signature ship each plane's ±1 weight vector as ONE array
-# literal instead of dim per-element hash expressions — driver-side
-# construction of those 2048 Column objects cost tens of seconds per
-# query build (round 13; tests pin _xxh64 == F.xxhash64 over the exact
-# weight-key inputs).
+# lets _lsh_signature_sql ship each plane's ±1 weight vector as ONE
+# array literal instead of dim per-element hash expressions —
+# driver-side construction of those 2048 Column objects cost tens of
+# seconds per query build (round 13; tests pin _xxh64 == F.xxhash64
+# over the exact weight-key inputs).
 
 _XP1 = 0x9E3779B185EBCA87
 _XP2 = 0xC2B2AE3D27D4EB4F
@@ -144,79 +144,20 @@ def brute_force_topk(
     )
 
 
-def _hyperplane_bit(
-    vec: Column, plane: Column | int, table: int, dim: int | None = None
-) -> Column:
-    """Sign bit of <w_plane, vec> where w_plane[d] = ±1 from
-    xxhash64(table, plane, d) parity — deterministic pseudo-random
-    hyperplanes materialized as expressions, never as driver state.
-
-    Round 13 (guide §1.2 per-task work): when ``dim`` is known (the
-    normal case — it's in the schema) and ``plane`` is a literal, the
-    ±1 weight vector is computed driver-side with the pure-Python XXH64
-    above and shipped as ONE array literal — the per-row cost drops from
-    dim hash+concat evaluations per plane to a plain zip_with
-    multiply-fold, and the driver builds one Column instead of dim of
-    them.  The weight VALUES (pinned: _xxh64 == F.xxhash64 bit 0 over
-    these exact keys), the float→double widening and the fold order are
-    identical, so every signature bit (and thus every bucket) is
-    unchanged — verified by the p07 oracle and the invariants suite.
-    ``dim`` must equal the vector width; a mismatch would zip nulls into
-    the fold, so callers pass the schema's width."""
-    if dim is not None and not isinstance(plane, Column):
-        weights = F.lit(
-            [
-                1.0 if _xxh64(f"{table}_{plane}_{d}".encode()) & 1 else -1.0
-                for d in range(dim)
-            ]
-        )
-        signed = F.aggregate(
-            F.zip_with(vec, weights, lambda x, w: x.cast("double") * w),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return F.when(signed >= 0, F.lit(1)).otherwise(F.lit(0))
-    p = plane if isinstance(plane, Column) else F.lit(plane)
-    signed = F.aggregate(
-        F.zip_with(
-            vec,
-            F.sequence(F.lit(0), F.size(vec) - 1),
-            lambda x, d: x.cast("double")
-            * F.when(
-                F.xxhash64(
-                    F.concat_ws("_", F.lit(table), p.cast("string"), d.cast("string"))
-                ).bitwiseAND(F.lit(1))
-                == 1,
-                F.lit(1.0),
-            ).otherwise(F.lit(-1.0)),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return F.when(signed >= 0, F.lit(1)).otherwise(F.lit(0))
-
-
-def lsh_signature(
-    vec: Column, num_planes: int = 12, table: int = 0, dim: int | None = None
-) -> Column:
-    """num_planes-bit bucket id for one LSH table."""
-    sig = F.lit(0)
-    for p in range(num_planes):
-        sig = sig * 2 + _hyperplane_bit(vec, p, table, dim=dim)
-    return sig
-
-
 def _lsh_signature_sql(
     vec_sql: str, num_planes: int, table: int, dim: int
 ) -> str:
-    """The lsh_signature expression rendered as ONE SQL string.
+    """num_planes-bit bucket id for one LSH table, as ONE SQL string.
 
-    Value-identical to the Column form (same literal ±1 weights, the same
-    CAST(x AS DOUBLE)*w products folded left-to-right from 0.0, the same
-    >=0 sign test and *2+bit packing) — but the driver makes one py4j
-    call per table instead of ~100 per plane; building 64 signature
-    columns the Column way cost ~4.5 s of pure driver time per query
-    (round 13, measured)."""
+    Bit p is the sign of <w_p, vec>, where w_p[d] = ±1 from the parity
+    of xxhash64("{table}_{p}_{d}"): deterministic pseudo-random
+    hyperplanes.  The weights are computed driver-side with the
+    pure-Python XXH64 above and shipped as array literals; the
+    CAST(x AS DOUBLE)*w products fold left-to-right from 0.0, a >=0 sign
+    test gives the bit, and bits pack as sig*2+bit.  One SQL string
+    makes one py4j call per table; building the same 64 signature
+    columns as Column objects cost ~4.5 s of pure driver time per query
+    (round 13, measured).  ``dim`` must equal the vector width."""
     bits = []
     for p in range(num_planes):
         w = ", ".join(
@@ -248,7 +189,7 @@ def lsh_bucketed_ann(
     """Approximate top-k: score only candidates sharing an LSH bucket with
     the query in at least one of ``num_tables`` tables.  ``dim`` (the
     embedding width, known from the schema) lets the hyperplane weights
-    constant-fold — see _hyperplane_bit."""
+    constant-fold — see _lsh_signature_sql."""
     buckets_sql = "array({})".format(
         ", ".join(
             _lsh_signature_sql(vec_col, num_planes, t, dim)

@@ -747,21 +747,9 @@ class QFileReport:
         return self.error is None and not self.mismatches
 
 
-def _statements(qtext: str, eng):
-    stmts = eng.split_statements(qtext)
-    hooked, others = [], []
-    for s in stmts:
-        # classify on the first non-comment line (a dfs/set behind a
-        # leading comment block is still unhooked)
-        bare = "\n".join(
-            ln for ln in s.splitlines() if not re.match(r"^\s*--", ln)
-        ).strip()
-        (others if _UNHOOKED.match(bare) else hooked).append(s)
-    return hooked, others
-
-
 def _statements_ordered(qtext: str, eng):
-    """Like :func:`_statements` but preserving interleave order —
+    """(hooked, statement) pairs in script order; a statement is
+    unhooked when its first non-comment line is a dfs/set command.
     QTestUtil runs dfs commands in sequence with queries, and their
     output (``Found N items`` from ``dfs -ls``) lands in the PRECEDING
     query's golden block."""

@@ -42,13 +42,20 @@ from apache_hive_2_1_1_src_spark.sqltext import (
     column_specs,
     concat_adjacent_literals,
     paren_depths,
+    parse_partition_path,
+    parse_partition_spec,
+    partition_path,
+    partition_value,
     rewrite_calls,
     search_top_level,
+    spec_sql,
     split_conjuncts,
     split_literals,
     split_statements,
     split_top_level,
+    sql_string,
     sub_outside_quotes,
+    sub_relation,
     unescape,
     write_target,
 )
@@ -1353,33 +1360,23 @@ class HiveEngine:
             "CASE " + " ".join(whens) + f" ELSE {probe} END"
         )
 
-    def _partition_spec_cond(self, tbl: str, spec: str):
-        """Build (condition, normalized-spec-dict) from an ALTER/DDL
-        partition spec.  Bare keys (``PARTITION (part)``) match every
+    @staticmethod
+    def _partition_cond(pairs):
+        """The condition selecting the rows of the partitions that
+        (key, value) pairs name (``sqltext.parse_partition_spec``), or
+        None when no key has a value.  A bare key matches every
         partition; ``__HIVE_DEFAULT_PARTITION__`` matches the NULL
-        partition; numeric literal suffixes (110Y/22000S/330L) are
-        stripped like HiveParser's constant handling."""
-        cond, norm = None, {}
-        for kv in split_top_level(spec):
-            kv = kv.strip()
-            if not kv:
+        partition."""
+        cond = None
+        for k, v in pairs:
+            if v is None:
                 continue
-            if "=" not in kv:
-                norm[kv.strip("`").lower()] = None
-                continue
-            k, v = kv.split("=", 1)
-            k = k.strip().strip("`")
-            v = v.strip()
-            if re.match(r"(?i)^[\d.+-]+[YSL]$", v):
-                v = v[:-1]
-            v = v.strip("'\"")
-            norm[k.lower()] = v
             if v == "__HIVE_DEFAULT_PARTITION__":
                 c = F.col(k).isNull()
             else:
                 c = F.col(k).cast("string").eqNullSafe(F.lit(v))
             cond = c if cond is None else (cond & c)
-        return cond, norm
+        return cond
 
     # ---------- schema-on-read raw-text layer (partitioned TEXT DDL) --
     #
@@ -1687,7 +1684,8 @@ class HiveEngine:
         DDLSemanticAnalyzer.java alterTableModifyCols (partition spec
         path)."""
         full = self.spark.table(tbl)
-        cond, norm = self._partition_spec_cond(tbl, spec)
+        pairs = parse_partition_spec(spec)
+        cond, norm = self._partition_cond(pairs), dict(pairs)
         src = next(
             (
                 f
@@ -1732,7 +1730,8 @@ class HiveEngine:
         unchanged (alter_partition_change_col.q's trailing replace)."""
         full = self.spark.table(tbl)
         pcols = {c.lower() for c in self._table_partition_cols(tbl)}
-        cond, norm = self._partition_spec_cond(tbl, spec)
+        pairs = parse_partition_spec(spec)
+        cond, norm = self._partition_cond(pairs), dict(pairs)
         data_fields = [
             f for f in full.schema.fields if f.name.lower() not in pcols
         ]
@@ -2329,10 +2328,9 @@ class HiveEngine:
             if partition_spec:
                 # analyzeAlterTablePartMergeFiles: merge ONE partition's
                 # files; dynamic overwrite swaps only that partition back
-                cond = " AND ".join(
-                    kv.strip() for kv in partition_spec.split(",") if kv.strip()
+                part = self.spark.table(tbl).filter(
+                    self._partition_cond(parse_partition_spec(partition_spec))
                 )
-                part = self.spark.table(tbl).filter(cond)
                 part.coalesce(target).write.mode("overwrite").parquet(stage)
                 staged = self.spark.read.parquet(stage).select(
                     self.spark.table(tbl).columns
@@ -2848,16 +2846,7 @@ class HiveEngine:
         partition's rows."""
         full = self.spark.table(tbl)
         types = dict(full.dtypes)
-        cond = None
-        if spec:
-            for kv in split_top_level(spec):
-                if "=" not in kv:
-                    continue  # bare key: no constraint on that column
-                k, v = kv.split("=", 1)
-                c = F.col(k.strip().strip("`")) == F.lit(
-                    v.strip().strip("'\"")
-                )
-                cond = c if cond is None else (cond & c)
+        cond = self._partition_cond(parse_partition_spec(spec or ""))
         if cols:
             targets = {
                 c.strip().strip("`").lower() for c in cols.split(",")
@@ -2879,14 +2868,9 @@ class HiveEngine:
                     sel.append(F.col(c))
             self._cow_overwrite(tbl, full.select(sel))
         else:
-            # ~cond is NULL (not False) for rows whose partition column
-            # is NULL (__HIVE_DEFAULT_PARTITION__) — coalesce so those
-            # rows survive a truncate of an UNRELATED partition
-            keep = (
-                full.filter(~F.coalesce(cond, F.lit(False)))
-                if cond is not None
-                else full.limit(0)
-            )
+            # cond is never NULL (null-safe), so the NULL partition's
+            # rows survive a truncate of an unrelated partition
+            keep = full.filter(~cond) if cond is not None else full.limit(0)
             self._cow_overwrite(tbl, keep)
         return self.spark.range(0).select()
 
@@ -3263,7 +3247,7 @@ class HiveEngine:
                 col, op, val = (
                     im.group(1).lower(),
                     im.group(2).lower(),
-                    im.group(3).strip().strip("'\""),
+                    partition_value(im.group(3)),
                 )
                 if col not in [n.lower() for n in names]:
                     return False
@@ -3297,15 +3281,10 @@ class HiveEngine:
             )
         for tup in to_drop:
             # values may contain quotes/backslashes (escape1.q drops a
-            # partition per ASCII char) — escape for the SQL literal
-            full_spec = ", ".join(
-                "`{}`='{}'".format(
-                    n, v.replace("\\", "\\\\").replace("'", "\\'")
-                )
-                for n, v in zip(names, tup)
-            )
+            # partition per ASCII char)
             self.spark.sql(
-                f"ALTER TABLE {tbl} DROP IF EXISTS PARTITION ({full_spec})"
+                f"ALTER TABLE {tbl} DROP IF EXISTS PARTITION "
+                f"({spec_sql(zip(names, tup))})"
             )
         return self.spark.range(0).select()
 
@@ -3469,22 +3448,17 @@ class HiveEngine:
             if idx < len(entries):
                 path = os.path.join(d, entries[idx])
         full = self.spark.table(tbl)
-        pcols: list[str] = []
-        pvals: dict[str, str] = {}
-        if partition_spec:
-            for kv in partition_spec.split(","):
-                k, v = kv.split("=", 1)
-                pvals[k.strip()] = v.strip().strip("'\"")
-            pcols = list(pvals)
+        pvals = dict(parse_partition_spec(partition_spec or ""))
+        pcols = list(pvals)
         from pyspark.sql import types as T
 
-        if pvals and self._sor_load_data(
-            tbl, path, overwrite, {k.lower(): v for k, v in pvals.items()}
-        ):
+        if pvals and self._sor_load_data(tbl, path, overwrite, pvals):
             self._stats_autogather_target(tbl)
             self._track_default_partition(tbl=tbl)
             return self.spark.range(0).select()
-        data_fields = [f for f in full.schema.fields if f.name not in pcols]
+        data_fields = [
+            f for f in full.schema.fields if f.name.lower() not in pcols
+        ]
         schema = T.StructType(data_fields)
         desc = self._tables.read(tbl)
         # LOAD DATA is a file MOVE in Hive — the file arrives in whatever
@@ -3667,8 +3641,9 @@ class HiveEngine:
                 if overwrite:
                     hist.clear()
                 hist.append((path, partition_spec))
+        types = {c.lower(): t for c, t in full.dtypes}
         for k, v in pvals.items():
-            df = df.withColumn(k, F.lit(v).cast(dict(full.dtypes)[k]))
+            df = df.withColumn(k, F.lit(v).cast(types[k]))
         # HiveChar/HiveVarchar TRUNCATE overlong values silently
         # (enforce via substring — Spark's char/varchar write check
         # ERRORs instead: avro_charvarchar.q / escape3.q)
@@ -4033,24 +4008,11 @@ class HiveEngine:
         if loc is None:
             raise ValueError(f"cannot resolve the location of table {tbl}")
         if partition_spec:
-            pairs = [
-                (
-                    kv.split("=", 1)[0].strip().strip("`"),
-                    kv.split("=", 1)[1].strip().strip("'\""),
-                )
-                for kv in split_top_level(partition_spec)
-                if "=" in kv
-            ]
-            loc = os.path.join(
-                loc,
-                *[
-                    f"{k}={self._escape_path_name(v)}"
-                    for k, v in pairs
-                ],
-            )
-            lit = ", ".join(f"{k}='{v}'" for k, v in pairs)
+            pairs = parse_partition_spec(partition_spec)
+            loc = self._partition_dir(tbl, loc, pairs)
             self.spark.sql(
-                f"ALTER TABLE {tbl} ADD IF NOT EXISTS PARTITION ({lit})"
+                f"ALTER TABLE {tbl} ADD IF NOT EXISTS PARTITION "
+                f"({spec_sql(pairs)})"
             )
         os.makedirs(loc, exist_ok=True)
         if overwrite:
@@ -4296,8 +4258,8 @@ class HiveEngine:
         # DROP and RENAME keep the session's temp tables current (staged
         # like CREATE's record, kept once the statement ran); a temp
         # table shadowing a catalog table lives under its mangled name,
-        # and every reference is rewritten to it until it is DROPPED
-        # (temp_table_precedence.q)
+        # and every table reference is rewritten to it until it is
+        # DROPPED (temp_table_precedence.q)
         if not self._temp_tables:
             return text
         dm = re.match(
@@ -4348,9 +4310,7 @@ class HiveEngine:
             )
             cur = cur or self.spark.catalog.currentDatabase().lower()
             if cur == db:
-                text = sub_outside_quotes(
-                    rf"(?i)(?<![\w.`]){re.escape(base)}(?![\w.`])", phys, text
-                )
+                text = sub_relation(text, base, phys)
         return text
 
     @_RULES.statement(
@@ -4629,22 +4589,14 @@ class HiveEngine:
         rows = [(r + [None] * arity)[:arity] for r in rows]
         pcols = [c.lower() for c in self._table_partition_cols(tbl)]
         spec = m.group("spec") or ""
-        static_parts, dynamic_parts = [], []
-        for item in split_top_level(spec):
-            kv = item.split("=", 1)
-            if len(kv) == 2 and kv[1].strip():
-                static_parts.append(item.strip())
-            elif item.strip():
-                dynamic_parts.append(kv[0].strip().strip("`").lower())
-        if spec and not static_parts and not dynamic_parts:
+        pairs = parse_partition_spec(spec)
+        if spec and not pairs:
             return None
+        static = {k: v for k, v in pairs if v is not None}
+        dynamic_parts = [k for k, v in pairs if v is None]
         if not spec:
             # unpartitioned, or fully dynamic when the table has pcols
             dynamic_parts = list(pcols)
-        static_names = {
-            p.split("=", 1)[0].strip().strip("`").lower()
-            for p in static_parts
-        }
 
         def declared_type(f) -> str:
             try:
@@ -4703,12 +4655,6 @@ class HiveEngine:
         frozen_info = self._tables.read(tbl).part_frozen
         frozen_cond = None
         if frozen_info:
-            spec_map = {}
-            for p in static_parts:
-                k, v = p.split("=", 1)
-                spec_map[k.strip().strip("`").lower()] = (
-                    v.strip().strip("'\"")
-                )
             # per-partition-column SQL: static literal or the row's
             # dynamic value column (dynamic values trail the data cols)
             psql, ok = {}, True
@@ -4717,8 +4663,8 @@ class HiveEngine:
             )
             jf = 0
             for pname in frozen_info["pcols"]:
-                if pname in spec_map:
-                    psql[pname] = "'" + spec_map[pname] + "'"
+                if pname in static:
+                    psql[pname] = sql_string(static[pname])
                 elif pname in [d.lower() for d in dynamic_parts]:
                     if explicit and pname in (explicit or []):
                         idx = explicit.index(pname) + 1
@@ -4824,13 +4770,11 @@ class HiveEngine:
                 + f" AS `{pf.name if pf else pname}`"
             )
         part_clause = (
-            f" PARTITION ({', '.join(static_parts + dynamic_parts)})"
-            if (static_parts or (dynamic_parts and spec))
-            else (
-                f" PARTITION ({', '.join(dynamic_parts)})"
-                if dynamic_parts
-                else ""
+            " PARTITION ({})".format(
+                spec_sql([*static.items(), *((d, None) for d in dynamic_parts)])
             )
+            if static or dynamic_parts
+            else ""
         )
         stmt = (
             f"INSERT {'OVERWRITE' if mode == 'OVERWRITE' else 'INTO'} TABLE "
@@ -4947,19 +4891,9 @@ class HiveEngine:
                 ]
             except Exception:
                 prows = []
-            import urllib.parse as _up
-
             for prow in prows:
                 try:
-                    spec_rn = ", ".join(
-                        "`{}`='{}'".format(
-                            kv.split("=", 1)[0],
-                            _up.unquote(kv.split("=", 1)[1])
-                            .replace("\\", "\\\\")
-                            .replace("'", "\\'"),
-                        )
-                        for kv in prow.split("/")
-                    )
+                    spec_rn = spec_sql(parse_partition_path(prow))
                     loc_p = next(
                         r.data_type
                         for r in self.spark.sql(
@@ -5268,12 +5202,9 @@ class HiveEngine:
         from pyspark.sql import types as T
 
         full = self.spark.table(tbl)
-        pnames = {
-            kv.split("=", 1)[0].strip().strip("`").lower()
-            for kv in split_top_level(spec)
-        }
+        pvals = dict(parse_partition_spec(spec))
         data = T.StructType(
-            [f for f in full.schema.fields if f.name.lower() not in pnames]
+            [f for f in full.schema.fields if f.name.lower() not in pvals]
         )
         if skips:
             from apache_hive_2_1_1_src_spark.io import read_hive_text_skips
@@ -5288,13 +5219,9 @@ class HiveEngine:
             )
         else:
             df = self.spark.read.schema(data).parquet(*nested)
-        for kv in split_top_level(spec):
-            k, v = kv.split("=", 1)
-            kn = k.strip().strip("`")
-            df = df.withColumn(
-                kn,
-                F.lit(v.strip().strip("'\"")).cast(full.schema[kn].dataType),
-            )
+        types = {c.lower(): t for c, t in full.dtypes}
+        for k, v in pvals.items():
+            df = df.withColumn(k, F.lit(v).cast(types[k]))
         df.select(full.columns).write.insertInto(tbl)
         return self.spark.range(0).select()
 
@@ -5310,12 +5237,9 @@ class HiveEngine:
     )
     def _rule_exchange_partition(self, m):
         dst, spec, src = m.groups()
-        cond = " AND ".join(
-            f"{kv.split('=', 1)[0].strip()} = "
-            f"{kv.split('=', 1)[1].strip()}"
-            for kv in split_top_level(spec)
+        moved = self.spark.table(src).filter(
+            self._partition_cond(parse_partition_spec(spec))
         )
-        moved = self.spark.table(src).filter(cond)
         prev = self.spark.conf.get(
             "spark.sql.sources.partitionOverwriteMode", "STATIC"
         )
@@ -5349,11 +5273,7 @@ class HiveEngine:
         parts = self._view_partitions.setdefault(
             view.replace("`", "").lower(), set()
         )
-        norm = "/".join(
-            f"{kv.split('=', 1)[0].strip()}="
-            + kv.split("=", 1)[1].strip().strip("'\"")
-            for kv in split_top_level(spec)
-        )
+        norm = partition_path(parse_partition_spec(spec))
         if action.upper() == "ADD":
             parts.add(norm)
         else:
@@ -5381,13 +5301,9 @@ class HiveEngine:
                 self._view_partitions.get(skey, set())
             )
             if sm.group(2):  # PARTITION(spec) filter form
-                want = {
-                    f"{kv.split('=', 1)[0].strip()}="
-                    + kv.split("=", 1)[1].strip().strip("'\"")
-                    for kv in split_top_level(sm.group(2))
-                }
+                want = set(parse_partition_spec(sm.group(2)))
                 vals = [
-                    v for v in vals if want <= set(v.split("/"))
+                    v for v in vals if want <= set(parse_partition_path(v))
                 ]
             return self.spark.createDataFrame(
                 [(v,) for v in vals] or [("",)], "partition string"
@@ -5597,7 +5513,7 @@ class HiveEngine:
     )
     def _rule_alter_partition_add_columns(self, m):
         tbl_pa, spec_pa, cl_pa = m.groups()
-        _, norm_pa = self._partition_spec_cond(tbl_pa, spec_pa)
+        norm_pa = dict(parse_partition_spec(spec_pa))
         cols_pa = column_specs(cl_pa)
         if self._sor_activate(tbl_pa):
             self._sor_update_partitions(tbl_pa, norm_pa, "add", cols_pa)
@@ -8875,13 +8791,9 @@ class HiveEngine:
             )
         if do_repair:
             for p in missing_m:
-                spec_m = ", ".join(
-                    "{}='{}'".format(*kv.split("=", 1))
-                    for kv in p.split("/")
-                )
                 self.spark.sql(
                     f"ALTER TABLE {tbl_m} ADD IF NOT EXISTS "
-                    f"PARTITION ({spec_m})"
+                    f"PARTITION ({spec_sql(parse_partition_path(p))})"
                 )
                 lines_m.append(
                     "Repair: Added partition to metastore "
@@ -10553,25 +10465,6 @@ class HiveEngine:
             self._tables.edit(tbl).default_part_masks = masks
             return True
 
-    #: chars Hive escapes in partition path names
-    #: (common/src/java/org/apache/hadoop/hive/common/FileUtils.java
-    #: escapePathName char set: all control chars plus the reserved list)
-    _PATH_ESCAPE_CHARS = frozenset(
-        [chr(c) for c in range(0x20)]
-        + [chr(0x7F), '"', "#", "%", "'", "*", "/", ":", "=", "?", "\\",
-           "{", "[", "]", "^"]
-    )
-
-    @classmethod
-    def _escape_path_name(cls, v: str) -> str:
-        """Hive FileUtils.escapePathName: %XX-escape every reserved or
-        control character in a partition value before it becomes a
-        directory name."""
-        return "".join(
-            f"%{ord(ch):02X}" if ch in cls._PATH_ESCAPE_CHARS else ch
-            for ch in v
-        )
-
     def _insert_nul_partition_fallback(self, text: str, err: Exception):
         """Dynamic-partition INSERT whose partition VALUE contains NUL
         (escape1.q/escape2.q write one partition per ASCII character).
@@ -10597,15 +10490,9 @@ class HiveEngine:
         tbl = m.group("tbl")
         overwrite = m.group("mode").upper() == "OVERWRITE"
         pcols = self._table_partition_cols(tbl)
-        static, dynamic = [], []
-        for kv in split_top_level(m.group("spec")):
-            if "=" in kv:
-                k, v = kv.split("=", 1)
-                static.append(
-                    (k.strip().strip("`").lower(), v.strip().strip("'\""))
-                )
-            else:
-                dynamic.append(kv.strip().strip("`").lower())
+        pairs = parse_partition_spec(m.group("spec"))
+        static = [(k, v) for k, v in pairs if v is not None]
+        dynamic = [k for k, v in pairs if v is None]
         if not dynamic:
             raise err
         full = self.spark.table(tbl)
@@ -10654,27 +10541,16 @@ class HiveEngine:
         import shutil
 
         for row in combos:
-            spec_pairs = static + [(d, row[d]) for d in dynamic]
-            d_path = os.path.join(
-                loc,
-                *[f"{k}={self._escape_path_name(v)}" for k, v in spec_pairs],
-            )
-            cond = None
-            for dcol in dynamic:
-                c = F.col(dcol).cast("string") == F.lit(row[dcol])
-                cond = c if cond is None else (cond & c)
-            sub = df_bad.filter(cond).select(
+            row_pairs = [(d, row[d]) for d in dynamic]
+            spec_pairs = static + row_pairs
+            d_path = self._partition_dir(tbl, loc, spec_pairs)
+            sub = df_bad.filter(self._partition_cond(row_pairs)).select(
                 [F.col(c).cast(types[c]).alias(c) for c in datacols]
             )
             if overwrite and os.path.isdir(d_path):
                 shutil.rmtree(d_path)
             sub.write.mode("append").parquet(d_path)
-            lit_spec = ", ".join(
-                "{}='{}'".format(
-                    k, v.replace("\\", "\\\\").replace("'", "\\'")
-                )
-                for k, v in spec_pairs
-            )
+            lit_spec = spec_sql(spec_pairs)
             self.spark.sql(
                 f"ALTER TABLE {tbl} DROP IF EXISTS PARTITION ({lit_spec})"
             )
@@ -10728,6 +10604,17 @@ class HiveEngine:
         except Exception:
             return None
 
+    def _partition_dir(self, tbl: str, loc: str, pairs) -> str:
+        """The directory of tbl's partition ``pairs`` under the table
+        location loc (loc itself for no pairs).  Spark spells each key
+        as the table declares it."""
+        if not pairs:
+            return loc
+        names = {c.lower(): c for c in self.spark.table(tbl).columns}
+        return os.path.join(
+            loc, partition_path((names.get(k, k), v) for k, v in pairs)
+        )
+
     def _orc_split_fixup(self, text: str) -> bool | None:
         """Match Hive's MR mapper count in ORC→ORC insert file counts
         (qtest sessions only — the orc_merge family pins 'Found N
@@ -10764,9 +10651,8 @@ class HiveEngine:
         src = srcs[-1]
         wm = re.search(r"\bWHERE\s+([\s\S]*?);?\s*$", text, re.IGNORECASE)
         where = wm.group(1) if wm else None
-        if pspec and any(
-            "=" not in kv for kv in pspec.split(",") if kv.strip()
-        ):
+        pairs = parse_partition_spec(pspec or "")
+        if any(v is None for _, v in pairs):
             return  # dynamic partitions: per-split row routing differs
         if not (self._is_orc(tgt) and self._is_orc(src)):
             return
@@ -10836,15 +10722,7 @@ class HiveEngine:
             return  # predicate or schema not expressible — keep files
         if n_files == 0:
             return
-        part_dir = tgt_loc
-        if pspec:
-            for kv in pspec.split(","):
-                k, v = kv.split("=", 1)
-                part_dir = os.path.join(
-                    part_dir,
-                    f"{k.strip().strip('`')}="
-                    + self._escape_path_name(v.strip().strip("'\"")),
-                )
+        part_dir = self._partition_dir(tgt, tgt_loc, pairs)
         if mode.upper() == "OVERWRITE":
             total = n_files
         else:

@@ -272,6 +272,70 @@ def rewrite_calls(
     return "".join(out)
 
 
+#: the words a table reference follows
+_RELATION_WORDS = frozenset(
+    "FROM JOIN TABLE INTO OVERWRITE UPDATE LIKE IN DESCRIBE DESC EXTENDED "
+    "FORMATTED PARTITIONS TBLPROPERTIES".split()
+)
+_LAST_TOKEN = re.compile(r"(\w+|\S)\s*$")
+_CLAUSE_OR_PAREN = re.compile(
+    r"\b(?:SELECT|FROM|WHERE|GROUP|ORDER|SORT|CLUSTER|DISTRIBUTE|HAVING"
+    r"|WINDOW|LIMIT|VALUES|SET|LATERAL)\b|[()]",
+    re.IGNORECASE,
+)
+#: what may follow a FROM item that has no alias
+_NOT_ALIAS = (
+    "WHERE|GROUP|ORDER|SORT|CLUSTER|DISTRIBUTE|HAVING|WINDOW|LIMIT|JOIN"
+    "|LEFT|RIGHT|FULL|INNER|CROSS|OUTER|SEMI|ANTI|NATURAL|ON|USING|UNION"
+    "|INTERSECT|EXCEPT|MINUS|LATERAL|TABLESAMPLE|INSERT|SELECT|PIVOT|UNPIVOT"
+)
+_ALIAS = re.compile(
+    rf"\s+(?:AS\b|`|(?!(?:{_NOT_ALIAS})\b)[A-Za-z_])", re.IGNORECASE
+)
+
+
+def _in_from_list(code: str, pos: int) -> bool:
+    """True when the clause holding pos (same paren level) is a FROM."""
+    depth = 0
+    for m in reversed(list(_CLAUSE_OR_PAREN.finditer(code, 0, pos))):
+        t = m.group()
+        if t == ")":
+            depth += 1
+        elif t == "(":
+            if depth == 0:
+                return False
+            depth -= 1
+        elif depth == 0:
+            return t.upper() == "FROM"
+    return False
+
+
+def sub_relation(text: str, name: str, repl: str) -> str:
+    """Replace each unquoted, unqualified reference to table ``name``
+    that stands where a table goes: after FROM, JOIN, TABLE, INTO, ...
+    or a comma of a FROM list.  A column, alias or qualifier of that
+    spelling stays; when the text qualifies a column with ``name``
+    (``name.col``), a FROM or JOIN reference without an alias keeps
+    ``name`` as its alias."""
+    code = _OPAQUE_RE.sub(lambda m: " " * len(m.group()), text)
+    word = rf"(?<![\w.]){re.escape(name)}"
+    qualifies = re.search(word + r"\s*\.", code, re.IGNORECASE)
+    out, last = [], 0
+    for m in re.finditer(word + r"(?![\w.])", code, re.IGNORECASE):
+        prev = _LAST_TOKEN.search(code, 0, m.start())
+        tok = prev.group(1).upper() if prev else ""
+        in_from = tok in ("FROM", "JOIN") or (
+            tok == "," and _in_from_list(code, prev.start())
+        )
+        if not in_from and tok not in _RELATION_WORDS:
+            continue
+        alias = in_from and qualifies and not _ALIAS.match(text, m.end())
+        out += [text[last : m.start()], repl + (" " + m.group() if alias else "")]
+        last = m.end()
+    out.append(text[last:])
+    return "".join(out)
+
+
 _WRITE_HEAD = re.compile(
     r"\s*(?:INSERT\s+(?P<mode>INTO|OVERWRITE)"
     r"(?:\s+TABLE|(?!\s+(?:LOCAL\s+)?DIRECTORY\b))"
@@ -377,3 +441,92 @@ def unescape(raw: str) -> str:
     ``\\001``, ``\\u0001``, ...).  An unknown escape stays literal: Hive's
     default null token ``\\N`` is a backslash and an N."""
     return _ESCAPE_RE.sub(_unescape_one, raw)
+
+
+# ------------------------------------------------------------- partitions
+#
+# A partition is one value per partition key (metastore Partition.values).
+# Spec text ``k='v', k2=2`` and the directory path ``k=v/k2=2`` are two
+# spellings of the same (key, value) pairs: the parsers lowercase the
+# keys and decode the values to the strings the metastore keeps.
+
+_NUMERIC_SUFFIX = re.compile(r"[\d.+-]+[YSL]", re.IGNORECASE)
+_QUOTED = re.compile(r"""'((?:[^'\\]|\\.)*)'|"((?:[^"\\]|\\.)*)\"""", re.S)
+
+
+def partition_value(raw: str) -> str:
+    """One partition-spec literal decoded as HiveParser does: a quoted
+    literal loses its quotes and backslash escapes, a number its
+    ``Y``/``S``/``L`` suffix (``110Y`` is ``110``)."""
+    raw = raw.strip()
+    m = _QUOTED.fullmatch(raw)
+    if m:
+        return unescape(m.group(1) if m.group(1) is not None else m.group(2))
+    if _NUMERIC_SUFFIX.fullmatch(raw):
+        return raw[:-1]
+    return raw
+
+
+def parse_partition_spec(text: str) -> list[tuple[str, str | None]]:
+    """The (key, value) pairs of a ``PARTITION (...)`` clause's inner
+    text, in order; a bare key (a dynamic partition) has value None."""
+    out = []
+    for item in split_top_level(text):
+        key, eq, value = item.partition("=")
+        key = key.strip().strip("`").lower()
+        out.append((key, partition_value(value) if eq else None))
+    return out
+
+
+def sql_string(v: str) -> str:
+    """v as a single-quoted literal, backslashes and quotes escaped."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def spec_sql(pairs) -> str:
+    """Pairs rendered as spec text, `` `k`='v' ``; a None value renders
+    the bare key."""
+    return ", ".join(
+        f"`{k}`" if v is None else f"`{k}`={sql_string(v)}" for k, v in pairs
+    )
+
+
+#: the characters FileUtils.escapePathName escapes in a partition path:
+#: every control character plus the reserved list
+_PATH_ESCAPE_CHARS = frozenset(
+    [chr(c) for c in range(0x20)]
+    + [chr(0x7F), '"', "#", "%", "'", "*", "/", ":", "=", "?", "\\",
+       "{", "[", "]", "^"]
+)
+_PATH_ESCAPED = re.compile(r"%([0-9A-Fa-f]{2})")
+
+
+def escape_path_name(s: str) -> str:
+    """FileUtils.escapePathName: ``%XX`` for each reserved or control
+    character, so a key or value can be a directory name."""
+    return "".join(
+        f"%{ord(c):02X}" if c in _PATH_ESCAPE_CHARS else c for c in s
+    )
+
+
+def unescape_path_name(s: str) -> str:
+    """FileUtils.unescapePathName: decode every ``%XX``."""
+    return _PATH_ESCAPED.sub(lambda m: chr(int(m.group(1), 16)), s)
+
+
+def partition_path(pairs) -> str:
+    """Pairs as the relative directory ``k=v/k2=v2``, both sides
+    escaped."""
+    return "/".join(
+        f"{escape_path_name(k)}={escape_path_name(v)}" for k, v in pairs
+    )
+
+
+def parse_partition_path(path: str) -> list[tuple[str, str]]:
+    """The (key, value) pairs of a partition path ``k=v/k2=v2`` (a
+    ``SHOW PARTITIONS`` row, a directory under the table), unescaped."""
+    out = []
+    for seg in path.strip("/").split("/"):
+        key, _, value = seg.partition("=")
+        out.append((unescape_path_name(key).lower(), unescape_path_name(value)))
+    return out

@@ -22,8 +22,14 @@ TABLES = (
 
 
 @pytest.fixture(scope="session")
-def spark():
-    spark = build_session(app_name="pytest-hive-spark", shuffle_partitions=8)
+def spark(tmp_path_factory):
+    # a fresh warehouse per run: managed tables a failed run leaves
+    # behind cannot collide with the next run's CREATEs
+    spark = build_session(
+        app_name="pytest-hive-spark",
+        shuffle_partitions=8,
+        warehouse_dir=str(tmp_path_factory.mktemp("warehouse")),
+    )
     yield spark
 
 

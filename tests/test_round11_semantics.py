@@ -26,6 +26,7 @@ import os
 import pytest
 
 from apache_hive_2_1_1_src_spark.session import HiveEngine
+from apache_hive_2_1_1_src_spark.sqltext import escape_path_name
 
 
 @pytest.fixture(scope="module")
@@ -54,12 +55,12 @@ def test_nul_partition_value_write_and_listing(eng, spark, tmp_path_factory):
     spark.sql("DROP TABLE IF EXISTS r11_nul_t")
 
 
-def test_escape_path_name_matches_hive_charset(eng):
+def test_escape_path_name_matches_hive_charset():
     # FileUtils.java escapePathName reserved set
-    assert HiveEngine._escape_path_name("\x00") == "%00"
-    assert HiveEngine._escape_path_name("a/b") == "a%2Fb"
-    assert HiveEngine._escape_path_name("x y") == "x y"  # space kept
-    assert HiveEngine._escape_path_name("[k]") == "%5Bk%5D"
+    assert escape_path_name("\x00") == "%00"
+    assert escape_path_name("a/b") == "a%2Fb"
+    assert escape_path_name("x y") == "x y"  # space kept
+    assert escape_path_name("[k]") == "%5Bk%5D"
 
 
 # --------------------------------------------------- varchar/char casts

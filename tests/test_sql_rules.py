@@ -352,3 +352,178 @@ def test_analyze_as_select_temp_table(eng, spark):
         assert stats and stats[0].endswith("1 rows")
     finally:
         eng.sql("DROP TABLE tan")
+
+
+def test_shadow_rewrite_only_relation_references(eng, spark):
+    for t in ("tsq", "tsq_other"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    eng.sql("CREATE TABLE tsq (a int)")
+    eng.sql("INSERT INTO tsq VALUES (7)")
+    eng.sql("CREATE TABLE tsq_other (tsq int)")
+    eng.sql("INSERT INTO tsq_other VALUES (5)")
+    eng.sql("CREATE TEMPORARY TABLE tsq (a int)")
+    try:
+        eng.sql("INSERT INTO tsq VALUES (1)")
+        # the shadowed name stays a qualifier, a column and an alias
+        assert _rows(eng, "SELECT tsq.a FROM tsq") == [(1,)]
+        assert _rows(eng, "SELECT tsq FROM tsq_other") == [(5,)]
+        assert _rows(eng, "SELECT a AS tsq FROM tsq") == [(1,)]
+    finally:
+        eng.sql("DROP TABLE tsq")
+        eng.sql("DROP TABLE tsq")
+        eng.sql("DROP TABLE tsq_other")
+
+
+# ------------------------------------------- partition specs and paths
+def _partitions(eng, table):
+    return [r[0] for r in eng.sql(f"SHOW PARTITIONS {table}").collect()]
+
+
+def _part_table(eng, spark, name, pcols="p string"):
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    eng.sql(f"CREATE TABLE {name} (a int) PARTITIONED BY ({pcols})")
+
+
+def test_msck_registers_partition_directories(eng, spark):
+    import shutil
+
+    _part_table(eng, spark, "pmk")
+    try:
+        eng.sql("INSERT INTO pmk PARTITION (p='x') VALUES (1)")
+        loc = eng._table_location("pmk")
+        shutil.copytree(f"{loc}/p=x", f"{loc}/p=y")
+        assert _rows(eng, "MSCK TABLE pmk") == [
+            ("Partitions not in metastore:\tpmk:p=y",)
+        ]
+        assert _rows(eng, "MSCK REPAIR TABLE pmk")[-1] == (
+            "Repair: Added partition to metastore pmk:p=y",
+        )
+        assert _partitions(eng, "pmk") == ["p=x", "p=y"]
+        assert _rows(eng, "SELECT a, p FROM pmk ORDER BY p") == [
+            (1, "x"), (1, "y")
+        ]
+        assert _rows(eng, "MSCK TABLE pmk") == []
+    finally:
+        eng.sql("DROP TABLE pmk")
+
+
+def test_msck_unescapes_partition_directories(eng, spark):
+    import shutil
+
+    _part_table(eng, spark, "pmu")
+    try:
+        # Spark's own write of p='a=b' goes to the directory p=a%3Db
+        eng.sql("INSERT INTO pmu PARTITION (p='x') VALUES (1)")
+        loc = eng._table_location("pmu")
+        shutil.copytree(f"{loc}/p=x", f"{loc}/p=a%3Db")
+        eng.sql("MSCK REPAIR TABLE pmu")
+        assert _partitions(eng, "pmu") == ["p=a%3Db", "p=x"]
+        assert _rows(eng, "SELECT a FROM pmu WHERE p = 'a=b'") == [(1,)]
+    finally:
+        eng.sql("DROP TABLE pmu")
+
+
+def test_exchange_partition_moves_rows(eng, spark):
+    _part_table(eng, spark, "pex_dst")
+    _part_table(eng, spark, "pex_src")
+    try:
+        eng.sql("INSERT INTO pex_src PARTITION (p='1') VALUES (1), (2)")
+        eng.sql("INSERT INTO pex_src PARTITION (p='2') VALUES (3)")
+        eng.sql("ALTER TABLE pex_dst EXCHANGE PARTITION (p='1') WITH TABLE pex_src")
+        assert _rows(eng, "SELECT a, p FROM pex_dst ORDER BY a") == [
+            (1, "1"), (2, "1")
+        ]
+        assert _rows(eng, "SELECT a, p FROM pex_src") == [(3, "2")]
+        assert _partitions(eng, "pex_src") == ["p=2"]
+    finally:
+        eng.sql("DROP TABLE pex_dst")
+        eng.sql("DROP TABLE pex_src")
+
+
+def test_view_partitions_add_drop_show(eng, spark):
+    _part_table(eng, spark, "pvb")
+    spark.sql("DROP VIEW IF EXISTS pvv")
+    try:
+        eng.sql("CREATE VIEW pvv PARTITIONED ON (p) AS SELECT a, p FROM pvb")
+        eng.sql("ALTER VIEW pvv ADD PARTITION (p='x')")
+        eng.sql("ALTER VIEW pvv ADD IF NOT EXISTS PARTITION (p='y')")
+        eng.sql("ALTER VIEW pvv ADD PARTITION (p='z')")
+        eng.sql("ALTER VIEW pvv DROP PARTITION (p='x')")
+        assert _partitions(eng, "pvv") == ["p=y", "p=z"]
+        assert _rows(eng, "SHOW PARTITIONS pvv PARTITION (p='z')") == [("p=z",)]
+    finally:
+        eng.sql("DROP VIEW pvv")
+        eng.sql("DROP TABLE pvb")
+
+
+def test_drop_partitions_comparator_and_partial_spec(eng, spark):
+    _part_table(eng, spark, "pdc", "p int")
+    _part_table(eng, spark, "pdp", "p string, q string")
+    try:
+        for p in (1, 2, 3):
+            eng.sql(f"INSERT INTO pdc PARTITION (p={p}) VALUES ({p})")
+        eng.sql("ALTER TABLE pdc DROP PARTITION (p < 2)")
+        assert _partitions(eng, "pdc") == ["p=2", "p=3"]
+        for p, q in (("a", "1"), ("a", "2"), ("b", "1")):
+            eng.sql(f"INSERT INTO pdp PARTITION (p='{p}', q='{q}') VALUES (0)")
+        eng.sql("ALTER TABLE pdp DROP PARTITION (p='a')")
+        assert _partitions(eng, "pdp") == ["p=b/q=1"]
+    finally:
+        eng.sql("DROP TABLE pdc")
+        eng.sql("DROP TABLE pdp")
+
+
+def test_orc_split_fixup_repacks_the_partition_directory(eng, spark, monkeypatch):
+    for t in ("pos_src", "pos_dst"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    eng.sql("CREATE TABLE pos_src (a int) STORED AS ORC")
+    eng.sql("CREATE TABLE pos_dst (a int) PARTITIONED BY (P string) STORED AS ORC")
+    repacked = []
+    monkeypatch.setattr(eng, "_mr_limit_key_order", True)
+    monkeypatch.setattr(eng, "_repack_dir", lambda *a: repacked.append(a))
+    try:
+        eng.sql("INSERT INTO pos_src VALUES (1), (2)")
+        eng.sql(
+            "INSERT OVERWRITE TABLE pos_dst PARTITION (P='x y') "
+            "SELECT a FROM pos_src"
+        )
+        loc = eng._table_location("pos_dst")
+        # the directory Spark wrote: the key keeps its declared case
+        assert repacked == [("pos_dst", f"{loc}/P=x y", 1)]
+    finally:
+        eng.sql("DROP TABLE pos_src")
+        eng.sql("DROP TABLE pos_dst")
+
+
+def test_load_data_partition_value_with_comma(eng, spark, tmp_path):
+    f = tmp_path / "ld.txt"
+    f.write_text("1\n2\n")
+    _part_table(eng, spark, "pld")
+    try:
+        eng.sql(f"LOAD DATA LOCAL INPATH '{f}' INTO TABLE pld PARTITION (p='a,b')")
+        assert _rows(eng, "SELECT a, p FROM pld ORDER BY a") == [
+            (1, "a,b"), (2, "a,b")
+        ]
+    finally:
+        eng.sql("DROP TABLE pld")
+
+
+@pytest.mark.parametrize(
+    "pcol, insert_spec, truncate_spec",
+    [
+        ("p int", "p=110", "p=110Y"),
+        ("p string", "p='it\\'s'", "p='it\\'s'"),
+    ],
+    ids=["numeric_suffix", "escaped_quote"],
+)
+def test_truncate_decodes_partition_literals(
+    eng, spark, pcol, insert_spec, truncate_spec
+):
+    _part_table(eng, spark, "ptd", pcol)
+    try:
+        eng.sql(f"INSERT INTO ptd PARTITION ({insert_spec}) VALUES (1)")
+        eng.sql("INSERT INTO ptd PARTITION (p=7) VALUES (2)")
+        eng.sql(f"TRUNCATE TABLE ptd PARTITION ({truncate_spec})")
+        assert _rows(eng, "SELECT a FROM ptd") == [(2,)]
+    finally:
+        eng.sql("DROP TABLE ptd")

@@ -16,15 +16,23 @@ from apache_hive_2_1_1_src_spark.session import HiveEngine
 from apache_hive_2_1_1_src_spark.sqltext import (
     close_paren,
     concat_adjacent_literals,
+    escape_path_name,
     paren_depths,
+    parse_partition_path,
+    parse_partition_spec,
+    partition_path,
+    partition_value,
     rewrite_calls,
     search_top_level,
     split_conjuncts,
     split_literals,
     split_statements,
+    spec_sql,
     split_top_level,
     sub_outside_quotes,
+    sub_relation,
     unescape,
+    unescape_path_name,
     write_target,
 )
 
@@ -193,6 +201,94 @@ def test_concat_adjacent_literals(sql, expected):
 def test_write_target(sql, expected):
     t = write_target(sql)
     assert (t.verb, t.mode, t.table, t.partition, t.spec, t.query) == expected
+
+
+# ------------------------------------------------------------ partitions
+
+
+@pytest.mark.parametrize(
+    "raw, expected",
+    [
+        ("'a,b'", "a,b"),
+        ("\"x\"", "x"),
+        ("'it\\'s'", "it's"),
+        ("'a\\\\b'", "a\\b"),
+        ("110Y", "110"),
+        ("22000S", "22000"),
+        ("330L", "330"),
+        (" 7 ", "7"),
+        ("'110Y'", "110Y"),
+        ("__HIVE_DEFAULT_PARTITION__", "__HIVE_DEFAULT_PARTITION__"),
+    ],
+)
+def test_partition_value(raw, expected):
+    assert partition_value(raw) == expected
+
+
+@pytest.mark.parametrize(
+    "spec, expected",
+    [
+        ("p='a,b'", [("p", "a,b")]),
+        ("`DS`='1', hr=11L", [("ds", "1"), ("hr", "11")]),
+        ("ds, hr='12'", [("ds", None), ("hr", "12")]),
+        ("q='it\\'s', ", [("q", "it's")]),
+        ("p='a=b'", [("p", "a=b")]),
+        ("", []),
+    ],
+)
+def test_parse_partition_spec(spec, expected):
+    assert parse_partition_spec(spec) == expected
+
+
+def test_spec_sql_round_trips():
+    pairs = [("p", "it's"), ("q", "a\\b"), ("r", None)]
+    assert spec_sql(pairs) == "`p`='it\\'s', `q`='a\\\\b', `r`"
+    assert parse_partition_spec(spec_sql(pairs)) == pairs
+
+
+@pytest.mark.parametrize(
+    "pairs, path",
+    [
+        ([("p", "a=b")], "p=a%3Db"),
+        ([("ds", "01:10:10"), ("hr", "x/y")], "ds=01%3A10%3A10/hr=x%2Fy"),
+        ([("p", "x\x00 %")], "p=x%00 %25"),
+        ([("p", "é")], "p=é"),
+    ],
+)
+def test_partition_path_round_trips(pairs, path):
+    assert partition_path(pairs) == path
+    assert parse_partition_path(path) == pairs
+
+
+def test_path_names_escape_like_file_utils():
+    assert escape_path_name("[k]#^{}\"'*?\\\x7f") == (
+        "%5Bk%5D%23%5E%7B}%22%27%2A%3F%5C%7F"
+    )
+    # a % without two hex digits stays
+    assert unescape_path_name("a%3db%zz%4") == "a=b%zz%4"
+
+
+@pytest.mark.parametrize(
+    "sql, expected",
+    [
+        ("SELECT tsq.a FROM tsq", "SELECT tsq.a FROM S tsq"),
+        ("SELECT tsq FROM other", "SELECT tsq FROM other"),
+        ("SELECT a AS tsq FROM tsq", "SELECT a AS tsq FROM S"),
+        ("SELECT 'tsq' FROM tsq -- tsq", "SELECT 'tsq' FROM S -- tsq"),
+        ("INSERT INTO TABLE tsq SELECT tsq.a FROM tsq t",
+         "INSERT INTO TABLE S SELECT tsq.a FROM S t"),
+        ("SELECT * FROM x, tsq WHERE tsq.a = x.a",
+         "SELECT * FROM x, S tsq WHERE tsq.a = x.a"),
+        ("SELECT a, tsq FROM x LATERAL VIEW explode(y) e AS c, tsq",
+         "SELECT a, tsq FROM x LATERAL VIEW explode(y) e AS c, tsq"),
+        ("SELECT * FROM (SELECT a, tsq FROM x) y JOIN tsq ON tsq.a = y.a",
+         "SELECT * FROM (SELECT a, tsq FROM x) y JOIN S tsq ON tsq.a = y.a"),
+        ("DESCRIBE FORMATTED tsq", "DESCRIBE FORMATTED S"),
+        ("SELECT * FROM db.tsq, `tsq`", "SELECT * FROM db.tsq, `tsq`"),
+    ],
+)
+def test_sub_relation(sql, expected):
+    assert sub_relation(sql, "tsq", "S") == expected
 
 
 def test_write_target_none():
