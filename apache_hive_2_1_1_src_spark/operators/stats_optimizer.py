@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from apache_hive_2_1_1_src_spark.sqltext import (
@@ -30,6 +31,7 @@ from apache_hive_2_1_1_src_spark.sqltext import (
     spec_sql,
     split_top_level,
 )
+from apache_hive_2_1_1_src_spark.table_desc import catalog_entry
 
 #: SELECT <aggs> FROM <bare table> [WHERE <partition-equality conjuncts>]
 #: — no GROUP/JOIN/subquery/LIMIT.
@@ -43,16 +45,6 @@ _AGG = re.compile(
     r"(?:\s+AS\s+(?P<alias>\w+))?$",
     re.IGNORECASE,
 )
-
-
-def _table_row_count(spark: SparkSession, table: str) -> int | None:
-    """numRows from the catalog Statistics line (StatsTask persistence)."""
-    for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect():
-        if (r[0] or "").strip() == "Statistics":
-            m = re.search(r"(\d+)\s+rows", r[1] or "")
-            if m:
-                return int(m.group(1))
-    return None
 
 
 def _column_stats(spark: SparkSession, table: str, col: str) -> dict | None:
@@ -86,13 +78,9 @@ def _partition_filtered_count(
         )
         eqs[m.group(1).lower()] = val
     try:
-        pcols = {
-            c.name.lower()
-            for c in spark.catalog.listColumns(table)
-            if c.isPartition
-        }
-    except Exception:
-        return None
+        pcols = catalog_entry(spark, table).pcols
+    except AnalysisException:
+        return None  # no such table: the scan path reports it
     if not eqs or not set(eqs) <= pcols:
         return None
     try:
@@ -165,10 +153,12 @@ def try_stats_only_answer(spark: SparkSession, text: str) -> DataFrame | None:
             exprs_f.append(f"CAST({n_part} AS BIGINT) AS {alias}")
         return spark.sql("SELECT " + ", ".join(exprs_f))
     try:
-        schema = {f.name.lower(): f.dataType.simpleString() for f in spark.table(table).schema.fields}
-    except Exception:
-        return None
-    n_rows: int | None = None
+        entry = catalog_entry(spark, table)
+    except AnalysisException:
+        return None  # no such table: the scan path reports it
+    schema = {f.name.lower(): f.dataType.simpleString() for f in entry.schema.fields}
+    # numRows as ANALYZE persisted it (StatsTask)
+    n_rows = entry.row_count
     parts = split_top_level(body)
     exprs: list[str] = []
     for i, part in enumerate(parts):
@@ -180,8 +170,6 @@ def try_stats_only_answer(spark: SparkSession, text: str) -> DataFrame | None:
         alias = am.group("alias") or f"c{i}"
         if fn == "COUNT" and arg in ("*", "1"):
             if n_rows is None:
-                n_rows = _table_row_count(spark, table)
-            if n_rows is None:
                 return None
             exprs.append(f"CAST({n_rows} AS BIGINT) AS {alias}")
             continue
@@ -192,8 +180,6 @@ def try_stats_only_answer(spark: SparkSession, text: str) -> DataFrame | None:
         if st is None:
             return None
         if fn == "COUNT":
-            if n_rows is None:
-                n_rows = _table_row_count(spark, table)
             if n_rows is None or st.get("num_nulls") in (None, "NULL"):
                 return None
             exprs.append(
@@ -265,11 +251,11 @@ def try_partition_metadata_answer(
     ):
         return None
     try:
-        cols = spark.catalog.listColumns(table)
-    except Exception:
-        return None
-    pcols = {c.name.lower() for c in cols if c.isPartition}
-    dcols = {c.name.lower() for c in cols if not c.isPartition}
+        entry = catalog_entry(spark, table)
+    except AnalysisException:
+        return None  # no such table: the scan path reports it
+    pcols = entry.pcols
+    dcols = {f.name.lower() for f in entry.data_fields}
     if not pcols:
         return None
     # every referenced identifier must be a partition key (aliases after
@@ -293,9 +279,7 @@ def try_partition_metadata_answer(
     names, tuples = _partition_rows(spark, table)
     if not names:
         return None
-    types = {
-        c.name.lower(): c.dataType for c in cols if c.isPartition
-    }
+    types = {f.name.lower(): f.dataType.simpleString() for f in entry.schema.fields}
     pdf = spark.createDataFrame(
         tuples or [tuple([None] * len(names))],
         ", ".join(f"`{n}` string" for n in names),

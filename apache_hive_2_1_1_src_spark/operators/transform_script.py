@@ -16,6 +16,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.types import StructType
 
+from apache_hive_2_1_1_src_spark.table_desc import catalog_entry
+
 
 def transform_script(
     df: DataFrame,
@@ -67,12 +69,7 @@ def analyze_table_rowcount(spark: SparkSession, table: str) -> int:
     """ANALYZE TABLE ... COMPUTE STATISTICS, then read numRows back from
     the catalog (StatsTask.java persistence → Spark's table stats)."""
     spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
-    described = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    for row in described:
-        if row.col_name == "Statistics":
-            # e.g. "1234 bytes, 567 rows"
-            for p in row.data_type.split(","):
-                p = p.strip()
-                if p.endswith("rows"):
-                    return int(p.split()[0])
-    raise ValueError(f"no statistics recorded for {table}")
+    rows = catalog_entry(spark, table).row_count
+    if rows is None:
+        raise ValueError(f"no statistics recorded for {table}")
+    return rows

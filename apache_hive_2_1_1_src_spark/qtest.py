@@ -39,6 +39,7 @@ import re
 from dataclasses import dataclass, field
 
 from apache_hive_2_1_1_src_spark.sqltext import split_top_level
+from apache_hive_2_1_1_src_spark.table_desc import catalog_entry
 
 REF = "/root/reference"
 DATA_DIR = f"{REF}/data/files"
@@ -895,9 +896,9 @@ def _emulate_dfs(eng, stmt: str) -> list[str]:
         ):
             tname = os.path.basename(target).lower()
             try:
-                if eng.spark.catalog.tableExists(tname) and not getattr(
-                    eng, "_table_partition_cols"
-                )(tname):
+                if eng.spark.catalog.tableExists(tname) and not (
+                    catalog_entry(eng.spark, tname).partition_cols
+                ):
                     desc = eng.table_desc(tname)
                     return [
                         desc.field_delim.join(
@@ -1475,12 +1476,9 @@ def run_qfile(eng, name: str) -> QFileReport:
                 bare,
             )
             tbl_h = (um or dm_h).group(1) if (um or dm_h) else None
-            try:
-                pcols_h = [
-                    p.lower() for p in eng._table_partition_cols(tbl_h)
-                ] if tbl_h else []
-            except Exception:
-                pcols_h = []
+            pcols_h = [
+                p.lower() for p in catalog_entry(eng.spark, tbl_h).partition_cols
+            ] if tbl_h else []
             if um:
                 try:
                     cols = eng.spark.table(um.group(1)).columns

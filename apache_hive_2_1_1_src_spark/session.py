@@ -29,6 +29,7 @@ from __future__ import annotations
 import os
 import re
 import tempfile
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.errors import AnalysisException
@@ -59,7 +60,11 @@ from apache_hive_2_1_1_src_spark.sqltext import (
     unescape,
     write_target,
 )
-from apache_hive_2_1_1_src_spark.table_desc import TableDesc, TableStore
+from apache_hive_2_1_1_src_spark.table_desc import (
+    TableDesc,
+    TableStore,
+    catalog_entry,
+)
 
 #: Hive-2.1.1-semantics config preset, applied to every session we build and
 #: safe to apply onto an externally provided session (runtime-settable keys).
@@ -194,6 +199,37 @@ def _bd_overflow(mo: re.Match) -> str:
     if digits > 38:
         return "CAST(NULL AS DECIMAL(38,0))"
     return mo.group(0)
+
+
+def _hive_char_truncate(cols) -> list[str]:
+    """A select list over ``(column, declared Hive type)`` pairs that
+    cuts each char(n)/varchar(n) column to n characters.  HiveChar and
+    HiveVarchar truncate an overlong value on write
+    (HiveBaseChar.enforceMaxLength); Spark's char-length check raises
+    EXCEED_LIMIT_LENGTH instead (avro_charvarchar.q, parquet_types.q)."""
+    out = []
+    for name, ty in cols:
+        m = re.fullmatch(r"(?:var)?char\((\d+)\)", ty or "")
+        out.append(
+            f"substring(`{name}`, 1, {m.group(1)}) AS `{name}`"
+            if m
+            else f"`{name}`"
+        )
+    return out
+
+
+@contextmanager
+def _partition_overwrite_mode(spark: SparkSession, mode: str):
+    """Run the block's writes with partitionOverwriteMode ``mode`` and
+    restore the session's value after.  A session conf, not a writer
+    option: ``DataFrameWriter.insertInto`` ignores the option."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, mode)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 class HiveEngine:
@@ -1083,7 +1119,7 @@ class HiveEngine:
         (name, type) list so char(n)/varchar(n) survive the rebuild —
         losing them silently drops the pad/truncate behavior of every
         LATER insert (schema_evol_*.q's post-replace rows)."""
-        pcols = {c.lower() for c in self._table_partition_cols(tbl)}
+        pcols = catalog_entry(self.spark, tbl).pcols
         staged = df.localCheckpoint(eager=True)
         self.spark.sql(f"DROP TABLE {tbl}")
         part_names = [c for c in staged.columns if c.lower() in pcols]
@@ -1110,21 +1146,10 @@ class HiveEngine:
             )
             view = f"__rebuild_{abs(hash(tbl)) % 10**8}"
             staged.createOrReplaceTempView(view)
-            # HiveChar/Varchar silently truncate; Spark's write check
-            # errors — substring char-like columns to their lengths
-            sel_cols = []
-            for f in staged.schema.fields:
-                cl = char_like.get(f.name.lower())
-                clm = cl and re.match(
-                    r"(?i)^\s*(char|varchar)\s*\(\s*(\d+)\s*\)", cl
-                )
-                if clm:
-                    sel_cols.append(
-                        f"substring(`{f.name}`, 1, {int(clm.group(2))}) "
-                        f"AS `{f.name}`"
-                    )
-                else:
-                    sel_cols.append(f"`{f.name}`")
+            types = catalog_entry(self.spark, tbl).types
+            sel_cols = _hive_char_truncate(
+                (f.name, types[f.name.lower()]) for f in staged.schema.fields
+            )
             try:
                 self.spark.sql(
                     f"INSERT INTO {tbl} SELECT "
@@ -1160,7 +1185,8 @@ class HiveEngine:
         orc_* vs text goldens) — char targets on ORC-declared tables
         behave as varchar."""
         full = self.spark.table(tbl)
-        pcols = {c.lower() for c in self._table_partition_cols(tbl)}
+        entry = catalog_entry(self.spark, tbl)
+        pcols = entry.pcols
         if old.lower() in pcols:
             raise ValueError(
                 f"CHANGE COLUMN cannot modify partition column '{old}'"
@@ -1198,7 +1224,7 @@ class HiveEngine:
                     self._hive_cast(
                         self._char_source_strip(
                             tbl,
-                            f,
+                            entry.types[f.name.lower()],
                             new_type,
                             F.col(f.name),
                             force=bool(pcols)
@@ -1244,8 +1270,9 @@ class HiveEngine:
         same bytes; extra new columns read NULL, dropped trailing
         columns disappear (DDLSemanticAnalyzer alterTableModifyCols)."""
         full = self.spark.table(tbl)
-        pcols = {c.lower() for c in self._table_partition_cols(tbl)}
-        data_fields = [f for f in full.schema.fields if f.name.lower() not in pcols]
+        entry = catalog_entry(self.spark, tbl)
+        pcols = entry.pcols
+        data_fields = entry.data_fields
         new_cols = []
         for spec in split_top_level(col_list, angle=True):
             parts = spec.strip().split(None, 1)
@@ -1261,7 +1288,7 @@ class HiveEngine:
                     self._hive_cast(
                         self._char_source_strip(
                             tbl,
-                            data_fields[i],
+                            entry.types[data_fields[i].name.lower()],
                             ty,
                             F.col(data_fields[i].name),
                             force=bool(pcols)
@@ -1403,12 +1430,9 @@ class HiveEngine:
             return True
         if not desc.is_parquet:
             return False
-        if self._table_partition_cols(tbl):
+        if catalog_entry(self.spark, tbl).partition_cols:
             return False
-        try:
-            full = self.spark.table(tbl)
-        except Exception:
-            return False
+        full = self.spark.table(tbl)
         desc.pq_snap = {
             "df": full.localCheckpoint(eager=True),
             "fields": list(full.schema.fields),
@@ -1465,26 +1489,13 @@ class HiveEngine:
             return True
         if desc.is_orc:
             return False
-        pcols = [c.lower() for c in self._table_partition_cols(tbl)]
-        if not pcols:
-            return False
-        try:
-            full = self.spark.table(tbl)
-        except Exception:
-            return False
-        data_fields = [
-            f for f in full.schema.fields if f.name.lower() not in pcols
-        ]
-        if not data_fields or any(
+        entry = catalog_entry(self.spark, tbl)
+        pnames, data_fields = entry.partition_cols, entry.data_fields
+        if not pnames or not data_fields or any(
             f.dataType.simpleString() != "string" for f in data_fields
         ):
             return False
-        pnames = [
-            f.name
-            for f in full.schema.fields
-            if f.name.lower() in set(pcols)
-        ]
-        snap = full.select(
+        snap = self.spark.table(tbl).select(
             F.array(
                 *[F.col(f.name).cast("string") for f in data_fields]
             ).alias("__f"),
@@ -1502,8 +1513,8 @@ class HiveEngine:
             "pcols": pnames,
             "ptypes": {
                 f.name.lower(): f.dataType.simpleString()
-                for f in full.schema.fields
-                if f.name.lower() in set(pcols)
+                for f in entry.schema.fields
+                if f.name.lower() in entry.pcols
             },
             # per-partition ORDERED data schema: [(col, type)]
             "parts": {
@@ -1554,12 +1565,10 @@ class HiveEngine:
                 cond = c if cond is None else (cond & c)
             old = old.filter(~F.coalesce(cond, F.lit(False)))
         e["snap"] = old.unionByName(new_rows).localCheckpoint(eager=True)
+        data_cols = catalog_entry(self.spark, tbl).data_cols
         if ptuple not in e["parts"]:
-            e["parts"][ptuple] = [
-                (n.lower(), t)
-                for n, t in self._sor_table_data_cols(tbl)
-            ]
-        self._sor_rebuild(tbl, self._sor_table_data_cols(tbl))
+            e["parts"][ptuple] = [(n.lower(), t) for n, t in data_cols]
+        self._sor_rebuild(tbl, data_cols)
         return True
 
     @staticmethod
@@ -1657,21 +1666,6 @@ class HiveEngine:
             )
         self._rebuild_table(tbl, snap.select(exprs), declared=target_cols)
 
-    def _sor_table_data_cols(self, tbl) -> list[tuple[str, str]]:
-        pcols = {c.lower() for c in self._table_partition_cols(tbl)}
-        out = []
-        for f in self.spark.table(tbl).schema.fields:
-            if f.name.lower() in pcols:
-                continue
-            try:
-                declared = (f.metadata or {}).get(
-                    "__CHAR_VARCHAR_TYPE_STRING"
-                )
-            except Exception:
-                declared = None
-            out.append((f.name, declared or f.dataType.simpleString()))
-        return out
-
     def _alter_change_column_partition(
         self, tbl: str, spec: str, old: str, new: str, new_type: str
     ):
@@ -1701,7 +1695,7 @@ class HiveEngine:
             self._sor_update_partitions(
                 tbl, norm, "change", (old, new, new_type)
             )
-            self._sor_rebuild(tbl, self._sor_table_data_cols(tbl))
+            self._sor_rebuild(tbl, catalog_entry(self.spark, tbl).data_cols)
             return self.spark.range(0).select()
         two_hop = self._hive_cast(
             self._hive_cast(F.col(src.name), new_type, src.dataType),
@@ -1729,7 +1723,7 @@ class HiveEngine:
         read NULL for that partition's rows; the TABLE schema itself is
         unchanged (alter_partition_change_col.q's trailing replace)."""
         full = self.spark.table(tbl)
-        pcols = {c.lower() for c in self._table_partition_cols(tbl)}
+        pcols = catalog_entry(self.spark, tbl).pcols
         pairs = parse_partition_spec(spec)
         cond, norm = self._partition_cond(pairs), dict(pairs)
         data_fields = [
@@ -1747,7 +1741,7 @@ class HiveEngine:
             new_cols.append((nm, ty))
         if self._sor_activate(tbl):
             self._sor_update_partitions(tbl, norm, "replace", new_cols)
-            self._sor_rebuild(tbl, self._sor_table_data_cols(tbl))
+            self._sor_rebuild(tbl, catalog_entry(self.spark, tbl).data_cols)
             return self.spark.range(0).select()
         sel = []
         for i, f in enumerate(full.schema.fields):
@@ -1801,16 +1795,11 @@ class HiveEngine:
             avro_to_hive_type,
         )
 
-        try:
-            existing = {
-                f.name.lower() for f in self.spark.table(tkey).schema.fields
-            }
-        except Exception:
-            return
+        entry = catalog_entry(self.spark, tkey)
         added = [
             f
             for f in schema_json.get("fields", [])
-            if f["name"].lower() not in existing
+            if f["name"].lower() not in entry.types
         ]
         if not added:
             return
@@ -1818,7 +1807,7 @@ class HiveEngine:
             f"`{f['name']}` {avro_to_hive_type(f['type'])}" for f in added
         )
         self.spark.sql(f"ALTER TABLE {tkey} ADD COLUMNS ({col_ddl})")
-        pcols = {c.lower() for c in self._table_partition_cols(tkey)}
+        pcols = entry.pcols
         full = self.spark.table(tkey)
         fill = full
         for f in added:
@@ -1851,15 +1840,8 @@ class HiveEngine:
         ] + [c for c in full.columns if c.lower() in pcols]
         if [c.lower() for c in target] == [c.lower() for c in full.columns]:
             self._cow_overwrite(tkey, fill.select(target))
-            return
-        staged = fill.select(target).localCheckpoint(eager=True)
-        self.spark.sql(f"DROP TABLE {tkey}")
-        writer = staged.write.format("parquet").mode("overwrite")
-        part_names = [c for c in target if c.lower() in pcols]
-        if part_names:
-            writer = writer.partitionBy(*part_names)
-        writer.saveAsTable(tkey)
-        self._stats_autogather_target(tkey)
+        else:
+            self._rebuild_table(tkey, fill.select(target))
 
     @staticmethod
     def _column_list_end(out: str) -> int | None:
@@ -2069,32 +2051,24 @@ class HiveEngine:
         metadata.  The emitted text round-trips through
         translate_hive_ddl — q218 pins the closure."""
         tbl = table.split(".")[-1].lower()
-        cols = self.spark.catalog.listColumns(table)
-        data_cols = [c for c in cols if not c.isPartition]
-        part_cols = [c for c in cols if c.isPartition]
-        desc = {
-            str(r.col_name): str(r.data_type)
-            for r in self.spark.sql(f"DESCRIBE EXTENDED {table}").collect()
-        }
+        entry = catalog_entry(self.spark, table)
         fmt = self._tables.read(table).fmt or "parquet"
         serde, infmt, outfmt = self._FMT_CLASSES[fmt]
         lines = [f"CREATE TABLE `{tbl}`("]
         lines.append(
-            ",\n".join(
-                f"  `{c.name}` {c.dataType}" for c in data_cols
-            )
+            ",\n".join(f"  `{n}` {t}" for n, t in entry.data_cols)
         )
         lines.append(")")
-        if part_cols:
-            plist = ", ".join(f"`{c.name}` {c.dataType}" for c in part_cols)
+        if entry.partition_cols:
+            plist = ", ".join(
+                f"`{p}` {entry.types[p.lower()]}" for p in entry.partition_cols
+            )
             lines.append(f"PARTITIONED BY ({plist})")
-        nb = desc.get("Num Buckets")
-        bcols = desc.get("Bucket Columns", "").strip("[]").replace("`", "")
-        if nb and bcols:
-            lines.append(f"CLUSTERED BY ({bcols})")
-            scols = desc.get("Sort Columns", "").strip("[]").replace("`", "")
+        if entry.bucket_spec and entry.bucket_spec[1]:
+            nb, bcols, scols = entry.bucket_spec
+            lines.append(f"CLUSTERED BY ({', '.join(bcols)})")
             if scols:
-                lines.append(f"SORTED BY ({scols} ASC)")
+                lines.append(f"SORTED BY ({', '.join(scols)} ASC)")
             lines.append(f"INTO {nb} BUCKETS")
         lines.append("ROW FORMAT SERDE")
         lines.append(f"  '{serde}'")
@@ -2106,10 +2080,9 @@ class HiveEngine:
         # EXTERNAL tables so that re-executing the emitted DDL for a
         # managed table yields a managed table again (in Spark a CREATE
         # with LOCATION is external, and dropping it would strand files)
-        loc = desc.get("Location")
-        if loc and desc.get("Type", "").upper() == "EXTERNAL":
+        if entry.location and entry.table_type == "EXTERNAL":
             lines.append("LOCATION")
-            lines.append(f"  '{loc}'")
+            lines.append(f"  '{entry.location}'")
         stmt = "\n".join(lines)
         return self.spark.createDataFrame(
             [(stmt,)], "createtab_stmt string"
@@ -2169,11 +2142,9 @@ class HiveEngine:
         except Exception:
             tables = []
         for tname in tables:
-            try:
-                if os.path.realpath(self._table_location(tname)) == norm:
-                    self.spark.sql(f"REFRESH TABLE {tname}")
-            except Exception:
-                continue
+            loc = catalog_entry(self.spark, f"`{tname}`").location
+            if loc and os.path.realpath(loc) == norm:
+                self.spark.sql(f"REFRESH TABLE {tname}")
         return self.spark.range(0).select()
 
     _IOD_PLAIN = re.compile(
@@ -2311,11 +2282,7 @@ class HiveEngine:
                 "hive.merge.size.per.task", str(256 * 1024 * 1024)
             )
         )
-        location = next(
-            r.data_type
-            for r in self.spark.sql(f"DESCRIBE FORMATTED {tbl}").collect()
-            if r.col_name == "Location"
-        ).replace("file:", "")
+        location = catalog_entry(self.spark, tbl).location
         total_bytes = sum(
             os.path.getsize(os.path.join(dp, f))
             for dp, _, fs in os.walk(location)
@@ -2335,18 +2302,8 @@ class HiveEngine:
                 staged = self.spark.read.parquet(stage).select(
                     self.spark.table(tbl).columns
                 )
-                prev = self.spark.conf.get(
-                    "spark.sql.sources.partitionOverwriteMode", "dynamic"
-                )
-                self.spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "dynamic"
-                )
-                try:
+                with _partition_overwrite_mode(self.spark, "dynamic"):
                     staged.write.insertInto(tbl, overwrite=True)
-                finally:
-                    self.spark.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode", prev
-                    )
             else:
                 self.spark.table(tbl).coalesce(target).write.mode(
                     "overwrite"
@@ -2677,7 +2634,7 @@ class HiveEngine:
         )
 
     def _char_source_strip(
-        self, tbl: str, field, new_type: str, col, force: bool = False
+        self, tbl: str, declared: str, new_type: str, col, force: bool = False
     ):
         """Rebinds that CONVERT (rather than re-read raw text bytes)
         turn a CHAR(n) source into its STRIPPED HiveChar value
@@ -2687,13 +2644,7 @@ class HiveEngine:
         (schema_evol_orc_* vs text table vs part goldens)."""
         if not force and not self._is_orc(tbl):
             return col
-        try:
-            declared = (field.metadata or {}).get(
-                "__CHAR_VARCHAR_TYPE_STRING", ""
-            )
-        except Exception:
-            declared = ""
-        if not re.match(r"(?i)^\s*char\s*\(", declared or ""):
+        if not declared.startswith("char("):
             return col
         if re.match(r"(?i)^\s*(varchar\s*\(|string)", new_type):
             return F.rtrim(col)
@@ -2771,7 +2722,8 @@ class HiveEngine:
         schema_evol_*_part.q's 'new' rows).  Record (old type, frozen
         partition values) per retyped column; the VALUES insert path
         applies the parse check."""
-        pcols = self._table_partition_cols(tbl)
+        entry = catalog_entry(self.spark, tbl)
+        pcols = entry.partition_cols
         if not pcols:
             return
         if self._is_orc(tbl):
@@ -2780,29 +2732,14 @@ class HiveEngine:
             # partition metadata (schema_evol_orc_*_part goldens keep
             # every value) — nothing to freeze
             return
-        try:
-            full = self.spark.table(tbl)
-        except Exception:
-            return
-        def _declared(f):
-            try:
-                raw = (f.metadata or {}).get("__CHAR_VARCHAR_TYPE_STRING")
-            except Exception:
-                raw = None
-            return (raw or f.dataType.simpleString()).lower()
-
-        old_types = {
-            f.name.lower(): _declared(f) for f in full.schema.fields
-        }
+        full = self.spark.table(tbl)
+        old_types = entry.types
         if col_list is not None:
-            data_fields = [
-                f
-                for f in full.schema.fields
-                if f.name.lower() not in {p.lower() for p in pcols}
-            ]
             changes3 = [
                 (nm, old_types.get(f.name.lower()), ty)
-                for (nm, ty), f in zip(column_specs(col_list), data_fields)
+                for (nm, ty), f in zip(
+                    column_specs(col_list), entry.data_fields
+                )
             ]
         else:
             changes3 = [
@@ -3185,10 +3122,7 @@ class HiveEngine:
         """True when any PARTITION(spec) names fewer keys than the table
         has — Hive's partial-spec drop (drop_multi_partitions.q) that
         Spark rejects with PARTITIONS_NOT_FOUND."""
-        try:
-            pcols = self._table_partition_cols(tbl)
-        except Exception:
-            return False
+        pcols = catalog_entry(self.spark, tbl).partition_cols
         for spec in re.findall(
             r"PARTITION\s*\(([^)]*)\)", specs_text, re.IGNORECASE
         ):
@@ -3213,13 +3147,7 @@ class HiveEngine:
             if if_exists:
                 return self.spark.range(0).select()
             raise ValueError(f"no partitions in {tbl}")
-        types = {}
-        try:
-            for c in self.spark.catalog.listColumns(tbl):
-                if c.isPartition:
-                    types[c.name.lower()] = c.dataType.lower()
-        except Exception:
-            pass
+        types = catalog_entry(self.spark, tbl).types
 
         def cmp_key(col: str, raw: str):
             t = types.get(col, "string")
@@ -3447,7 +3375,7 @@ class HiveEngine:
                 entries = []
             if idx < len(entries):
                 path = os.path.join(d, entries[idx])
-        full = self.spark.table(tbl)
+        entry = catalog_entry(self.spark, tbl)
         pvals = dict(parse_partition_spec(partition_spec or ""))
         pcols = list(pvals)
         from pyspark.sql import types as T
@@ -3457,7 +3385,7 @@ class HiveEngine:
             self._track_default_partition(tbl=tbl)
             return self.spark.range(0).select()
         data_fields = [
-            f for f in full.schema.fields if f.name.lower() not in pcols
+            f for f in entry.schema.fields if f.name.lower() not in pcols
         ]
         schema = T.StructType(data_fields)
         desc = self._tables.read(tbl)
@@ -3641,37 +3569,17 @@ class HiveEngine:
                 if overwrite:
                     hist.clear()
                 hist.append((path, partition_spec))
-        types = {c.lower(): t for c, t in full.dtypes}
+        types = {f.name.lower(): f.dataType for f in entry.schema.fields}
         for k, v in pvals.items():
             df = df.withColumn(k, F.lit(v).cast(types[k]))
-        # HiveChar/HiveVarchar TRUNCATE overlong values silently
-        # (enforce via substring — Spark's char/varchar write check
-        # ERRORs instead: avro_charvarchar.q / escape3.q)
-        for f in full.schema.fields:
-            try:
-                raw = (f.metadata or {}).get("__CHAR_VARCHAR_TYPE_STRING")
-            except Exception:
-                raw = None
-            if not raw and re.match(
-                r"(?i)^(char|varchar)\(", f.dataType.simpleString()
-            ):
-                raw = f.dataType.simpleString()
-            cm = raw and re.match(
-                r"(?i)^(char|varchar)\s*\(\s*(\d+)\s*\)$", raw
+        df = df.selectExpr(
+            *_hive_char_truncate(
+                (f.name, entry.types[f.name.lower()])
+                for f in entry.schema.fields
             )
-            if cm and f.name in df.columns:
-                df = df.withColumn(
-                    f.name, F.substring(F.col(f.name), 1, int(cm.group(2)))
-                )
-        df = df.select([f.name for f in full.schema.fields])
-        prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "STATIC"
         )
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with _partition_overwrite_mode(self.spark, "dynamic"):
             df.write.insertInto(tbl, overwrite=overwrite)
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         self._stats_autogather_target(tbl)
         self._track_default_partition(tbl=tbl)
         return self.spark.range(0).select()
@@ -3898,41 +3806,20 @@ class HiveEngine:
         re.IGNORECASE,
     )
 
-    def _table_partition_cols(self, tbl: str) -> list[str]:
-        try:
-            rows = self.spark.sql(f"DESCRIBE TABLE {tbl}").collect()
-        except Exception:
-            return []
-        pcols, in_part = [], False
-        for r in rows:
-            name = (r[0] or "").strip()
-            if name.startswith("# Partition"):
-                in_part = True
-                continue
-            if in_part and name and not name.startswith("#"):
-                pcols.append(name.lower())
-        return pcols
-
     def _cow_overwrite(self, tbl: str, df) -> None:
         """Materialize fully, then overwrite the source table — the
         MoveTask half of the UPDATE/DELETE rewrite.  STATIC overwrite on
         purpose: a partition whose every row was deleted must come back
         empty, which dynamic mode would silently skip."""
-        prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "STATIC"
-        )
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-        try:
+        with _partition_overwrite_mode(self.spark, "static"):
             df.localCheckpoint(eager=True).write.insertInto(tbl, overwrite=True)
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         self.spark.catalog.refreshTable(tbl)
         self._stats_autogather_target(tbl)
         self._track_default_partition(tbl=tbl)
 
     def _update_table(self, tbl: str, set_clause: str, where: str | None):
         full = self.spark.table(tbl)
-        pcols = set(self._table_partition_cols(tbl))
+        pcols = catalog_entry(self.spark, tbl).pcols
         assigns: dict[str, str] = {}
         for part in split_top_level(set_clause):
             k, v = part.split("=", 1)
@@ -4004,12 +3891,13 @@ class HiveEngine:
         file(s) into the table (or partition) directory byte-for-byte."""
         import shutil
 
-        loc = self._table_location(tbl)
+        entry = catalog_entry(self.spark, tbl)
+        loc = entry.location
         if loc is None:
             raise ValueError(f"cannot resolve the location of table {tbl}")
         if partition_spec:
             pairs = parse_partition_spec(partition_spec)
-            loc = self._partition_dir(tbl, loc, pairs)
+            loc = entry.partition_dir(pairs)
             self.spark.sql(
                 f"ALTER TABLE {tbl} ADD IF NOT EXISTS PARTITION "
                 f"({spec_sql(pairs)})"
@@ -4550,9 +4438,10 @@ class HiveEngine:
         elements, unknown table) so the native Spark path can try."""
         tbl, mode = m.group("tbl"), m.group("mode").upper()
         try:
-            schema = self.spark.table(tbl).schema
-        except Exception:
+            entry = catalog_entry(self.spark, tbl)
+        except AnalysisException:
             return None
+        schema, types = entry.schema, entry.types
         tuples = self._values_tuples(m.group("rows"))
         if not tuples:
             return None
@@ -4587,7 +4476,7 @@ class HiveEngine:
         # schema_evol_*_part_all_primitive.q mixes 13- and 15-element
         # rows under one INSERT)
         rows = [(r + [None] * arity)[:arity] for r in rows]
-        pcols = [c.lower() for c in self._table_partition_cols(tbl)]
+        pcols = [c.lower() for c in entry.partition_cols]
         spec = m.group("spec") or ""
         pairs = parse_partition_spec(spec)
         if spec and not pairs:
@@ -4597,13 +4486,6 @@ class HiveEngine:
         if not spec:
             # unpartitioned, or fully dynamic when the table has pcols
             dynamic_parts = list(pcols)
-
-        def declared_type(f) -> str:
-            try:
-                raw = (f.metadata or {}).get("__CHAR_VARCHAR_TYPE_STRING")
-            except Exception:
-                raw = None
-            return raw or f.dataType.simpleString()
 
         data_fields = [
             f for f in schema.fields if f.name.lower() not in pcols
@@ -4688,19 +4570,18 @@ class HiveEngine:
                 frozen_cond = "(" + " OR ".join(ors) + ")"
         for f in data_fields:
             nm = f.name.lower()
-            if nm in pos and declared_type(f).lower() == "timestamp":
+            ty = types[nm]
+            if nm in pos and ty == "timestamp":
                 self._note_nano_timestamps(
                     tbl, f.name, [r[pos[nm]] for r in rows]
                 )
             if nm in pos:
                 col_sql = f"tmp_values_col{pos[nm] + 1}"
-                e = self._hive_cast_from_string_sql(
-                    col_sql, declared_type(f)
-                )
+                e = self._hive_cast_from_string_sql(col_sql, ty)
                 old_ty = (
                     frozen_info["old"].get(nm) if frozen_cond else None
                 )
-                if old_ty and old_ty.lower() != declared_type(f).lower():
+                if old_ty and old_ty.lower() != ty:
                     # the value lands in a partition whose schema still
                     # says OLD type: Hive serializes the NEW-typed text
                     # and the old Lazy parser re-reads those bytes —
@@ -4726,9 +4607,7 @@ class HiveEngine:
                             ).lower()
                             == "true",
                         )
-                        new_str = declared_type(f).lower().startswith(
-                            ("string", "char", "varchar")
-                        )
+                        new_str = ty.startswith(("string", "char", "varchar"))
                         if new_str:
                             # identity on parse success keeps the text
                             # (incl. nanosecond fractions Spark's
@@ -4736,19 +4615,17 @@ class HiveEngine:
                             e = (
                                 f"CASE WHEN {frozen_cond} AND "
                                 f"({parsed}) IS NULL THEN CAST(NULL AS "
-                                f"{declared_type(f)}) ELSE ({e}) END"
+                                f"{ty}) ELSE ({e}) END"
                             )
                         else:
                             e = (
                                 f"CASE WHEN {frozen_cond} THEN "
                                 f"CAST(({parsed}) AS "
-                                f"{declared_type(f)}) ELSE ({e}) END"
+                                f"{ty}) ELSE ({e}) END"
                             )
                 exprs.append(e + f" AS `{f.name}`")
             else:
-                exprs.append(
-                    f"CAST(NULL AS {declared_type(f)}) AS `{f.name}`"
-                )
+                exprs.append(f"CAST(NULL AS {ty}) AS `{f.name}`")
         # dynamic partition values trail the data columns — unless the
         # explicit column list placed them
         base = len(src_order)
@@ -4757,7 +4634,7 @@ class HiveEngine:
             pf = next(
                 (f for f in schema.fields if f.name.lower() == pname), None
             )
-            pty = declared_type(pf) if pf else "string"
+            pty = types.get(pname, "string")
             if explicit and pname in pos:
                 src_i = pos[pname] + 1
             else:
@@ -4860,7 +4737,7 @@ class HiveEngine:
                 self.spark.sql(f"DROP VIEW {src}")
             else:
                 full = self.spark.table(src)
-                pcols = self._table_partition_cols(src)
+                pcols = catalog_entry(self.spark, src).partition_cols
                 writer = full.write.format("parquet").mode(
                     "overwrite"
                 )
@@ -4881,7 +4758,7 @@ class HiveEngine:
                 f"ALTER TABLE {src} RENAME TO {dst}"
             )
             self._tables.rename(src, dst)
-            new_loc_rn = self._table_location(dst)
+            new_loc_rn = catalog_entry(self.spark, dst).location
             try:
                 prows = [
                     r[0]
@@ -5078,25 +4955,14 @@ class HiveEngine:
         ) and re.search(
             r"['\"]escape\.delim['\"]", text, re.IGNORECASE
         ):
-            try:
-                full_cr = self.spark.table(key)
-                pcols_cr = {
-                    c.lower()
-                    for c in self._table_partition_cols(key)
-                }
-                masks_cr = self._tables.edit(key).display_casts
-                for f in full_cr.schema.fields:
-                    if (
-                        f.dataType.simpleString() == "string"
-                        and f.name.lower() not in pcols_cr
-                    ):
-                        masks_cr[f.name.lower()] = (
-                            f"replace(replace(`{f.name}`, "
-                            f"concat(chr(92), 'n'), chr(10)), "
-                            f"concat(chr(92), 'r'), chr(13))"
-                        )
-            except Exception:
-                pass
+            masks_cr = self._tables.edit(key).display_casts
+            for f in catalog_entry(self.spark, key).data_fields:
+                if f.dataType.simpleString() == "string":
+                    masks_cr[f.name.lower()] = (
+                        f"replace(replace(`{f.name}`, "
+                        f"concat(chr(92), 'n'), chr(10)), "
+                        f"concat(chr(92), 'r'), chr(13))"
+                    )
         # serialization.null.format change: bytes already written
         # with the OLD token no longer parse as NULL — they READ as
         # that literal string (nullformat.q's post-ALTER select).
@@ -5112,24 +4978,16 @@ class HiveEngine:
             old = self._tables.read(key).null_format
             new = nfm.group(1)
             if old != new and old != "\\N":
-                try:
-                    full = self.spark.table(key)
-                    pcols = {
-                        c.lower()
-                        for c in self._table_partition_cols(key)
-                    }
-                    sel = [
-                        F.coalesce(F.col(f.name), F.lit(old)).alias(
-                            f.name
-                        )
-                        if f.dataType.simpleString() == "string"
-                        and f.name.lower() not in pcols
-                        else F.col(f.name)
-                        for f in full.schema.fields
-                    ]
-                    self._rebuild_table(key, full.select(sel))
-                except Exception:
-                    pass
+                full = self.spark.table(key)
+                pcols = catalog_entry(self.spark, key).pcols
+                sel = [
+                    F.coalesce(F.col(f.name), F.lit(old)).alias(f.name)
+                    if f.dataType.simpleString() == "string"
+                    and f.name.lower() not in pcols
+                    else F.col(f.name)
+                    for f in full.schema.fields
+                ]
+                self._rebuild_table(key, full.select(sel))
             self._tables.edit(key).null_format = new
         return self.spark.range(0).select()
 
@@ -5240,18 +5098,8 @@ class HiveEngine:
         moved = self.spark.table(src).filter(
             self._partition_cond(parse_partition_spec(spec))
         )
-        prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "STATIC"
-        )
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
+        with _partition_overwrite_mode(self.spark, "dynamic"):
             moved.write.insertInto(dst, overwrite=False)
-        finally:
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
         self.spark.sql(
             f"ALTER TABLE {src} DROP IF EXISTS PARTITION ({spec})"
         )
@@ -5366,10 +5214,13 @@ class HiveEngine:
             # read it as NULL unless a partition-level ADD follows
             self._sor_rebuild(
                 tbl_ac,
-                self._sor_table_data_cols(tbl_ac) + column_specs(cols_ac),
+                catalog_entry(self.spark, tbl_ac).data_cols
+                + column_specs(cols_ac),
             )
             return self.spark.range(0).select()
-        pcols_ac = self._table_partition_cols(tbl_ac)
+        pcols_ac = [
+            c.lower() for c in catalog_entry(self.spark, tbl_ac).partition_cols
+        ]
         # ORC reads each file's OWN schema, so rows written after
         # the ADD carry the new column even in old partitions
         # (schema_evol_orc_*_part); only positional TEXT reads
@@ -5377,21 +5228,13 @@ class HiveEngine:
         if self._is_orc(tbl_ac):
             pcols_ac = []
         if pcols_ac:
-            try:
-                frozen = [
-                    tuple(r)
-                    for r in self.spark.table(tbl_ac)
-                    .select(
-                        *[
-                            F.col(p).cast("string")
-                            for p in pcols_ac
-                        ]
-                    )
-                    .distinct()
-                    .collect()
-                ]
-            except Exception:
-                frozen = []
+            frozen = [
+                tuple(r)
+                for r in self.spark.table(tbl_ac)
+                .select(*[F.col(p).cast("string") for p in pcols_ac])
+                .distinct()
+                .collect()
+            ]
             res_ac = self.spark.sql(
                 re.sub(
                     r"(?i)\s+(CASCADE|RESTRICT)\s*(;?\s*)$",
@@ -5440,7 +5283,7 @@ class HiveEngine:
         )
         self._sor_rebuild(
             m.group(1),
-            self._sor_table_data_cols(m.group(1)) + new_cols_sc,
+            catalog_entry(self.spark, m.group(1)).data_cols + new_cols_sc,
         )
         return self.spark.range(0).select()
 
@@ -5518,7 +5361,7 @@ class HiveEngine:
         if self._sor_activate(tbl_pa):
             self._sor_update_partitions(tbl_pa, norm_pa, "add", cols_pa)
             self._sor_rebuild(
-                tbl_pa, self._sor_table_data_cols(tbl_pa)
+                tbl_pa, catalog_entry(self.spark, tbl_pa).data_cols
             )
         return self.spark.range(0).select()
 
@@ -5550,7 +5393,7 @@ class HiveEngine:
                 )
             target_c = [
                 (new_c, ty_c) if n.lower() == old_c.lower() else (n, t)
-                for n, t in self._sor_table_data_cols(tbl_c)
+                for n, t in catalog_entry(self.spark, tbl_c).data_cols
             ]
             if pos_c:
                 moved = next(
@@ -6365,23 +6208,14 @@ class HiveEngine:
             if tbl.replace("`", "").lower() in self._SQL_KEYWORDS:
                 continue
             try:
-                fields = self.spark.table(tbl).schema.fields
-            except Exception:
-                continue
-            for f in fields:
-                try:
-                    raw = (f.metadata or {}).get(
-                        "__CHAR_VARCHAR_TYPE_STRING", ""
-                    )
-                except Exception:
-                    raw = ""
-                is_char = raw.lower().startswith("char(") or (
-                    f.dataType.typeName() == "char"
-                )
-                if not is_char:
+                entry = catalog_entry(self.spark, tbl)
+            except AnalysisException:
+                continue  # a CTE or subquery name, or no such table yet
+            for f in entry.schema.fields:
+                lm = re.fullmatch(r"char\((\d+)\)", entry.types[f.name.lower()])
+                if not lm:
                     continue
-                lm = re.match(r"(?i)char\s*\(\s*(\d+)\s*\)", raw or "")
-                clen = int(lm.group(1)) if lm else None
+                clen = int(lm.group(1))
                 # a BARE column name is only unambiguously this table's
                 # when the statement references one table — with multiple
                 # tables a same-named STRING column of another table
@@ -7611,22 +7445,14 @@ class HiveEngine:
         if tbl in self._SQL_KEYWORDS or tbl == "(":
             return text
         try:
-            fields = self.spark.table(tbl).schema.fields
-        except Exception:
-            return text
-
-        def tag_of(f) -> str:
-            try:
-                raw = (f.metadata or {}).get("__CHAR_VARCHAR_TYPE_STRING", "")
-            except Exception:
-                raw = ""
-            if raw.lower().startswith("char("):
-                return "char"
-            if raw.lower().startswith("varchar("):
-                return "varchar"
-            return f.dataType.simpleString().split("(")[0]
-
-        by_col = {f.name.lower(): (f.name, tag_of(f)) for f in fields}
+            entry = catalog_entry(self.spark, tbl)
+        except AnalysisException:
+            return text  # a CTE or subquery name, or no such table yet
+        fields = entry.schema.fields
+        by_col = {
+            f.name.lower(): (f.name, entry.types[f.name.lower()].split("(")[0])
+            for f in fields
+        }
 
         def typed(call):
             star = call.inner.strip() == "*"
@@ -7699,9 +7525,9 @@ class HiveEngine:
         if len(tables) != 1:
             return text
         try:
-            fields = self.spark.table(next(iter(tables))).schema.fields
-        except Exception:
-            return text
+            fields = catalog_entry(self.spark, next(iter(tables))).schema.fields
+        except AnalysisException:
+            return text  # a CTE or subquery name, or no such table yet
         from pyspark.sql import types as T
 
         date_cols = {
@@ -8077,13 +7903,10 @@ class HiveEngine:
         for q in targets:
             tbl, alias = alias2tbl[q]
             try:
-                fields = self.spark.table(tbl).schema.fields
-            except Exception:
-                return text
-            pcols = {c.lower() for c in self._table_partition_cols(tbl)}
-            data_cols = [
-                f.name for f in fields if f.name.lower() not in pcols
-            ]
+                entry = catalog_entry(self.spark, tbl)
+            except AnalysisException:
+                return text  # a CTE or subquery name, or no such table yet
+            data_cols = [f.name for f in entry.data_fields]
             ser = "concat_ws(chr(1), " + ", ".join(
                 f"coalesce(cast(`{c}` as string), '\\\\N')"
                 for c in data_cols
@@ -8750,11 +8573,8 @@ class HiveEngine:
     )
     def _rule_msck(self, m):
         do_repair, tbl_m = bool(m.group(1)), m.group(2)
-        pcols_m = self._table_partition_cols(tbl_m)
-        try:
-            loc_m = self._table_location(tbl_m)
-        except Exception:
-            loc_m = None
+        entry_m = catalog_entry(self.spark, tbl_m)
+        pcols_m, loc_m = entry_m.partition_cols, entry_m.location
         known_m: set[str] = set()
         try:
             known_m = {
@@ -9569,16 +9389,10 @@ class HiveEngine:
 
         SCALE GATE: the Hive-exact path is a grouped-agg pandas UDAF —
         O(group) executor memory, no partial/merge — so it is reserved
-        for Hive-compat contexts (qtest runs, hive.percentile.exact).
+        for Hive-compat contexts (qtest runs, ``hive_exact_percentile``).
         Default engine SQL keeps Spark's native mergeable GK sketch,
         the plan you want against a hot group at 100 TB."""
-        if not (
-            self.hive_exact_percentile
-            or str(
-                self._vars.get("hive.percentile.exact", "")
-            ).lower()
-            == "true"
-        ):
+        if not self.hive_exact_percentile:
             return text
         if not re.search(r"\bpercentile_approx\s*\(", text, re.IGNORECASE):
             return text
@@ -10437,29 +10251,22 @@ class HiveEngine:
         if self._tables.read(tbl).default_part_masks:
             return
         try:
-            pcols = self._table_partition_cols(tbl)
-            if not pcols:
-                return
-            rows = self.spark.sql(f"SHOW PARTITIONS {tbl}").collect()
-        except Exception:
+            entry = catalog_entry(self.spark, tbl)
+        except AnalysisException:
+            return  # ALTER TABLE ... RENAME TO moved the table away
+        if not entry.partition_cols:
             return
+        rows = self.spark.sql(f"SHOW PARTITIONS {tbl}").collect()
         if not any(
             r[0] and "__HIVE_DEFAULT_PARTITION__" in r[0] for r in rows
         ):
             return
-        types = {}
-        try:
-            for c in self.spark.catalog.listColumns(tbl):
-                if c.isPartition:
-                    types[c.name.lower()] = c.dataType.lower()
-        except Exception:
-            return
         # only STRING pcols surface the default name in Hive reads —
         # numeric pcols fail the cast and stay NULL either way
         masks = {
-            p: f"coalesce(`{p}`, '__HIVE_DEFAULT_PARTITION__')"
-            for p in pcols
-            if types.get(p, "string") == "string"
+            p.lower(): f"coalesce(`{p.lower()}`, '__HIVE_DEFAULT_PARTITION__')"
+            for p in entry.partition_cols
+            if entry.schema[p].dataType.simpleString() == "string"
         }
         if masks:
             self._tables.edit(tbl).default_part_masks = masks
@@ -10489,7 +10296,7 @@ class HiveEngine:
             raise err
         tbl = m.group("tbl")
         overwrite = m.group("mode").upper() == "OVERWRITE"
-        pcols = self._table_partition_cols(tbl)
+        entry = catalog_entry(self.spark, tbl)
         pairs = parse_partition_spec(m.group("spec"))
         static = [(k, v) for k, v in pairs if v is not None]
         dynamic = [k for k, v in pairs if v is None]
@@ -10497,8 +10304,7 @@ class HiveEngine:
             raise err
         full = self.spark.table(tbl)
         types = dict(full.dtypes)
-        plow = {p.lower() for p in pcols}
-        datacols = [c for c in full.columns if c.lower() not in plow]
+        datacols = [f.name for f in entry.data_fields]
         sel = self.spark.sql(m.group("sel").rstrip().rstrip(";"))
         expect = datacols + dynamic
         if len(sel.columns) != len(expect):
@@ -10523,27 +10329,16 @@ class HiveEngine:
         )
         if not combos:
             raise err
-        loc = self._table_location(tbl)
-        if loc is None:
+        if entry.location is None:
             raise ValueError(f"cannot resolve the location of table {tbl}")
-        prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "STATIC"
-        )
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
+        with _partition_overwrite_mode(self.spark, "dynamic"):
             df.filter(~bad).write.insertInto(tbl, overwrite=overwrite)
-        finally:
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
         import shutil
 
         for row in combos:
             row_pairs = [(d, row[d]) for d in dynamic]
             spec_pairs = static + row_pairs
-            d_path = self._partition_dir(tbl, loc, spec_pairs)
+            d_path = entry.partition_dir(spec_pairs)
             sub = df_bad.filter(self._partition_cond(row_pairs)).select(
                 [F.col(c).cast(types[c]).alias(c) for c in datacols]
             )
@@ -10592,29 +10387,6 @@ class HiveEngine:
             except Exception:
                 pass
 
-    def _table_location(self, tbl: str) -> str | None:
-        try:
-            return next(
-                r.data_type
-                for r in self.spark.sql(
-                    f"DESCRIBE FORMATTED {tbl}"
-                ).collect()
-                if r.col_name == "Location"
-            ).replace("file:", "")
-        except Exception:
-            return None
-
-    def _partition_dir(self, tbl: str, loc: str, pairs) -> str:
-        """The directory of tbl's partition ``pairs`` under the table
-        location loc (loc itself for no pairs).  Spark spells each key
-        as the table declares it."""
-        if not pairs:
-            return loc
-        names = {c.lower(): c for c in self.spark.table(tbl).columns}
-        return os.path.join(
-            loc, partition_path((names.get(k, k), v) for k, v in pairs)
-        )
-
     def _orc_split_fixup(self, text: str) -> bool | None:
         """Match Hive's MR mapper count in ORC→ORC insert file counts
         (qtest sessions only — the orc_merge family pins 'Found N
@@ -10656,9 +10428,9 @@ class HiveEngine:
             return  # dynamic partitions: per-split row routing differs
         if not (self._is_orc(tgt) and self._is_orc(src)):
             return
-        src_loc = self._table_location(src)
-        tgt_loc = self._table_location(tgt)
-        if not src_loc or not tgt_loc or not os.path.isdir(src_loc):
+        src_loc = catalog_entry(self.spark, src).location
+        target = catalog_entry(self.spark, tgt)
+        if not src_loc or not target.location or not os.path.isdir(src_loc):
             return
         try:
             import duckdb
@@ -10722,7 +10494,7 @@ class HiveEngine:
             return  # predicate or schema not expressible — keep files
         if n_files == 0:
             return
-        part_dir = self._partition_dir(tgt, tgt_loc, pairs)
+        part_dir = target.partition_dir(pairs)
         if mode.upper() == "OVERWRITE":
             total = n_files
         else:
@@ -10796,48 +10568,12 @@ class HiveEngine:
         if t is None or not t.mode or t.query is None:
             raise err
         mode, tbl, part = t.mode, t.table, t.partition or ""
-        try:
-            schema = self.spark.table(tbl).schema
-            pcols = {c.lower() for c in self._table_partition_cols(tbl)}
-        except Exception:
-            raise err
-        data_fields = [
-            f for f in schema.fields if f.name.lower() not in pcols
-        ]
+        types = [ty for _, ty in catalog_entry(self.spark, tbl).data_cols]
         df = self.spark.sql(t.query.rstrip(";"))
         names = [f"_tc{i}" for i in range(len(df.columns))]
         df = df.toDF(*names)
-        exprs = []
-        for i, name in enumerate(names):
-            target = (
-                data_fields[i]
-                if i < len(data_fields)
-                else None  # trailing dynamic partition value
-            )
-            raw = None
-            if target is not None:
-                try:
-                    raw = (target.metadata or {}).get(
-                        "__CHAR_VARCHAR_TYPE_STRING"
-                    )
-                except Exception:
-                    raw = None
-                if not raw and re.match(
-                    r"(?i)^(char|varchar)\(", target.dataType.simpleString()
-                ):
-                    # tables created with literal CHAR/VARCHAR DDL carry
-                    # the type itself, not the metadata annotation
-                    raw = target.dataType.simpleString()
-            cm = raw and re.match(
-                r"(?i)^(char|varchar)\s*\(\s*(\d+)\s*\)$", raw
-            )
-            if cm:
-                exprs.append(
-                    f"substring(`{name}`, 1, {int(cm.group(2))}) "
-                    f"AS `{name}`"
-                )
-            else:
-                exprs.append(f"`{name}`")
+        # trailing dynamic partition values have no declared data type
+        exprs = _hive_char_truncate(zip(names, types + [None] * len(names)))
         HiveEngine._AUTOGEN_SEQ += 1
         view = f"trunc_src_{os.getpid()}_{HiveEngine._AUTOGEN_SEQ}"
         df.createOrReplaceTempView(view)

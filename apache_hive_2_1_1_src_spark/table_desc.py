@@ -12,12 +12,24 @@ backticks stripped, lowercased, the database taken from the qualifier or
 else from the session's current database.  DDL owns the lifecycle, the
 way a metastore call does: a CREATE that ran replaces the whole record,
 DROP deletes it, RENAME moves it to the new key.
+
+What Spark's catalog does hold — columns and their declared types,
+partition keys, location, bucketing, ANALYZE row count — is read with
+``catalog_entry``, one lookup per call and never cached: DDL changes the
+catalog under every statement.
 """
 
 from __future__ import annotations
 
+import json
+import os
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
+
+from pyspark.sql import SparkSession
+from pyspark.sql.types import StructField, StructType
+
+from apache_hive_2_1_1_src_spark.sqltext import partition_path
 
 
 @dataclass
@@ -133,3 +145,99 @@ class TableStore:
 
     def items(self) -> Iterator[tuple[tuple[str, str], TableDesc]]:
         return iter(list(self._descs.items()))
+
+
+@dataclass(frozen=True)
+class CatalogEntry:
+    """One table's or view's entry in Spark's session catalog — the
+    metastore ``Table`` facts: schema, partition keys, location,
+    bucketing and the ANALYZE row count."""
+
+    #: every column as a read of the table sees it (partition keys last);
+    #: char(n)/varchar(n) columns are strings carrying their declared type
+    schema: StructType
+    #: column name, lowercased → declared Hive type: ``char(n)`` /
+    #: ``varchar(n)`` as declared, otherwise the Spark ``simpleString``
+    types: dict[str, str]
+    #: partition keys, spelled as declared
+    partition_cols: list[str]
+    #: the table directory as a local path; None for a view
+    location: str | None
+    #: MANAGED, EXTERNAL or VIEW
+    table_type: str
+    #: (number of buckets, bucket columns, sort columns)
+    bucket_spec: tuple[int, list[str], list[str]] | None
+    #: numRows recorded by ANALYZE ... COMPUTE STATISTICS
+    row_count: int | None
+
+    @property
+    def pcols(self) -> set[str]:
+        """The partition keys, lowercased."""
+        return {c.lower() for c in self.partition_cols}
+
+    @property
+    def data_fields(self) -> list[StructField]:
+        """The schema's fields that are not partition keys."""
+        pcols = self.pcols
+        return [f for f in self.schema.fields if f.name.lower() not in pcols]
+
+    @property
+    def data_cols(self) -> list[tuple[str, str]]:
+        """(name, declared Hive type) of each column that is not a
+        partition key."""
+        return [(f.name, self.types[f.name.lower()]) for f in self.data_fields]
+
+    def partition_dir(self, pairs) -> str:
+        """The directory of partition ``pairs`` (``(key, value)``) under
+        the table's location, the location itself for no pairs.  Spark
+        spells each key as the table declares it."""
+        if not pairs:
+            return self.location
+        names = {c.lower(): c for c in self.partition_cols}
+        return os.path.join(
+            self.location,
+            partition_path((names.get(k, k), v) for k, v in pairs),
+        )
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def catalog_entry(spark: SparkSession, name: str) -> CatalogEntry:
+    """Read ``name`` (a temp view first, as every SQL reference resolves
+    it) from Spark's session catalog in one lookup.  A missing table
+    raises ``AnalysisException`` (TABLE_OR_VIEW_NOT_FOUND)."""
+    state = spark._jsparkSession.sessionState()  # noqa: SLF001
+    t = state.catalog().getTempViewOrPermanentTableMetadata(
+        state.sqlParser().parseTableIdentifier(name)
+    )
+    schema = StructType.fromJson(json.loads(t.schema().json()))
+    loc, bucket, stats = t.storage().locationUri(), t.bucketSpec(), t.stats()
+    location = None
+    if loc.isDefined():
+        # DESCRIBE FORMATTED's spelling (a Hadoop Path), less the scheme
+        path = spark._jvm.org.apache.hadoop.fs.Path(loc.get())  # noqa: SLF001
+        location = str(path.toString()).removeprefix("file:")
+    bucket_spec = None
+    if bucket.isDefined():
+        b = bucket.get()
+        bucket_spec = (
+            b.numBuckets(),
+            _seq(b.bucketColumnNames()),
+            _seq(b.sortColumnNames()),
+        )
+    rows = stats.get().rowCount() if stats.isDefined() else None
+    return CatalogEntry(
+        schema=schema,
+        types={
+            f.name.lower(): f.metadata.get("__CHAR_VARCHAR_TYPE_STRING")
+            or f.dataType.simpleString()
+            for f in schema.fields
+        },
+        partition_cols=_seq(t.partitionColumnNames()),
+        location=location,
+        table_type=t.tableType().name(),
+        bucket_spec=bucket_spec,
+        row_count=int(rows.get()) if rows is not None and rows.isDefined() else None,
+    )

@@ -27,6 +27,7 @@ import pytest
 
 from apache_hive_2_1_1_src_spark.session import HiveEngine
 from apache_hive_2_1_1_src_spark.sqltext import escape_path_name
+from apache_hive_2_1_1_src_spark.table_desc import catalog_entry
 
 
 @pytest.fixture(scope="module")
@@ -50,7 +51,7 @@ def test_nul_partition_value_write_and_listing(eng, spark, tmp_path_factory):
     parts = [r[0] for r in eng.sql("SHOW PARTITIONS r11_nul_t").collect()]
     assert parts == ["p=x%00"]
     # the partition directory on disk is Hive-escaped
-    loc = eng._table_location("r11_nul_t")
+    loc = catalog_entry(eng.spark, "r11_nul_t").location
     assert os.path.isdir(os.path.join(loc, "p=x%00"))
     spark.sql("DROP TABLE IF EXISTS r11_nul_t")
 
@@ -130,7 +131,7 @@ def test_list_bucket_nested_location_reads_values(eng, spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS r11_lb_src")
     eng.sql("create table r11_lb_src (x int)")
     eng.sql("insert into r11_lb_src values (484), (495)")
-    srcloc = eng._table_location("r11_lb_src")
+    srcloc = catalog_entry(eng.spark, "r11_lb_src").location
     base = tmp_path / "fact" / "ds=1"
     skew = base / "x=484"
     skew.mkdir(parents=True)

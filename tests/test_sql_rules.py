@@ -10,6 +10,7 @@ import pytest
 
 from apache_hive_2_1_1_src_spark import rules
 from apache_hive_2_1_1_src_spark.session import HiveEngine
+from apache_hive_2_1_1_src_spark.table_desc import catalog_entry
 
 
 @pytest.fixture(scope="module")
@@ -139,9 +140,7 @@ def test_insert_qualified_name_hits_catalog_not_temp(eng, spark):
 
 # ------------------------------------- percentile_approx over multi-table
 def test_percentile_approx_over_join_no_ambiguous_metadata(eng):
-    if not hasattr(eng, "_vars"):
-        eng._vars = {}
-    eng._vars["hive.percentile.exact"] = "true"
+    eng.hive_exact_percentile = True
     try:
         v = eng.sql(
             "select percentile_approx(a.n_nationkey, 0.5) as p "
@@ -151,7 +150,7 @@ def test_percentile_approx_over_join_no_ambiguous_metadata(eng):
         # Hive's histogram interpolation over 0..24 answers 11.5
         assert v is not None and 11.0 <= v <= 13.0
     finally:
-        eng._vars.pop("hive.percentile.exact", None)
+        eng.hive_exact_percentile = False
 
 
 # ----------------------------------------------- NOT IN (...) = literal
@@ -390,7 +389,7 @@ def test_msck_registers_partition_directories(eng, spark):
     _part_table(eng, spark, "pmk")
     try:
         eng.sql("INSERT INTO pmk PARTITION (p='x') VALUES (1)")
-        loc = eng._table_location("pmk")
+        loc = catalog_entry(eng.spark, "pmk").location
         shutil.copytree(f"{loc}/p=x", f"{loc}/p=y")
         assert _rows(eng, "MSCK TABLE pmk") == [
             ("Partitions not in metastore:\tpmk:p=y",)
@@ -414,7 +413,7 @@ def test_msck_unescapes_partition_directories(eng, spark):
     try:
         # Spark's own write of p='a=b' goes to the directory p=a%3Db
         eng.sql("INSERT INTO pmu PARTITION (p='x') VALUES (1)")
-        loc = eng._table_location("pmu")
+        loc = catalog_entry(eng.spark, "pmu").location
         shutil.copytree(f"{loc}/p=x", f"{loc}/p=a%3Db")
         eng.sql("MSCK REPAIR TABLE pmu")
         assert _partitions(eng, "pmu") == ["p=a%3Db", "p=x"]
@@ -487,7 +486,7 @@ def test_orc_split_fixup_repacks_the_partition_directory(eng, spark, monkeypatch
             "INSERT OVERWRITE TABLE pos_dst PARTITION (P='x y') "
             "SELECT a FROM pos_src"
         )
-        loc = eng._table_location("pos_dst")
+        loc = catalog_entry(eng.spark, "pos_dst").location
         # the directory Spark wrote: the key keeps its declared case
         assert repacked == [("pos_dst", f"{loc}/P=x y", 1)]
     finally:
@@ -527,3 +526,122 @@ def test_truncate_decodes_partition_literals(
         assert _rows(eng, "SELECT a FROM ptd") == [(2,)]
     finally:
         eng.sql("DROP TABLE ptd")
+
+
+# ------------------------- rules that read the table's catalog entry
+def test_add_columns_leaves_existing_partitions_null(eng, spark):
+    """Non-CASCADE ADD COLUMNS on a partitioned table (HIVE-8839): the
+    partitions that existed keep their old column list, so every row
+    in them, also one inserted after the ALTER, reads the new column
+    as NULL; a new partition reads it."""
+    _part_table(eng, spark, "pac")
+    try:
+        eng.sql("INSERT INTO pac PARTITION (p='x') VALUES (1)")
+        eng.sql("ALTER TABLE pac ADD COLUMNS (b int)")
+        eng.sql("INSERT INTO pac PARTITION (p='x') VALUES (2, 20)")
+        eng.sql("INSERT INTO pac PARTITION (p='y') VALUES (3, 30)")
+        assert _rows(eng, "SELECT a, b, p FROM pac ORDER BY a") == [
+            (1, None, "x"), (2, None, "x"), (3, 30, "y")
+        ]
+    finally:
+        eng.sql("DROP TABLE pac")
+
+
+def test_partition_column_type_recasts_the_key(eng, spark):
+    _part_table(eng, spark, "pct")
+    try:
+        eng.sql("INSERT INTO pct PARTITION (p='1') VALUES (10)")
+        eng.sql("INSERT INTO pct PARTITION (p='2') VALUES (20)")
+        eng.sql("ALTER TABLE pct PARTITION COLUMN (p int)")
+        assert dict(spark.table("pct").dtypes)["p"] == "int"
+        assert _rows(eng, "SELECT a, p FROM pct WHERE p > 1") == [(20, 2)]
+        assert _rows(eng, "SHOW PARTITIONS pct") == [("p=1",), ("p=2",)]
+    finally:
+        eng.sql("DROP TABLE pct")
+
+
+def test_typed_compare_literals_over_char_varchar_table(eng, spark):
+    """An invalid date literal rolls over as Hive's lenient
+    SimpleDateFormat does ('1970-02-29' is 1970-03-01); the table's
+    char/varchar columns resolve through the same schema read."""
+    spark.sql("DROP TABLE IF EXISTS tcl")
+    eng.sql("CREATE TABLE tcl (c char(5), v varchar(10), d date)")
+    try:
+        eng.sql(
+            "INSERT INTO tcl VALUES ('ab', 'x', '1970-02-28'), "
+            "('cd', 'y', '1970-03-01')"
+        )
+        assert _rows(
+            eng, "SELECT rtrim(c), v FROM tcl WHERE d < '1970-02-29'"
+        ) == [("ab", "x")]
+    finally:
+        eng.sql("DROP TABLE tcl")
+
+
+def test_merge_files_after_insert_overwrite(eng, spark):
+    spark.sql("DROP TABLE IF EXISTS tmf")
+    eng.sql("CREATE TABLE tmf (k int)")
+    eng.sql("SET hive.merge.mapfiles=true")
+    try:
+        eng.sql(
+            "INSERT OVERWRITE TABLE tmf "
+            "SELECT /*+ REPARTITION(4) */ n_nationkey FROM nation"
+        )
+        assert len(spark.table("tmf").inputFiles()) == 1
+        assert _rows(eng, "SELECT count(*), sum(k) FROM tmf") == [(25, 300)]
+    finally:
+        eng.sql("SET hive.merge.mapfiles=false")
+        eng.sql("DROP TABLE tmf")
+
+
+def test_avro_schema_literal_adds_field_ahead_of_existing(eng, spark):
+    """A new avro.schema.literal with a field the table lacks adds it
+    in the reader schema's order, and existing rows read its default."""
+    spark.sql("DROP TABLE IF EXISTS tav")
+    eng.sql("CREATE TABLE tav (a int, b string) PARTITIONED BY (p string)")
+    try:
+        eng.sql("INSERT INTO tav PARTITION (p='x') VALUES (1, 'u')")
+        schema = (
+            '{"type": "record", "name": "r", "fields": ['
+            '{"name": "z", "type": "int", "default": 7}, '
+            '{"name": "a", "type": "int"}, {"name": "b", "type": "string"}]}'
+        )
+        eng.sql(
+            "ALTER TABLE tav SET SERDEPROPERTIES "
+            f"('avro.schema.literal'='{schema}')"
+        )
+        assert spark.table("tav").columns == ["z", "a", "b", "p"]
+        assert _rows(eng, "SELECT * FROM tav") == [(7, 1, "u", "x")]
+        assert _rows(eng, "SHOW PARTITIONS tav") == [("p=x",)]
+    finally:
+        eng.sql("DROP TABLE tav")
+
+
+def test_partition_replace_columns_nulls_dropped_columns(eng, spark):
+    spark.sql("DROP TABLE IF EXISTS tprc")
+    eng.sql("CREATE TABLE tprc (a int, b string) PARTITIONED BY (p string)")
+    try:
+        eng.sql("INSERT INTO tprc PARTITION (p='x') VALUES (1, 'u')")
+        eng.sql("INSERT INTO tprc PARTITION (p='y') VALUES (2, 'v')")
+        eng.sql("ALTER TABLE tprc PARTITION (p='x') REPLACE COLUMNS (a int)")
+        assert _rows(eng, "SELECT a, b, p FROM tprc ORDER BY a") == [
+            (1, None, "x"), (2, "v", "y")
+        ]
+    finally:
+        eng.sql("DROP TABLE tprc")
+
+
+def test_block_offset_serializes_only_data_columns(eng, spark, tmp_path):
+    """BLOCK__OFFSET__INSIDE__FILE is the byte offset of the row in its
+    text file, which holds the data columns only."""
+    f = tmp_path / "rows.txt"
+    f.write_text("1\x01ab\n22\x01c\n")
+    spark.sql("DROP TABLE IF EXISTS tbo")
+    eng.sql("CREATE TABLE tbo (a int, b string) PARTITIONED BY (p string)")
+    try:
+        eng.sql(f"LOAD DATA LOCAL INPATH '{f}' INTO TABLE tbo PARTITION (p='x')")
+        assert _rows(
+            eng, "SELECT a, BLOCK__OFFSET__INSIDE__FILE FROM tbo ORDER BY a"
+        ) == [(1, 0), (22, 5)]
+    finally:
+        eng.sql("DROP TABLE tbo")

@@ -7,11 +7,10 @@ cannot run offline, so ``REWRITES`` pins each rewrite's output text.
 
 from __future__ import annotations
 
-from types import SimpleNamespace
-
 import pytest
 from pyspark.sql import types as T
 
+from apache_hive_2_1_1_src_spark import session
 from apache_hive_2_1_1_src_spark.session import HiveEngine
 from apache_hive_2_1_1_src_spark.sqltext import (
     close_paren,
@@ -35,6 +34,7 @@ from apache_hive_2_1_1_src_spark.sqltext import (
     unescape_path_name,
     write_target,
 )
+from apache_hive_2_1_1_src_spark.table_desc import CatalogEntry
 
 # ------------------------------------------------------------ primitives
 
@@ -306,24 +306,31 @@ def test_write_target_none():
 # ------------------------------------------------------ HiveEngine rewrites
 
 
-class _FakeSpark:
+def _fake_catalog_entry(spark, name):
     """Catalog stub for _rewrite_typed_hash: every table is (k INT,
     c CHAR(5))."""
-
-    def table(self, name):
-        return SimpleNamespace(schema=T.StructType([
+    return CatalogEntry(
+        schema=T.StructType([
             T.StructField("k", T.IntegerType()),
             T.StructField(
                 "c", T.StringType(),
                 metadata={"__CHAR_VARCHAR_TYPE_STRING": "char(5)"},
             ),
-        ]))
+        ]),
+        types={"k": "int", "c": "char(5)"},
+        partition_cols=[],
+        location=None,
+        table_type="MANAGED",
+        bucket_spec=None,
+        row_count=None,
+    )
 
 
 @pytest.fixture
-def eng():
+def eng(monkeypatch):
+    monkeypatch.setattr(session, "catalog_entry", _fake_catalog_entry)
     e = HiveEngine.__new__(HiveEngine)
-    e.spark = _FakeSpark()
+    e.spark = None
     e._init_state()
     e._infer_column_type = lambda text, expr: None
     e._vars = {

@@ -12,10 +12,12 @@ from __future__ import annotations
 
 import pytest
 from py4j.protocol import Py4JNetworkError
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from apache_hive_2_1_1_src_spark.session import HiveEngine
+from apache_hive_2_1_1_src_spark.table_desc import catalog_entry
 
 ROWS = [(1, "a"), (2, "b")]
 
@@ -224,3 +226,58 @@ def test_default_partition_reads_as_literal_string(eng, spark):
     ).collect()
     assert [r.a for r in got] == [1]
     spark.sql("DROP TABLE IF EXISTS r11_defp_t")
+
+
+# ------------------------------------------ catalog_entry: Spark's catalog
+def test_catalog_entry_declared_types_and_partition_keys(eng, spark):
+    _drop(eng, "tce")
+    eng.sql(
+        "CREATE TABLE tce (a int, c char(5), v varchar(10)) "
+        "PARTITIONED BY (P string) CLUSTERED BY (a) INTO 2 BUCKETS"
+    )
+    try:
+        e = catalog_entry(spark, "default.`tce`")
+        assert e.partition_cols == ["P"] and e.pcols == {"p"}
+        assert e.types == {
+            "a": "int", "c": "char(5)", "v": "varchar(10)", "p": "string"
+        }
+        assert e.data_cols == [("a", "int"), ("c", "char(5)"), ("v", "varchar(10)")]
+        assert [f.name for f in e.schema.fields] == ["a", "c", "v", "P"]
+        assert e.table_type == "MANAGED" and e.bucket_spec == (2, ["a"], [])
+        assert e.row_count is None
+        assert e.partition_dir([("p", "a b")]) == f"{e.location}/P=a b"
+        eng.sql("ANALYZE TABLE tce COMPUTE STATISTICS")
+        assert catalog_entry(spark, "tce").row_count == 0
+    finally:
+        _drop(eng, "tce")
+
+
+def test_catalog_entry_external_location(eng, spark, tmp_path):
+    d = tmp_path / "ext dir"
+    _drop(eng, "tcx")
+    eng.sql(f"CREATE EXTERNAL TABLE tcx (a int) LOCATION '{d}'")
+    try:
+        e = catalog_entry(spark, "tcx")
+        assert (e.location, e.table_type) == (str(d), "EXTERNAL")
+    finally:
+        _drop(eng, "tcx")
+
+
+def test_catalog_entry_views_have_no_location(eng, spark):
+    eng.sql("CREATE OR REPLACE VIEW tcv AS SELECT 1 AS a")
+    spark.range(1).createOrReplaceTempView("tct")
+    try:
+        for name, col in (("tcv", "a"), ("tct", "id")):
+            e = catalog_entry(spark, name)
+            assert (e.location, e.table_type, e.partition_cols) == (
+                None, "VIEW", []
+            )
+            assert [f.name for f in e.schema.fields] == [col]
+    finally:
+        eng.sql("DROP VIEW tcv")
+        spark.catalog.dropTempView("tct")
+
+
+def test_catalog_entry_missing_table_raises(spark):
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        catalog_entry(spark, "no_such_table_tce")
