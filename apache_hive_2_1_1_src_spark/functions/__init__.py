@@ -9,7 +9,6 @@ implements the gap set (✗/≈ entries) and the registration surface.
 from apache_hive_2_1_1_src_spark.functions.compat import (  # noqa: F401
     elt,
     field,
-    hive_hash,
     nvl,
     parse_url,
     parse_url_tuple,

@@ -74,29 +74,6 @@ def parse_url_tuple(url: Column, *parts: str) -> list[Column]:
     return out
 
 
-def hive_hash(*cols: Column) -> Column:
-    """Hive ``hash(...)`` — ObjectInspectorUtils.hashCode semantics
-    (serde2/objectinspector/ObjectInspectorUtils.java): Java String.hashCode
-    for strings, identity for int, combined as 31*h + h_i.  Needed only for
-    Hive-bucket-file compatibility (SURVEY.md §1.4 notes Spark's murmur3
-    differs).  Implemented JVM-side via aggregate over chars for strings.
-    """
-    def one(c: Column) -> Column:
-        # Java String.hashCode: s[0]*31^(n-1) + ... + s[n-1], int overflow.
-        # aggregate() keeps this in codegen; cast to int wraps like Java.
-        str_hash = F.aggregate(
-            F.split(c.cast("string"), ""),
-            F.lit(0),
-            lambda acc, ch: (acc * F.lit(31) + F.ascii(ch)).cast("int"),
-        )
-        return F.when(c.isNull(), F.lit(0)).otherwise(str_hash)
-
-    h: Column = F.lit(0)
-    for c in cols:
-        h = (h * F.lit(31) + one(c)).cast("int")
-    return h
-
-
 def hive_greatest(*cols: Column) -> Column:
     """Hive 2.1 ``greatest`` (GenericUDFGreatest.java via
     GenericUDFBaseNwayCompare.evaluate — udf_greatest.q pins it):

@@ -21,13 +21,14 @@ from __future__ import annotations
 
 import math
 
+from apache_hive_2_1_1_src_spark.operators.bucketing import (
+    hive_hash_value,
+    java_string_hashcode,
+    to_int32,
+)
+
 _MASK48 = (1 << 48) - 1
 _BVSIZE = 31
-
-
-def _i32(v: int) -> int:
-    v &= 0xFFFFFFFF
-    return v - (1 << 32) if v >= 1 << 31 else v
 
 
 def _i64(v: int) -> int:
@@ -35,20 +36,27 @@ def _i64(v: int) -> int:
     return v - (1 << 64) if v >= 1 << 63 else v
 
 
-class _JavaRandom:
+class JavaRandom:
     """java.util.Random's 48-bit LCG (public algorithm from the Java
-    SE specification) — needed to reproduce the fixed-seed a/b draws."""
+    SE specification) — reproduces the FM sketch's fixed-seed a/b draws
+    and NumericHistogram's tie-break draws (percentile_approx)."""
 
     def __init__(self, seed: int):
         self.seed = (seed ^ 0x5DEECE66D) & _MASK48
 
-    def next_int(self) -> int:
+    def _next(self, bits: int) -> int:
         self.seed = (self.seed * 0x5DEECE66D + 0xB) & _MASK48
-        return _i32(self.seed >> 16)
+        return self.seed >> (48 - bits)
+
+    def next_int(self) -> int:
+        return to_int32(self._next(32))
+
+    def next_double(self) -> float:
+        return ((self._next(26) << 27) + self._next(27)) / float(1 << 53)
 
 
 def _gen_ab(num_vectors: int) -> tuple[list[int], list[int]]:
-    ra, rb = _JavaRandom(99397), _JavaRandom(9876413)
+    ra, rb = JavaRandom(99397), JavaRandom(9876413)
     a, b = [], []
     for _ in range(num_vectors):
         v = ra.next_int()
@@ -82,7 +90,7 @@ class FMEstimator:
         # Java % truncates toward zero
         h = abs(t) % mod
         h = h if t >= 0 else -h
-        h = _i32(h)
+        h = to_int32(h)
         if h < 0:
             h += mod
         return h
@@ -99,46 +107,13 @@ class FMEstimator:
             self.bits[i] |= 1 << index
 
     def add_double(self, d: float) -> None:
-        # java.lang.Double.hashCode: doubleToLongBits folded to int
-        import struct as _s
-
-        bits = _s.unpack("<q", _s.pack("<d", float(d)))[0]
-        u = bits & 0xFFFFFFFFFFFFFFFF
-        self.add_long(_i32(u ^ (u >> 32)))
+        self.add_long(hive_hash_value(d, "double"))  # Double.hashCode
 
     def add_string(self, s: str) -> None:
-        # Java String.hashCode iterates UTF-16 CODE UNITS — an astral
-        # character contributes its surrogate pair, not its code point.
-        b = s.encode("utf-16-be", "surrogatepass")
-        h = 0
-        for i in range(0, len(b), 2):
-            h = _i32(31 * h + (b[i] << 8 | b[i + 1]))
-        self.add_long(h)
+        self.add_long(java_string_hashcode(s))
 
     def add_decimal(self, v) -> None:
-        import decimal as _dec
-
-        t = _dec.Decimal(v).normalize()
-        exp = t.as_tuple().exponent
-        if exp > 0:
-            unscaled, scale = int(t), 0
-        else:
-            scale = -exp
-            unscaled = int(t.scaleb(scale))
-        # BigInteger.hashCode × signum, then BigDecimal's 31*h+scale
-        if unscaled == 0:
-            bh = 0
-        else:
-            sig = 1 if unscaled > 0 else -1
-            m, words = abs(unscaled), []
-            while m:
-                words.append(m & 0xFFFFFFFF)
-                m >>= 32
-            bh = 0
-            for w in reversed(words):
-                bh = _i32(31 * bh + w)
-            bh = _i32(bh * sig)
-        self.add_long(_i32(31 * bh + scale))
+        self.add_long(hive_hash_value(v, "decimal"))
 
     def merge(self, other: "FMEstimator") -> None:
         for i in range(self.n):

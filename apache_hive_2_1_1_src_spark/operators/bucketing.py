@@ -7,8 +7,11 @@ Reference semantics being re-expressed:
 * ``serde/src/java/org/apache/hadoop/hive/serde2/objectinspector/
   ObjectInspectorUtils.java`` — ``hashCode()``: identity for int-likes,
   ``(int)(v ^ (v >>> 32))`` for bigint, ``v ? 1 : 0`` for boolean, and
-  the 31-polynomial Text hash for strings (== Java ``String.hashCode``
-  on ASCII); multi-column keys combine as ``31*h + h_i``.
+  the 31 polynomial over a string's signed UTF-8 bytes (== Java
+  ``String.hashCode`` on ASCII); multi-column keys combine as
+  ``31*h + h_i``.  ``hive_hash_value`` is the engine's one copy of these
+  rules: SQL ``hash()``, bucketing and compute_stats' FM sketch all
+  call it.
 * ``ObjectInspectorUtils.getBucketNumber`` — bucket =
   ``(hash & Integer.MAX_VALUE) % numBuckets`` (mask, NOT pmod: Hive
   masks the sign bit first, which differs from pmod for negative
@@ -30,25 +33,26 @@ bucket map-join relies on.
 100 TB: the write is one hash shuffle on the bucket id (identical cost
 to any bucketed write); a pruned point-read opens exactly ONE file of
 the table regardless of table size — the same 1/N I/O Hive's
-TABLESAMPLE(BUCKET x OUT OF N) and bucket map-join get.  String hashing
-uses the per-char aggregate (whole-stage codegen, no Python); non-ASCII
-strings are rejected loudly rather than silently mis-bucketed (Text
-hashes UTF-8 bytes; the char aggregate only equals it for ASCII).
+TABLESAMPLE(BUCKET x OUT OF N) and bucket map-join get.
 
-Type coverage: int-family / bigint / boolean / string (ASCII) are pure
-codegen; date (DateWritable.hashCode == daysSinceEpoch) is codegen via
-datediff; double / float (IEEE-754 bit hashes — no Spark builtin
-exposes the bits) and decimal (HiveDecimalWritable → normalized
-BigDecimal.hashCode) go through Arrow-vectorized pandas UDFs, pinned
-against literal values produced by an actual Java run of the same
-arithmetic (tests/test_bucketing.py).  Anything else fails loudly.
+Type coverage: int-family / bigint / boolean are pure codegen; date
+(DateWritable.hashCode == daysSinceEpoch) is codegen via datediff;
+string (UTF-8 bytes), double / float (IEEE-754 bit hashes) and decimal
+(HiveDecimalWritable → normalized BigDecimal.hashCode) run
+``hive_hash_value`` in an Arrow-batched pandas UDF, pinned against
+literal values produced by an actual Java run of the same arithmetic
+(tests/test_bucketing.py).  Anything else fails loudly.
 """
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import glob
+import math
 import os
 import shutil
+import struct
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,9 +68,20 @@ def _wrap32(c: Column) -> Column:
     return c.cast("int")
 
 
-def _to_signed32(h: int) -> int:
-    h &= 0xFFFFFFFF
-    return h - 0x100000000 if h >= 0x80000000 else h
+def to_int32(v: int) -> int:
+    """Java int overflow: the low 32 bits of ``v`` as a signed int."""
+    v &= 0xFFFFFFFF
+    return v - 0x100000000 if v >= 0x80000000 else v
+
+
+def _fold_bytes(data: bytes, seed: int) -> int:
+    """``h = 31*h + b`` over SIGNED bytes (Java ``byte``): the STRING
+    loop of ObjectInspectorUtils.hashCode (seed 0) and
+    WritableComparator.hashBytes behind Text/BytesWritable (seed 1)."""
+    h = seed
+    for b in data:
+        h = to_int32(31 * h + (b - 256 if b >= 128 else b))
+    return h
 
 
 def _java_bigint_hash(n: int) -> int:
@@ -82,15 +97,13 @@ def _java_bigint_hash(n: int) -> int:
     h = 0
     for w in reversed(words):
         h = (31 * h + w) & 0xFFFFFFFF
-    return _to_signed32(h * sign)
+    return to_int32(h * sign)
 
 
 def _hive_decimal_parts(d) -> tuple[int, int]:
     """HiveDecimal normalization (storage-api/.../HiveDecimal.java:245
     trim): strip trailing zeros, no negative scale (5E+2 → scale 0),
     exact zero → (0, 0).  Returns (unscaledValue, scale)."""
-    import decimal
-
     d = decimal.Decimal(d)
     if d == 0:
         return 0, 0
@@ -102,62 +115,148 @@ def _hive_decimal_parts(d) -> tuple[int, int]:
     return unscaled, -exp
 
 
-def _java_bigdecimal_hash(unscaled: int, scale: int) -> int:
-    """java.math.BigDecimal.hashCode = 31 * unscaled.hashCode() + scale
-    (int wraparound) — what HiveDecimalWritable.hashCode bottoms out in."""
-    return _to_signed32(31 * _java_bigint_hash(unscaled) + scale)
+def java_string_hashcode(s: str) -> int:
+    """Java ``String.hashCode``: the 31 polynomial over UTF-16 code
+    units, so an astral character contributes its surrogate pair.  The
+    FM sketch hashes strings with it (NumDistinctValueEstimator
+    .addToEstimator(String)); Hive's own hash() of a STRING folds its
+    UTF-8 bytes instead (hive_hash_value), and the two agree on ASCII."""
+    b = s.encode("utf-16-be", "surrogatepass")
+    h = 0
+    for i in range(0, len(b), 2):
+        h = to_int32(31 * h + (b[i] << 8 | b[i + 1]))
+    return h
 
 
-def _double_hash_udf():
-    """Arrow-vectorized Double.hashCode ((int)((bits>>>32)^bits)) — no
-    Spark builtin exposes IEEE-754 bits, so this is the one honest
-    Python hop; numpy bit-views keep it batch-vectorized."""
-    import numpy as np
-    import pandas as pd
+_HASH_TYPES = frozenset(
+    (
+        "boolean", "tinyint", "smallint", "int", "integer", "bigint",
+        "string", "char", "varchar", "binary", "date", "timestamp",
+        "double", "float", "decimal",
+    )
+)
+
+
+def _value_type(v) -> str:
+    """The Hive type a bare value hashes as where no declared type
+    reaches the hash (SQL hash() over an expression or under a JOIN, a
+    bucket key given without its type): an int is an int when it fits
+    32 bits, else a bigint; a value with no rule of its own hashes its
+    display text as a STRING."""
+    if isinstance(v, bool):
+        return "boolean"
+    if isinstance(v, int):
+        return "int" if -(1 << 31) <= v < 1 << 31 else "bigint"
+    if isinstance(v, float):
+        return "double"
+    if isinstance(v, (bytes, bytearray)):
+        return "binary"
+    if isinstance(v, decimal.Decimal):
+        return "decimal"
+    if isinstance(v, datetime.date) and not isinstance(v, datetime.datetime):
+        return "date"
+    return "string"
+
+
+def hive_hash_value(v, typ: str | None = None) -> int:
+    """ObjectInspectorUtils.hashCode (serde2/objectinspector/
+    ObjectInspectorUtils.java:600-669) of one value of Hive type
+    ``typ``.  The type matters: Long.hashCode folds high into low bits,
+    so hash(-1 as bigint) is 0 while hash(-1 as int) is -1.  A ``typ``
+    with no rule here (None, a complex type) is taken from the value."""
+    if v is None:
+        return 0
+    if typ not in _HASH_TYPES:
+        typ = _value_type(v)
+    if typ == "boolean":
+        # 1/0, NOT Java Boolean.hashCode's 1231/1237 (udf_hash.q)
+        return 1 if v else 0
+    if typ in ("tinyint", "smallint", "int", "integer"):
+        return int(v)
+    if typ == "bigint":
+        # Long.hashCode is ALWAYS (v ^ v>>>32) on the 64-bit pattern — a
+        # negative long in int range hashes to ~v, not v (orc_merge12.q's
+        # sum(hash(*)) pins it)
+        u = int(v) & 0xFFFFFFFFFFFFFFFF
+        return to_int32(u ^ (u >> 32))
+    if typ == "string":
+        return _fold_bytes(str(v).encode("utf-8"), 0)
+    if typ == "char":
+        # HiveCharWritable.hashCode → Text hash of the STRIPPED value
+        # (HiveBaseCharWritable.java:61)
+        return _fold_bytes(str(v).rstrip(" ").encode("utf-8"), 1)
+    if typ == "varchar":
+        return _fold_bytes(str(v).encode("utf-8"), 1)
+    if typ == "binary":
+        return _fold_bytes(bytes(v), 1)  # BytesWritable.hashCode
+    if typ == "date":
+        # DateWritable.hashCode == daysSinceEpoch (DateWritable.java:222)
+        if isinstance(v, datetime.datetime):
+            v = v.date()
+        return (v - datetime.date(1970, 1, 1)).days
+    if typ == "timestamp":
+        # TimestampWritable.hashCode: (seconds<<30 | nanos) folded
+        # (TimestampWritable.java:410-415) over the INSTANT's epoch
+        # seconds — SQL callers pass CAST(ts AS DOUBLE), so the value is
+        # timezone-independent end to end
+        secs = math.floor(v)
+        micros = round((v - secs) * 1_000_000)
+        folded = ((secs << 30) | (micros * 1000)) & 0xFFFFFFFFFFFFFFFF
+        return to_int32(folded ^ (folded >> 32))
+    if typ == "double":
+        # Double.hashCode: doubleToLongBits folded (int)(bits ^ bits>>>32)
+        bits = (
+            _JAVA_DOUBLE_NAN_BITS
+            if math.isnan(v)
+            else struct.unpack(">Q", struct.pack(">d", float(v)))[0]
+        )
+        return to_int32((bits >> 32) ^ bits)
+    if typ == "float":
+        bits = (
+            _JAVA_FLOAT_NAN_BITS
+            if math.isnan(v)
+            else struct.unpack(">I", struct.pack(">f", float(v)))[0]
+        )
+        return to_int32(bits)
+    # decimal: HiveDecimalWritable → normalized HiveDecimal →
+    # BigDecimal.hashCode = 31 * unscaled.hashCode() + scale
+    unscaled, scale = _hive_decimal_parts(v)
+    return to_int32(31 * _java_bigint_hash(unscaled) + scale)
+
+
+def hive_hash_row(values, types=None) -> int:
+    """GenericUDFHash / the bucket key hash: ``31*h + hash(v_i)`` over
+    the values, each hashed as its entry of ``types`` (None: from the
+    value)."""
+    h = 0
+    for v, typ in zip(values, types or [None] * len(values)):
+        h = to_int32(31 * h + hive_hash_value(v, typ))
+    return h
+
+
+def _scalar_hash_udf(typ: str):
+    """hive_hash_value over a column of Hive type ``typ``, Arrow-batched
+    (no Spark builtin exposes IEEE-754 bits, BigDecimal's hash or a
+    string's UTF-8 bytes)."""
 
     def h(s):
-        v = s.to_numpy(dtype=np.float64)
-        bits = v.view(np.uint64).copy()
-        bits[np.isnan(v)] = np.uint64(_JAVA_DOUBLE_NAN_BITS)
-        out = ((bits >> np.uint64(32)) ^ bits).astype(np.uint32).view(np.int32)
-        return pd.Series(out)
+        return s.map(lambda v: hive_hash_value(v, typ)).astype("int32")
 
     return F.pandas_udf(h, "int")
 
 
-def _float_hash_udf():
-    """Arrow-vectorized Float.floatToIntBits."""
-    import numpy as np
-    import pandas as pd
-
-    def h(s):
-        v = s.to_numpy(dtype=np.float32)
-        bits = v.view(np.uint32).copy()
-        bits[np.isnan(v)] = np.uint32(_JAVA_FLOAT_NAN_BITS)
-        return pd.Series(bits.view(np.int32))
-
-    return F.pandas_udf(h, "int")
-
-
-def _decimal_hash_udf():
-    """HiveDecimalWritable.hashCode over a decimal column (Arrow batch
-    transfer; per-value Python BigDecimal-hash arithmetic — decimal
-    bucket keys are a cold write-path case)."""
-    import pandas as pd
-
-    def h(s):
-        return s.map(
-            lambda d: 0
-            if d is None
-            else _java_bigdecimal_hash(*_hive_decimal_parts(d))
-        ).astype("int32")
-
-    return F.pandas_udf(h, "int")
+_UDF_HASH_TYPES = {
+    T.StringType: "string",
+    T.DoubleType: "double",
+    T.FloatType: "float",
+    T.DecimalType: "decimal",
+}
 
 
 def hive_hash_col(df: DataFrame, col: str) -> Column:
-    """ObjectInspectorUtils.hashCode as a codegen-friendly expression,
-    dispatched on the column's Spark type."""
+    """ObjectInspectorUtils.hashCode as an expression, dispatched on the
+    column's Spark type: codegen for int-likes, bigint, boolean and
+    date, hive_hash_value through a pandas UDF for the rest."""
     dt = df.schema[col].dataType
     c = F.col(col)
     if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType)):
@@ -166,23 +265,10 @@ def hive_hash_col(df: DataFrame, col: str) -> Column:
         h = _wrap32(c.bitwiseXOR(F.shiftrightunsigned(c, 32)))
     elif isinstance(dt, T.BooleanType):
         h = F.when(c, F.lit(1)).otherwise(F.lit(0))
-    elif isinstance(dt, T.StringType):
-        # Java String.hashCode == Hive Text hash on ASCII; guard non-ASCII
-        h = F.aggregate(
-            F.split(c, ""),
-            F.lit(0),
-            lambda acc, ch: _wrap32(acc * F.lit(31) + F.ascii(ch)),
-        )
     elif isinstance(dt, T.DateType):
-        # DateWritable.hashCode == daysSinceEpoch (serde2/io/DateWritable
-        # .java:222) — pure codegen, no Python
         h = F.datediff(c, F.to_date(F.lit("1970-01-01")))
-    elif isinstance(dt, T.DoubleType):
-        h = _double_hash_udf()(c)
-    elif isinstance(dt, T.FloatType):
-        h = _float_hash_udf()(c)
-    elif isinstance(dt, T.DecimalType):
-        h = _decimal_hash_udf()(c)
+    elif type(dt) in _UDF_HASH_TYPES:
+        h = _scalar_hash_udf(_UDF_HASH_TYPES[type(dt)])(c)
     else:
         raise TypeError(f"unsupported bucket key type for {col}: {dt}")
     return F.when(c.isNull(), F.lit(0)).otherwise(h)
@@ -197,95 +283,12 @@ def hive_bucket_id(df: DataFrame, cols: list[str], num_buckets: int) -> Column:
     return h.bitwiseAND(F.lit(_INT_MAX)) % F.lit(num_buckets)
 
 
-def java_string_hashcode(s: str) -> int:
-    """Driver-side mirror of Java String.hashCode (ASCII), for planning
-    pruned reads of string-keyed tables."""
-    if any(ord(ch) > 127 for ch in s):
-        raise ValueError("non-ASCII bucket keys unsupported (Text hashes UTF-8 bytes)")
-    h = 0
-    for ch in s:
-        h = (31 * h + ord(ch)) & 0xFFFFFFFF
-    return h - 0x100000000 if h >= 0x80000000 else h
-
-
-def _hash_literal(v, typ: str) -> int:
-    """ObjectInspectorUtils.hashCode of one literal, by COLUMN type —
-    the type matters: Long.hashCode folds high into low bits, so e.g.
-    hash(-1 as bigint) is 0 while hash(-1 as int) is -1."""
-    if v is None:
-        return 0
-    if typ == "boolean":
-        return 1 if v else 0
-    if typ == "int":
-        return int(v)
-    if typ == "bigint":
-        x = int(v) & 0xFFFFFFFFFFFFFFFF
-        hv = (x ^ (x >> 32)) & 0xFFFFFFFF
-        return hv - 0x100000000 if hv >= 0x80000000 else hv
-    if typ == "string":
-        return java_string_hashcode(v)
-    if typ == "date":
-        import datetime as _dt
-
-        if isinstance(v, _dt.datetime):
-            v = v.date()
-        return (v - _dt.date(1970, 1, 1)).days
-    if typ == "double":
-        import math
-        import struct
-
-        bits = (
-            _JAVA_DOUBLE_NAN_BITS
-            if math.isnan(v)
-            else struct.unpack(">Q", struct.pack(">d", float(v)))[0]
-        )
-        return _to_signed32((bits >> 32) ^ bits)
-    if typ == "float":
-        import math
-        import struct
-
-        bits = (
-            _JAVA_FLOAT_NAN_BITS
-            if math.isnan(v)
-            else struct.unpack(">I", struct.pack(">f", float(v)))[0]
-        )
-        return _to_signed32(bits)
-    if typ == "decimal":
-        return _java_bigdecimal_hash(*_hive_decimal_parts(v))
-    raise TypeError(f"unsupported bucket key type: {typ}")
-
-
-def _default_type(v) -> str:
-    import datetime as _dt
-    import decimal as _decimal
-
-    if isinstance(v, bool):
-        return "boolean"
-    if isinstance(v, int):
-        return "bigint"  # parquet integer keys are usually int64
-    if isinstance(v, str):
-        return "string"
-    if isinstance(v, float):
-        return "double"
-    if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
-        return "date"
-    if isinstance(v, _decimal.Decimal):
-        return "decimal"
-    raise TypeError(f"unsupported bucket key literal: {type(v)}")
-
-
 def hive_bucket_of(
     values: list, num_buckets: int, types: list[str] | None = None
 ) -> int:
-    """Driver-side bucket id for a literal key tuple.  ``types`` entries
-    are 'int' | 'bigint' | 'string' | 'boolean'; unspecified ints are
-    treated as bigint (the common parquet key type)."""
-    types = types or [_default_type(v) for v in values]
-    h = 0
-    for v, typ in zip(values, types):
-        h = (31 * h + _hash_literal(v, typ)) & 0xFFFFFFFF
-        h = h - 0x100000000 if h >= 0x80000000 else h
-    return (h & _INT_MAX) % num_buckets
+    """Driver-side bucket id for a literal key tuple; ``types`` are Hive
+    type names, taken from the values when not given."""
+    return (hive_hash_row(values, types) & _INT_MAX) % num_buckets
 
 
 def bucket_file(b: int) -> str:

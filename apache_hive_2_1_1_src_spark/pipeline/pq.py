@@ -41,15 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from apache_hive_2_1_1_src_spark.pipeline.dedup import cosine
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+from apache_hive_2_1_1_src_spark.pipeline.dedup import _dot, cosine
 
 
 def _norm2(a: Column) -> Column:

@@ -106,8 +106,6 @@ def init_classic_tables(eng) -> None:
 
     os.environ["TZ"] = "US/Pacific"
     _time.tzset()
-    # re-register the hash UDFs so the closure captures the zone
-    eng._register_hive_hash()
     for tbl, fname in (("src", "kv1.txt"), ("src1", "kv3.txt")):
         drop_table(eng.spark, tbl)
         eng.sql(

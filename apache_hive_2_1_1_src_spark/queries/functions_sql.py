@@ -238,7 +238,8 @@ def hash_extra_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q68_hash_extra(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sha1 / crc32 / murmur hash / xxhash64 (FunctionRegistry.java:227-241;
     Spark's hash is Murmur3 — SURVEY.md §2.5 notes the divergence from
-    Hive's Java hashCode, provided as hive_hash in functions/compat.py).
+    Hive's Java hashCode, which SQL hash() gets from
+    operators/bucketing.hive_hash_value).
     DuckDB lacks sha1/crc32, so the oracle checks md5 directly plus
     hashlib/zlib reference certificates for sha1/crc32 (upgraded from
     rows-only, round 5); murmur32/xx64 determinism is pytest-pinned via

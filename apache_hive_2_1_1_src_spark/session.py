@@ -37,6 +37,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from apache_hive_2_1_1_src_spark import rules
+from apache_hive_2_1_1_src_spark.operators.bucketing import hive_hash_row
 from apache_hive_2_1_1_src_spark.rules import HITS
 from apache_hive_2_1_1_src_spark.sqltext import (
     close_paren,
@@ -61,6 +62,7 @@ from apache_hive_2_1_1_src_spark.sqltext import (
     write_target,
 )
 from apache_hive_2_1_1_src_spark.table_desc import (
+    CatalogEntry,
     TableDesc,
     TableStore,
     catalog_entry,
@@ -260,7 +262,18 @@ class HiveEngine:
         apply_compat_conf(self.spark)
         self._init_state()
         self.sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-        self._register_hive_hash()
+        # SQL-text hash() is Hive's GenericUDFHash (auto_join0.q's
+        # sum(hash(k, v)) digests), not Spark's Murmur3; it shadows the
+        # builtin for SQL text only (F.hash stays Murmur3).  The typed
+        # form carries the column types _rewrite_typed_hash resolved.
+        self.spark.udf.register(
+            "hash", lambda *vals: hive_hash_row(vals), "int"
+        )
+        self.spark.udf.register(
+            "hive_hash_typed",
+            lambda tags, *vals: hive_hash_row(vals, tags.split(",")),
+            "int",
+        )
         self._register_compute_stats()
         self._register_hive_percentile_approx()
         try:
@@ -333,19 +346,9 @@ class HiveEngine:
         from pyspark.sql import types as T
         from pyspark.sql.functions import pandas_udf
 
-        class _JavaRandom:
-            # java.util.Random LCG (NumericHistogram seeds 31183)
-            def __init__(self, seed: int):
-                self.seed = (seed ^ 0x5DEECE66D) & ((1 << 48) - 1)
-
-            def _next(self, bits: int) -> int:
-                self.seed = (self.seed * 0x5DEECE66D + 0xB) & ((1 << 48) - 1)
-                return self.seed >> (48 - bits)
-
-            def next_double(self) -> float:
-                return (
-                    (self._next(26) << 27) + self._next(27)
-                ) / float(1 << 53)
+        from apache_hive_2_1_1_src_spark.functions.compute_stats import (
+            JavaRandom,
+        )
 
         def core(vals, qs, nbins):
             import bisect
@@ -376,7 +379,7 @@ class HiveEngine:
             # here), trimming to nbins as it goes
             bins = []
             keys = []  # parallel x list for bisect
-            rng = _JavaRandom(31183)
+            rng = JavaRandom(31183)  # NumericHistogram's seed
 
             def trim():
                 while len(bins) > nbins:
@@ -539,149 +542,6 @@ class HiveEngine:
             ("hive_percentile_approx_arr_ord", array_fn_ord, doubles),
         ):
             self.spark.udf.register(name, pandas_udf(fn, rtype))
-
-    def _register_hive_hash(self) -> None:
-        """SQL-text ``hash(...)`` must be Hive's GenericUDFHash →
-        ObjectInspectorUtils.hashCode (serde2/objectinspector/
-        ObjectInspectorUtils.java), NOT Spark's Murmur3 — auto_join0.q's
-        ``sum(hash(k, v))`` digests pin the exact values.  Registered as
-        a session UDF, which shadows the builtin for SQL text only;
-        DataFrame-API ``F.hash`` (Murmur3) is untouched.  Row-at-a-time
-        Python is acceptable here: hash() appears in test digests, never
-        in the engine's own hot paths (bucketing uses the codegen
-        implementations in operators/bucketing.py)."""
-        import struct
-
-        def _i32(v: int) -> int:
-            v &= 0xFFFFFFFF
-            return v - (1 << 32) if v >= 1 << 31 else v
-
-        def one(v) -> int:
-            if v is None:
-                return 0
-            if isinstance(v, bool):
-                # ObjectInspectorUtils.java:611 — 1/0 (udf_hash.q golden)
-                return 1 if v else 0
-            if isinstance(v, int):
-                if -(1 << 31) <= v < 1 << 31:
-                    return v
-                return _i32((v & 0xFFFFFFFFFFFFFFFF) ^ ((v & 0xFFFFFFFFFFFFFFFF) >> 32))
-            if isinstance(v, float):
-                bits = struct.unpack("<q", struct.pack("<d", v))[0]
-                u = bits & 0xFFFFFFFFFFFFFFFF
-                return _i32(u ^ (u >> 32))
-            if isinstance(v, (bytes, bytearray)):
-                h = 0
-                for b in v:
-                    h = _i32(31 * h + (b - 256 if b >= 128 else b))
-                return h
-            h = 0
-            for ch in str(v):
-                h = _i32(31 * h + ord(ch))
-            return h
-
-        def hive_hash(*vals) -> int:
-            h = 0
-            for v in vals:
-                h = _i32(31 * h + one(v))
-            return h
-
-        def _text_hash(s: str) -> int:
-            # org.apache.hadoop.io.Text.hashCode →
-            # WritableComparator.hashBytes: seed 1 over UTF-8 bytes
-            h = 1
-            for b in s.encode("utf-8"):
-                h = _i32(31 * h + (b - 256 if b >= 128 else b))
-            return h
-
-        def _biginteger_hash(n: int) -> int:
-            # java.math.BigInteger.hashCode: seed 0 over unsigned 32-bit
-            # magnitude words (big-endian), times signum
-            if n == 0:
-                return 0
-            sig = 1 if n > 0 else -1
-            m, words = abs(n), []
-            while m:
-                words.append(m & 0xFFFFFFFF)
-                m >>= 32
-            h = 0
-            for w in reversed(words):
-                h = _i32(31 * h + w)
-            return _i32(h * sig)
-
-        def one_typed(tag: str, v) -> int:
-            # ObjectInspectorUtils.hashCode per-type dispatch
-            # (serde2/objectinspector/ObjectInspectorUtils.java:600-669)
-            import datetime as _dt
-            import decimal as _dec
-            import math
-
-            if v is None:
-                return 0
-            if tag == "boolean":
-                # ObjectInspectorUtils.java:611 — 1/0, NOT Java
-                # Boolean.hashCode's 1231/1237
-                return 1 if v else 0
-            if tag == "bigint":
-                # Long.hashCode is ALWAYS (v ^ v>>>32) on the 64-bit
-                # pattern — a negative long in int range hashes to
-                # ~v, not v (orc_merge12.q's sum(hash(*)) pins it)
-                u = v & 0xFFFFFFFFFFFFFFFF
-                return _i32(u ^ (u >> 32))
-            if tag == "char":
-                # HiveCharWritable.hashCode → Text hash of the STRIPPED
-                # value (HiveBaseCharWritable.java:61; char strips pad)
-                return _text_hash(str(v).rstrip(" "))
-            if tag == "varchar":
-                return _text_hash(str(v))
-            if tag == "decimal":
-                # HiveDecimalWritable → HiveDecimal (normalized, trailing
-                # zeros trimmed) → BigDecimal.hashCode = 31*unscaled.hash
-                # + scale
-                t = _dec.Decimal(v).normalize()
-                exp = t.as_tuple().exponent
-                if exp > 0:
-                    unscaled, scale = int(t), 0
-                else:
-                    scale = -exp
-                    unscaled = int(t.scaleb(scale))
-                return _i32(31 * _biginteger_hash(unscaled) + scale)
-            if tag == "date":
-                # DateWritable.hashCode = daysSinceEpoch
-                return (v - _dt.date(1970, 1, 1)).days
-            if tag == "timestamp":
-                # TimestampWritable.hashCode: (seconds<<30 | nanos)
-                # folded (TimestampWritable.java:410-415).  ``seconds``
-                # is the INSTANT's epoch seconds (java.sql.Timestamp
-                # holds UTC millis) — the rewrite passes the column as
-                # CAST(ts AS DOUBLE) = epoch seconds.fraction, so the
-                # value is timezone-independent end to end.
-                secs = math.floor(v)
-                micros = round((v - secs) * 1_000_000)
-                folded = ((secs << 30) | (micros * 1000)) & 0xFFFFFFFFFFFFFFFF
-                return _i32(folded ^ (folded >> 32))
-            if tag == "float":
-                bits = struct.unpack("<i", struct.pack("<f", float(v)))[0]
-                return bits
-            if tag == "binary":
-                # BytesWritable.hashCode → hashBytes seed 1
-                h = 1
-                for b in bytes(v):
-                    h = _i32(31 * h + (b - 256 if b >= 128 else b))
-                return h
-            return one(v)
-
-        def hive_hash_typed(tags: str, *vals) -> int:
-            h = 0
-            for tag, v in zip(tags.split(","), vals):
-                h = _i32(31 * h + one_typed(tag, v))
-            return h
-
-        try:
-            self.spark.udf.register("hash", hive_hash, "int")
-            self.spark.udf.register("hive_hash_typed", hive_hash_typed, "int")
-        except Exception:
-            pass  # an externally managed session may forbid registration
 
     def _register_compute_stats(self) -> None:
         """compute_stats() UDAF (GenericUDAFComputeStats.java) — column
@@ -1767,13 +1627,17 @@ class HiveEngine:
         self._cow_overwrite(tbl, full.select(sel))
         return self.spark.range(0).select()
 
-    def _avro_evolve_from_properties(self, tkey: str, text: str) -> None:
+    def _avro_evolve_from_properties(
+        self, tkey: str, text: str, entry: CatalogEntry
+    ) -> bool:
         """ALTER TABLE ... SET SERDEPROPERTIES/TBLPROPERTIES carrying a
         new ``avro.schema.literal``: columns present in the new reader
         schema but absent from the table are ADDED, and existing rows
         take the field's Avro default (AvroDeserializer applies reader
         defaults on every read; the engine's storage is materialized, so
-        the backfill happens once here)."""
+        the backfill happens once here).  ``entry`` is the table's
+        catalog entry before the statement; True when the table was
+        dropped and rebuilt."""
         import json as _json
 
         lit = re.search(
@@ -1782,27 +1646,26 @@ class HiveEngine:
             re.IGNORECASE,
         )
         if not lit:
-            return
+            return False
         try:
             schema_json = _json.loads(lit.group(1))
         except ValueError:
-            return
+            return False
         if schema_json.get("type") != "record":
-            return
+            return False
         self._tables.edit(tkey).avro_schema = schema_json
         from apache_hive_2_1_1_src_spark.avro_io import (
             avro_default,
             avro_to_hive_type,
         )
 
-        entry = catalog_entry(self.spark, tkey)
         added = [
             f
             for f in schema_json.get("fields", [])
             if f["name"].lower() not in entry.types
         ]
         if not added:
-            return
+            return False
         col_ddl = ", ".join(
             f"`{f['name']}` {avro_to_hive_type(f['type'])}" for f in added
         )
@@ -1840,8 +1703,28 @@ class HiveEngine:
         ] + [c for c in full.columns if c.lower() in pcols]
         if [c.lower() for c in target] == [c.lower() for c in full.columns]:
             self._cow_overwrite(tkey, fill.select(target))
-        else:
-            self._rebuild_table(tkey, fill.select(target))
+            return False
+        self._rebuild_table(tkey, fill.select(target))
+        return True
+
+    def _avro_tblproperties_evolve(self, text: str) -> bool | None:
+        """ALTER TABLE ... SET TBLPROPERTIES with an
+        ``avro.schema.literal`` evolves the table as SET SERDEPROPERTIES
+        does, after Spark stored the property.  A rebuild drops the
+        table's properties, so the statement then runs again."""
+        m = re.match(
+            r"(?i)^\s*ALTER\s+TABLE\s+((?:`[^`]+`|[\w.])+)\s+SET\s+"
+            r"TBLPROPERTIES\b[\s\S]*\bavro\.schema\.literal\b",
+            text,
+        )
+        if not m:
+            return None
+        key = m.group(1).replace("`", "").lower()
+        if self._avro_evolve_from_properties(
+            key, text, catalog_entry(self.spark, key)
+        ):
+            self.spark.sql(text)
+        return True
 
     @staticmethod
     def _column_list_end(out: str) -> int | None:
@@ -2125,26 +2008,12 @@ class HiveEngine:
             from apache_hive_2_1_1_src_spark.io import write_hive_text
 
             write_hive_text(df, path, **(delims or {}))
-        for p in (path, f"file:{path}", f"file://{path}"):
-            try:
-                self.spark.catalog.refreshByPath(p)
-            except Exception:
-                pass
-        # refreshByPath misses relations resolved through the catalog —
-        # refresh any table whose registered location IS this directory
-        try:
-            norm = os.path.realpath(path)
-            tables = [
-                ti.name
-                for ti in self.spark.catalog.listTables()
-                if ti.tableType in ("EXTERNAL", "MANAGED")
-            ]
-        except Exception:
-            tables = []
-        for tname in tables:
-            loc = catalog_entry(self.spark, f"`{tname}`").location
-            if loc and os.path.realpath(loc) == norm:
-                self.spark.sql(f"REFRESH TABLE {tname}")
+        self.spark.catalog.refreshByPath(path)
+        # refreshByPath misses relations resolved through the catalog:
+        # drop every cached table relation, so a table whose location
+        # IS this directory lists its files again on the next read
+        state = self.spark._jsparkSession.sessionState()  # noqa: SLF001
+        state.catalog().invalidateAllCachedTables()
         return self.spark.range(0).select()
 
     _IOD_PLAIN = re.compile(
@@ -4936,13 +4805,14 @@ class HiveEngine:
     def _rule_alter_set_serde(self, m):
         text = m.string
         key = m.group(1).replace("`", "").lower()
+        entry = catalog_entry(self.spark, key)  # Hive: Table not found
         if m.group(3):
             self._tables.edit(key).fmt = m.group(3).lower()
         # an avro.schema.literal in the NEW serde properties is live
         # schema evolution (AvroSerDe re-resolves every read):
         # reader-only fields appear with their schema DEFAULT on
         # existing rows (avro_schema_evolution_native.q's value=0)
-        self._avro_evolve_from_properties(key, text)
+        self._avro_evolve_from_properties(key, text, entry)
         # escape.delim + serialization.escape.crlf: reads UNESCAPE
         # backslash sequences — \\n/\\r bytes already on disk become
         # REAL newlines on every read (LazySimpleSerDe
@@ -4956,7 +4826,7 @@ class HiveEngine:
             r"['\"]escape\.delim['\"]", text, re.IGNORECASE
         ):
             masks_cr = self._tables.edit(key).display_casts
-            for f in catalog_entry(self.spark, key).data_fields:
+            for f in entry.data_fields:
                 if f.dataType.simpleString() == "string":
                     masks_cr[f.name.lower()] = (
                         f"replace(replace(`{f.name}`, "
@@ -4979,7 +4849,7 @@ class HiveEngine:
             new = nfm.group(1)
             if old != new and old != "\\N":
                 full = self.spark.table(key)
-                pcols = catalog_entry(self.spark, key).pcols
+                pcols = entry.pcols
                 sel = [
                     F.coalesce(F.col(f.name), F.lit(old)).alias(f.name)
                     if f.dataType.simpleString() == "string"
@@ -7427,8 +7297,8 @@ class HiveEngine:
         from its display text.  When every hash() argument is a plain
         column of the statement's single FROM table (the orc_ppd_*.q
         ``sum(hash(*))`` digests), inject the resolved type tags and
-        call hive_hash_typed; anything else keeps the untyped UDF
-        (string/int semantics, the auto_join0.q family)."""
+        call hive_hash_typed; anything else keeps the untyped UDF, which
+        takes each type from the value (the auto_join0.q family)."""
         if not re.search(r"\bhash\s*\(", text, re.IGNORECASE):
             return text
         if re.search(r"\bJOIN\b", text, re.IGNORECASE):
@@ -7488,7 +7358,7 @@ class HiveEngine:
                 cols = ", ".join(
                     # timestamps travel as CAST(ts AS DOUBLE) = instant
                     # epoch seconds — timezone-independent (see
-                    # one_typed's timestamp branch)
+                    # hive_hash_value's timestamp branch)
                     f"CAST({a} AS DOUBLE)" if t == "timestamp" else a
                     for a, t in resolved
                 )
@@ -10909,5 +10779,6 @@ class HiveEngine:
         _merge_files_after_insert,
         _orc_split_fixup,
         _track_default_partition,
+        _avro_tblproperties_evolve,
         _stats_error_line,
     )

@@ -10,7 +10,7 @@ it:
   the same name (the overwhelming majority: Spark inherited Hive's
   function surface);
 * ``compat-shim``    — provided by functions/compat.py or an engine
-  module under the same semantics (nvl, $SUM0, hive hash, parse_url_tuple,
+  module under the same semantics (nvl, $SUM0, hash, parse_url_tuple,
   in_file, …), with the providing symbol listed;
 * ``engine-op``      — language/operator surface covered by a registry
   query rather than a callable (CASE/WHEN, BETWEEN, IN, comparison and
@@ -40,7 +40,7 @@ REGISTRY_JAVA = (
 SHIMS: dict[str, tuple[str, str]] = {
     "$sum0": ("functions/compat.py:sum0", "SUM that yields 0 (not NULL) on empty input"),
     "nvl": ("functions/compat.py:nvl", "coalesce-2 alias; also registered for SQL as py_nvl"),
-    "hash": ("functions/compat.py:hive_hash + operators/bucketing.py", "ObjectInspectorUtils.hashCode semantics (typed dispatch in bucketing)"),
+    "hash": ("operators/bucketing.py:hive_hash_value", "ObjectInspectorUtils.hashCode semantics, shared with bucketing and compute_stats"),
     "parse_url_tuple": ("functions/compat.py:parse_url_tuple", "UDTF composed as parse_url × N"),
     "in_file": ("functions/compat.py:in_file", "line-set membership, file inlined at plan time"),
     "field": ("functions/compat.py:field", "1-based index of first match"),

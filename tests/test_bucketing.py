@@ -1,23 +1,38 @@
 """Hive bucket-file compatibility pins (operators/bucketing.py):
 getBucketNumber arithmetic, 000000_0 naming, empty-bucket files,
-string/bigint/multi-col hashing, and 1-file pruned probes."""
+string/bigint/multi-col hashing, 1-file pruned probes, and SQL hash(),
+which shares the bucket hash's per-type rules."""
 
 from __future__ import annotations
 
 import glob
 import os
+import re
+from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
+import apache_hive_2_1_1_src_spark
 from apache_hive_2_1_1_src_spark.operators.bucketing import (
     bucket_file,
     bucket_pruned_read,
     hive_bucket_id,
     hive_bucket_of,
     hive_bucketed_write,
+    hive_hash_col,
     java_string_hashcode,
     read_bucketed,
 )
+from apache_hive_2_1_1_src_spark.session import HiveEngine
+
+
+@pytest.fixture(scope="module")
+def eng(spark, sf_dir):
+    e = HiveEngine(spark, sf_dir)
+    e.register_tables()
+    yield e
+    e._vars = {}
 
 
 def test_java_string_hashcode_known_values():
@@ -102,9 +117,10 @@ def test_pruned_read_opens_one_file(spark, tmp_path):
 
 def test_string_keyed_buckets(spark, tmp_path):
     path = str(tmp_path / "bkt_str")
-    segs = ["BUILDING", "AUTOMOBILE", "MACHINERY", "HOUSEHOLD", "FURNITURE"]
+    # a non-ASCII key hashes its UTF-8 bytes on the write and the probe
+    segs = ["BUILDING", "AUTOMOBILE", "MACHINERY", "HOUSEHOLD", "FURNITURE", "MÖBEL"]
     df = spark.createDataFrame(
-        [(i, segs[i % 5]) for i in range(50)], "k int, seg string"
+        [(i, segs[i % 6]) for i in range(60)], "k int, seg string"
     )
     hive_bucketed_write(df, path, ["seg"], 4)
     for seg in segs:
@@ -121,7 +137,9 @@ def test_string_keyed_buckets(spark, tmp_path):
 # ObjectInspectorUtils.hashCode branches bit-for-bit.
 
 def test_double_hash_literals_match_java():
-    from apache_hive_2_1_1_src_spark.operators.bucketing import _hash_literal
+    from apache_hive_2_1_1_src_spark.operators.bucketing import (
+        hive_hash_value as _hash_literal,
+    )
 
     assert _hash_literal(1.5, "double") == 1073217536
     assert _hash_literal(-0.0, "double") == -2147483648
@@ -132,7 +150,9 @@ def test_double_hash_literals_match_java():
 
 
 def test_float_hash_literals_match_java():
-    from apache_hive_2_1_1_src_spark.operators.bucketing import _hash_literal
+    from apache_hive_2_1_1_src_spark.operators.bucketing import (
+        hive_hash_value as _hash_literal,
+    )
 
     assert _hash_literal(1.5, "float") == 1069547520
     assert _hash_literal(-2.75, "float") == -1070596096
@@ -141,7 +161,9 @@ def test_float_hash_literals_match_java():
 def test_decimal_hash_literals_match_java():
     import decimal
 
-    from apache_hive_2_1_1_src_spark.operators.bucketing import _hash_literal
+    from apache_hive_2_1_1_src_spark.operators.bucketing import (
+        hive_hash_value as _hash_literal,
+    )
 
     D = decimal.Decimal
     assert _hash_literal(D("123.45"), "decimal") == 382697
@@ -156,7 +178,9 @@ def test_decimal_hash_literals_match_java():
 def test_date_hash_is_days_since_epoch():
     import datetime
 
-    from apache_hive_2_1_1_src_spark.operators.bucketing import _hash_literal
+    from apache_hive_2_1_1_src_spark.operators.bucketing import (
+        hive_hash_value as _hash_literal,
+    )
 
     assert _hash_literal(datetime.date(1970, 1, 1), "date") == 0
     assert _hash_literal(datetime.date(1970, 1, 11), "date") == 10
@@ -173,8 +197,7 @@ def test_new_type_expressions_match_driver_side(spark):
     import decimal
 
     from apache_hive_2_1_1_src_spark.operators.bucketing import (
-        _hash_literal,
-        hive_hash_col,
+        hive_hash_value as _hash_literal,
     )
 
     rows = [
@@ -217,3 +240,65 @@ def test_date_keyed_bucket_roundtrip(spark, tmp_path):
     probe = datetime.date(2020, 4, 15)
     got = bucket_pruned_read(spark, path, ["event_date"], 8, [probe]).collect()
     assert len(got) == 1 and got[0].v == (probe - base).days
+
+
+# ---- SQL hash(): the same rules through HiveEngine.sql ------------------
+def test_hive_hash_typed_matches_reference_goldens(eng):
+    """Per-type hash rules (ObjectInspectorUtils.java:600-669):
+    char→Text hash of stripped value, varchar→Text hash, decimal→
+    normalized BigDecimal hash, date→epoch days, boolean→1/0.  The
+    composite value is pinned by orc_ppd_varchar.q.out's digest
+    -252951929000 = 500 rows × -505903858."""
+    eng.spark.sql("DROP TABLE IF EXISTS r9_hash_t")
+    eng.sql(
+        "create table r9_hash_t (c char(10), v varchar(10), d decimal(5,3),"
+        " da date) stored as textfile"
+    )
+    eng.sql(
+        "insert into r9_hash_t select cast('apple' as char(10)), "
+        "cast('bee' as varchar(10)), 0.22, cast('1970-02-20' as date)"
+    )
+    got = eng.sql("select hash(*) as h from r9_hash_t").collect()[0].h
+    assert got == -505903858
+    eng.spark.sql("DROP TABLE r9_hash_t")
+
+
+def test_hive_hash_literals_match_udf_hash_golden(eng):
+    """udf_hash.q.out: float hashes its float32 bits (1067450368 for
+    1.25), booleans hash 1/0, hash(1,2,3)=1026."""
+    row = eng.sql(
+        "SELECT hash(CAST(1.25 AS FLOAT)) AS f, hash(TRUE) AS t, "
+        "hash(FALSE) AS fa, hash(1, 2, 3) AS c FROM region LIMIT 1"
+    ).collect()[0]
+    assert (row.f, row.t, row.fa, row.c) == (1067450368, 1, 0, 1026)
+
+
+def test_hive_hash_string_folds_utf8_bytes(eng):
+    """'é' is UTF-8 C3 A9: 31*(-61) + (-87) = -1978 in Hive, where the
+    code point 233 is Java's String.hashCode."""
+    assert eng.sql("SELECT hash('é') AS h").collect()[0].h == -1978
+
+
+def test_untyped_hash_under_join_uses_the_typed_rules(eng):
+    """Under a JOIN hash() gets bare values: a date hashes its epoch
+    days (1970-02-20 → 50), a decimal its normalized BigDecimal
+    (0.220 → 31*22+2 = 684), a binary its bytes with seed 1
+    (X'41' → 31+65 = 96)."""
+    row = eng.sql(
+        "SELECT hash(CAST('1970-02-20' AS DATE)) AS d, "
+        "hash(CAST(0.22 AS DECIMAL(5,3))) AS x, hash(X'41') AS b "
+        "FROM region r JOIN nation n ON r.r_regionkey = n.n_regionkey LIMIT 1"
+    ).collect()[0]
+    assert (row.d, row.x, row.b) == (50, 684, 96)
+
+
+def test_java_hash_arithmetic_has_one_home():
+    """java.util.Random's multiplier and the signed 32-bit wrap each
+    appear in exactly one package module."""
+    pkg = Path(apache_hive_2_1_1_src_spark.__file__).parent
+    srcs = {str(p.relative_to(pkg)): p.read_text() for p in pkg.rglob("*.py")}
+    lcg = [p for p, s in srcs.items() if "0x5DEECE66D" in s]
+    wrap = re.compile(r"-\s*(?:0x100000000|\(1\s*<<\s*32\)|2\s*\*\*\s*32)\b")
+    wraps = [p for p, s in srcs.items() if wrap.search(s)]
+    assert lcg == ["functions/compute_stats.py"]
+    assert wraps == ["operators/bucketing.py"]

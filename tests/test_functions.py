@@ -5,7 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from apache_hive_2_1_1_src_spark.functions.compat import elt, field, hive_hash, nvl, sum0
+from apache_hive_2_1_1_src_spark.functions.compat import elt, field, nvl, sum0
+from apache_hive_2_1_1_src_spark.operators.bucketing import hive_hash_col
 
 
 def test_field_semantics(spark):
@@ -32,7 +33,7 @@ def test_nvl_and_sum0(spark):
 def test_hive_hash_matches_java_string_hashcode(spark):
     # Java "abc".hashCode() == 96354 ; "hive".hashCode() == 3202928
     df = spark.createDataFrame([("abc",), ("hive",)], "s string")
-    rows = df.select(hive_hash(F.col("s")).alias("h")).collect()
+    rows = df.select(hive_hash_col(df, "s").alias("h")).collect()
     assert [r.h for r in rows] == [96354, 3202928]
 
 

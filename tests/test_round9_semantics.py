@@ -1,7 +1,8 @@
-"""Round-9 semantic pins: union+LIMIT binding, Hive typed hash(),
-masking db-qualification, LazyBoolean vs GenericUDFToBoolean truth
-tables, legacy outer-join filter pushing, Avro container IO, partition
-metadata-only answers, and qtest cell framing.
+"""Round-9 semantic pins: union+LIMIT binding, masking
+db-qualification, LazyBoolean vs GenericUDFToBoolean truth tables,
+legacy outer-join filter pushing, Avro container IO, partition
+metadata-only answers, and qtest cell framing (the typed hash() pins
+live in test_bucketing.py).
 
 Each pin cites the reference behavior it locks (file:line or .q golden)
 so a regression is traceable to the semantics it breaks.
@@ -44,37 +45,6 @@ def test_union_limit_binds_to_whole_union(eng, spark):
     # the ppd goldens)
     assert rows.count("a") == 5 and rows.count("b") == 5
     spark.sql("DROP TABLE r9_union_t")
-
-
-# --------------------------------------------------------------- typed hash()
-def test_hive_hash_typed_matches_reference_goldens(eng):
-    """Per-type hash rules (ObjectInspectorUtils.java:600-669):
-    char→Text hash of stripped value, varchar→Text hash, decimal→
-    normalized BigDecimal hash, date→epoch days, boolean→1/0.  The
-    composite value is pinned by orc_ppd_varchar.q.out's digest
-    -252951929000 = 500 rows × -505903858."""
-    eng.spark.sql("DROP TABLE IF EXISTS r9_hash_t")
-    eng.sql(
-        "create table r9_hash_t (c char(10), v varchar(10), d decimal(5,3),"
-        " da date) stored as textfile"
-    )
-    eng.sql(
-        "insert into r9_hash_t select cast('apple' as char(10)), "
-        "cast('bee' as varchar(10)), 0.22, cast('1970-02-20' as date)"
-    )
-    got = eng.sql("select hash(*) as h from r9_hash_t").collect()[0].h
-    assert got == -505903858
-    eng.spark.sql("DROP TABLE r9_hash_t")
-
-
-def test_hive_hash_literals_match_udf_hash_golden(eng):
-    """udf_hash.q.out: float hashes its float32 bits (1067450368 for
-    1.25), booleans hash 1/0, hash(1,2,3)=1026."""
-    row = eng.sql(
-        "SELECT hash(CAST(1.25 AS FLOAT)) AS f, hash(TRUE) AS t, "
-        "hash(FALSE) AS fa, hash(1, 2, 3) AS c FROM region LIMIT 1"
-    ).collect()[0]
-    assert (row.f, row.t, row.fa, row.c) == (1067450368, 1, 0, 1026)
 
 
 # ------------------------------------------------------------------- masking

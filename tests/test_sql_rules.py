@@ -596,25 +596,71 @@ def test_merge_files_after_insert_overwrite(eng, spark):
 
 def test_avro_schema_literal_adds_field_ahead_of_existing(eng, spark):
     """A new avro.schema.literal with a field the table lacks adds it
-    in the reader schema's order, and existing rows read its default."""
-    spark.sql("DROP TABLE IF EXISTS tav")
-    eng.sql("CREATE TABLE tav (a int, b string) PARTITIONED BY (p string)")
+    in the reader schema's order, and existing rows read its default,
+    whether it arrives as a serde or a table property."""
+    schema = (
+        '{"type": "record", "name": "r", "fields": ['
+        '{"name": "z", "type": "int", "default": 7}, '
+        '{"name": "a", "type": "int"}, {"name": "b", "type": "string"}]}'
+    )
+    for props in ("SERDEPROPERTIES", "TBLPROPERTIES"):
+        spark.sql("DROP TABLE IF EXISTS tav")
+        eng.sql("CREATE TABLE tav (a int, b string) PARTITIONED BY (p string)")
+        try:
+            eng.sql("INSERT INTO tav PARTITION (p='x') VALUES (1, 'u')")
+            eng.sql(
+                f"ALTER TABLE tav SET {props} "
+                f"('avro.schema.literal'='{schema}')"
+            )
+            assert spark.table("tav").columns == ["z", "a", "b", "p"]
+            assert _rows(eng, "SELECT * FROM tav") == [(7, 1, "u", "x")]
+            assert _rows(eng, "SHOW PARTITIONS tav") == [("p=x",)]
+            if props == "TBLPROPERTIES":
+                assert _rows(
+                    eng, "SHOW TBLPROPERTIES tav ('avro.schema.literal')"
+                ) == [("avro.schema.literal", schema)]
+        finally:
+            eng.sql("DROP TABLE tav")
+
+
+@pytest.mark.parametrize(
+    "clause",
+    [
+        "SERDE 'org.apache.hadoop.hive.serde2.lazy.LazySimpleSerDe'",
+        "SERDEPROPERTIES ('field.delim'=',')",
+        "FILEFORMAT ORC",
+    ],
+)
+def test_alter_set_serde_of_missing_table_fails(eng, spark, clause):
+    from pyspark.errors import AnalysisException
+
+    spark.sql("DROP TABLE IF EXISTS no_such_serde_t")
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        eng.sql(f"ALTER TABLE no_such_serde_t SET {clause}")
+    assert eng._tables.key("no_such_serde_t") not in eng._tables._descs
+
+
+def test_directory_export_refreshes_external_table_on_it(eng, spark, tmp_path):
+    """An export into the directory an external table reads shows its
+    new rows on the table's next read (insert_overwrite_directory2.q)."""
+    d = str(tmp_path / "exp")
+    spark.sql("DROP TABLE IF EXISTS ext_exp")
+    eng.sql(f"INSERT OVERWRITE DIRECTORY '{d}' SELECT 1, 'a'")
+    eng.sql(
+        "CREATE EXTERNAL TABLE ext_exp (a int, b string) "
+        f"STORED AS TEXTFILE LOCATION '{d}'"
+    )
     try:
-        eng.sql("INSERT INTO tav PARTITION (p='x') VALUES (1, 'u')")
-        schema = (
-            '{"type": "record", "name": "r", "fields": ['
-            '{"name": "z", "type": "int", "default": 7}, '
-            '{"name": "a", "type": "int"}, {"name": "b", "type": "string"}]}'
-        )
+        assert _rows(eng, "SELECT * FROM ext_exp") == [(1, "a")]
         eng.sql(
-            "ALTER TABLE tav SET SERDEPROPERTIES "
-            f"('avro.schema.literal'='{schema}')"
+            f"INSERT OVERWRITE DIRECTORY '{d}' "
+            "SELECT 2, 'b' UNION ALL SELECT 3, 'c'"
         )
-        assert spark.table("tav").columns == ["z", "a", "b", "p"]
-        assert _rows(eng, "SELECT * FROM tav") == [(7, 1, "u", "x")]
-        assert _rows(eng, "SHOW PARTITIONS tav") == [("p=x",)]
+        assert _rows(eng, "SELECT * FROM ext_exp ORDER BY a") == [
+            (2, "b"), (3, "c")
+        ]
     finally:
-        eng.sql("DROP TABLE tav")
+        eng.sql("DROP TABLE ext_exp")
 
 
 def test_partition_replace_columns_nulls_dropped_columns(eng, spark):
