@@ -140,7 +140,12 @@ class FMEstimator:
 
 
 def _java_double_str(d: float) -> str:
-    """Java Double.toString for the avglength field (x.0 for integral)."""
+    """Java Double.toString for the avglength, min and max fields (x.0 for
+    integral, ``Infinity``/``-Infinity``/``NaN`` for the non-finite)."""
+    if math.isnan(d):
+        return "NaN"
+    if math.isinf(d):
+        return "Infinity" if d > 0 else "-Infinity"
     if d == int(d) and abs(d) < 1e7:
         return f"{int(d)}.0"
     return repr(d)

@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 #: Hive text-table defaults (LazySimpleSerDe.java + serdeConstants):
 #: field delimiter ^A (\x01), NULL serialized as the two chars "\N".
@@ -25,11 +26,41 @@ HIVE_TEXT_OPTIONS: dict[str, str] = {
 }
 
 
+#: Confs that change the types Spark infers from a parquet footer.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: Inferred schema per (path, st_mtime_ns, st_size, inference confs).  The
+#: key fixes what inference reads, so one entry serves every session.
+_PARQUET_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver table — the TableScanOperator equivalent
     (ql/.../exec/TableScanOperator.java:1).  Parquet scan => columnar read,
-    column pruning + filter pushdown handled by Catalyst."""
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    column pruning + filter pushdown handled by Catalyst.
+
+    A local file's schema is inferred once (one Spark job) and passed to
+    ``.schema()`` on every later read of the same file version under the
+    same inference confs, as Hive reads by the schema its metastore
+    recorded instead of re-reading footers per query."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local file: Spark reads (or rejects) it as given
+        key = None
+    else:
+        key = (path, st.st_mtime_ns, st.st_size) + tuple(
+            spark.conf.get(k) for k in _PARQUET_INFERENCE_CONFS
+        )
+    schema = _PARQUET_SCHEMAS.get(key)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    if key is not None and schema is None:
+        _PARQUET_SCHEMAS[key] = df.schema
     if name == "events":
         df = _normalize_event_ts(df)
     return df

@@ -113,7 +113,13 @@ def assign_lists(
     once per centroid (round 13) — and ``array_max`` over
     struct(cos_c, -cid) is the same total ordering as the old
     max(struct(...)) aggregate, so assignments are bit-identical
-    (verified over all sf0.1 vectors; ties still break to lowest cid)."""
+    (verified over all sf0.1 vectors; ties still break to lowest cid).
+
+    Preconditions: ``id_col`` is unique (each input row yields one output
+    row, so a repeated id yields repeated (id, cid) rows), and the codebook
+    is not empty (ValueError; an empty one would leave every cid NULL)."""
+    if centroids.isEmpty():
+        raise ValueError("assign_lists: the centroid codebook is empty")
     cents = (
         centroids.withColumn("cn", _norm(F.col("centroid")))
         .agg(F.array_sort(F.collect_list(F.struct("cid", "centroid", "cn"))).alias("cents"))

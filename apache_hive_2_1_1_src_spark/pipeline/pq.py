@@ -150,7 +150,13 @@ def _assign_codes(
 
     ``keep_vec=True`` carries ``subv`` through, which lets the training
     loop feed the mean recompute directly instead of re-joining the
-    corpus-sized assignment back to the corpus-sized subvector table."""
+    corpus-sized assignment back to the corpus-sized subvector table.
+
+    ``subs`` may carry any columns except ``code`` and the two internal
+    ones, ``__pq_cents`` and ``__pq_best``."""
+    clash = {"code", "__pq_cents", "__pq_best"} & set(subs.columns)
+    if clash:
+        raise ValueError(f"_assign_codes: subs already has column(s) {sorted(clash)}")
     bk = books.groupBy("sub").agg(
         F.array_sort(
             F.collect_list(
@@ -158,15 +164,15 @@ def _assign_codes(
                     "cid", "centroid", (0.5 * _norm2(F.col("centroid"))).alias("hn2")
                 )
             )
-        ).alias("cents")
+        ).alias("__pq_cents")
     )
     out = (
         subs.join(F.broadcast(bk), "sub")
         .withColumn(
-            "best",
+            "__pq_best",
             F.array_max(
                 F.transform(
-                    F.col("cents"),
+                    F.col("__pq_cents"),
                     lambda c: F.struct(
                         (_dot(F.col("subv"), c["centroid"]) - c["hn2"]).alias("score"),
                         (-c["cid"]).alias("neg_cid"),
@@ -174,7 +180,7 @@ def _assign_codes(
                 )
             ),
         )
-        .withColumn("code", -F.col("best.neg_cid"))
+        .withColumn("code", -F.col("__pq_best.neg_cid"))
     )
     # pass-through columns (e.g. the coarse cid in ivfadc_build) ride along;
     # subv is dropped unless the caller asked to keep it

@@ -32,6 +32,7 @@ import tempfile
 from contextlib import contextmanager
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -546,46 +547,38 @@ class HiveEngine:
     def _register_compute_stats(self) -> None:
         """compute_stats() UDAF (GenericUDAFComputeStats.java) — column
         summary structs with bit-exact FM NDV vectors
-        (functions/compute_stats.py).  Registered as an Arrow-batched
-        Series→scalar pandas UDAF; the result is the struct's display
-        string (what the CLI prints — compute_stats_long.q's golden).
-        Kind dispatch happens from the arriving pandas values, since a
-        SQL UDF sees no Catalyst type."""
-        from pyspark.sql.functions import pandas_udf
+        (functions/compute_stats.py).  Registered as an Arrow
+        Array→scalar UDAF, so a NULL stays apart from a NaN; the result
+        is the struct's display string (what the CLI prints —
+        compute_stats_long.q's golden).  An untagged call takes its kind
+        from the column's Arrow type."""
+        from pyspark.sql.functions import arrow_udf
 
-        @pandas_udf("string")
-        def compute_stats(col: pd.Series, nbv: pd.Series, tag: pd.Series) -> str:
-            import datetime
-            import decimal as _dec
-
+        @arrow_udf("string")
+        def compute_stats(col: pa.Array, nbv: pa.Array, tag: pa.Array) -> str:
             from apache_hive_2_1_1_src_spark.functions.compute_stats import (
                 compute_stats_string,
             )
 
-            values = [None if pd.isna(v) else v for v in col.astype(object)]
-            n = int(nbv.iloc[0]) if len(nbv) else 16
-            kind = str(tag.iloc[0]) if len(tag) and tag.iloc[0] else ""
+            n = int(nbv[0].as_py()) if len(nbv) else 16
+            kind = tag[0].as_py() if len(tag) else ""
             if not kind:
-                sample = next((v for v in values if v is not None), None)
-                if pd.api.types.is_bool_dtype(col) or isinstance(sample, bool):
+                t = col.type
+                if pa.types.is_boolean(t):
                     kind = "boolean"
-                elif isinstance(sample, (bytes, bytearray)):
+                elif pa.types.is_binary(t) or pa.types.is_large_binary(t):
                     kind = "binary"
-                elif isinstance(sample, str):
+                elif pa.types.is_string(t) or pa.types.is_large_string(t):
                     kind = "string"
-                elif isinstance(sample, _dec.Decimal):
+                elif pa.types.is_decimal(t):
                     kind = "decimal"
-                elif isinstance(sample, datetime.date) and not isinstance(
-                    sample, datetime.datetime
-                ):
+                elif pa.types.is_date(t):
                     kind = "date"
-                elif pd.api.types.is_float_dtype(col) or isinstance(
-                    sample, float
-                ):
+                elif pa.types.is_floating(t):
                     kind = "double"
                 else:
                     kind = "long"
-            return compute_stats_string(values, n, kind)
+            return compute_stats_string(col.to_pylist(), n, kind)
 
         try:
             self.spark.udf.register("compute_stats", compute_stats)
@@ -973,13 +966,14 @@ class HiveEngine:
         self, tbl: str, df, declared: list[tuple[str, str]] | None = None
     ) -> None:
         """Drop + recreate ``tbl`` from ``df`` (schema may differ),
-        preserving partition columns (always trailing) and the declared
-        Hive format metadata — the MoveTask-style staged swap behind
-        CHANGE/REPLACE COLUMNS.  ``declared`` carries the statement's
+        preserving partition columns (always trailing), TBLPROPERTIES and
+        the declared Hive format metadata — the MoveTask-style staged swap
+        behind CHANGE/REPLACE COLUMNS.  ``declared`` carries the statement's
         (name, type) list so char(n)/varchar(n) survive the rebuild —
         losing them silently drops the pad/truncate behavior of every
         LATER insert (schema_evol_*.q's post-replace rows)."""
-        pcols = catalog_entry(self.spark, tbl).pcols
+        entry = catalog_entry(self.spark, tbl)
+        pcols = entry.pcols
         staged = df.localCheckpoint(eager=True)
         self.spark.sql(f"DROP TABLE {tbl}")
         part_names = [c for c in staged.columns if c.lower() in pcols]
@@ -1023,6 +1017,11 @@ class HiveEngine:
             if part_names:
                 writer = writer.partitionBy(*part_names)
             writer.saveAsTable(tbl)
+        if entry.properties:
+            props = ", ".join(
+                f"{sql_string(k)}={sql_string(v)}" for k, v in entry.properties.items()
+            )
+            self.spark.sql(f"ALTER TABLE {tbl} SET TBLPROPERTIES ({props})")
         self._stats_autogather_target(tbl)
         self._track_default_partition(tbl=tbl)
 
@@ -1629,15 +1628,14 @@ class HiveEngine:
 
     def _avro_evolve_from_properties(
         self, tkey: str, text: str, entry: CatalogEntry
-    ) -> bool:
+    ) -> None:
         """ALTER TABLE ... SET SERDEPROPERTIES/TBLPROPERTIES carrying a
         new ``avro.schema.literal``: columns present in the new reader
         schema but absent from the table are ADDED, and existing rows
         take the field's Avro default (AvroDeserializer applies reader
         defaults on every read; the engine's storage is materialized, so
         the backfill happens once here).  ``entry`` is the table's
-        catalog entry before the statement; True when the table was
-        dropped and rebuilt."""
+        catalog entry before the statement."""
         import json as _json
 
         lit = re.search(
@@ -1646,13 +1644,13 @@ class HiveEngine:
             re.IGNORECASE,
         )
         if not lit:
-            return False
+            return
         try:
             schema_json = _json.loads(lit.group(1))
         except ValueError:
-            return False
+            return
         if schema_json.get("type") != "record":
-            return False
+            return
         self._tables.edit(tkey).avro_schema = schema_json
         from apache_hive_2_1_1_src_spark.avro_io import (
             avro_default,
@@ -1665,7 +1663,7 @@ class HiveEngine:
             if f["name"].lower() not in entry.types
         ]
         if not added:
-            return False
+            return
         col_ddl = ", ".join(
             f"`{f['name']}` {avro_to_hive_type(f['type'])}" for f in added
         )
@@ -1703,15 +1701,13 @@ class HiveEngine:
         ] + [c for c in full.columns if c.lower() in pcols]
         if [c.lower() for c in target] == [c.lower() for c in full.columns]:
             self._cow_overwrite(tkey, fill.select(target))
-            return False
+            return
         self._rebuild_table(tkey, fill.select(target))
-        return True
 
     def _avro_tblproperties_evolve(self, text: str) -> bool | None:
         """ALTER TABLE ... SET TBLPROPERTIES with an
         ``avro.schema.literal`` evolves the table as SET SERDEPROPERTIES
-        does, after Spark stored the property.  A rebuild drops the
-        table's properties, so the statement then runs again."""
+        does, after Spark stored the property."""
         m = re.match(
             r"(?i)^\s*ALTER\s+TABLE\s+((?:`[^`]+`|[\w.])+)\s+SET\s+"
             r"TBLPROPERTIES\b[\s\S]*\bavro\.schema\.literal\b",
@@ -1720,10 +1716,7 @@ class HiveEngine:
         if not m:
             return None
         key = m.group(1).replace("`", "").lower()
-        if self._avro_evolve_from_properties(
-            key, text, catalog_entry(self.spark, key)
-        ):
-            self.spark.sql(text)
+        self._avro_evolve_from_properties(key, text, catalog_entry(self.spark, key))
         return True
 
     @staticmethod
@@ -7566,9 +7559,9 @@ class HiveEngine:
     def _rule_compute_stats_tags(self, text):
         # compute_stats arg normalization: the boolean/binary evaluators
         # take no ndv arg (GenericUDAFComputeStats.getEvaluator), and the
-        # registered UDAF needs an explicit type TAG — a pandas series
-        # cannot tell a null-laden long column (arriving float64) from a
-        # double one.  Resolve the tag from the single FROM table.
+        # registered UDAF takes an explicit type TAG, which the
+        # empty-input summary below needs.  Resolve the tag from the
+        # single FROM table.
         if re.search(r"\bcompute_stats\s*\(", text, re.IGNORECASE):
             tags = {}
             ts = re.findall(
@@ -10304,7 +10297,6 @@ class HiveEngine:
             return
         try:
             import duckdb
-            import pyarrow as pa
             from pyarrow import orc as pa_orc
         except ImportError:
             return

@@ -169,6 +169,8 @@ class CatalogEntry:
     bucket_spec: tuple[int, list[str], list[str]] | None
     #: numRows recorded by ANALYZE ... COMPUTE STATISTICS
     row_count: int | None
+    #: TBLPROPERTIES as stored
+    properties: dict[str, str]
 
     @property
     def pcols(self) -> set[str]:
@@ -240,4 +242,5 @@ def catalog_entry(spark: SparkSession, name: str) -> CatalogEntry:
         table_type=t.tableType().name(),
         bucket_spec=bucket_spec,
         row_count=int(rows.get()) if rows is not None and rows.isDefined() else None,
+        properties={kv._1(): kv._2() for kv in _seq(t.properties().toSeq())},
     )

@@ -1,12 +1,18 @@
 #!/usr/bin/env python
-"""Connected-components (p35) scaling measurement: pointer-jump
-min-label propagation over the bucketed embedding near-dup graph at 1x
-and 10x vectors.
+"""Connected-components (p35) scaling measurement over the bucketed
+embedding near-dup graph at 1x and 10x vectors: per call, the rounds
+``connected_components`` takes, the Spark jobs the call launches, and its
+wall time.
 
 Claim under test (SCALE_DESIGN.md): each round is linear in |edges| and
-convergence takes O(log diameter) rounds, so time should grow ~linearly
-with the pair set while the ROUND COUNT stays flat — the opposite
-signature of a quadratic all-pairs resolution.
+the round count grows with the graph's diameter, not its size, so time
+should grow ~linearly with the pair set while the ROUND COUNT stays
+flat — the opposite signature of a quadratic all-pairs resolution.
+
+The rounds are the smallest ``max_iterations`` with which the call
+converges (smaller ones raise), so the script needs nothing from the
+function but its signature; only that last, converging call is timed
+and its jobs counted (job group plus ``statusTracker``).
 
 The 10x corpus is the 1x embeddings unioned under shifted ids.  Note
 the vectors themselves are IDENTICAL across replicas, so every vector
@@ -35,6 +41,17 @@ from apache_hive_2_1_1_src_spark.session import build_session  # noqa: E402
 COPIES = 10
 
 
+def _jobs_in_group(sc, group: str) -> int:
+    """Jobs of ``group`` once a later fence job has reached the status
+    tracker (jobs arrive there through the listener bus, in order)."""
+    sc.setJobGroup("cc-fence", "cc-fence")
+    before = len(sc.statusTracker().getJobIdsForGroup("cc-fence"))
+    sc.parallelize([0], 1).count()
+    while len(sc.statusTracker().getJobIdsForGroup("cc-fence")) == before:
+        time.sleep(0.05)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = build_session(app_name="cc-scale", shuffle_partitions=32)
@@ -49,14 +66,28 @@ def main() -> None:
     emb10 = emb10.cache()
     emb10.count()
 
+    sc = spark.sparkContext
     for label, emb in (("1x", emb1), (f"{COPIES}x", emb10)):
         pairs = embedding_near_dups(emb, threshold=0.40, sign_bits=4).cache()
         n_pairs = pairs.count()  # materialize pair generation separately
-        t0 = time.perf_counter()
-        cc = connected_components(pairs)
+        for rounds in range(1, 13):
+            group = f"cc-{label}-{rounds}"
+            sc.setJobGroup(group, group)
+            t0 = time.perf_counter()
+            try:
+                cc = connected_components(pairs, max_iterations=rounds)
+            except RuntimeError:
+                continue
+            dt = time.perf_counter() - t0
+            jobs = _jobs_in_group(sc, group)
+            break
+        else:
+            raise RuntimeError(f"{label}: no convergence within 12 rounds")
         n_comp = cc.agg(F.countDistinct("component")).first()[0]
-        dt = time.perf_counter() - t0
-        print(f"{label}: edges={n_pairs} components={n_comp} cc_time={dt:.2f}s")
+        print(
+            f"{label}: edges={n_pairs} components={n_comp} rounds={rounds} "
+            f"jobs={jobs} cc_time={dt:.2f}s"
+        )
         pairs.unpersist()
     emb10.unpersist()
 

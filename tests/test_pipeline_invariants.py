@@ -3,6 +3,11 @@ can't oracle): LSH recall, candidate boundedness, signature determinism."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from apache_hive_2_1_1_src_spark.io import load_table
@@ -175,6 +180,64 @@ def test_connected_components_converges_past_hop_budget(spark, sf_dir):
     )
     labels = {r.id: r.component for r in connected_components(pairs).collect()}
     assert labels == {i: 0 for i in range(20)}
+
+
+def _union_find(pairs) -> dict[int, int]:
+    """Reference components: node → smallest id of its component."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def _components(spark, pairs, **kw) -> dict[int, int]:
+    from apache_hive_2_1_1_src_spark.pipeline.dedup import connected_components
+
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    rows = connected_components(df, **kw).collect()
+    labels = {r.id: r.component for r in rows}
+    assert len(labels) == len(rows)  # one row per node
+    return labels
+
+
+_ids = st.integers(min_value=-6, max_value=40)
+
+
+@settings(max_examples=20, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(pairs=st.lists(st.tuples(_ids, _ids), max_size=30))
+@example(pairs=[])
+@example(pairs=[(1, 2), (3, 4)])
+@example(pairs=[(5, 5)])
+@example(pairs=[(2, 1), (1, 2), (1, 2), (3, 2), (2, 3)])
+@example(pairs=[(-1, 3), (3, -5), (-1, -1), (7, -1)])
+def test_connected_components_matches_union_find(spark, pairs):
+    assert _components(spark, pairs) == _union_find(pairs)
+
+
+def test_connected_components_long_path_over_partitions(spark):
+    """A 3000-node path in shuffled order, over 8 uncoalesced partitions,
+    so every round's union-find sees only fragments of it."""
+    pairs = [(i, i + 1) for i in range(2999)]
+    random.Random(7).shuffle(pairs)
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        assert _components(spark, pairs) == {i: 0 for i in range(3000)}
+    finally:
+        spark.conf.set(conf, before)
+
+
+def test_connected_components_raises_past_max_iterations(spark):
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        _components(spark, [(i, i + 1) for i in range(19)], max_iterations=1)
 
 
 def test_semantic_dedup_keeps_one_per_dup_group(spark, sf_dir):

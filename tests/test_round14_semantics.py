@@ -28,6 +28,7 @@ capped path.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from apache_hive_2_1_1_src_spark.pipeline.dedup import (
@@ -378,6 +379,36 @@ def test_assign_lists_tie_breaks_to_lowest_cid(spark):
     )
     got = {r.id: r.cid for r in assign_lists(emb, cents).collect()}
     assert got == {1: 3, 2: 3}
+
+
+def test_assign_lists_preconditions(spark):
+    """One output row per input row (so ids must be unique), and an
+    empty codebook is refused instead of assigning NULL cids."""
+    from apache_hive_2_1_1_src_spark.pipeline.ivf import assign_lists
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cid int, centroid array<double>"
+    )
+    assert sorted(tuple(r) for r in assign_lists(emb, cents).select("id", "cid").collect()) == [
+        (1, 0), (1, 0), (2, 1)
+    ]
+    with pytest.raises(ValueError, match="empty"):
+        assign_lists(emb, cents.limit(0))
+
+
+@pytest.mark.parametrize("col", ["code", "__pq_cents", "__pq_best"])
+def test_assign_codes_rejects_its_own_column_names(spark, col):
+    from apache_hive_2_1_1_src_spark.pipeline.pq import _assign_codes
+
+    subs = spark.createDataFrame([(1, 0, [1.0])], "id long, sub int, subv array<double>")
+    books = spark.createDataFrame([(0, 0, [1.0])], "sub int, cid int, centroid array<double>")
+    assert [tuple(r) for r in _assign_codes(subs, books).collect()] == [(1, 0, 0)]
+    with pytest.raises(ValueError, match=col):
+        _assign_codes(subs.withColumn(col, F.lit(0)), books)
 
 
 def test_assignment_paths_have_no_corpus_exchange(spark, sf_dir):

@@ -691,3 +691,39 @@ def test_block_offset_serializes_only_data_columns(eng, spark, tmp_path):
         ) == [(1, 0), (22, 5)]
     finally:
         eng.sql("DROP TABLE tbo")
+
+
+@pytest.mark.parametrize(
+    "rebuild",
+    [
+        "ALTER TABLE trp CHANGE COLUMN b b2 string",
+        "ALTER TABLE trp REPLACE COLUMNS (a int, c string)",
+        "ALTER TABLE trp SET SERDEPROPERTIES ('avro.schema.literal'="
+        "'{\"type\": \"record\", \"name\": \"r\", \"fields\": ["
+        "{\"name\": \"z\", \"type\": \"int\", \"default\": 7}, "
+        "{\"name\": \"a\", \"type\": \"int\"}, {\"name\": \"b\", \"type\": \"string\"}]}')",
+    ],
+)
+def test_table_rebuild_keeps_tblproperties(eng, spark, rebuild):
+    """A statement that drops and recreates the table keeps the
+    properties set on it earlier, as Hive's ALTER TABLE keeps its
+    table parameters."""
+    spark.sql("DROP TABLE IF EXISTS trp")
+    eng.sql("CREATE TABLE trp (a int, b string) PARTITIONED BY (p string)")
+    try:
+        eng.sql("INSERT INTO trp PARTITION (p='x') VALUES (1, 'u')")
+        eng.sql("ALTER TABLE trp SET TBLPROPERTIES ('owner.note'='keep', 'q.note'='it\\'s')")
+        eng.sql(rebuild)
+        assert _rows(eng, "SHOW TBLPROPERTIES trp ('owner.note')") == [("owner.note", "keep")]
+        assert _rows(eng, "SHOW TBLPROPERTIES trp ('q.note')") == [("q.note", "it's")]
+    finally:
+        eng.sql("DROP TABLE trp")
+
+
+@pytest.mark.parametrize("value", ["Infinity", "-Infinity", "NaN"])
+def test_compute_stats_prints_non_finite_double_min_max(eng, value):
+    """Java's Double.toString spelling for a non-finite min and max."""
+    [(stats,)] = _rows(
+        eng, f"SELECT compute_stats(x, 16) FROM (SELECT CAST('{value}' AS DOUBLE) AS x) t"
+    )
+    assert f'"min":{value},"max":{value},' in stats

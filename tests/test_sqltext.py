@@ -323,6 +323,7 @@ def _fake_catalog_entry(spark, name):
         table_type="MANAGED",
         bucket_spec=None,
         row_count=None,
+        properties={},
     )
 
 
